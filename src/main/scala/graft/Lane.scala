@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Execution-profile selection: the INTERACTIVE serving lane.
   *
-  * [[graft.tools.FloorProbe]] (modes `query`/`job`) decomposed the
+  * A per-query and per-job floor decomposition measured the
   * per-query constant Spark charges dim-scale queries (~0.2-0.35 s wall
   * for < 100 ms of task work): with adaptive execution on, every
   * exchange becomes its own job with a 20-45 ms driver re-plan gap

@@ -30,11 +30,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * codegen, and execution — an action on the memoized frame replans and
   * re-executes in full; only CONSTRUCTION is cached. Serving-store
   * generations are fingerprint-keyed by the same corpus bytes this
-  * stamp covers, so a memoized plan can only go stale through an
-  * in-place store maintenance op (compaction rewrites live paths under
-  * an unchanged corpus); those sites call [[invalidate]] — and the
-  * exposure is loud (FileNotFound), never wrong data, the documented
-  * reader-vs-compact contract. */
+  * stamp covers, so only a commit under an unchanged corpus — a
+  * compaction or a forced rebuild — can leave a memoized plan on a
+  * superseded generation. That generation stays readable for one more
+  * commit only, so those sites call [[invalidate]]. */
 object PlanCache {
   /** Upper bound on sessions with retained plans; evicting the eldest
     * drops the only cache-side strong reference to that session. */
@@ -139,9 +138,8 @@ object PlanCache {
       }
     }
 
-  /** Drop every memoized plan — called by in-place store maintenance
-    * (compaction, forced rebuilds) whose live-path rewrites a
-    * corpus-stamp guard cannot see. */
+  /** Drop every memoized plan — called by store commits the
+    * corpus-stamp guard cannot see (compactions, forced rebuilds). */
   def invalidate(): Unit = {
     memo.synchronized {
       val it = memo.values().iterator()

@@ -147,8 +147,8 @@ object Curation {
   /** q_contamination_delta — decontamination screen SERVED from the
     * persisted posting index: the gram set joins the bucketed postings
     * (AQE broadcasts a benchmark-sized side, map-only over the index),
-    * and per-doc denominators come from the index's doc-stats sidecar
-    * ([[Dedup.ensurePostingStats]]) — query time touches NO corpus text.
+    * and per-doc denominators come from the posting generation's
+    * doc-stats artifact — query time touches NO corpus text.
     *
     * This is how a production pipeline absorbs a NEW benchmark: instead
     * of re-scanning 100 TB of admitted text, screen just the delta gram
@@ -159,7 +159,10 @@ object Curation {
     * [[contamination]] exactly and shares its DuckDB oracle. */
   def contaminationDeltaServe(spark: SparkSession, dir: String,
       evalGrams: DataFrame): DataFrame = {
-    val postings = spark.table(Dedup.ensurePostings(spark, dir))
+    // ONE generation feeds both the hits and the doc stats: an append
+    // committing between two resolutions would tear the screen
+    val gen = Dedup.postingsGeneration(spark, dir)
+    val postings = spark.table(gen.table("postings"))
     // screen every doc's postings (slim hit rows; the train restriction
     // applies at the stats join) — restricting postings by split first
     // would cost a doc-keyed shuffle of the full posting stream
@@ -167,16 +170,16 @@ object Curation {
       .join(evalGrams.select(col("h")).distinct(), Seq("h"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("c"))
-    screenFromHits(spark, dir, hits)
+    screenFromHits(spark, gen, hits)
   }
 
   /** Shared serving tail: turn sparse per-doc hit counts `(doc_id, c)`
-    * into the full train-split contamination report via the index's
-    * doc-stats sidecar (also the serving view of the STREAMED screen
-    * store, [[graft.streaming.ContaminationSink]]). */
-  private[graft] def screenFromHits(spark: SparkSession, dir: String,
+    * into the full train-split contamination report via the doc stats
+    * of posting generation `gen` (also the serving view of the STREAMED
+    * screen store, [[graft.streaming.ContaminationSink]]). */
+  private[graft] def screenFromHits(spark: SparkSession, gen: ServingStore.Generation,
       hits: DataFrame): DataFrame = {
-    val stats = Dedup.ensurePostingStats(spark, dir)
+    val stats = spark.read.parquet(gen.path("docstats"))
     val rate =
       coalesce(col("c"), lit(0L)).cast(DoubleType) / col("n_shingles").cast(DoubleType)
     stats.filter(col("split") === "train")
@@ -907,77 +910,42 @@ object Curation {
 
   private[graft] val LmBuckets = 16
 
-  private[graft] def lmBcPath(dir: String): String =
-    new java.io.File(Similarity.servePath("lm_bc_", dir)).getAbsolutePath
-  private[graft] def lmPcPath(dir: String): String =
-    new java.io.File(Similarity.servePath("lm_pc_", dir)).getAbsolutePath
-
-  private def lmTableName(prefix: String, dir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
-    s"graft_${prefix}_$digest"
-  }
+  private[graft] def lmStatsPath(dir: String): String =
+    new java.io.File(Similarity.servePath("lm_stats_", dir)).getAbsolutePath
 
   /** Ensure a FRESH LM-stats generation (corpus bigram counts `bc` and
     * prefix counts `pc`) exists for `dir` as bucketed tables and is
     * registered in the session catalog; returns (bcTable, pcTable).
     *
-    * The [[Dedup.ensurePostings]] discipline applied to the LM scoring
-    * model: both tables bucket on `a`, so the serve's two joins
+    * The posting index's generation discipline applied to the LM
+    * scoring model: both tables bucket on `a`, so the serve's two joins
     * co-partition on one exchange of the scoring stream and the count
     * tables never reshuffle — the per-serve cost drops from four
     * stream-scale exchanges (two count builds + two join alignments) to
     * two (join alignment + the doc rollup). At 100 TB the corpus LM
     * tables are exactly the kind of artifact a curation pipeline
     * materializes once per corpus generation and scores against for
-    * weeks. Crash-safe like the posting index: one sidecar stamped
-    * after BOTH table writes commit. */
+    * weeks. Both tables commit with one sidecar stamp. */
   private[graft] def ensureLmStats(spark: SparkSession, dir: String): (String, String) = {
-    val (bcPath, pcPath) = (lmBcPath(dir), lmPcPath(dir))
-    val bcTable = lmTableName("lm_bc", dir)
-    val pcTable = lmTableName("lm_pc", dir)
-    val fpPath = bcPath + "_model"
-    val fp = Similarity.corpusFingerprint(spark, dir, "documents.parquet")
-    val storedFp =
-      try Some(Similarity.readSidecarRows(spark, fpPath)(0).getLong(0))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          Similarity.warnUnreadableSidecar("lm-stats", fpPath, e)
-          None
-      }
-    if (!storedFp.contains(fp)) {
+    def bucketed(sub: String) = ServingStore.Artifact(sub,
+      Some(ServingStore.Bucketing(ServingStore.tableBase("lm_" + sub, dir), "a", LmBuckets)))
+    val gen = ServingStore.ensureGeneration(spark, "lm-stats", lmStatsPath(dir),
+        Similarity.corpusFingerprint(spark, dir, "documents.parquet"),
+        Seq(bucketed("bc"), bucketed("pc"))) { gen =>
       Tables.invalidate(spark, dir, "documents")
-      spark.sql(s"DROP TABLE IF EXISTS $bcTable")
-      spark.sql(s"DROP TABLE IF EXISTS $pcTable")
       // kernel stream (r21): per-doc distinct pairs with multiplicities;
       // Σ m over a pair == the per-occurrence count(*), bit-identical
       // integer totals with less exploded volume through the exchange
       val big = bigramHashCounts(Tables.documents(spark, dir))
         .localCheckpoint(eager = false)
-      big.groupBy(col("a"), col("b"))
-        .agg(coalesce(sum(col("m")), lit(0L)).as("c_ab"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(LmBuckets, "a").sortBy("a")
-        .option("path", bcPath).saveAsTable(bcTable)
-      big.groupBy(col("a")).agg(coalesce(sum(col("m")), lit(0L)).as("c_a"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(LmBuckets, "a").sortBy("a")
-        .option("path", pcPath).saveAsTable(pcTable)
-      spark.range(1).select(lit(fp).as("fp"))
-        .coalesce(1).write.mode("overwrite").parquet(fpPath)
-    } else {
-      if (!spark.catalog.tableExists(bcTable))
-        spark.sql(
-          s"""CREATE TABLE $bcTable (a BIGINT, b BIGINT, c_ab BIGINT) USING parquet
-             |CLUSTERED BY (a) SORTED BY (a) INTO $LmBuckets BUCKETS
-             |LOCATION '$bcPath'""".stripMargin)
-      if (!spark.catalog.tableExists(pcTable))
-        spark.sql(
-          s"""CREATE TABLE $pcTable (a BIGINT, c_a BIGINT) USING parquet
-             |CLUSTERED BY (a) SORTED BY (a) INTO $LmBuckets BUCKETS
-             |LOCATION '$pcPath'""".stripMargin)
+      ServingStore.writeBucketed(
+        big.groupBy(col("a"), col("b")).agg(coalesce(sum(col("m")), lit(0L)).as("c_ab")),
+        gen, "bc")
+      ServingStore.writeBucketed(
+        big.groupBy(col("a")).agg(coalesce(sum(col("m")), lit(0L)).as("c_a")),
+        gen, "pc")
     }
-    (bcTable, pcTable)
+    (gen.table("bc"), gen.table("pc"))
   }
 
   val lmScoreOracle: String =

@@ -64,11 +64,11 @@ object Dedup {
     * shingle-kernel scan runs once and re-reads come from block storage.
     * This is the 100 TB shape too: persist the per-doc sketch once,
     * derive posting streams from it. */
-  private[graft] def shingleSets(docs: DataFrame): DataFrame = {
+  private[graft] def shingleSets(docs: DataFrame, extra: Column*): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs
-      .select(col("doc_id"),
-        call_function(graft.functions.GraftFunctions.ShingleSetName, col("text")).as("hs"))
+      .select((col("doc_id") +: extra :+
+        call_function(graft.functions.GraftFunctions.ShingleSetName, col("text")).as("hs")): _*)
       .filter(col("hs").isNotNull)
       .localCheckpoint(eager = false)
   }
@@ -196,205 +196,128 @@ object Dedup {
   private[graft] def postingsServePath(dir: String): String =
     new java.io.File(Similarity.servePath("postings_serve_", dir)).getAbsolutePath
 
-  /** Catalog name of the serving posting table. The name is digest-keyed
-    * (not sanitized-dir-keyed) because catalog identifiers are
-    * case-insensitive and length-limited where paths are not. */
-  private[graft] def postingsTableName(dir: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
-    s"graft_postings_$digest"
+  /** The artifacts of a posting-index generation, all derived from one
+    * corpus state and committed by ONE sidecar stamp:
+    *
+    *   - `postings` — (doc_id, h) distinct shingle hashes per document,
+    *     bucketed and sorted on `h`: the doc-level index the hot-cap df
+    *     counts run over, bucket-local.
+    *   - `members` — (doc_id, cdoc): every document's text class under
+    *     its STORED key, the min doc_id of the class when the class was
+    *     first indexed. Stable under append (documents are only ever
+    *     added), but NOT guaranteed to stay the class minimum (a later
+    *     delta may carry a smaller id).
+    *   - `rep` — the postings of ONE representative document per
+    *     distinct text, same schema and bucketing: the candidate
+    *     self-join runs over THIS table, so its cost scales with distinct
+    *     texts, not documents (a k-copy clique costs 1 posting set here,
+    *     and its k² pairs are recovered by a member-map expansion).
+    *   - `cls` — (cdoc, class_id, csize): one row per distinct text with
+    *     the class's TRUE id (min member doc_id) and member count,
+    *     pre-materialized so query plans skip the doc-level groupBy and
+    *     the planner sees parquet stats (class-cardinality → static
+    *     broadcast) instead of an unknown-size aggregate.
+    *   - `docclass` — (doc_id, class_id): the member map joined to the
+    *     true class id. Every collapse serve starts from it; derived per
+    *     query as members ⋈ cls, its join-output size estimate could
+    *     never broadcast and planned the expansion joins as
+    *     SortMergeJoins — as a bare scan the planner sees real stats.
+    *   - `docstats` — (doc_id, split, n_shingles): what lets a
+    *     posting-served decontamination screen
+    *     ([[Curation.contaminationDeltaServe]]) skip the corpus text scan
+    *     at query time.
+    *
+    * The bucketed tables register per generation
+    * ([[ServingStore.Generation.table]]). */
+  private def postingArtifacts(dir: String, numBuckets: Int): Seq[ServingStore.Artifact] = {
+    def bucketed(sub: String, table: String) = ServingStore.Artifact(sub,
+      Some(ServingStore.Bucketing(ServingStore.tableBase(table, dir), "h", numBuckets)))
+    Seq(bucketed("postings", "postings"), ServingStore.Artifact("members"),
+      bucketed("rep", "postings_rep"), ServingStore.Artifact("cls"),
+      ServingStore.Artifact("docclass"), ServingStore.Artifact("docstats"))
   }
 
-  /** Member map of the posting generation's DISTINCT-TEXT collapse:
-    * (doc_id, cdoc) rows mapping every document to its text class's
-    * STORED key — the min doc_id of the class at the time the class was
-    * first indexed. The stored key is stable under append (documents
-    * are only ever added), but is NOT guaranteed to stay the class
-    * minimum (a later delta may carry a smaller id); the TRUE class id
-    * lives in the class sidecar ([[postingsClassesPath]]), refreshed on
-    * every append. */
-  private[graft] def postingsMembersPath(dir: String): String =
-    postingsServePath(dir) + "_members"
+  /** One kernel scan per document: (doc_id, split, hs) with the distinct
+    * shingle-hash set, checkpointed so the postings, the rep postings
+    * and the doc stats all derive from it. The split and set
+    * expressions are [[Curation.contaminationOf]]'s, so served screens
+    * match the batch computation by construction. */
+  private def docShingles(docs: DataFrame): DataFrame =
+    shingleSets(docs, TextAnalysis.splitCol(TextAnalysis.splitKeyCol).as("split"))
 
-  /** Class sidecar of the collapse: (cdoc, class_id, csize) — one row
-    * per DISTINCT TEXT carrying the class's true id (min member doc_id)
-    * and member count, pre-materialized at index time so query plans
-    * skip the doc-level groupBy recompute and the planner sees parquet
-    * stats (class-cardinality → static broadcast) instead of an
-    * unknown-size aggregate (r17 verdict #3: the recompute and its SMJ
-    * risk were the serve constants the collapse added at small SFs). */
-  private[graft] def postingsClassesPath(dir: String): String =
-    postingsServePath(dir) + "_cls"
+  private def postingsOf(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), explode(col("hs")).as("h"))
 
-  /** Doc→class sidecar of the collapse: (doc_id, class_id) — the member
-    * map already joined to the TRUE class id, pre-materialized at index
-    * time (r21). Every collapse serve (`q_dedup_ngram`'s expansion arms,
-    * `q_dedup_resolve`'s doc expansion) starts from this map; deriving
-    * it per query as members ⋈ classes gave the planner a join-output
-    * frame whose product size estimate can never broadcast — the r20
-    * serve planned the expansion joins as SortMergeJoins at sf0.01-0.1
-    * (three SMJs + two exchanges at sf0.1, the round's one in-window
-    * regression). As a bare parquet scan the planner sees real stats:
-    * static broadcast while the map is small, sort-merge exactly when
-    * the corpus outgrows it — the scale-adaptive choice, decided by
-    * stats instead of hints. */
-  private[graft] def postingsDocClassPath(dir: String): String =
-    postingsServePath(dir) + "_docclass"
+  private def docStatsOf(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), col("split"), size(col("hs")).as("n_shingles"))
 
-  /** Recompute the class sidecars from the committed member map — the
-    * build step shared by [[ensurePostings]] (fresh build) and
-    * [[appendPostings]] (refresh after the delta's member rows land;
-    * O(distinct texts) + O(docs) output rewritten via tmp-swaps so a
-    * crash leaves either the old or the new sidecar, never a torn one —
-    * and the fp stamp that follows only after this commit turns any
-    * mid-swap crash into a full rebuild). */
-  private def writeClassSidecar(spark: SparkSession, dir: String): Unit = {
-    val clsPath = postingsClassesPath(dir)
-    val tmp = clsPath + "_tmp"
-    deleteTree(tmp)
-    val members = spark.read.parquet(postingsMembersPath(dir))
+  /** Recompute the class artifacts from a generation's member map —
+    * shared by the build and the append (true class ids can change
+    * under a delta that undercuts a stored key, and csize grows;
+    * O(distinct texts) + O(docs) output). */
+  private def writeClasses(spark: SparkSession, gen: ServingStore.Generation): Unit = {
+    val members = spark.read.parquet(gen.path("members"))
     members
       .groupBy(col("cdoc"))
       .agg(min(col("doc_id")).as("class_id"), count(lit(1)).as("csize"))
-      .write.mode("overwrite").parquet(tmp)
-    deleteTree(clsPath)
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(clsPath))
-    // doc→class map, resolved through the just-committed class sidecar
-    // (the stored cdoc key is append-stable but not the true min — see
-    // [[postingsMembersPath]]); same tmp-swap discipline, written after
-    // the classes commit so it only ever joins a complete sidecar
-    val dcPath = postingsDocClassPath(dir)
-    val dcTmp = dcPath + "_tmp"
-    deleteTree(dcTmp)
+      .write.parquet(gen.path("cls"))
     members
-      .join(spark.read.parquet(clsPath).select(col("cdoc"), col("class_id")), "cdoc")
+      .join(spark.read.parquet(gen.path("cls")).select(col("cdoc"), col("class_id")), "cdoc")
       .select(col("doc_id"), col("class_id"))
-      .write.mode("overwrite").parquet(dcTmp)
-    deleteTree(dcPath)
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(dcTmp), java.nio.file.Paths.get(dcPath))
+      .write.parquet(gen.path("docclass"))
   }
-
-  /** Rep-posting table of the collapse: the postings of ONE
-    * representative document per distinct text, same (doc_id, h) schema
-    * and h-bucketing as the full table — the candidate self-join runs
-    * over THIS table, so its cost scales with distinct texts, not
-    * documents (a k-copy clique costs 1 posting set here, not k, and
-    * its k² output pairs are recovered by a member-map expansion). */
-  private[graft] def postingsRepPath(dir: String): String =
-    postingsServePath(dir) + "_rep"
-
-  private[graft] def postingsRepTableName(dir: String): String =
-    postingsTableName(dir) + "_rep"
-
-  /** COMMITTED-DATA probe for a collapse artifact dir (>= 1 non-marker
-    * file), not a bare exists(): the collapse-upgrade rebuild runs under
-    * a still-valid fp, so a dir Spark created at job setup (or a crash
-    * between the member and rep commits) must read incomplete — an
-    * exists() probe would let a lock-free reader register a dataless rep
-    * table and serve silently empty pairs (r17 review), and would let
-    * [[appendPostings]] append a delta's rep postings into that crash
-    * state and stamp it fresh (r17 ADVICE — cross-class pairs involving
-    * every pre-existing class silently missing forever after). */
-  private def hasData(p: String): Boolean = {
-    val fs = new java.io.File(p).listFiles()
-    fs != null && fs.exists(f =>
-      !f.getName.startsWith("_") && !f.getName.startsWith("."))
-  }
-
-  private def registerPostingTable(spark: SparkSession, table: String,
-      path: String, numBuckets: Int): Unit =
-    if (!spark.catalog.tableExists(table))
-      spark.sql(
-        s"""CREATE TABLE $table (doc_id BIGINT, h BIGINT) USING parquet
-           |CLUSTERED BY (h) SORTED BY (h) INTO $numBuckets BUCKETS
-           |LOCATION '$path'""".stripMargin)
 
   /** Ensure a FRESH posting-index generation exists for `dir` and is
-    * registered in the session catalog; returns the table name.
-    *
-    * Same fingerprint-keyed generation discipline as
-    * [[Similarity.knnIvfServe]]: the index is keyed by the corpus files'
-    * metadata fingerprint (names, lengths, mtimes — a driver-side
-    * listing, no data scan) persisted in a sidecar next to the table.
-    * Any corpus swap under the same dir changes the fingerprint and
-    * triggers a rebuild; a fresh generation written by an EARLIER session
-    * is re-registered over its existing files (bucket ids live in the
-    * file names, so the catalog entry restores the bucket spec without
-    * rewriting a byte). The shingle-kernel scan and the posting shuffle
-    * are thereby paid once per corpus generation instead of on every
-    * dedup run. */
-  private[graft] def ensurePostings(spark: SparkSession, dir: String,
-      numBuckets: Int = PostingsBuckets): String = {
-    val path = postingsServePath(dir)
-    val table = postingsTableName(dir)
-    val fpPath = path + "_model"
+    * registered in the session catalog ([[ServingStore.ensureGeneration]]).
+    * Keyed by the corpus files' fingerprint (names, lengths, content
+    * stamps — a driver-side listing, no data scan): any corpus swap
+    * under the same dir rebuilds, and a fresh generation written by an
+    * EARLIER session is re-registered over its existing files (bucket
+    * ids live in the file names, so the catalog entry restores the
+    * bucket spec without rewriting a byte). The shingle-kernel scan and
+    * the posting shuffle are thereby paid once per corpus generation
+    * instead of on every dedup run. */
+  private[graft] def postingsGeneration(spark: SparkSession, dir: String,
+      numBuckets: Int = PostingsBuckets): ServingStore.Generation = {
     val fp = Similarity.corpusFingerprint(spark, dir, "documents.parquet")
-    def readStoredFp(): Option[Long] =
-      try Some(Similarity.readSidecarRows(spark, fpPath)(0).getLong(0))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          Similarity.warnUnreadableSidecar("posting-index", fpPath, e)
-          None
-      }
-    val storedFp = readStoredFp()
-    def complete(): Boolean =
-      hasData(postingsMembersPath(dir)) && hasData(postingsRepPath(dir)) &&
-        hasData(postingsClassesPath(dir)) && hasData(postingsDocClassPath(dir))
-    if (!storedFp.contains(fp) || !complete()) {
-      // stale or absent: rebuild under the store's BUILD LOCK (r15 —
-      // unlike ServingStore generations, this table overwrites a LIVE
-      // path, so two sessions ensuring the same stale index must not
-      // both build; the loser re-checks under the lock and registers
-      // the winner's index instead)
-      ServingStore.withBuildLock(path) {
-        if (readStoredFp().contains(fp) && complete()) ()
-        else {
-          // drop the memoized plan pinned to the old file listing
-          Tables.invalidate(spark, dir, "documents")
-          spark.sql(s"DROP TABLE IF EXISTS $table")
-          spark.sql(s"DROP TABLE IF EXISTS ${postingsRepTableName(dir)}")
-          val docs = Tables.documents(spark, dir)
-          writeBucketedPostings(spark, docs, table, path, numBuckets)
-          // distinct-text collapse, computed ONCE at index time: the
-          // member map (doc_id -> class key) and the rep-posting table
-          // (one posting set per distinct text). The class key is the
-          // min doc_id per text at build time.
-          import org.apache.spark.sql.expressions.Window
-          docs.select(col("doc_id"),
-              min(col("doc_id")).over(Window.partitionBy(col("text"))).as("cdoc"))
-            .write.mode("overwrite").parquet(postingsMembersPath(dir))
-          val repIds = spark.read.parquet(postingsMembersPath(dir))
-            .filter(col("doc_id") === col("cdoc")).select(col("doc_id"))
-          writeBucketedPostings(spark, docs.join(repIds, "doc_id"),
-            postingsRepTableName(dir), postingsRepPath(dir), numBuckets)
-          writeClassSidecar(spark, dir)
-          // sidecar written only after every table write succeeded: a
-          // crash in between leaves a missing/stale sidecar -> rebuild,
-          // never a fresh-looking stale index
-          spark.range(1).select(lit(fp).as("fp"))
-            .coalesce(1).write.mode("overwrite").parquet(fpPath)
-        }
-      }
+    ServingStore.ensureGeneration(spark, "posting-index", postingsServePath(dir), fp,
+        postingArtifacts(dir, numBuckets)) { gen =>
+      // drop the memoized plan pinned to the old file listing
+      Tables.invalidate(spark, dir, "documents")
+      val docs = Tables.documents(spark, dir)
+      val sets = docShingles(docs)
+      ServingStore.writeBucketed(postingsOf(sets), gen, "postings")
+      // distinct-text collapse, computed ONCE at index time: the class
+      // key is the min doc_id per text at build time
+      import org.apache.spark.sql.expressions.Window
+      docs.select(col("doc_id"),
+          min(col("doc_id")).over(Window.partitionBy(col("text"))).as("cdoc"))
+        .write.parquet(gen.path("members"))
+      val repIds = spark.read.parquet(gen.path("members"))
+        .filter(col("doc_id") === col("cdoc")).select(col("doc_id"))
+      ServingStore.writeBucketed(postingsOf(sets.join(repIds, "doc_id")), gen, "rep")
+      writeClasses(spark, gen)
+      docStatsOf(sets).write.parquet(gen.path("docstats"))
     }
-    registerPostingTable(spark, table, path, numBuckets)
-    registerPostingTable(spark, postingsRepTableName(dir), postingsRepPath(dir), numBuckets)
-    table
   }
 
-  /** Incrementally maintain the posting index after an ingest: append
-    * ONLY the new documents' postings into the existing bucketed
-    * generation, then advance the fingerprint sidecar to the corpus'
-    * post-append fingerprint so the next [[ensurePostings]] serves the
-    * appended generation instead of rebuilding from scratch.
+  /** [[postingsGeneration]]'s doc-level posting table name. */
+  private[graft] def ensurePostings(spark: SparkSession, dir: String,
+      numBuckets: Int = PostingsBuckets): String =
+    postingsGeneration(spark, dir, numBuckets).table("postings")
+
+  /** Incrementally maintain the posting index after an ingest: a new
+    * generation that hard-links the committed postings, member map, rep
+    * postings and doc stats and adds ONLY the new documents' files, then
+    * stamps the corpus' post-append fingerprint so the next
+    * [[ensurePostings]] serves it instead of rebuilding from scratch.
     *
     * This is the batch analogue of a scheduled daily ingest (reference:
     * dags/raw/ingest_kaggle_data.py appends each day's rows and the
     * downstream models refresh incrementally): at 100 TB a full posting
     * rebuild re-scans and re-shuffles the entire corpus to index a
     * day's delta, while the append scans only the delta and writes new
-    * bucket files next to the existing ones (bucket ids live in file
+    * bucket files next to the linked ones (bucket ids live in file
     * names, so the bucket spec — and the exchange-free candidate join —
     * survives; per-file sort holds and Spark re-sorts bucket-locally
     * where a downstream plan needs it).
@@ -406,170 +329,47 @@ object Dedup {
     * Pass `expectedFp` (the corpus fingerprint captured BEFORE the delta
     * landed) to prove the generation matches the pre-append corpus: an
     * index gone stale through out-of-band corpus edits must take the
-    * full-rebuild path, not absorb a delta and get re-stamped fresh —
-    * the append would silently miss the edited documents' postings.
+    * full-rebuild path, not absorb a delta and get re-stamped fresh.
     * Hot-shingle capping is unaffected: dfs aggregate at query time over
     * the full posting table, so a shingle crossing [[HotShingleCap]]
-    * because of appended docs is dropped exactly as in a fresh build.
-    * Crash safety matches the build path: the sidecar advances only
-    * after the append commits, so a crash in between leaves a stale
-    * sidecar and the next ensure falls back to a full rebuild — never a
-    * fresh-looking index missing rows.
-    *
-    * Reader consistency across the MULTI-artifact commit (postings,
-    * member map, rep postings, doc stats — sequential commits inside
-    * this lock): every serve CONSTRUCTION re-runs [[ensurePostings]],
-    * whose fingerprint compares the sidecar against the post-delta
-    * corpus listing — mid-append the two differ (the delta landed
-    * first, the sidecar advances last), so a construction racing this
-    * append takes the locked path and blocks until the append is
-    * whole; a plan constructed BEFORE the delta landed pinned every
-    * artifact's pre-append file listing and reads the self-consistent
-    * pre-append state. The torn-read exposure is therefore the same
-    * landing-race instant the pre-r17 postings+docstats pair already
-    * had, not a new window per artifact. */
+    * because of appended docs is dropped exactly as in a fresh build. */
   def appendPostings(spark: SparkSession, dir: String, newDocs: DataFrame,
       numBuckets: Int = PostingsBuckets,
-      expectedFp: Option[Long] = None): String = {
-    val path = postingsServePath(dir)
-    val table = postingsTableName(dir)
-    val fpPath = path + "_model"
-    require(new java.io.File(path).exists(),
-      s"no posting generation at $path to append into — run ensurePostings first")
-    ServingStore.withBuildLock(path) {
-    // an unreadable sidecar means the generation's provenance is unknown:
-    // appending into it and re-stamping would manufacture freshness
-    val storedFp =
-      try Similarity.readSidecarRows(spark, fpPath)(0).getLong(0)
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          throw new IllegalStateException(
-            s"posting sidecar at $fpPath unreadable — run ensurePostings " +
-              "(full rebuild) instead of appending into an unproven generation", e)
-      }
-    expectedFp.foreach(f => require(storedFp == f,
-      s"posting generation at $path was built for a different corpus state " +
-        s"(stored fp $storedFp != pre-append fp $f): the index is stale and " +
-        "must be rebuilt with ensurePostings, not appended into"))
-    // COMMITTED data, not bare exists() (r17 ADVICE): a crash between
-    // the member and rep commits of a collapse-upgrade rebuild leaves
-    // the fp valid and the rep dir present but dataless — an append
-    // into that state would index only the delta's rep postings and
-    // stamp the generation fresh, silently losing every cross-class
-    // pair that involves a pre-existing class
-    require(hasData(postingsMembersPath(dir)) && hasData(postingsRepPath(dir)) &&
-      hasData(postingsClassesPath(dir)) && hasData(postingsDocClassPath(dir)),
-      s"posting generation at $path has no committed collapse artifacts " +
-        "(pre-collapse build, or a crash between the member and rep " +
-        "commits): rebuild with ensurePostings before appending")
-    registerPostingTable(spark, table, path, numBuckets)
-    shingleHashes(newDocs)
-      .write.mode("append").format("parquet")
-      .bucketBy(numBuckets, "h").sortBy("h")
-      .option("path", path).saveAsTable(table)
-    // collapse maintenance: assign each delta doc to its text class —
-    // an EXISTING class when the text matches a pre-append rep's text
-    // (exact string join, no hashes), a NEW class keyed by the delta
-    // group's min doc_id otherwise. Rep-ness is append-stable: docs are
-    // only ever added, so an existing class's stored key never moves,
-    // and only new-class reps contribute rep postings.
-    val membersPath = postingsMembersPath(dir)
-    val repTexts = Tables.documents(spark, dir)
-      .join(spark.read.parquet(membersPath)
-        .filter(col("doc_id") === col("cdoc")).select(col("cdoc")),
-        col("doc_id") === col("cdoc"))
-      .select(col("cdoc"), col("text"))
-    val matched = newDocs.select(col("doc_id"), col("text"))
-      .join(repTexts, "text").select(col("doc_id"), col("cdoc"))
-    val unmatched = newDocs
-      .join(repTexts.select(col("text")), Seq("text"), "left_anti")
-      .withColumn("cdoc", min(col("doc_id"))
-        .over(org.apache.spark.sql.expressions.Window.partitionBy(col("text"))))
-    matched.unionAll(unmatched.select(col("doc_id"), col("cdoc")))
-      .write.mode("append").parquet(membersPath)
-    registerPostingTable(spark, postingsRepTableName(dir), postingsRepPath(dir), numBuckets)
-    shingleHashes(unmatched.filter(col("doc_id") === col("cdoc")))
-      .write.mode("append").format("parquet")
-      .bucketBy(numBuckets, "h").sortBy("h")
-      .option("path", postingsRepPath(dir)).saveAsTable(postingsRepTableName(dir))
-    // class sidecar refresh: true class ids can change under a delta
-    // that undercuts a stored key, and csize grows — recompute from the
-    // appended member map (O(distinct texts) output; the fp stamp below
-    // only lands after this commits, so a crash here means full rebuild)
-    writeClassSidecar(spark, dir)
-    // the delta files are already in `dir`: re-list it and stamp the
-    // sidecar with the post-append fingerprint
-    Tables.invalidate(spark, dir, "documents")
-    val fp = Similarity.corpusFingerprint(spark, dir, "documents.parquet")
-    spark.range(1).select(lit(fp).as("fp"))
-      .coalesce(1).write.mode("overwrite").parquet(fpPath)
-    // doc-stats sidecar rides the same append: extend it with the delta
-    // docs' rows when it matches the pre-append generation, else leave it
-    // stale (next ensurePostingStats rebuilds from a full scan — the
-    // fallback, never a fresh-looking sidecar missing the delta)
-    val statsPath = postingsStatsPath(dir)
-    val statsFpPath = statsPath + "_model"
-    val statsFp =
-      try Some(spark.read.parquet(statsFpPath).collect()(0).getLong(0))
-      catch { case e if scala.util.control.NonFatal(e) => None }
-    if (statsFp.contains(storedFp)) {
-      docStatsOf(newDocs).write.mode("append").parquet(statsPath)
-      spark.range(1).select(lit(fp).as("fp"))
-        .coalesce(1).write.mode("overwrite").parquet(statsFpPath)
-    }
-    table
-    }
-  }
-
-  /** Per-doc stats sidecar of a posting generation. */
-  private[graft] def postingsStatsPath(dir: String): String =
-    postingsServePath(dir) + "_docstats"
-
-  /** One scan projection of the per-doc posting stats: content split key
-    * and distinct-shingle count. The SAME split and size expressions as
-    * [[Curation.contaminationOf]], so served screens match the batch
-    * computation by construction. */
-  private def docStatsOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    docs
-      .select(
-        col("doc_id"),
-        TextAnalysis.splitCol(TextAnalysis.splitKeyCol).as("split"),
-        call_function(graft.functions.GraftFunctions.ShingleSetName, col("text")).as("hs"))
-      .filter(col("hs").isNotNull)
-      .select(col("doc_id"), col("split"), size(col("hs")).as("n_shingles"))
-  }
-
-  /** Ensure the posting generation's per-doc stats sidecar
-    * (doc_id, split, n_shingles) exists and matches the corpus
-    * fingerprint; returns it. The sidecar is what lets a posting-served
-    * decontamination screen ([[Curation.contaminationDeltaServe]]) skip
-    * the corpus text scan entirely at query time — per-doc denominators
-    * are index state, paid once per generation. Generations written
-    * before this sidecar existed simply build it on first use (one scan,
-    * fingerprint-stamped after the write — the crash-safety order of
-    * [[ensurePostings]]). */
-  private[graft] def ensurePostingStats(spark: SparkSession, dir: String): DataFrame = {
-    ensurePostings(spark, dir)
-    val path = postingsStatsPath(dir)
-    val fpPath = path + "_model"
-    val fp = Similarity.corpusFingerprint(spark, dir, "documents.parquet")
-    val storedFp =
-      try Some(Similarity.readSidecarRows(spark, fpPath)(0).getLong(0))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          Similarity.warnUnreadableSidecar("posting-doc-stats", fpPath, e)
-          None
-      }
-    if (!storedFp.contains(fp)) {
-      Tables.invalidate(spark, dir, "documents")
-      docStatsOf(Tables.documents(spark, dir))
-        .write.mode("overwrite").parquet(path)
-      spark.range(1).select(lit(fp).as("fp"))
-        .coalesce(1).write.mode("overwrite").parquet(fpPath)
-    }
-    spark.read.parquet(path)
-  }
+      expectedFp: Option[Long] = None): String =
+    ServingStore.deriveGeneration(spark, "posting-index", postingsServePath(dir),
+        postingArtifacts(dir, numBuckets),
+        carry = Seq("postings", "members", "rep", "docstats"))(
+      ServingStore.landed("posting-index", postingsServePath(dir), expectedFp, () => {
+        // the delta files are already in `dir`: re-list it
+        Tables.invalidate(spark, dir, "documents")
+        Similarity.corpusFingerprint(spark, dir, "documents.parquet")
+      })) { (prev, next) =>
+      val sets = docShingles(newDocs)
+      ServingStore.writeBucketed(postingsOf(sets), next, "postings")
+      // collapse maintenance: assign each delta doc to its text class —
+      // an EXISTING class when the text matches a committed rep's text
+      // (exact string join, no hashes), a NEW class keyed by the delta
+      // group's min doc_id otherwise. Rep-ness is append-stable: docs
+      // are only ever added, so an existing class's stored key never
+      // moves, and only new-class reps contribute rep postings.
+      val repTexts = Tables.documents(spark, dir)
+        .join(spark.read.parquet(prev.path("members"))
+          .filter(col("doc_id") === col("cdoc")).select(col("cdoc")),
+          col("doc_id") === col("cdoc"))
+        .select(col("cdoc"), col("text"))
+      val matched = newDocs.select(col("doc_id"), col("text"))
+        .join(repTexts, "text").select(col("doc_id"), col("cdoc"))
+      val unmatched = newDocs
+        .join(repTexts.select(col("text")), Seq("text"), "left_anti")
+        .withColumn("cdoc", min(col("doc_id"))
+          .over(org.apache.spark.sql.expressions.Window.partitionBy(col("text"))))
+      matched.unionAll(unmatched.select(col("doc_id"), col("cdoc")))
+        .write.mode("append").parquet(next.path("members"))
+      val newReps = unmatched.filter(col("doc_id") === col("cdoc")).select(col("doc_id"))
+      ServingStore.writeBucketed(postingsOf(sets.join(newReps, "doc_id")), next, "rep")
+      writeClasses(spark, next)
+      docStatsOf(sets).write.mode("append").parquet(next.path("docstats"))
+    }.table("postings")
 
   /** The collapse-served candidate machinery shared by
     * [[ngramJaccardServe]] and [[dedupResolveServe]]:
@@ -600,21 +400,17 @@ object Dedup {
     * operator's contract is exact. */
   private[graft] def collapsedNgramParts(spark: SparkSession, dir: String,
       threshold: Double): (DataFrame, DataFrame, DataFrame) = {
-    val table = ensurePostings(spark, dir)
-    // (cdoc, class_id, csize) pre-materialized at index time: no
-    // doc-level groupBy recompute per query, and the planner sees
-    // parquet stats (class-cardinality) → the cls joins below broadcast
-    // statically instead of risking aggregate-derived SMJs (r17 #3)
-    val cls = spark.read.parquet(postingsClassesPath(dir))
-    // (doc_id, class_id) likewise pre-materialized (r21): the per-query
-    // members ⋈ cls derivation carried a join-output size estimate that
-    // planned the expansion joins as SortMergeJoins — the scan's real
-    // stats let them broadcast below the threshold and SMJ above it
-    val docClass = spark.read.parquet(postingsDocClassPath(dir))
+    val gen = postingsGeneration(spark, dir)
+    // (cdoc, class_id, csize) and (doc_id, class_id) pre-materialized
+    // at index time ([[postingArtifacts]]): the planner sees parquet
+    // stats, so the class joins below broadcast statically instead of
+    // risking aggregate- or join-derived SMJs
+    val cls = spark.read.parquet(gen.path("cls"))
+    val docClass = spark.read.parquet(gen.path("docclass"))
     // hot cap over the FULL doc-level table (df counts documents);
     // candidates over the rep table — both bucket-local on h
-    val sh = spark.table(postingsRepTableName(dir))
-      .join(hotShingles(spark.table(table)), Seq("h"), "left_anti")
+    val sh = spark.table(gen.table("rep"))
+      .join(hotShingles(spark.table(gen.table("postings"))), Seq("h"), "left_anti")
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_shingles"))
     val rj = jaccardPairsFrom(sh, threshold) // cdoc-level (doc_a, doc_b, shared, jaccard)
     val repJaccard = rj
@@ -677,70 +473,30 @@ object Dedup {
     * existing ones; after a season of daily ingests each bucket-local
     * task opens O(appends) small files and re-sorts their union — the
     * classic LSM read-amplification, paid on every dedup run. Compaction
-    * rewrites the SAME rows into one sorted file per bucket (the
-    * repartition on `h` uses the same murmur3-pmod placement as the
-    * bucket-id assignment, so each task holds exactly one bucket), with
-    * the index content, bucket spec, and corpus fingerprint all
-    * unchanged — queries before and after are equal by construction,
-    * and the per-file sort a fresh build provides is restored.
-    *
-    * Crash safety: the compacted copy is fully written to a side path
-    * first, then the fingerprint sidecar is DELETED before the file
-    * swap and re-stamped (same content) only after it — a crash
-    * anywhere in the swap window leaves an unproven generation that
-    * [[ensurePostings]] rebuilds from scratch, never a silently empty
-    * or half-swapped index. */
+    * commits a new generation holding the SAME rows in one sorted file
+    * per bucket (the repartition on `h` uses the same murmur3-pmod
+    * placement as the bucket-id assignment, so each task holds exactly
+    * one bucket), the other artifacts hard-linked, with the corpus
+    * fingerprint unchanged — queries before and after are equal by
+    * construction, and readers of the previous generation keep it. */
   def compactPostings(spark: SparkSession, dir: String,
       numBuckets: Int = PostingsBuckets): Unit = {
-    val table = ensurePostings(spark, dir, numBuckets)
-    val path = postingsServePath(dir)
-    val repTable = postingsRepTableName(dir)
-    val repPath = postingsRepPath(dir)
-    val fpPath = path + "_model"
-    // live-path mutation: serialize with concurrent ensure/append (r15)
-    ServingStore.withBuildLock(path) {
-    val fp = Similarity.readSidecarRows(spark, fpPath)(0).getLong(0)
-    // one-file-per-bucket rides the task←→bucket alignment: an explicit
-    // repartition on h uses the same murmur3-pmod placement as the
-    // bucket-id assignment, so each of the numBuckets tasks holds
-    // exactly one bucket. Read the RAW files, not the catalog table —
-    // the bucketed relation advertises HashPartitioning(h, n), which
-    // makes EnsureRequirements elide this exact shuffle and hand the
-    // writer the scan's size-based splits instead (several buckets per
-    // task → several files per bucket, the fragmentation we're undoing).
-    // Both h-bucketed tables (doc-level and rep) compact in one swap
-    // window; fragmented appends hit both the same way.
-    def writeCompacted(srcPath: String, tmpPath: String, tmpTable: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-      deleteTree(tmpPath)
-      spark.read.parquet(srcPath)
-        .repartition(numBuckets, col("h"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(numBuckets, "h").sortBy("h")
-        .option("path", tmpPath).saveAsTable(tmpTable)
-      spark.sql(s"DROP TABLE IF EXISTS $tmpTable") // catalog entry only; files stay
+    postingsGeneration(spark, dir, numBuckets)
+    ServingStore.deriveGeneration(spark, "posting-index", postingsServePath(dir),
+        postingArtifacts(dir, numBuckets),
+        carry = Seq("members", "cls", "docclass", "docstats"))(identity) { (prev, next) =>
+      // Read the RAW files, not the catalog table — the bucketed
+      // relation advertises HashPartitioning(h, n), which makes
+      // EnsureRequirements elide this exact shuffle and hand the writer
+      // the scan's size-based splits instead (several buckets per task
+      // → several files per bucket, the fragmentation being undone)
+      Seq("postings", "rep").foreach { sub =>
+        ServingStore.writeBucketed(
+          spark.read.parquet(prev.path(sub)).repartition(numBuckets, col("h")), next, sub)
+      }
     }
-    writeCompacted(path, path + "_compact_tmp", table + "_compact_tmp")
-    writeCompacted(repPath, repPath + "_compact_tmp", repTable + "_compact_tmp")
-    deleteTree(fpPath) // unprove BEFORE touching live files
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS $repTable")
-    deleteTree(path)
-    deleteTree(repPath)
-    // harness-only kill -9 with the live index GONE and the compacted
-    // copy not yet moved in — the unproven state ensure must rebuild
-    ServingStore.crashPoint("postings.compact.midswap")
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(path + "_compact_tmp"), java.nio.file.Paths.get(path))
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(repPath + "_compact_tmp"), java.nio.file.Paths.get(repPath))
-    registerPostingTable(spark, table, path, numBuckets)
-    registerPostingTable(spark, repTable, repPath, numBuckets)
-    spark.range(1).select(lit(fp).as("fp"))
-      .coalesce(1).write.mode("overwrite").parquet(fpPath)
-    }
-    // live files rewritten under an unchanged corpus stamp: memoized
-    // prepared plans pin the old listing — drop them (r16 review)
+    // the corpus stamp is unchanged, so memoized prepared plans would
+    // keep the previous generation — which the NEXT commit prunes
     graft.PlanCache.invalidate()
   }
 
@@ -2241,12 +1997,13 @@ object Dedup {
     * component minimum over doc ids (each class id is its class's min,
     * up to the query-time re-min over the member map). */
   def dedupResolveServe(spark: SparkSession, dir: String): DataFrame = {
-    ensurePostings(spark, dir) // member/class sidecars fresh for THIS corpus
+    // class artifacts fresh for THIS corpus
+    val docClass = postingsGeneration(spark, dir).path("docclass")
     val canon = ensureResolveCanon(spark, dir)
-    // (doc_id, class_id) served from the pre-materialized sidecar (r21):
+    // (doc_id, class_id) served from the pre-materialized artifact (r21):
     // one join instead of two per serve, with parquet stats the planner
     // can broadcast on (the members ⋈ cls derivation could not)
-    spark.read.parquet(postingsDocClassPath(dir))
+    spark.read.parquet(docClass)
       .join(canon, "class_id").select(col("doc_id"), col("canonical_id"))
   }
 

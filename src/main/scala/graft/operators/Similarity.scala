@@ -186,46 +186,28 @@ object Similarity {
     servePath(s"gt_serve_k${k}_", dir)
 
   /** Fingerprint-keyed brute-force ground truth for the standard query
-    * subset — maintained like the index generations ([[knnIvfServe]]):
-    * built once per corpus generation, invalidated by any file change.
+    * subset — a [[ServingStore]] generation: built once per corpus
+    * generation, invalidated by any file change.
     * At corpus scale this is the standard ANN-benchmark discipline
     * (ground truth is computed once and versioned with the corpus, e.g.
     * the published BIGANN GT files), NOT a per-query brute scan. */
   private[graft] def ensureGroundTruth(spark: SparkSession, dir: String,
-      k: Int = KnnK): DataFrame = {
-    val path = gtServePath(dir, k)
-    val fpPath = path + "_model"
-    val fp = corpusFingerprint(spark, dir)
-    val storedFp =
-      try Some(readSidecarRows(spark, fpPath)(0).getLong(0))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("ground-truth", fpPath, e)
-          None
-      }
-    if (!storedFp.contains(fp)) ServingStore.withBuildLock(path) {
-      // re-probe under the lock: a waiting loser serves the winner's
-      // ground truth instead of overwriting it (live-path store, r15)
-      val again =
-        try Some(readSidecarRows(spark, fpPath)(0).getLong(0))
-        catch { case e if scala.util.control.NonFatal(e) => None }
-      if (!again.contains(fp)) {
+      k: Int = KnnK): DataFrame =
+    ServingStore.served(spark, "ground-truth", gtServePath(dir, k), corpusFingerprint(spark, dir)) {
+      gen =>
         Tables.invalidate(spark, dir, "embeddings")
-        knnBrute(spark, dir, k).write.mode("overwrite").parquet(path)
-        spark.range(1).select(lit(fp).as("fp"))
-          .coalesce(1).write.mode("overwrite").parquet(fpPath)
+        knnBrute(spark, dir, k).write.mode("overwrite").parquet(gen)
+    } { gen =>
+      // GT is (queries × k) rows — driver-sized by construction, so serve
+      // it RESIDENT as a LocalRelation: the per-serve broadcast then costs
+      // no scan job at all (same discipline as the model sidecars)
+      val rows = readSidecarRows(spark, gen)
+      if (rows.isEmpty) spark.read.parquet(gen)
+      else {
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(rows.toSeq.asJava, rows.head.schema)
       }
     }
-    // GT is (queries × k) rows — driver-sized by construction, so serve
-    // it RESIDENT as a LocalRelation: the per-serve broadcast then costs
-    // no scan job at all (same discipline as the model sidecars)
-    val rows = readSidecarRows(spark, path)
-    if (rows.isEmpty) spark.read.parquet(path)
-    else {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.toSeq.asJava, rows.head.schema)
-    }
-  }
 
   /** Append a per-query `recall_at_k` column to an approximate top-k
     * result: |approx ∩ brute-top-k| / k against the persisted ground
@@ -604,7 +586,7 @@ object Similarity {
     * partition-invariant, no sort), and it never engages below
     * 256 x nList vectors — every shipped SF and pin corpus trains
     * unsampled, so this is purely the capital-cost bound for the
-    * clamped-k regime (StressR13b's 103 s assignment-store build at
+    * clamped-k regime (a measured 103 s assignment-store build at
     * 200k x 4096 cells is the row it exists for). */
   val MaxFitPointsPerCentroid = 256
 

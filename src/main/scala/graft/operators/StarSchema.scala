@@ -249,12 +249,6 @@ object StarSchema {
   private[graft] def factServePath(dir: String): String =
     new java.io.File(Similarity.servePath("factlayout_", dir)).getAbsolutePath
 
-  private def factTableName(dir: String, which: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
-    s"graft_fact_${which}_$digest"
-  }
-
   /** The fingerprint the fact layout is keyed by. Covers the DIM
     * tables too (r15 review): the denormalized facts BAKE IN region
     * names and customer nations at build time, so an in-place dim
@@ -304,29 +298,30 @@ object StarSchema {
     (col("xprice") / (lit(1.0) + col("c_nationkey").cast(DoubleType) * lit(0.05)))
       .as("price_usd"))
 
-  /** Register the layout's catalog tables over existing files — the
-    * DDL schema comes from the FILES, never a hand-written literal (a
-    * drifted literal reads clean at registration and fails at scan
-    * time — the r13 warm-store trap). Shared by the warm ensure path
-    * and the append (a fresh session resuming a stream must register
-    * before it can probe the served tables). */
-  private def registerFactTables(spark: SparkSession, dir: String,
-      numBuckets: Int): Unit = {
-    val path = factServePath(dir)
-    def register(table: String, location: String, key: String): Unit =
-      if (!spark.catalog.tableExists(table))
-        spark.sql(
-          s"""CREATE TABLE $table (${spark.read.parquet(location).schema.toDDL})
-             |USING parquet
-             |CLUSTERED BY ($key) SORTED BY ($key) INTO $numBuckets BUCKETS
-             |LOCATION '$location'""".stripMargin)
-    register(factTableName(dir, "lirev"), s"$path/lirev", "l_orderkey")
-    register(factTableName(dir, "limonth"), s"$path/limonth", "l_orderkey")
-    register(factTableName(dir, "orders"), s"$path/orders", "o_orderkey")
+  /** Stamped with every fact-layout generation: the corpus dir (the
+    * serve-path name hashes it irreversibly; the janitor reads it back)
+    * and the layout version, which the fingerprint also covers — an
+    * append into a layout of an older table shape must refuse even
+    * without a pre-delta fingerprint to compare (the FactSink repair
+    * path passes none). */
+  private def factMeta(dir: String): Seq[(String, String)] =
+    Seq("dir" -> dir, "ver" -> FactLayoutVersion.toString)
+
+  /** The artifacts of a fact-layout generation: the co-bucketed
+    * partial tables (registered per generation as `graft_fact_<which>_`
+    * tables) and the denormalized facts. */
+  private def factArtifacts(dir: String, numBuckets: Int): Seq[ServingStore.Artifact] = {
+    def bucketed(sub: String, key: String) = ServingStore.Artifact(sub,
+      Some(ServingStore.Bucketing(ServingStore.tableBase("fact_" + sub, dir), key, numBuckets)))
+    Seq(bucketed("lirev", "l_orderkey"), bucketed("limonth", "l_orderkey"),
+      bucketed("orders", "o_orderkey")) ++
+      Seq("fact", "monthfact", "txfact", "nationfact").map(ServingStore.Artifact(_))
   }
 
   /** Ensure the co-bucketed-on-orderkey FACT layout exists for `dir`
-    * and is registered; returns (lineitem-revenue table, orders table).
+    * and is registered; returns its generation (tables `lirev`,
+    * `limonth`, `orders`; paths `fact`, `monthfact`, `txfact`,
+    * `nationfact`).
     *
     * The r14 sf1 trial left q_star_join as the one row that GROWS with
     * data: the per-query cost was the agg exchange + the orderkey
@@ -337,69 +332,23 @@ object StarSchema {
     * of partials is bit-equal to the flat sum) and the slim orders
     * columns are persisted bucketed AND sorted on the orderkey, so
     * every subsequent orderkey join between them is bucket-local —
-    * zero exchanges, zero sorts, paid once at layout time. Same
-    * fingerprint-sidecar generation discipline as
-    * [[Dedup.ensurePostings]] (file-metadata keyed, rebuild on corpus
-    * swap, cheap catalog re-registration for a warm store written by
-    * an earlier session). */
-  /** Serve memo: the sidecar parquet read + catalog existence checks
-    * cost ~0.1s of driver fixed overhead per serve. Keyed on the
-    * corpus fingerprint (recomputed every call — a driver-side file
-    * listing + 12 KB CRC stamps, sub-ms on the node-local dir), so a
-    * corpus swap misses and takes the slow path; same discipline as
-    * ServingStore.serveMemo. Session-scoped (catalog names bind a
-    * session). */
-  private val factMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, FactLayout)]()
-
+    * zero exchanges, zero sorts, paid once at layout time. A
+    * [[ServingStore]] generation keyed by [[factFingerprint]] and
+    * stamped with [[factMeta]]. `force` rebuilds even when the
+    * fingerprint matches — the streaming sink's repair path for a
+    * generation whose fp covers files whose rows were never appended
+    * (the SigSink landing race). */
   private[graft] def ensureFactLayout(spark: SparkSession, dir: String,
-      numBuckets: Int = FactBuckets, force: Boolean = false): FactLayout = {
-    val path = factServePath(dir)
-    val liTable = factTableName(dir, "lirev")
-    val liMonthTable = factTableName(dir, "limonth")
-    val oTable = factTableName(dir, "orders")
-    val fpPath = path + "_model"
-    val fp = factFingerprint(spark, dir, numBuckets)
-    val memoKey = System.identityHashCode(spark).toString + "|" + dir + "|" + numBuckets
-    if (!force) Option(factMemo.get(memoKey)) match {
-      case Some((f, layout)) if f == fp => return layout
-      case _ => ()
-    }
-    def readStoredFp(): Option[Long] =
-      try Some(Similarity.readSidecarRows(spark, fpPath)(0).getLong(0))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          Similarity.warnUnreadableSidecar("fact-layout", fpPath, e)
-          None
-      }
-    var storedFp = readStoredFp()
-    // `force` rebuilds even when the fingerprint matches — the
-    // streaming sink's repair path for a generation whose fp covers
-    // files whose rows were never appended (the SigSink landing race).
-    // The build runs under the store's BUILD LOCK (r15 review followup):
-    // unlike ServingStore generations, this layout overwrites LIVE
-    // paths, so two sessions ensuring the same stale store must not
-    // both build; the loser re-checks under the lock and almost always
-    // registers the winner's fresh layout instead.
-    if (force || !storedFp.contains(fp)) ServingStore.withBuildLock(path) {
-      storedFp = readStoredFp()
-      if (!force && storedFp.contains(fp)) registerFactTables(spark, dir, numBuckets)
-      else {
-      // a SAME-fp force rebuild mutates live files the sidecar still
-      // stamps fresh — unprove FIRST (delete the sidecar), so a crash
-      // mid-rebuild reads as stale and the next ensure rebuilds, never
-      // a fresh-looking half-written layout (r15 review; the stale-fp
-      // path needs no unprove — its sidecar already mismatches)
-      if (force) Dedup.deleteTree(fpPath)
+      numBuckets: Int = FactBuckets, force: Boolean = false): ServingStore.Generation =
+    ServingStore.ensureGeneration(spark, "fact-layout", factServePath(dir),
+        factFingerprint(spark, dir, numBuckets), factArtifacts(dir, numBuckets),
+        meta = factMeta(dir), force = force) { gen =>
       // the dims too (r16 ADVICE): the rebuild BAKES region/nation
       // attribution in via conformedDim — an in-place dim rewrite (the
       // very staleness this fingerprint exists to catch) must not read
       // through a plan pinned to the old dim file listing
       Seq("lineitem", "orders", "customer", "nation", "region", "part")
         .foreach(Tables.invalidate(spark, dir, _))
-      spark.sql(s"DROP TABLE IF EXISTS $liTable")
-      spark.sql(s"DROP TABLE IF EXISTS $liMonthTable")
-      spark.sql(s"DROP TABLE IF EXISTS $oTable")
       val one = lit(1).cast(DecimalType(18, 2))
       // one lineitem scan feeds both partial tables AND the
       // transaction-grain denormalized fact (r16): xprice keeps the
@@ -426,25 +375,25 @@ object StarSchema {
       // aligned task per bucket = one file per bucket. The groupBys
       // reuse the repartition (hash on a subset of the group keys
       // satisfies the aggregation's distribution).
-      writeBucketed(
+      ServingStore.writeBucketed(
         li.repartition(numBuckets, col("l_orderkey"))
           .groupBy(col("l_orderkey"))
           .agg(sum(col("rev")).cast(DecimalType(18, 4)).as("rev"), cnt.as("n")),
-        liTable, "l_orderkey", numBuckets, s"$path/lirev")
+        gen, "lirev")
       // per-(orderkey, ship month) price partials: the monthly rollups'
       // (hdi volatility) probe side
-      writeBucketed(
+      ServingStore.writeBucketed(
         li.repartition(numBuckets, col("l_orderkey"))
           .groupBy(col("l_orderkey"),
             year(col("l_shipdate")).as("ship_yy"), month(col("l_shipdate")).as("ship_mm"))
           .agg(sum(col("price")).cast(DecimalType(18, 2)).as("price")),
-        liMonthTable, "l_orderkey", numBuckets, s"$path/limonth")
-      writeBucketed(
+        gen, "limonth")
+      ServingStore.writeBucketed(
         Tables.orders(spark, dir)
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
             col("o_totalprice"))
           .repartition(numBuckets, col("o_orderkey")),
-        oTable, "o_orderkey", numBuckets, s"$path/orders")
+        gen, "orders")
       // DENORMALIZED facts — the reference's own architecture (dbt
       // fact_transaction.sql materializes the joined fact once per
       // load; queries read the fact table). The co-bucketed tables
@@ -454,22 +403,22 @@ object StarSchema {
       // Transaction grain, not pre-aggregated: any rollup over
       // region/year (or nation/month) serves from them.
       val dim = conformedDim(spark, dir)
-      spark.table(liTable)
-        .join(spark.table(oTable).hint("shuffle_hash"),
+      spark.table(gen.table("lirev"))
+        .join(spark.table(gen.table("orders")).hint("shuffle_hash"),
           col("l_orderkey") === col("o_orderkey"))
         .join(dim, col("o_custkey") === col("c_custkey"))
         .select(col("r_name"), year(col("o_orderdate")).as("order_year"),
           col("rev"), col("n"))
         .repartition(numBuckets)
-        .write.mode("overwrite").parquet(s"$path/fact")
-      spark.table(liMonthTable)
-        .join(spark.table(oTable).hint("shuffle_hash"),
+        .write.parquet(gen.path("fact"))
+      spark.table(gen.table("limonth"))
+        .join(spark.table(gen.table("orders")).hint("shuffle_hash"),
           col("l_orderkey") === col("o_orderkey"))
         .join(dim, col("o_custkey") === col("c_custkey"))
         .select(col("c_nationkey").as("nationkey"),
           col("ship_yy"), col("ship_mm"), col("price"))
         .repartition(numBuckets)
-        .write.mode("overwrite").parquet(s"$path/monthfact")
+        .write.parquet(gen.path("monthfact"))
       // TRANSACTION-grain denormalized fact (r16, the literal dbt
       // fact_transaction shape): raw lineitem rows with the order
       // month, brand, nation and usd conversion attached — ml_extract
@@ -482,61 +431,36 @@ object StarSchema {
       val partDim = broadcast(
         Tables.part(spark, dir).select(col("p_partkey"), col("p_brand")))
       li.repartition(numBuckets, col("l_orderkey"))
-        .join(spark.table(oTable).hint("shuffle_hash"),
+        .join(spark.table(gen.table("orders")).hint("shuffle_hash"),
           col("l_orderkey") === col("o_orderkey"))
         .join(dim, col("o_custkey") === col("c_custkey"))
         .join(partDim, col("l_partkey") === col("p_partkey"))
         .select(txFactCols: _*)
-        .write.mode("overwrite").parquet(s"$path/txfact")
+        .write.parquet(gen.path("txfact"))
       // NATION-grain order partials (r16): per-nation decimal sums of
       // o_totalprice + order counts — price_usd (order grain, no
       // lineitem dependency) serves as a 25-row-scale scan+rollup.
       // Partials are decimal-associative, so append batches just lay
       // more partial rows next to these.
-      spark.table(oTable)
+      spark.table(gen.table("orders"))
         .join(dim, col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey"), col("n_name"))
         .agg(sum(dec2(col("o_totalprice"))).cast(DecimalType(18, 2)).as("total_local"),
           cnt.as("n_orders"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/nationfact")
-      // sidecar written only after all table writes succeeded — a
-      // crash in between reads as stale and rebuilds. The corpus dir
-      // rides along (the serve-path name hashes it irreversibly): the
-      // janitor ([[pruneFactLayouts]]) reads it back to judge whether
-      // the corpus still exists
-      spark.range(1).select(lit(fp).as("fp"), lit(dir).as("dir"), lit(FactLayoutVersion).as("ver"))
-        .coalesce(1).write.mode("overwrite").parquet(fpPath)
-      }
-    } else {
-      // warm store written by an earlier session: re-register over
-      // the existing files ([[registerFactTables]])
-      registerFactTables(spark, dir, numBuckets)
+        .write.parquet(gen.path("nationfact"))
     }
-    val layout = FactLayout(liTable, liMonthTable, oTable,
-      s"$path/fact", s"$path/monthfact", s"$path/txfact", s"$path/nationfact")
-    if (factMemo.size > 256) factMemo.clear()
-    factMemo.put(memoKey, (fp, layout))
-    layout
-  }
 
-  /** The served fact tables' catalog names and the denormalized-fact
-    * paths ([[ensureFactLayout]]). */
-  private[graft] final case class FactLayout(
-      liRevTable: String, liMonthTable: String, ordersTable: String,
-      factPath: String, monthFactPath: String,
-      txFactPath: String, nationFactPath: String)
-
-  /** Incrementally maintain the fact layout after an ingest: fold ONLY
-    * the newly landed orders' partials and denormalized fact rows into
-    * the existing generation, then advance the fingerprint sidecar —
-    * the [[Dedup.appendPostings]] discipline applied to the fact
-    * tables. This is what makes the layout viable at warehouse scale:
-    * a daily ingest appends bucket files next to the existing ones
-    * (bucket ids live in file names, so the bucket spec — and the
-    * exchange-free orderkey join — survives) instead of re-scanning
-    * and re-shuffling the whole fact history. The reference's dbt
-    * models are incremental for the same reason.
+  /** Incrementally maintain the fact layout after an ingest: a new
+    * generation hard-linking every committed table and adding ONLY the
+    * newly landed orders' partials and denormalized fact rows, stamped
+    * with the post-append fingerprint — the [[Dedup.appendPostings]]
+    * discipline applied to the fact tables. This is what makes the
+    * layout viable at warehouse scale: a daily ingest writes bucket
+    * files next to the linked ones (bucket ids live in file names, so
+    * the bucket spec — and the exchange-free orderkey join — survives)
+    * instead of re-scanning and re-shuffling the whole fact history.
+    * The reference's dbt models are incremental for the same reason.
     *
     * PRECONDITION (the TPC-H ingest shape, probed with loud refusals):
     * the delta is ORDER-COMPLETE — every delta lineitem row belongs to
@@ -548,271 +472,146 @@ object StarSchema {
     * Call AFTER the delta files land in `dir`, passing exactly the
     * newly landed rows. `expectedFp` (snapshotted BEFORE the delta
     * landed) proves the generation matches the pre-append corpus —
-    * out-of-band edits must take the full-rebuild path. Crash safety:
-    * the sidecar advances only after every append committed, so a
-    * crash in between reads as stale and the next ensure rebuilds —
-    * never a fresh-looking layout missing rows. (Partial appends
-    * before a crash leave orphan rows a rebuild prunes with the
-    * generation, the same exposure window appendPostings documents.) */
+    * out-of-band edits must take the full-rebuild path. A layout of an
+    * older table shape ([[factMeta]]) is refused structurally. */
   def appendFactLayout(spark: SparkSession, dir: String,
       newLineitem: DataFrame, newOrders: DataFrame,
       expectedFp: Option[Long] = None,
       numBuckets: Int = FactBuckets): Unit = {
-    val path = factServePath(dir)
-    val fpPath = path + "_model"
-    require(new java.io.File(path).exists(),
-      s"no fact layout at $path to append into — run ensureFactLayout first")
-    // the WHOLE append runs under the store's build lock (the
-    // ServingStore.append discipline): the layout mutates live paths,
-    // so a concurrent ensure/append/compact must serialize with it
-    ServingStore.withBuildLock(path) {
-    val sidecarRow =
-      try Similarity.readSidecarRows(spark, fpPath)(0)
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          throw new IllegalStateException(
-            s"fact-layout sidecar at $fpPath unreadable — run ensureFactLayout " +
-              "(full rebuild) instead of appending into an unproven generation", e)
-      }
-    val storedFp = sidecarRow.getLong(0)
-    // SHAPE refusal (r16 review): an append into a layout built by an
-    // older engine version would parquet-CREATE the table dirs that
-    // version never wrote (txfact/nationfact) holding only the delta's
-    // rows, then stamp a current-version fingerprint over them — the
-    // served extract would silently hold delta-only data. The version
-    // check is structural, independent of expectedFp (the FactSink
-    // repair path appends without one).
-    val storedVer =
-      if (sidecarRow.schema.fieldNames.contains("ver")) sidecarRow.getAs[Int]("ver")
-      else -1
-    if (storedVer != FactLayoutVersion) throw new ServingStore.StaleStoreRefusal(
-      s"fact layout at $path was built by layout version $storedVer " +
-        s"(current $FactLayoutVersion): its table shape predates this " +
-        "engine — rebuild with ensureFactLayout, never append a delta " +
-        "into a legacy shape")
-    expectedFp.foreach(f => if (storedFp != f) throw new ServingStore.StaleStoreRefusal(
-      s"fact layout at $path was built for a different corpus state " +
-        s"(stored fp $storedFp != pre-append fp $f): the layout is stale " +
-        "and must be rebuilt with ensureFactLayout, not appended into"))
-    val liTable = factTableName(dir, "lirev")
-    val liMonthTable = factTableName(dir, "limonth")
-    val oTable = factTableName(dir, "orders")
-    // a fresh session resuming over an on-disk layout has no catalog
-    // entries yet — register BEFORE probing the served tables (r15
-    // review; the r13 warm-store trap's session-resume variant)
-    registerFactTables(spark, dir, numBuckets)
-    // landed-delta refusal FIRST (the ServingStore.append ordering): a
-    // fingerprint that did not advance must refuse BEFORE any append
-    // writes, or a no-op delta would leave orphan rows behind a
-    // fresh-looking stamp
-    // dims included (r16 ADVICE): the delta's denormalized fact rows
-    // read conformedDim — which must see the CURRENT dim files, not a
-    // memoized plan over the pre-delta listing
-    Seq("lineitem", "orders", "customer", "nation", "region", "part")
-      .foreach(Tables.invalidate(spark, dir, _))
-    val newFp = factFingerprint(spark, dir, numBuckets)
-    if (newFp == storedFp) throw new ServingStore.DeltaNotLandedRefusal(
-      "corpus fingerprint unchanged after the delta — land the delta " +
-        "files BEFORE appending, so the stamped fingerprint proves the " +
-        "merged state")
-    val one = lit(1).cast(DecimalType(18, 2))
-    // one evaluation of each delta feeds the probes AND the writes
-    val o = newOrders
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-        col("o_totalprice"))
-      .localCheckpoint(eager = false)
-    val li = newLineitem
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        dec4(dec2(col("l_extendedprice")) * (one - dec2(col("l_discount")))).as("rev"),
-        dec2(col("l_extendedprice")).as("price"),
-        col("l_extendedprice").as("xprice"),
-        col("l_shipdate"))
-      .localCheckpoint(eager = false)
-    // order-completeness probes (delta-sized broadcasts — the
-    // ServingStore.append key-probe convention: checkpointed frames
-    // carry no stats, so hint or the probe sort-merges the store)
-    val deltaKeys = broadcast(o.select(col("o_orderkey")).distinct())
-    require(li.join(deltaKeys, col("l_orderkey") === col("o_orderkey"), "left_anti")
-      .isEmpty,
-      "delta lineitem rows reference orderkeys outside the delta orders — " +
-        "the delta is not order-complete; rebuild with ensureFactLayout")
-    if (!spark.table(oTable).join(deltaKeys, Seq("o_orderkey")).isEmpty)
-      throw new ServingStore.KeysAlreadyPresentRefusal(
-        "delta orderkeys already present in the served layout — the same " +
-          "rows were appended twice; rebuild with ensureFactLayout")
-    // delta partials, same expressions as the build (bit-equal rollups)
-    val liRev = li.repartition(numBuckets, col("l_orderkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(sum(col("rev")).cast(DecimalType(18, 4)).as("rev"), cnt.as("n"))
-      .localCheckpoint(eager = false) // feeds the bucketed append AND the fact join
-    val liMonth = li.repartition(numBuckets, col("l_orderkey"))
-      .groupBy(col("l_orderkey"),
-        year(col("l_shipdate")).as("ship_yy"), month(col("l_shipdate")).as("ship_mm"))
-      .agg(sum(col("price")).cast(DecimalType(18, 2)).as("price"))
-      .localCheckpoint(eager = false)
-    def appendBucketed(df: DataFrame, table: String, key: String, sub: String): Unit =
-      df.write.mode("append").format("parquet")
-        .bucketBy(numBuckets, key).sortBy(key)
-        .option("path", s"$path/$sub").saveAsTable(table)
-    appendBucketed(liRev, liTable, "l_orderkey", "lirev")
-    appendBucketed(liMonth, liMonthTable, "l_orderkey", "limonth")
-    appendBucketed(o.repartition(numBuckets, col("o_orderkey")),
-      oTable, "o_orderkey", "orders")
-    // denormalized fact deltas: the delta-local join (delta orders
-    // broadcast against delta partials) + the conformed dims
-    val dim = conformedDim(spark, dir)
-    liRev.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
-      .join(dim, col("o_custkey") === col("c_custkey"))
-      .select(col("r_name"), year(col("o_orderdate")).as("order_year"),
-        col("rev"), col("n"))
-      .write.mode("append").parquet(s"$path/fact")
-    liMonth.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
-      .join(dim, col("o_custkey") === col("c_custkey"))
-      .select(col("c_nationkey").as("nationkey"),
-        col("ship_yy"), col("ship_mm"), col("price"))
-      .write.mode("append").parquet(s"$path/monthfact")
-    // delta transaction-grain fact rows (same expressions as the build)
-    val partDim = broadcast(
-      Tables.part(spark, dir).select(col("p_partkey"), col("p_brand")))
-    li.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
-      .join(dim, col("o_custkey") === col("c_custkey"))
-      .join(partDim, col("l_partkey") === col("p_partkey"))
-      .select(txFactCols: _*)
-      .write.mode("append").parquet(s"$path/txfact")
-    // delta nation partials: decimal-associative, one more partial row
-    // per nation lands next to the existing ones
-    o.join(dim, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_nationkey"), col("n_name"))
-      .agg(sum(dec2(col("o_totalprice"))).cast(DecimalType(18, 2)).as("total_local"),
-        cnt.as("n_orders"))
-      .coalesce(1)
-      .write.mode("append").parquet(s"$path/nationfact")
-    // every append committed: stamp the post-append fingerprint
-    // (snapshotted BEFORE the writes, under the landed-delta refusal)
-    spark.range(1).select(lit(newFp).as("fp"), lit(dir).as("dir"), lit(FactLayoutVersion).as("ver"))
-      .coalesce(1).write.mode("overwrite").parquet(fpPath)
+    ServingStore.deriveGeneration(spark, "fact-layout", factServePath(dir),
+        factArtifacts(dir, numBuckets), carry = factArtifacts(dir, numBuckets).map(_.sub),
+        meta = factMeta(dir))(
+      ServingStore.landed("fact-layout", factServePath(dir), expectedFp, () => {
+        // dims included (r16 ADVICE): the delta's denormalized fact
+        // rows read conformedDim — which must see the CURRENT dim
+        // files, not a memoized plan over the pre-delta listing
+        Seq("lineitem", "orders", "customer", "nation", "region", "part")
+          .foreach(Tables.invalidate(spark, dir, _))
+        factFingerprint(spark, dir, numBuckets)
+      })) { (prev, next) =>
+      val one = lit(1).cast(DecimalType(18, 2))
+      // one evaluation of each delta feeds the probes AND the writes
+      val o = newOrders
+        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+          col("o_totalprice"))
+        .localCheckpoint(eager = false)
+      val li = newLineitem
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
+          dec4(dec2(col("l_extendedprice")) * (one - dec2(col("l_discount")))).as("rev"),
+          dec2(col("l_extendedprice")).as("price"),
+          col("l_extendedprice").as("xprice"),
+          col("l_shipdate"))
+        .localCheckpoint(eager = false)
+      // order-completeness probes (delta-sized broadcasts — the
+      // ServingStore.append key-probe convention: checkpointed frames
+      // carry no stats, so hint or the probe sort-merges the store)
+      val deltaKeys = broadcast(o.select(col("o_orderkey")).distinct())
+      require(li.join(deltaKeys, col("l_orderkey") === col("o_orderkey"), "left_anti")
+        .isEmpty,
+        "delta lineitem rows reference orderkeys outside the delta orders — " +
+          "the delta is not order-complete; rebuild with ensureFactLayout")
+      if (!spark.read.parquet(prev.path("orders")).join(deltaKeys, Seq("o_orderkey")).isEmpty)
+        throw new ServingStore.KeysAlreadyPresentRefusal(
+          "delta orderkeys already present in the served layout — the same " +
+            "rows were appended twice; rebuild with ensureFactLayout")
+      // delta partials, same expressions as the build (bit-equal rollups)
+      val liRev = li.repartition(numBuckets, col("l_orderkey"))
+        .groupBy(col("l_orderkey"))
+        .agg(sum(col("rev")).cast(DecimalType(18, 4)).as("rev"), cnt.as("n"))
+        .localCheckpoint(eager = false) // feeds the bucketed append AND the fact join
+      val liMonth = li.repartition(numBuckets, col("l_orderkey"))
+        .groupBy(col("l_orderkey"),
+          year(col("l_shipdate")).as("ship_yy"), month(col("l_shipdate")).as("ship_mm"))
+        .agg(sum(col("price")).cast(DecimalType(18, 2)).as("price"))
+        .localCheckpoint(eager = false)
+      ServingStore.writeBucketed(liRev, next, "lirev")
+      ServingStore.writeBucketed(liMonth, next, "limonth")
+      ServingStore.writeBucketed(o.repartition(numBuckets, col("o_orderkey")), next, "orders")
+      // denormalized fact deltas: the delta-local join (delta orders
+      // broadcast against delta partials) + the conformed dims
+      val dim = conformedDim(spark, dir)
+      liRev.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
+        .join(dim, col("o_custkey") === col("c_custkey"))
+        .select(col("r_name"), year(col("o_orderdate")).as("order_year"),
+          col("rev"), col("n"))
+        .write.mode("append").parquet(next.path("fact"))
+      liMonth.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
+        .join(dim, col("o_custkey") === col("c_custkey"))
+        .select(col("c_nationkey").as("nationkey"),
+          col("ship_yy"), col("ship_mm"), col("price"))
+        .write.mode("append").parquet(next.path("monthfact"))
+      // delta transaction-grain fact rows (same expressions as the build)
+      val partDim = broadcast(
+        Tables.part(spark, dir).select(col("p_partkey"), col("p_brand")))
+      li.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
+        .join(dim, col("o_custkey") === col("c_custkey"))
+        .join(partDim, col("l_partkey") === col("p_partkey"))
+        .select(txFactCols: _*)
+        .write.mode("append").parquet(next.path("txfact"))
+      // delta nation partials: decimal-associative, one more partial row
+      // per nation lands next to the existing ones
+      o.join(dim, col("o_custkey") === col("c_custkey"))
+        .groupBy(col("c_nationkey"), col("n_name"))
+        .agg(sum(dec2(col("o_totalprice"))).cast(DecimalType(18, 2)).as("total_local"),
+          cnt.as("n_orders"))
+        .coalesce(1)
+        .write.mode("append").parquet(next.path("nationfact"))
     }
+    ()
   }
 
   /** Compact the fact layout back to ONE file per bucket/partition —
-    * [[Dedup.compactPostings]]'s discipline for all five stores: every
+    * [[Dedup.compactPostings]]'s discipline for every table: each
     * [[appendFactLayout]] lays new files next to the existing ones, and
     * after a season of daily ingests each scan opens O(appends) small
-    * files (LSM read-amplification). Content, bucket spec and corpus
-    * fingerprint are unchanged — queries before and after are equal by
-    * construction. Crash safety: all compacted copies are fully written
-    * to side paths FIRST; the fingerprint sidecar is deleted before any
-    * live file moves and re-stamped (same fp) only after all five
-    * swapped — a crash anywhere in the window reads as unproven and the
-    * next ensure rebuilds, never a half-swapped layout.
-    *
-    * READER-vs-COMPACT exposure (documented, like the append orphan
-    * window): the phase-2 swap deletes and moves the live directories
-    * under the BUILD lock, but serve paths ([[starJoinServed]],
-    * Stats.hdiVolatility, a registered table scan) take no lock — a
-    * query already holding the old file listing can hit a vanished
-    * path mid-swap and fail with FileNotFound. The failure is loud
-    * (never wrong data: content is identical before/after, so a retry
-    * after the swap serves correctly), and compaction is an offline
-    * maintenance op by contract — run it in the ingest window, not
-    * concurrent with serving. ServingStore generations avoid even the
-    * loud failure by keeping the previous generation alive one cycle;
-    * the fact layout trades that for in-place bucketed-table paths
-    * (catalog LOCATIONs would otherwise need per-generation
-    * re-registration in every live session). */
+    * files (LSM read-amplification). The compacted generation has the
+    * same content, bucket spec and fingerprint — queries before and
+    * after are equal by construction, and readers of the previous
+    * generation keep it. */
   def compactFactLayout(spark: SparkSession, dir: String,
       numBuckets: Int = FactBuckets): Unit = {
     ensureFactLayout(spark, dir, numBuckets)
-    val path = factServePath(dir)
-    val fpPath = path + "_model"
-    // phases 1-2 under the store's build lock (live-path mutation);
-    // the trailing re-ensure runs AFTER release — the lock directory
-    // is not reentrant, and registration alone mutates no files
-    ServingStore.withBuildLock(path) {
-    val fp = Similarity.readSidecarRows(spark, fpPath)(0).getLong(0)
-    val bucketed = Seq(
-      (factTableName(dir, "lirev"), "lirev", "l_orderkey"),
-      (factTableName(dir, "limonth"), "limonth", "l_orderkey"),
-      (factTableName(dir, "orders"), "orders", "o_orderkey"))
-    val plain = Seq("fact", "monthfact", "txfact", "nationfact")
-    // phase 1: full compacted copies on side paths. Read the RAW files,
-    // not the catalog table — the bucketed relation's advertised
-    // partitioning would elide the one-task-per-bucket repartition
-    // (compactPostings' note)
-    bucketed.foreach { case (table, sub, key) =>
-      val tmpTable = table + "_compact_tmp"
-      spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-      Dedup.deleteTree(s"$path/${sub}_compact_tmp")
-      spark.read.parquet(s"$path/$sub")
-        .repartition(numBuckets, col(key))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(numBuckets, key).sortBy(key)
-        .option("path", s"$path/${sub}_compact_tmp").saveAsTable(tmpTable)
-      spark.sql(s"DROP TABLE IF EXISTS $tmpTable") // catalog entry only
+    ServingStore.deriveGeneration(spark, "fact-layout", factServePath(dir),
+        factArtifacts(dir, numBuckets), carry = Nil, meta = factMeta(dir))(identity) { (prev, next) =>
+      factArtifacts(dir, numBuckets).foreach { a =>
+        val df = spark.read.parquet(prev.path(a.sub))
+        a.bucketing match {
+          // Read the RAW files, not the catalog table — the bucketed
+          // relation's advertised partitioning would elide the
+          // one-task-per-bucket repartition (compactPostings' note)
+          case Some(b) =>
+            ServingStore.writeBucketed(df.repartition(numBuckets, col(b.key)), next, a.sub)
+          // nationfact is a PARTIALS store: compaction is the LSM merge —
+          // fold the per-append partial rows back to one row per nation
+          // (decimal sums are associative, so queries are equal by
+          // construction); the row-grain stores just re-pack files
+          case None if a.sub == "nationfact" =>
+            df.groupBy(col("c_nationkey"), col("n_name"))
+              .agg(sum(col("total_local")).cast(DecimalType(18, 2)).as("total_local"),
+                sum(col("n_orders")).as("n_orders"))
+              .coalesce(1).write.parquet(next.path(a.sub))
+          case None => df.repartition(numBuckets).write.parquet(next.path(a.sub))
+        }
+      }
     }
-    plain.foreach { sub =>
-      Dedup.deleteTree(s"$path/${sub}_compact_tmp")
-      // nationfact is a PARTIALS store: compaction is the LSM merge —
-      // fold the per-append partial rows back to one row per nation
-      // (decimal sums are associative, so queries are equal by
-      // construction); the row-grain stores just re-pack files
-      val df = spark.read.parquet(s"$path/$sub")
-      val compacted =
-        if (sub == "nationfact")
-          df.groupBy(col("c_nationkey"), col("n_name"))
-            .agg(sum(col("total_local")).cast(DecimalType(18, 2)).as("total_local"),
-              sum(col("n_orders")).as("n_orders"))
-            .coalesce(1)
-        else df.repartition(numBuckets)
-      compacted.write.mode("overwrite").parquet(s"$path/${sub}_compact_tmp")
-    }
-    // phase 2: unprove, swap everything, re-register, restamp
-    Dedup.deleteTree(fpPath)
-    bucketed.foreach { case (table, _, _) =>
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-    }
-    (bucketed.map(_._2) ++ plain).zipWithIndex.foreach { case (sub, i) =>
-      Dedup.deleteTree(s"$path/$sub")
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(s"$path/${sub}_compact_tmp"),
-        java.nio.file.Paths.get(s"$path/$sub"))
-      // harness-only kill -9 with ONE live dir swapped and the rest
-      // pending — the unproven (sidecar-less) state ensure must rebuild
-      if (i == 0) ServingStore.crashPoint("fact.compact.midswap")
-    }
-    spark.range(1).select(lit(fp).as("fp"), lit(dir).as("dir"), lit(FactLayoutVersion).as("ver"))
-      .coalesce(1).write.mode("overwrite").parquet(fpPath)
-    }
-    // the memo still holds this (fp, names) pair but the catalog entries
-    // are gone — drop it so the next ensure re-registers over the
-    // compacted files; the prepared-plan cache pins the OLD file
-    // listing under an unchanged corpus stamp, so it must drop too
-    // (r16 review: the invalidate contract without this call left a
-    // permanent FileNotFound on the serving surface after compaction)
-    factMemo.clear()
+    // the corpus stamp is unchanged, so memoized prepared plans would
+    // keep the previous generation — which the NEXT commit prunes
     graft.PlanCache.invalidate()
-    ensureFactLayout(spark, dir, numBuckets)
   }
 
-  /** Fact-layout JANITOR (r15 watch item 2): a layout's live paths are
-    * keyed by a hash of its corpus dir, so a deleted corpus leaves an
+  /** Fact-layout JANITOR (r15 watch item 2): a layout's paths are keyed
+    * by a hash of its corpus dir, so a deleted corpus leaves an
     * orphaned layout that nothing would ever rebuild OR reclaim — at
     * warehouse scale that is unbounded dead storage. This pass walks
     * the serve root, reads each layout's sidecar-stamped corpus dir,
-    * and prunes layouts whose corpus no longer exists, with the
-    * unprove-before-mutate discipline: the corpus liveness is
-    * re-probed UNDER the layout's build lock (two-session safety: a
-    * concurrent ensure either wins the lock first and serves before
-    * the prune, or blocks and then sees the unproven state), the
-    * sidecar is deleted FIRST (a crash mid-prune reads as stale, and
-    * a stale layout for a dead corpus fails loudly at rebuild — never
-    * serves half-deleted data), then the files. Sidecar-less dirs are
-    * SKIPPED, not deleted: an unreadable sidecar is also what a
-    * mid-build store looks like from outside, and the janitor must
-    * never race a builder's window (those dirs resolve next pass,
-    * once the build stamps or the corpus check can judge them).
-    * Returns one (layout, action) line per dir — a janitor that
-    * deletes silently is how warehouses lose data. */
+    * and retires layouts whose corpus no longer exists
+    * ([[ServingStore.retire]]: corpus liveness re-probed under the build
+    * lock, sidecar deleted first). Sidecar-less dirs are SKIPPED, not
+    * deleted: an unreadable sidecar is also what a first build looks
+    * like from outside, and the janitor must never race a builder
+    * (those dirs resolve next pass). Returns one (layout, action) line
+    * per dir — a janitor that deletes silently is how warehouses lose
+    * data. */
   def pruneFactLayouts(spark: SparkSession,
       warehouse: String = "spark-warehouse"): Seq[(String, String)] = {
     val root = new java.io.File(warehouse)
@@ -821,9 +620,8 @@ object StarSchema {
         !f.getName.endsWith("_model") && !f.getName.contains("_lock"))
       .sortBy(_.getName)
     layouts.toSeq.map { f =>
-      val fpPath = f.getPath + "_model"
       val row =
-        try Some(Similarity.readSidecarRows(spark, fpPath)(0))
+        try Some(Similarity.readSidecarRows(spark, f.getPath + "_model")(0))
         catch { case e if scala.util.control.NonFatal(e) => None }
       row match {
         case None =>
@@ -832,24 +630,11 @@ object StarSchema {
           (f.getName, "skipped: legacy sidecar without a corpus stamp")
         case Some(r) =>
           val dir = r.getAs[String]("dir")
-          if (new java.io.File(dir).exists()) (f.getName, s"kept: corpus live at $dir")
-          else ServingStore.withBuildLock(f.getPath) {
-            // re-probe under the lock: the corpus may have been
-            // re-created (or a rival ensure may have re-stamped)
-            // between the free listing and lock acquisition
-            if (new java.io.File(dir).exists())
-              (f.getName, "kept: corpus reappeared before the lock")
-            else {
-              Dedup.deleteTree(fpPath) // unprove FIRST
-              Seq("lirev", "limonth", "orders").foreach { w =>
-                spark.sql(s"DROP TABLE IF EXISTS ${factTableName(dir, w)}")
-              }
-              Dedup.deleteTree(f.getPath)
-              factMemo.clear()
-              graft.PlanCache.invalidate()
-              (f.getName, s"pruned: corpus gone from $dir")
-            }
-          }
+          def dead = !new java.io.File(dir).exists()
+          if (!dead) (f.getName, s"kept: corpus live at $dir")
+          else if (ServingStore.retire(spark, f.getPath, factArtifacts(dir, FactBuckets))(dead))
+            (f.getName, s"pruned: corpus gone from $dir")
+          else (f.getName, "kept: corpus reappeared before the lock")
       }
     }
   }
@@ -863,8 +648,7 @@ object StarSchema {
     * Identical results to the inline [[starJoin]] (same oracle — the
     * partials are decimal-associative). */
   def starJoinServed(spark: SparkSession, dir: String): DataFrame = {
-    val layout = ensureFactLayout(spark, dir)
-    spark.read.parquet(layout.factPath)
+    spark.read.parquet(ensureFactLayout(spark, dir).path("fact"))
       .groupBy(col("r_name").as("region_name"), col("order_year"))
       .agg(
         sum(col("rev")).cast(DoubleType).as("revenue"),
@@ -877,8 +661,7 @@ object StarSchema {
     * nation, part) was paid once at layout time. Bit- and type-equal
     * to the inline [[mlExtract]] (same expressions, [[txFactCols]]). */
   def mlExtractServed(spark: SparkSession, dir: String): DataFrame = {
-    val layout = ensureFactLayout(spark, dir)
-    spark.read.parquet(layout.txFactPath)
+    spark.read.parquet(ensureFactLayout(spark, dir).path("txfact"))
       .select(col("l_orderkey"), col("l_linenumber"), col("constructed_date"),
         col("product_name"), col("country"), col("price"), col("price_usd"))
   }
@@ -888,8 +671,7 @@ object StarSchema {
     * partial decimal sums regroup associatively to the flat totals, so
     * results are bit-equal to the inline [[priceUsd]]. */
   def priceUsdServed(spark: SparkSession, dir: String): DataFrame = {
-    val layout = ensureFactLayout(spark, dir)
-    spark.read.parquet(layout.nationFactPath)
+    spark.read.parquet(ensureFactLayout(spark, dir).path("nationfact"))
       .groupBy(col("n_name").as("nation_name"),
         (lit(1.0) + col("c_nationkey").cast(DoubleType) * lit(0.05)).as("fx_rate"))
       .agg(sum(col("total_local")).cast(DoubleType).as("total_local"),

@@ -66,7 +66,7 @@ object Stats {
     // trial showed the per-query join cost GROWS with data), so this
     // query is a pure scan+rollup over (nationkey, ship month, price
     // partial) rows — the dbt fact_transaction discipline.
-    val layout = StarSchema.ensureFactLayout(spark, dir)
+    val monthFact = StarSchema.ensureFactLayout(spark, dir).path("monthfact")
     val c = Tables.customer(spark, dir).select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
     // Monthly revenue per nation kept DECIMAL end-to-end: never re-quantize
     // a derived double back to decimal (Spark's double->decimal cast goes
@@ -74,7 +74,7 @@ object Stats {
     // they can disagree by 1 ulp of the target scale). Summing the
     // persisted per-(order, month) partials is bit-equal to the flat
     // sum (decimal addition is associative).
-    val monthly = spark.read.parquet(layout.monthFactPath)
+    val monthly = spark.read.parquet(monthFact)
       .groupBy(
         col("nationkey"),
         col("ship_yy").as("yy"),

@@ -80,7 +80,7 @@ object ContaminationSink {
   }
 
   /** The current full train-split contamination report: the sparse
-    * counts store joined through the posting index's doc-stats sidecar
+    * counts store joined through the posting generation's doc stats
     * — identical shape (and, by the union law, identical content) to
     * [[Curation.contaminationDeltaServe]] over every gram seen. */
   def currentScreen(spark: SparkSession, dir: String, stateRoot: String): DataFrame = {
@@ -93,7 +93,7 @@ object ContaminationSink {
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("doc_id", LongType),
             org.apache.spark.sql.types.StructField("c", LongType))))
-    Curation.screenFromHits(spark, dir, hits)
+    Curation.screenFromHits(spark, Dedup.postingsGeneration(spark, dir), hits)
   }
 
   /** foreachBatch sink over a stream of benchmark gram rows (one `h`

@@ -58,9 +58,9 @@ object FactSink {
     val batchKeys = batch.select(col("o_orderkey")).distinct()
       .localCheckpoint(eager = false) // feeds the lookup AND the verification
     def verifyCoveredOrRepair(refusal: String): Unit = {
-      val layout = StarSchema.ensureFactLayout(spark, dir)
+      val served = StarSchema.ensureFactLayout(spark, dir).path("orders")
       val missing = batchKeys
-        .join(spark.table(layout.ordersTable).select(col("o_orderkey")),
+        .join(spark.read.parquet(served).select(col("o_orderkey")),
           Seq("o_orderkey"), "left_anti")
       if (missing.isEmpty)
         logger.warn(s"fact sink: batch $batchId append refused ($refusal) " +
@@ -90,11 +90,9 @@ object FactSink {
         case _: ServingStore.DeltaNotLandedRefusal =>
           verifyCoveredOrRepair("fingerprint unchanged")
         case e: ServingStore.StaleStoreRefusal =>
-          // legacy-shape layout (r16 version check): an append would
-          // create delta-only table dirs behind a fresh stamp — the
-          // repair is a full rebuild over the landed corpus (the
-          // current fingerprint includes the layout version, so the
-          // legacy stamp reads stale and ensure rebuilds), which
+          // a layout of an older shape (pre-generation sidecar, or an
+          // older layout version in the stamped fingerprint): the
+          // repair is a full rebuild over the landed corpus, which
           // covers this batch's already-landed files
           logger.warn(s"fact sink: batch $batchId append refused " +
             s"(${e.getMessage}) — rebuilding the layout at the current shape")

@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   * full-suite pair at 10x the data either retires them or names the
   * real offenders).
   *
-  * Facts replicate with id offsets (the [[StressR13b]] convention) so
-  * fact-side joins stay consistent; dimension tables copy through
-  * unchanged — fact growth is what the floor claim is about, and
+  * Facts replicate with id offsets so fact-side joins stay
+  * consistent; dimension tables copy through unchanged — fact growth is what the floor claim is about, and
   * replicated dims would break fact->dim joins' semantics (10 copies
   * of every part row under new keys match nothing). Text/media/
   * embedding content replicates EXACTLY (no perturbation): both

@@ -4,8 +4,7 @@ import graft.{GraftSession, SparkEntry, Tables}
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
 
-/** Mode-dispatched one-off probe main (r17 verdict #6, the FloorProbe
-  * consolidation applied to the remaining probe tools): every
+/** Mode-dispatched one-off probe main (r17 verdict #6): every
   * investigation probe lives here behind a mode keyword instead of its
   * own main.
   *

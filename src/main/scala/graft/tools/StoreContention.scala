@@ -32,16 +32,21 @@ import org.apache.spark.sql.functions._
   * r15 contention run, so the LIVE-PATH stores had never seen a real
   * two-JVM race):
   *
-  *  - LIVE-PATH PHASES (4-5): two processes race the fact-layout
-  *    build, run lockstep order-complete appends, race a compaction
-  *    against a live reader (loud-failure-then-retry contract), and
-  *    race the posting-index and ANN-index ensures — cross-checked
-  *    against a cold single-process rebuild over the full corpus.
-  *  - KILL -9 CRASH INJECTION: separate JVMs are halted (137) INSIDE
-  *    the unprove-before-mutate swap windows of all three compaction
-  *    paths (GRAFT_CRASH_POINT seam), then a fresh recovery JVM must
-  *    take over the dead holders' stale locks, detect the unproven
-  *    state, rebuild, and serve results identical to pre-crash.
+  *  - MULTI-ARTIFACT PHASES (4-5): two processes race the
+  *    fact-layout build, run lockstep order-complete appends, race a
+  *    compaction against a live reader (which must never fail: a frame
+  *    held across the compaction and every fresh serve during it return
+  *    the pre-compaction result), and race the posting-index, LM-stats
+  *    and ANN-index ensures — cross-checked against a cold
+  *    single-process rebuild over the full corpus.
+  *  - KILL -9 CRASH INJECTION: separate JVMs are halted (137) at the
+  *    generation stores' single pre-commit point (new generation
+  *    written, sidecar not stamped) of the fact-layout and posting
+  *    compactions, and inside the ANN compaction's swap window
+  *    (GRAFT_CRASH_POINT seam); then a fresh recovery JVM must serve
+  *    results identical to pre-crash, take over the dead holders'
+  *    stale locks by compacting again, and leave at most two
+  *    generations per store.
   *
   * Run: `sbt 'runMain graft.tools.StoreContention'` (driver mode —
   * spawns the two workers itself; requires a prior `sbt compile`).
@@ -57,11 +62,11 @@ object StoreContention {
     case "crashfact" :: base :: Nil =>
       graft.operators.StarSchema.compactFactLayout(
         GraftSession.local("graft-crashfact"), base + "/corpus")
-      sys.error("fact.compact.midswap crash point did not fire")
+      sys.error("fact-layout.precommit crash point did not fire")
     case "crashpostings" :: base :: Nil =>
       graft.operators.Dedup.compactPostings(
         GraftSession.local("graft-crashpostings"), base + "/corpus")
-      sys.error("postings.compact.midswap crash point did not fire")
+      sys.error("posting-index.precommit crash point did not fire")
     case "crashann" :: base :: Nil =>
       val s = GraftSession.local("graft-crashann")
       graft.operators.Similarity.knnIvfServe(s, base + "/corpus").count()
@@ -158,7 +163,7 @@ object StoreContention {
     // ---- live-path phases' cross-process audit (r15 verdict #2) ----
     def readFlag(n: String): String = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(base, n)), "UTF-8")
-    Seq("phase4_sig", "phase4b_sig", "phase4c_sig", "phase5_ngram", "phase5_ivf")
+    Seq("phase4_sig", "phase4b_sig", "phase4c_sig", "phase5_ngram", "phase5_lm", "phase5_ivf")
       .foreach { tag =>
         require(readFlag(s"${tag}_a") == readFlag(s"${tag}_b"),
           s"$tag diverged between the two processes: " +
@@ -181,40 +186,50 @@ object StoreContention {
     val livePaths = Seq(
       graft.operators.StarSchema.factServePath(corpusDir),
       graft.operators.Dedup.postingsServePath(corpusDir),
+      graft.operators.Curation.lmStatsPath(corpusDir),
       graft.operators.Similarity.ivfServePath(corpusDir))
     livePaths.foreach { p =>
       require(!java.nio.file.Files.exists(ServingStore.lockPath(p)),
         s"build lock litter survived at $p")
     }
-    println("[contend] PASS: live-path fact/postings/ANN contention clean " +
-      "(append chain == cold rebuild, compaction invariant, no lock litter)")
+    println("[contend] PASS: fact/postings/LM/ANN contention clean " +
+      "(append chain == cold rebuild, compaction invariant, " +
+      s"${readFlag("phase4c_serves")} identical serves during the compaction, no lock litter)")
     spark.stop()
 
-    // ---- kill -9 crash injection at the unprove-before-mutate points ----
-    // each scenario: spawn a process that halts (137) INSIDE a compact
-    // swap window, then a FRESH recovery JVM (takeover after the lock
+    // ---- kill -9 crash injection ----
+    // each scenario: spawn a process that halts (137) at a compaction's
+    // crash point, then a FRESH recovery JVM (takeover after the lock
     // goes stale) must serve results identical to the pre-crash state.
     Seq("crashfact", "crashpostings", "crashann").foreach { mode =>
       val c = spawn(mode, Seq(base), env = Map("GRAFT_CRASH_POINT" -> (mode match {
-        case "crashfact" => "fact.compact.midswap"
-        case "crashpostings" => "postings.compact.midswap"
+        case "crashfact" => "fact-layout.precommit"
+        case "crashpostings" => "posting-index.precommit"
         case _ => "ann.compact.midswap"
       })))
       val done = c.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)
       val code = if (done) c.exitValue() else { c.destroyForcibly(); -1 }
       require(code == 137, s"$mode: expected halt(137) at the crash point, got $code")
-      println(s"[contend] $mode halted mid-swap as injected")
+      println(s"[contend] $mode halted at its crash point as injected")
     }
     val r = spawn("recover", Seq(base))
     require(r.waitFor(20, java.util.concurrent.TimeUnit.MINUTES) && r.exitValue() == 0,
       "recovery JVM failed — see /tmp/contend_recover*.log")
-    val recovered = readFlag("recover_sig")
     val expected = Seq(readFlag("phase4c_sig_a"), readFlag("phase5_ngram_a"),
       readFlag("phase5_ivf_a")).mkString(";")
-    require(recovered == expected,
-      s"post-crash recovery diverged from pre-crash state:\n  got  $recovered\n  want $expected")
-    println("[contend] PASS: kill-9 at fact/postings/ANN mid-swap windows — " +
-      "unproven state rebuilt, results identical, locks taken over")
+    Seq("recover_sig", "recover_compacted_sig").foreach { f =>
+      require(readFlag(f) == expected,
+        s"post-crash $f diverged from pre-crash state:\n  got  ${readFlag(f)}\n  want $expected")
+    }
+    Seq(graft.operators.StarSchema.factServePath(corpusDir),
+        graft.operators.Dedup.postingsServePath(corpusDir)).foreach { p =>
+      val gens = new java.io.File(p).list().count(_.startsWith("gen_"))
+      require(gens <= 2, s"$gens generations survived the recovery at $p")
+      require(!java.nio.file.Files.exists(ServingStore.lockPath(p)),
+        s"crashed holder's lock survived the recovery at $p")
+    }
+    println("[contend] PASS: kill-9 at the fact/postings pre-commit points and the ANN " +
+      "mid-swap window — results identical, stale locks taken over, orphans pruned")
   }
 
   // ------------------------------------------------------------ worker
@@ -328,7 +343,7 @@ object StoreContention {
     // (r15 verdict #2: the fact layout, posting index and ANN index
     // mutate LIVE paths under the build lock — the very stores the r15
     // locking sweep covered, never before exercised across two JVMs)
-    import graft.operators.{Dedup, Similarity, StarSchema}
+    import graft.operators.{Curation, Dedup, Similarity, StarSchema}
     val corpus = base + "/corpus"
     def writeFlag(n: String, v: String): Unit =
       java.nio.file.Files.write(flags.resolve(n), v.getBytes("UTF-8"))
@@ -369,44 +384,48 @@ object StoreContention {
     }
     writeFlag(s"phase4b_sig_$name", starSig())
     handshake("phase4b")
-    // phase 4c — compaction vs a live reader: `a` compacts while `b`
-    // polls the serve path. The documented contract: a reader mid-swap
-    // may fail LOUDLY (FileNotFound) but never serve wrong data — so
-    // `b` retries on failure and must converge to the identical sig.
+    // phase 4c — compaction vs a live reader: `b` holds a frame served
+    // before `a` compacts and polls the serve path during it. A
+    // compaction commits a new generation and keeps the previous one,
+    // so no serve may fail or differ, and the held frame must collect
+    // the same rows after the compaction.
+    val appendedSig = starSig()
     if (name == "a") {
+      await(flags.resolve("held4c_b"))
       StarSchema.compactFactLayout(spark, corpus)
       touch(flags.resolve("compact4_done"))
     } else {
+      val held = StarSchema.starJoinServed(spark, corpus)
+      touch(flags.resolve("held4c_b"))
       var done = false
+      var serves = 0
       while (!done) {
-        try { starSig(); () }
-        catch { case scala.util.control.NonFatal(_) => Thread.sleep(100) }
         done = java.nio.file.Files.exists(flags.resolve("compact4_done"))
+        require(starSig() == appendedSig, "a serve during the compaction diverged")
+        serves += 1
       }
+      writeFlag("phase4c_serves", serves.toString)
+      val (n, h) = Golden.checksum(held)
+      require(s"$n|$h" == appendedSig, "a frame held across the compaction diverged")
     }
-    def sigWithRetry(): String = {
-      var out: Option[String] = None
-      var tries = 0
-      while (out.isEmpty) {
-        try out = Some(starSig())
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            tries += 1
-            require(tries < 100, s"serve never recovered after compaction: $e")
-            Thread.sleep(200)
-        }
-      }
-      out.get
-    }
-    writeFlag(s"phase4c_sig_$name", sigWithRetry())
+    writeFlag(s"phase4c_sig_$name", starSig())
     handshake("phase4c")
-    // phase 5 — posting-index and ANN-index build races (cold stores,
-    // both processes ensure concurrently; serve twice for stability)
+    // phase 5 — posting-index, LM-stats and ANN-index build races (cold
+    // stores, both processes ensure concurrently; serve twice for
+    // stability)
     val n1 = Dedup.ngramJaccardServe(spark, corpus).count()
     require(n1 == Dedup.ngramJaccardServe(spark, corpus).count(),
       "ngram serve unstable across calls")
     writeFlag(s"phase5_ngram_$name", n1.toString)
     handshake("phase5n")
+    def lmSig(): String = {
+      val (n, h) = Golden.checksum(Curation.lmScore(spark, corpus))
+      s"$n|$h"
+    }
+    val lm1 = lmSig()
+    require(lm1 == lmSig(), "LM-stats serve unstable across calls")
+    writeFlag(s"phase5_lm_$name", lm1)
+    handshake("phase5l")
     val k1 = Similarity.knnIvfServe(spark, corpus).count()
     require(k1 == Similarity.knnIvfServe(spark, corpus).count(),
       "ivf serve unstable across calls")
@@ -417,22 +436,31 @@ object StoreContention {
 
   // ----------------------------------------------------------- recover
 
-  /** Fresh-JVM recovery after the injected kill -9s: shrink the lock
-    * staleness bound so the dead holders' locks age out, then serve all
-    * three crashed stores — each must detect its unproven state,
-    * take the stale lock over, rebuild, and return the pre-crash
-    * results (written for the driver to compare). */
+  /** Fresh-JVM recovery after the injected kill -9s: the generation
+    * stores still name their pre-crash generations, so they serve
+    * without a rebuild; the ANN store detects its unproven state and
+    * rebuilds. Then both generation stores compact again — which must
+    * take the dead holders' stale locks over (staleness bound shrunk)
+    * and prune the crashed writers' uncommitted generations — and
+    * serve once more. Both results are written for the driver. */
   private def recover(base: String): Unit = {
     import graft.operators.{Dedup, Similarity, StarSchema}
     val spark = GraftSession.local("graft-contend-recover")
     ServingStore.LockStaleMs = 3000
     Thread.sleep(4000)
     val corpus = base + "/corpus"
-    val (n, h) = Golden.checksum(StarSchema.starJoinServed(spark, corpus))
-    val ngram = Dedup.ngramJaccardServe(spark, corpus).count()
-    val ivf = Similarity.knnIvfServe(spark, corpus).count()
+    def sig(): String = {
+      val (n, h) = Golden.checksum(StarSchema.starJoinServed(spark, corpus))
+      val ngram = Dedup.ngramJaccardServe(spark, corpus).count()
+      val ivf = Similarity.knnIvfServe(spark, corpus).count()
+      s"$n|$h;$ngram;$ivf"
+    }
     java.nio.file.Files.write(java.nio.file.Paths.get(base, "recover_sig"),
-      s"$n|$h;$ngram;$ivf".getBytes("UTF-8"))
+      sig().getBytes("UTF-8"))
+    StarSchema.compactFactLayout(spark, corpus)
+    Dedup.compactPostings(spark, corpus)
+    java.nio.file.Files.write(java.nio.file.Paths.get(base, "recover_compacted_sig"),
+      sig().getBytes("UTF-8"))
     spark.stop()
   }
 }

@@ -568,42 +568,59 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       "warm recall path rewrote the ground-truth generation")
   }
 
+  /** (relative path, mtime) of every data file under a generation dir —
+    * _SUCCESS markers and .crc shadows excluded. */
+  private def genStamp(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(dir)
+    val s = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .filterNot(f => f.getFileName.toString.startsWith("_") ||
+          f.getFileName.toString.startsWith("."))
+        .map(f => root.relativize(f).toString -> f.toFile.lastModified).toMap
+    } finally s.close()
+  }
+
   test("postings serve: cold builds, warm reuses, catalog loss re-registers, stale fp rebuilds") {
     def rmrf(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles.foreach(rmrf)
       f.delete(); ()
     }
     val path = operators.Dedup.postingsServePath(sf)
-    val table = operators.Dedup.postingsTableName(sf)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
     rmrf(new java.io.File(path)); rmrf(new java.io.File(path + "_model"))
     def resultSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     val direct = resultSet(operators.Dedup.ngramJaccard(spark, sf))
     val cold = resultSet(operators.Dedup.ngramJaccardServe(spark, sf))
     assert(cold == direct, "cold serve (fresh index build) diverged from the shuffle variant")
-    // warm call must NOT rewrite the generation: posting files untouched
-    val tableDir = new java.io.File(path)
-    def stampOf = tableDir.listFiles.map(f => f.getName -> f.lastModified).toMap
-    val stamp = stampOf
+    // warm call must NOT rewrite the generation: the sidecar-named
+    // generation and every one of its files untouched
+    val gen = operators.Dedup.postingsGeneration(spark, sf)
+    val stamp = genStamp(gen.dir)
+    assert(stamp.keys.exists(_.startsWith("postings/")) && stamp.keys.exists(_.startsWith("rep/")))
     val warm = resultSet(operators.Dedup.ngramJaccardServe(spark, sf))
     assert(warm == direct, "warm serve diverged")
-    assert(stampOf == stamp, "warm serve rewrote the posting index instead of reusing it")
-    // a NEW session loses the in-memory catalog but keeps the files: the
-    // serve path must re-register the existing generation, not rebuild it
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+    assert(operators.Dedup.postingsGeneration(spark, sf).dir == gen.dir && genStamp(gen.dir) == stamp,
+      "warm serve rewrote the posting index instead of reusing it")
+    // a lost catalog keeps the files: the serve path — in the session
+    // that already served this generation, too — must re-register the
+    // existing generation, not rebuild it
+    Seq("postings", "rep").foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${gen.table(t)}"))
     val reregistered = resultSet(operators.Dedup.ngramJaccardServe(spark, sf))
     assert(reregistered == direct, "re-registered serve diverged")
-    assert(stampOf == stamp, "catalog re-registration rewrote the generation")
+    assert(Seq("postings", "rep").forall(t => spark.catalog.tableExists(gen.table(t))),
+      "generation not re-registered")
+    assert(operators.Dedup.postingsGeneration(spark, sf).dir == gen.dir && genStamp(gen.dir) == stamp,
+      "catalog re-registration rewrote the generation")
     // staleness is keyed on the corpus fingerprint: a sidecar mismatch
     // (equal-row-count corpus swap) must trigger a rebuild
-    val fpPath = path + "_model"
-    val storedFp = spark.read.parquet(fpPath).collect()(0).getLong(0)
-    spark.range(1).select(lit(storedFp + 1).as("fp"))
-      .coalesce(1).write.mode("overwrite").parquet(fpPath)
+    val (storedFp, _) = operators.ServingStore.readSidecar(spark, "posting-index", path).get
+    operators.ServingStore.writeSidecar(spark, path, storedFp + 1, gen.dir)
     val rebuilt = resultSet(operators.Dedup.ngramJaccardServe(spark, sf))
     assert(rebuilt == direct, "post-rebuild serve diverged")
-    assert(spark.read.parquet(fpPath).collect()(0).getLong(0) == storedFp,
+    val (fpAfter, genAfter) = operators.ServingStore.readSidecar(spark, "posting-index", path).get
+    assert(fpAfter == storedFp && genAfter != gen.dir,
       "fingerprint mismatch did not trigger an index rebuild")
     // resolve shares the serve path and must equal the from-scratch resolve
     val rServe = operators.Dedup.dedupResolveServe(spark, sf)
@@ -616,20 +633,28 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("postings append: delta-only indexing equals a from-scratch build, old buckets untouched") {
     val tmp = java.nio.file.Files.createTempDirectory("graftappend").toString
     val docs = graft.Tables.documents(spark, sf)
-    val base = docs.filter(col("doc_id") % 5 =!= 0)
+    // two delta slices: a modulo cut appended from this session, then a
+    // hash cut appended from the serving lane's child session
+    val slice2 = pmod(xxhash64(col("doc_id")), lit(4L)) === 0
+    val base = docs.filter(col("doc_id") % 5 =!= 0 && !slice2)
     val delta = docs.filter(col("doc_id") % 5 === 0)
     base.write.mode("overwrite").parquet(tmp + "/documents.parquet")
-    operators.Dedup.ensurePostings(spark, tmp)
-    // build the doc-stats sidecar pre-append so the append path must
-    // maintain it incrementally (a stale sidecar would rebuild instead)
-    operators.Dedup.ensurePostingStats(spark, tmp)
-    val path = operators.Dedup.postingsServePath(tmp)
-    // data files only: _SUCCESS markers (and their .crc shadows)
-    // legitimately refresh on append
-    def stampOf = new java.io.File(path).listFiles
-      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-      .map(f => f.getName -> f.lastModified).toMap
-    val pre = stampOf
+    val gen0 = operators.Dedup.postingsGeneration(spark, tmp)
+    def screenOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) ->
+        (r.getInt(1), r.getLong(2), r.getDouble(3), r.getBoolean(4))).toMap
+    // q_contamination_delta as the driver runs it (prepared-plan cache +
+    // serving lane) is constructed BEFORE any append, so the lane's
+    // child session resolves the posting tables of the first generation
+    val lane = graft.Lane.sessionFor(spark, tmp, graft.Lane.ExpandingMaxBytes)
+    assert(lane ne spark, "premise: the lane engages on the test corpus")
+    def servedScreen() = screenOf(graft.SparkEntry.queries("q_contamination_delta")(spark, tmp))
+    def reference() = {
+      graft.Tables.invalidateDir(tmp)
+      screenOf(operators.Curation.contamination(spark, tmp))
+    }
+    assert(servedScreen() == reference())
+    val pre = genStamp(gen0.dir)
     // the ingest lands the delta files in the corpus dir FIRST, then the
     // index absorbs exactly that delta; the pre-delta fingerprint proves
     // the generation matches the corpus the delta extends
@@ -641,11 +666,22 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       operators.Dedup.appendPostings(spark, tmp, delta, expectedFp = Some(fp0 + 1))
     }
     operators.Dedup.appendPostings(spark, tmp, delta, expectedFp = Some(fp0))
-    val post = stampOf
-    pre.foreach { case (n, m) =>
-      assert(post.get(n).contains(m), s"append rewrote existing bucket file $n")
+    val gen1 = operators.Dedup.postingsGeneration(spark, tmp)
+    assert(gen1.dir != gen0.dir, "append did not commit a new generation")
+    val post = genStamp(gen1.dir)
+    // the carried artifacts' files are hard links into the previous
+    // generation: same name, same mtime, same inode — never rewritten
+    pre.filter { case (n, _) => !n.startsWith("cls/") && !n.startsWith("docclass/") }
+      .foreach { case (n, m) =>
+        assert(post.get(n).contains(m), s"append rewrote existing bucket file $n")
+        assert(java.nio.file.Files.isSameFile(
+          java.nio.file.Paths.get(gen0.dir, n), java.nio.file.Paths.get(gen1.dir, n)),
+          s"append copied $n instead of linking it")
+      }
+    Seq("postings/", "docstats/").foreach { a =>
+      assert(post.keys.count(_.startsWith(a)) > pre.keys.count(_.startsWith(a)),
+        s"append wrote no new $a files")
     }
-    assert(post.size > pre.size, "append wrote no new bucket files")
     def resultSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     // append-then-serve == a from-scratch scan over the full corpus
@@ -653,28 +689,66 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     val scratch = resultSet(operators.Dedup.ngramJaccard(spark, tmp))
     assert(served == scratch, "appended index diverged from a from-scratch scan")
     assert(served.nonEmpty, "planted near-dups missing from the appended corpus")
-    // the serve saw the advanced fingerprint: no rebuild happened
-    assert(stampOf == post, "serve after append rebuilt the generation")
     // resolve rides the same appended generation
     val rServe = operators.Dedup.dedupResolveServe(spark, tmp)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val rDirect = operators.Dedup.dedupResolve(spark, tmp)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(rServe == rDirect, "resolve over appended index diverged")
-    // the doc-stats sidecar absorbed the delta incrementally (fingerprint
-    // advanced with the append, so this serve must NOT rebuild it) and
-    // the index-served contamination screen equals the batch scan over
-    // the full appended corpus
-    val statsFpPath = operators.Dedup.postingsStatsPath(tmp) + "_model"
-    val statsStamp = new java.io.File(statsFpPath).lastModified
-    def screenOf(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) ->
-        (r.getInt(1), r.getLong(2), r.getDouble(3), r.getBoolean(4))).toMap
+    // the doc stats absorbed the delta incrementally and the
+    // index-served contamination screen equals the batch scan over the
+    // full appended corpus — in this session and through the lane
     assert(screenOf(operators.Curation.contaminationServe(spark, tmp)) ==
       screenOf(operators.Curation.contamination(spark, tmp)),
       "served screen over appended stats diverged from the batch scan")
-    assert(new java.io.File(statsFpPath).lastModified == statsStamp,
-      "serve after append rebuilt the doc-stats sidecar")
+    assert(servedScreen() == reference(),
+      "served q_contamination_delta after an append diverged from the batch scan")
+    // the serves saw the advanced fingerprint: no rebuild happened
+    assert(operators.Dedup.postingsGeneration(spark, tmp).dir == gen1.dir &&
+      genStamp(gen1.dir) == post, "serve after append rebuilt the generation")
+    // second, hash-cut slice appended FROM the lane session while this
+    // session holds resolved relations over the first append
+    val fp1 = operators.Similarity.corpusFingerprint(spark, tmp, "documents.parquet")
+    val delta2 = lane.read.parquet(sf + "/documents.parquet")
+      .filter(col("doc_id") % 5 =!= 0 && slice2)
+    delta2.write.mode("append").parquet(tmp + "/documents.parquet")
+    operators.Dedup.appendPostings(lane, tmp, delta2, expectedFp = Some(fp1))
+    val want = reference()
+    assert(servedScreen() == want,
+      "served q_contamination_delta after the lane-session append diverged")
+    assert(screenOf(operators.Curation.contaminationServe(spark, tmp)) == want,
+      "caller-session screen after the lane-session append diverged")
+    assert(resultSet(operators.Dedup.ngramJaccardServe(spark, tmp)) ==
+      resultSet(operators.Dedup.ngramJaccard(spark, tmp)),
+      "caller-session pairs after the lane-session append diverged")
+  }
+
+  test("reader survival: posting frames served before an append and a compaction collect identical rows") {
+    val tmp = java.nio.file.Files.createTempDirectory("graftpostreader").toString
+    val docs = graft.Tables.documents(spark, sf)
+    docs.filter(col("doc_id") % 5 =!= 0).write.mode("overwrite").parquet(tmp + "/documents.parquet")
+    // a fresh Dataset over the held plan re-plans and re-scans (a second
+    // action on the same Dataset could reuse its earlier shuffle output)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.map(c => col(s"`$c`")): _*)
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val heldPairs = operators.Dedup.ngramJaccardServe(spark, tmp, threshold = 0.3)
+    val heldScreen = operators.Curation.contaminationServe(spark, tmp)
+    val (pairs0, screen0) = (rows(heldPairs), rows(heldScreen))
+    assert(pairs0.nonEmpty && screen0.nonEmpty, "premise: non-empty served frames")
+    val fp0 = operators.Similarity.corpusFingerprint(spark, tmp, "documents.parquet")
+    val delta = docs.filter(col("doc_id") % 5 === 0)
+    delta.write.mode("append").parquet(tmp + "/documents.parquet")
+    operators.Dedup.appendPostings(spark, tmp, delta, expectedFp = Some(fp0))
+    assert(rows(heldPairs) == pairs0 && rows(heldScreen) == screen0,
+      "a frame served before the append changed or broke after it")
+    val heldAppended = operators.Dedup.ngramJaccardServe(spark, tmp, threshold = 0.3)
+    val appended = rows(heldAppended)
+    operators.Dedup.compactPostings(spark, tmp)
+    assert(rows(heldAppended) == appended,
+      "a frame served before the compaction changed or broke after it")
+    assert(rows(operators.Dedup.ngramJaccardServe(spark, tmp, threshold = 0.3)) == appended,
+      "compaction changed query results")
   }
 
   test("collapse serve: duplicate-heavy corpus equals the doc-level formulation exactly") {
@@ -846,11 +920,9 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("collapse upgrade: a dataless rep dir under a valid fp reads incomplete and rebuilds") {
-    // the r17 review hole: the collapse-upgrade rebuild runs while the
-    // fp sidecar stays VALID, so a crash between the member and rep
-    // commits (or a racing reader probing bare exists()) could register
-    // a dataless rep table and serve silently empty pairs. The fix
-    // probes committed data files; this simulates the crash state.
+    // a dataless rep artifact must never register and serve silently
+    // empty pairs — neither in an uncommitted generation (a crash
+    // before the stamp) nor in the sidecar-named one
     val tmp = java.nio.file.Files.createTempDirectory("graftupgrade").toString
     graft.Tables.documents(spark, sf)
       .write.mode("overwrite").parquet(tmp + "/documents.parquet")
@@ -858,14 +930,29 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     val want = pairSet(operators.Dedup.ngramJaccardServe(spark, tmp, threshold = 0.3))
     assert(want.nonEmpty, "premise: the corpus has near-dup pairs at t=0.3")
-    // crash state: rep dir exists but holds no committed data files;
-    // fp sidecar still proves the generation
-    val repDir = new java.io.File(operators.Dedup.postingsRepPath(tmp))
-    repDir.listFiles.filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+    val gen = operators.Dedup.postingsGeneration(spark, tmp)
+    val path = operators.Dedup.postingsServePath(tmp)
+    // uncommitted crash state: a newer generation dir whose rep holds no
+    // data files, the sidecar still naming the committed generation
+    val (fp, _) = operators.ServingStore.readSidecar(spark, "posting-index", path).get
+    val orphan = new java.io.File(operators.ServingStore.newGenerationPath(path, fp))
+    assert(new java.io.File(orphan, "rep").mkdirs())
+    new java.io.File(orphan, "rep/_SUCCESS").createNewFile()
+    assert(pairSet(operators.Dedup.ngramJaccardServe(spark, tmp, threshold = 0.3)) == want,
+      "an uncommitted generation was served")
+    assert(operators.Dedup.postingsGeneration(spark, tmp).dir == gen.dir)
+    assert(pairSet(operators.Dedup.ngramJaccardServe(spark.newSession(), tmp, threshold = 0.3)) == want,
+      "an uncommitted generation was served to a new session")
+    // committed-generation damage: the named generation's rep dir loses
+    // its data files; fp still proves the generation, and this session
+    // has served it before
+    new java.io.File(gen.path("rep")).listFiles
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
       .foreach(f => assert(f.delete(), s"could not empty $f"))
-    spark.sql(s"DROP TABLE IF EXISTS ${operators.Dedup.postingsRepTableName(tmp)}")
     assert(pairSet(operators.Dedup.ngramJaccardServe(spark, tmp, threshold = 0.3)) == want,
       "a dataless rep dir served empty/wrong pairs instead of triggering a rebuild")
+    assert(operators.Dedup.postingsGeneration(spark, tmp).dir != gen.dir,
+      "a dataless rep artifact did not trigger a rebuild")
   }
 
   test("postings compaction: fragmented buckets collapse to one file each, content unchanged") {
@@ -879,22 +966,25 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     delta.write.mode("append").parquet(tmp + "/documents.parquet")
     operators.Dedup.appendPostings(spark, tmp, delta, expectedFp = Some(fp0))
     val path = operators.Dedup.postingsServePath(tmp)
-    def dataFiles = new java.io.File(path).listFiles
+    // data files of the sidecar-named generation's doc-level postings
+    def dataFiles = new java.io.File(
+        operators.Dedup.postingsGeneration(spark, tmp).path("postings")).listFiles
       .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
     assert(dataFiles.length > operators.Dedup.PostingsBuckets,
       "append did not fragment the buckets — the compaction premise is gone")
     def resultSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     val before = resultSet(operators.Dedup.ngramJaccardServe(spark, tmp))
-    val fpPath = path + "_model"
-    val fpBefore = spark.read.parquet(fpPath).collect()(0).getLong(0)
+    val (fpBefore, genBefore) = operators.ServingStore.readSidecar(spark, "posting-index", path).get
     operators.Dedup.compactPostings(spark, tmp)
     assert(dataFiles.length == operators.Dedup.PostingsBuckets,
       s"compaction left ${dataFiles.length} data files, expected one per bucket")
     assert(resultSet(operators.Dedup.ngramJaccardServe(spark, tmp)) == before,
       "compaction changed query results")
-    assert(spark.read.parquet(fpPath).collect()(0).getLong(0) == fpBefore,
-      "compaction changed the generation fingerprint")
+    val (fpAfter, genAfter) = operators.ServingStore.readSidecar(spark, "posting-index", path).get
+    assert(fpAfter == fpBefore, "compaction changed the generation fingerprint")
+    assert(genAfter != genBefore && new java.io.File(genBefore).isDirectory,
+      "compaction must commit a new generation and keep the previous one for its readers")
     // the compacted generation still serves bucket-locally: no h-keyed
     // exchange anywhere in the candidate join
     val plan = operators.Dedup.ngramJaccardServe(spark, tmp)
@@ -906,7 +996,21 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     resultSet(operators.Dedup.ngramJaccardServe(spark, tmp))
     assert(dataFiles.map(f => f.getName -> f.lastModified).toMap == stamp,
       "serve after compaction rewrote the generation")
+    // a generation pruned by ANOTHER process leaves this JVM's catalog
+    // entries behind: the next new registration of the store drops them
+    val live = operators.Dedup.postingsGeneration(spark, tmp)
+    val prevGen = live.copy(dir = genBefore)
+    assert(spark.catalog.tableExists(prevGen.table("postings")), "premise: previous generation registered")
+    operators.Dedup.deleteTree(genBefore)
+    Seq("postings", "rep").foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${live.table(t)}"))
+    assert(resultSet(operators.Dedup.ngramJaccardServe(spark, tmp)) == before,
+      "serve after re-registration diverged")
+    assert(Seq("postings", "rep").forall(t => spark.catalog.tableExists(live.table(t))),
+      "served generation not re-registered")
+    assert(Seq("postings", "rep").forall(t => !spark.catalog.tableExists(prevGen.table(t))),
+      "catalog kept tables over a pruned generation")
   }
+
 
   test("ivfpq residual encoding: tighter reconstruction and no worse ADC ranking than raw-book PQ") {
     graft.functions.GraftFunctions.ensureRegistered(spark)

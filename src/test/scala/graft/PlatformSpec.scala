@@ -1153,7 +1153,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
         () => rows(operators.Events.funnel(spark, sf))),
       ("resolved-enrichment", operators.AsOf.enrichServePath(sf),
         () => rows(operators.AsOf.enrichAttach(spark, sf))),
-      ("lm-stats", operators.Curation.lmBcPath(sf),
+      ("lm-stats", operators.Curation.lmStatsPath(sf),
         () => rows(operators.Curation.lmScore(spark, sf))))
     cases.foreach { case (what, path, run) =>
       val first = run()
@@ -2750,29 +2750,75 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fpBefore = StarSchema.factFingerprint(spark, dirA)
     StarSchema.compactFactLayout(spark, dirA)
     val layoutPath = StarSchema.factServePath(dirA)
+    // read through the sidecar-named (compacted) generation
+    val (fpStamped, gen) = operators.ServingStore.readSidecar(spark, "fact-layout", layoutPath).get
     Seq("lirev", "orders").foreach { sub =>
-      val files = new java.io.File(s"$layoutPath/$sub")
+      val files = new java.io.File(s"$gen/$sub")
         .listFiles.count(_.getName.endsWith(".parquet"))
       assert(files == StarSchema.FactBuckets,
         s"$sub not compacted to one file per bucket: $files files")
     }
     assert(sig(dirA) == before, "compaction changed query results")
-    assert(operators.Similarity.readSidecarRows(spark, layoutPath + "_model")(0)
-      .getLong(0) == fpBefore, "compaction changed the fingerprint")
-    // LEGACY-SHAPE refusal (r16 review): a sidecar without the layout
-    // version stamp marks a layout whose table set predates this
-    // engine — appending would parquet-CREATE the newer tables with
-    // delta-only rows behind a fresh stamp. Must refuse structurally,
-    // without expectedFp (the FactSink repair path passes none).
+    assert(fpStamped == fpBefore, "compaction changed the fingerprint")
+    // OLDER-SHAPE refusals: a layout whose table set
+    // predates this engine must never absorb a delta — appending would
+    // create the newer tables with delta-only rows behind a fresh
+    // stamp. Must refuse structurally, without expectedFp (the FactSink
+    // repair path passes none), and with the typed refusal FactSink
+    // repairs on: (1) a generation stamped with an older layout version
+    operators.ServingStore.writeSidecar(spark, layoutPath, fpBefore, gen,
+      Seq("dir" -> dirA, "ver" -> (StarSchema.FactLayoutVersion - 1).toString))
+    land(dirA, "orders", oDelta.limit(0), first = false) // any landed change
+    val older = intercept[operators.ServingStore.StaleStoreRefusal] {
+      StarSchema.appendFactLayout(spark, dirA, liDelta.limit(0), oDelta.limit(0))
+    }
+    assert(older.getMessage.contains("shape predates"),
+      s"unexpected refusal: ${older.getMessage}")
+    // (2) a pre-generation sidecar carrying neither version nor generation
     spark.range(1).select(lit(fpBefore).as("fp"))
       .coalesce(1).write.mode("overwrite").parquet(layoutPath + "_model")
-    land(dirA, "orders", oDelta.limit(0), first = false) // any landed change
-    val legacy = intercept[IllegalArgumentException] {
-      StarSchema.appendFactLayout(spark, dirA,
-        liDelta.limit(0), oDelta.limit(0))
+    val legacy = intercept[operators.ServingStore.StaleStoreRefusal] {
+      StarSchema.appendFactLayout(spark, dirA, liDelta.limit(0), oDelta.limit(0))
     }
-    assert(legacy.getMessage.contains("layout version"),
+    assert(legacy.getMessage.contains("predates the generation layout"),
       s"unexpected refusal: ${legacy.getMessage}")
+  }
+
+  test("reader survival: fact frames served before an append and a compaction collect identical rows") {
+    import operators.StarSchema
+    val dir = java.nio.file.Files.createTempDirectory("graftfactreader").toString
+    Seq("customer", "nation", "region", "part").foreach { t =>
+      spark.read.parquet(s"$sf/$t.parquet").write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    }
+    val orders = Tables.orders(spark, sf).localCheckpoint()
+    val lineitem = Tables.lineitem(spark, sf).localCheckpoint()
+    val cut = orders.stat.approxQuantile("o_orderkey", Array(0.7), 0.0)(0)
+    orders.filter(col("o_orderkey") <= cut).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    lineitem.filter(col("l_orderkey") <= cut).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    // a fresh Dataset over the held plan re-plans and re-scans (a second
+    // action on the same Dataset could reuse its earlier shuffle output)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.map(c => col(s"`$c`")): _*)
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    // a served frame of each artifact kind: a denormalized fact and a
+    // bucketed table
+    def frames() = Seq(StarSchema.starJoinServed(spark, dir), StarSchema.mlExtractServed(spark, dir),
+      spark.table(StarSchema.ensureFactLayout(spark, dir).table("orders")))
+    val held = frames()
+    val want = held.map(rows)
+    val preFp = StarSchema.factFingerprint(spark, dir)
+    val (oDelta, liDelta) =
+      (orders.filter(col("o_orderkey") > cut), lineitem.filter(col("l_orderkey") > cut))
+    oDelta.write.mode("append").parquet(s"$dir/orders.parquet")
+    liDelta.write.mode("append").parquet(s"$dir/lineitem.parquet")
+    StarSchema.appendFactLayout(spark, dir, liDelta, oDelta, Some(preFp))
+    assert(held.map(rows) == want, "a frame served before the append changed or broke after it")
+    val heldAppended = frames()
+    val appended = heldAppended.map(rows)
+    StarSchema.compactFactLayout(spark, dir)
+    assert(heldAppended.map(rows) == appended,
+      "a frame served before the compaction changed or broke after it")
+    assert(frames().map(rows) == appended, "compaction changed query results")
   }
 
   test("fact layout janitor: prunes dead-corpus layouts, keeps live, skips unproven") {
