@@ -202,35 +202,13 @@ object QualityModel {
         (col("p_keep") >= 0.5).as("keep"),
         col("weak_label"))
 
-  /** Weight-sidecar location for a corpus dir (same digest discipline
+  /** Weight-store location for a corpus dir (same digest discipline
     * as the IVF/PQ serve paths). */
   private[graft] def lrServePath(dir: String): String =
     Similarity.servePath("lr_serve_", dir)
 
-  /** Persist weights + the documents-table fingerprint: rows (pos >= 0,
-    * w) are weights in FeatNames order; pos -2 / -3 carry the unsigned
-    * low / high 32-bit fingerprint halves (one double cannot hold 64
-    * bits exactly). */
-  private[graft] def writeLrModel(spark: SparkSession, path: String,
-      w: Array[Double], fp: Long): Unit = {
-    import spark.implicits._
-    (w.zipWithIndex.map { case (x, j) => (j, x) } ++
-      Seq((-2, (fp & 0xFFFFFFFFL).toDouble), (-3, (fp >>> 32).toDouble)))
-      .toSeq.toDF("pos", "w")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  private[graft] def readLrModel(spark: SparkSession, path: String)
-      : (Array[Double], Long) = {
-    val rows = spark.read.parquet(path).collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val w = Array.tabulate(FeatNames.length)(j =>
-      rows.getOrElse(j, sys.error(s"missing weight $j in $path")))
-    val fp = (rows(-3).toLong << 32) | rows(-2).toLong
-    (w, fp)
-  }
-
   /** q_quality_classifier SERVING path: score with the persisted
-    * weights, (re)training only when the sidecar is absent or its
+    * weights, (re)training only when the store is absent or its
     * corpus fingerprint is stale — the deployment shape (a classifier
     * retrained per scoring call measures training, not filtering; same
     * discipline as [[Similarity.knnIvfServe]]). Bit-identical to
@@ -239,30 +217,26 @@ object QualityModel {
     scored(spark, dir, serveWeights(spark, dir))
 
   /** Resolve the CURRENT persisted weight generation for `dir`,
-    * (re)training only when the sidecar is absent or stale — the model
-    * half of [[qualityClassifierServe]], shared with the streaming
-    * gate's served binding ([[graft.streaming.IngestGate.sinkServed]])
-    * so batch scoring and the stream score with the SAME generation. */
-  private[graft] def serveWeights(spark: SparkSession, dir: String): Array[Double] = {
-    val path = lrServePath(dir)
-    val fp = Similarity.corpusFingerprint(spark, dir, "documents.parquet")
-    val stored =
-      try Some(readLrModel(spark, path))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          Similarity.warnUnreadableSidecar("quality-classifier", path, e)
-          None
-      }
-    stored match {
-      case Some((ws, storedFp)) if storedFp == fp => ws
-      case _ =>
-        // the fingerprint mismatch proves the files changed — drop the
-        // memoized plan so training reads the CURRENT listing, not one
-        // pinned to deleted part files
-        Tables.invalidate(spark, dir, "documents")
-        val ws = fitQualityLr(featureFrame(Tables.documents(spark, dir)))
-        writeLrModel(spark, path, ws, fp)
-        ws
+    * (re)training only when it is absent or stale — the model half of
+    * [[qualityClassifierServe]], shared with the streaming gate's served
+    * binding ([[graft.streaming.IngestGate.sinkServed]]) so batch
+    * scoring and the stream score with the SAME generation. A
+    * [[ServingStore]] model store: one `model` artifact (the weights in
+    * FeatNames order), kept resident by the serve memo. */
+  private[graft] def serveWeights(spark: SparkSession, dir: String): Array[Double] =
+    ServingStore.served(spark, "quality-classifier", lrServePath(dir),
+        Similarity.corpusFingerprint(spark, dir, "documents.parquet"),
+        Seq(ServingStore.Artifact("model"))) { gen =>
+      // a build means the files changed — drop the memoized plan so
+      // training reads the CURRENT listing, not one pinned to deleted
+      // part files
+      Tables.invalidate(spark, dir, "documents")
+      ServingStore.writeModel(spark, gen + "/model",
+        "weights" -> Array(fitQualityLr(featureFrame(Tables.documents(spark, dir)))))
+    } { gen =>
+      val w = ServingStore.readModel(spark, gen + "/model")("weights").head
+      require(w.length == FeatNames.length,
+        s"quality model at $gen has ${w.length} weights, expected ${FeatNames.length}")
+      w
     }
-  }
 }

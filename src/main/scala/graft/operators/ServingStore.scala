@@ -119,7 +119,11 @@ private[graft] object ServingStore {
   private def tableName(b: Bucketing, genDir: String): String =
     b.table + "_" + java.nio.file.Paths.get(genDir).getFileName.toString.stripPrefix("gen_")
 
-  private def sidecarState(spark: SparkSession, what: String,
+  /** What the sidecar at `path + "_model"` proves. A missing sidecar is
+    * the normal first build and logs nothing; a present but unreadable
+    * one is warned about, so a persistent IO/permissions/corruption
+    * error does not degrade into a silent rebuild on every call. */
+  private[graft] def sidecarState(spark: SparkSession, what: String,
       path: String): SidecarState =
     try {
       val df = spark.read.parquet(path + "_model")
@@ -130,12 +134,10 @@ private[graft] object ServingStore {
           df.columns.filterNot(Set("fp", "gen")).map(c => c -> String.valueOf(r.getAs[Any](c))).toMap)
       }
     } catch {
-      // missing-vs-unreadable is distinguished INSIDE
-      // warnUnreadableSidecar (a sidecar that does not exist yet is the
-      // normal first build and logs nothing; only a present-but-broken
-      // one warns) — keep that distinction in one place
       case e if scala.util.control.NonFatal(e) =>
-        Similarity.warnUnreadableSidecar(what, path + "_model", e)
+        if (new java.io.File(path + "_model").exists())
+          org.slf4j.LoggerFactory.getLogger(getClass)
+            .warn(s"$what sidecar at ${path}_model unreadable; rebuilding", e)
         Unknown
     }
 
@@ -171,9 +173,8 @@ private[graft] object ServingStore {
     * runs no shutdown hooks and no finally blocks, the closest
     * in-process stand-in for `kill -9` at an exact line. Generation
     * stores have ONE such point, `<what>.precommit`: the new generation
-    * fully written, the sidecar not yet stamped. The ANN compaction
-    * keeps its own mid-swap point. Unset in production: one map
-    * lookup, no hot path. */
+    * fully written, the sidecar not yet stamped. Unset in production:
+    * one map lookup, no hot path. */
   private[graft] def crashPoint(tag: String): Unit =
     if (sys.env.get("GRAFT_CRASH_POINT").contains(tag)) {
       Console.err.println(s"[crash-point] halting at $tag")
@@ -371,27 +372,33 @@ private[graft] object ServingStore {
     }
 
   /** Hard-link every data file (and its checksum) of a committed
-    * artifact directory into a new generation: the carried artifact
-    * costs no data write. Job markers are not linked — a later write
-    * into the new generation rewrites its marker in place, which must
-    * not reach through a link into the committed generation. */
+    * artifact directory into a new generation, recursing into partition
+    * subdirectories (`cid=<n>/`): the carried artifact costs no data
+    * write. Job markers are not linked — a later write into the new
+    * generation rewrites its marker in place, which must not reach
+    * through a link into the committed generation. */
   private def link(from: String, to: String): Unit = {
     val dst = java.nio.file.Paths.get(to)
     java.nio.file.Files.createDirectories(dst)
     listDir(java.nio.file.Paths.get(from))
-      .filter(java.nio.file.Files.isRegularFile(_))
       .filterNot(f => f.getFileName.toString.startsWith("_") ||
         f.getFileName.toString.startsWith("._"))
-      .foreach(f => java.nio.file.Files.createLink(dst.resolve(f.getFileName), f))
+      .foreach { f =>
+        if (!java.nio.file.Files.isDirectory(f))
+          java.nio.file.Files.createLink(dst.resolve(f.getFileName), f)
+        else if (!f.getFileName.toString.startsWith("."))
+          link(f.toString, dst.resolve(f.getFileName).toString)
+      }
   }
 
   /** Ensure a generation fresh for `fp` (every artifact holding data)
     * and serve it through `serve`, memoized per session — the shared
-    * ensure of every store. For a multi-artifact store a memo hit
-    * re-proves the artifacts and re-runs `serve`, which must therefore
-    * be driver-local and cheap (table registration). `force` builds a
-    * new generation even when the sidecar already claims `fp` (see
-    * [[rebuild]]). */
+    * ensure of every store. `serve` runs once per generation and
+    * session, so it may decode (a model store collects its model there
+    * and the memo keeps it resident); for a multi-artifact store a memo
+    * hit re-proves the artifacts and re-registers its bucketed tables.
+    * `force` builds a new generation even when the sidecar already
+    * claims `fp` (see [[rebuild]]). */
   private[graft] def served[T <: AnyRef](spark: SparkSession, what: String, path: String,
       fp: Long, artifacts: Seq[Artifact] = Nil, meta: Seq[(String, String)] = Nil,
       force: Boolean = false)(build: String => Unit)(serve: String => T): T = {
@@ -404,7 +411,10 @@ private[graft] object ServingStore {
       case Some((s, f, owner, gen, v)) if s == sig0 && f == fp && (owner eq spark) =>
         if (artifacts.isEmpty) return v.asInstanceOf[T]
         // a lost artifact falls through to the rebuild below
-        if (complete(artifacts)(gen)) return serve(gen)
+        if (complete(artifacts)(gen)) {
+          register(spark, Generation(gen, artifacts))
+          return v.asInstanceOf[T]
+        }
       case _ => ()
     }
     def fresh(state: SidecarState): Option[String] = state match {
@@ -591,6 +601,26 @@ private[graft] object ServingStore {
       .bucketBy(b.numBuckets, b.key).sortBy(b.key)
       .option("path", gen.path(sub)).saveAsTable(gen.table(sub))
   }
+
+  /** Write a model artifact into directory `dir` of an uncommitted
+    * generation: rows `(part, i, v)`, where `v` is row `i` of the named
+    * model part (a centroid, a codebook entry, a rotation row, a weight
+    * vector) as an f64 array — parquet round-trips it exactly. */
+  private[graft] def writeModel(spark: SparkSession, dir: String,
+      parts: (String, Array[Array[Double]])*): Unit = {
+    import spark.implicits._
+    parts.flatMap { case (p, rows) => rows.indices.map(i => (p, i, rows(i).toSeq)) }
+      .toDF("part", "i", "v")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+  }
+
+  /** The parts of a model artifact written by [[writeModel]], rows in
+    * order. */
+  private[graft] def readModel(spark: SparkSession, dir: String)
+      : Map[String, Array[Array[Double]]] =
+    spark.read.parquet(dir).collect().groupBy(_.getString(0)).map { case (p, rows) =>
+      p -> rows.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray)
+    }
 
   /** Register a bucketed artifact over its existing files. The DDL
     * schema comes from the FILES, never a hand-written literal (a

@@ -199,9 +199,10 @@ object Similarity {
         knnBrute(spark, dir, k).write.mode("overwrite").parquet(gen)
     } { gen =>
       // GT is (queries × k) rows — driver-sized by construction, so serve
-      // it RESIDENT as a LocalRelation: the per-serve broadcast then costs
-      // no scan job at all (same discipline as the model sidecars)
-      val rows = readSidecarRows(spark, gen)
+      // it RESIDENT as a LocalRelation (the serve memo keeps it): the
+      // per-serve broadcast then costs no scan job at all (same
+      // discipline as the model stores)
+      val rows = spark.read.parquet(gen).collect()
       if (rows.isEmpty) spark.read.parquet(gen)
       else {
         import scala.jdk.CollectionConverters._
@@ -653,55 +654,105 @@ object Similarity {
     * only when absent or stale — the deployment shape, where quantizer
     * training is amortized over every search instead of paid per call
     * (training from scratch inside the query was measuring index BUILD,
-    * not search). The index generation is keyed by a FINGERPRINT of the
-    * corpus files' metadata (names, lengths, modification times — a
-    * driver-side listing, no data scan), persisted in the model sidecar:
-    * any corpus swap under the same dir changes the fingerprint and
-    * triggers a rebuild — including an equal-row-count content swap,
+    * not search). The index is a [[ServingStore]] generation keyed by a
+    * FINGERPRINT of the corpus files ([[corpusFingerprint]]) folded with
+    * [[IvfStoreVersion]]: any corpus swap under the same dir changes it
+    * and triggers a rebuild — including an equal-row-count content swap,
     * which a count-based key would silently serve stale. Results are
     * bit-identical to [[knnIvf]] either way (same deterministic Lloyd
     * fit, and the persisted f64 model round-trips exactly through
-    * parquet). The freshness probe is ONE sidecar read whose centroids
-    * are reused for the search itself. */
+    * parquet). The model and the lists come from ONE generation, and the
+    * serve memo keeps the decoded model resident. */
   def knnIvfServe(spark: SparkSession, dir: String, k: Int = KnnK): DataFrame = {
-    val indexPath = ivfServePath(dir)
-    val fp = corpusFingerprint(spark, dir)
-    val stored =
-      try Some(readIvfModelFull(spark, indexPath))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("ivf", ivfModelPath(indexPath), e)
-          None
-      }
-    val centroids = stored match {
-      case Some((cents, _, Some(storedFp))) if storedFp == fp => cents
-      case _ => ServingStore.withBuildLock(indexPath) {
-        // re-probe under the lock (live-path store, r15): a waiting
-        // loser serves the winner's index instead of overwriting it
-        (try Some(readIvfModelFull(spark, indexPath))
-         catch { case e if scala.util.control.NonFatal(e) => None }) match {
-          case Some((cents, _, Some(f2))) if f2 == fp => cents
-          case _ =>
-            // mismatch proves the corpus files changed: drop the
-            // memoized plan so the rebuild reads the current listing
-            Tables.invalidate(spark, dir, "embeddings")
-            writeIvfIndexOf(spark, emb(spark, dir), indexPath, fingerprint = Some(fp))
-        }
-      }
-    }
-    withRecall(knnIvfIndexed(spark, dir, indexPath, centroids, k), spark, dir, k)
+    val ix = ivfIndex(spark, dir)
+    withRecall(knnIvfIndexed(spark, dir, ix.gen.path("lists"), ix.centroids, k), spark, dir, k)
   }
 
-  /** Serve paths fall back to a rebuild when a model sidecar cannot be
-    * read; that is correct for "no generation yet" but must be
-    * OBSERVABLE when the cause is IO/permissions/corruption — otherwise
-    * a persistent error degrades into a silent full retrain on every
-    * call. Warns only when something exists at the path (absence is the
-    * normal cold start). */
-  private[graft] def warnUnreadableSidecar(what: String, path: String, e: Throwable): Unit =
-    if (new java.io.File(path).exists())
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(s"$what model sidecar at $path unreadable; rebuilding", e)
+  /** Bumped on any change to what a model store's files mean (the
+    * [[SemAssignStoreVersion]] convention): folded into the store's
+    * fingerprint, so a generation written under older semantics
+    * rebuilds. The PQ families' versions ([[PqStoreVersion]] and its
+    * siblings) also fold in PqM/PqK. */
+  private val IvfStoreVersion = 1
+
+  private def storeFp(corpusFp: Long, version: Int): Long = corpusFp * 31 + version
+
+  /** The `model` artifact every model store holds (rows of
+    * [[ServingStore.writeModel]]); the IVF and IVF-PQ stores add their
+    * `cid`-partitioned inverted `lists`, the flat PQ stores their
+    * `codes`. */
+  private val Model = ServingStore.Artifact("model")
+  private val ListsStore = Seq(Model, ServingStore.Artifact("lists"))
+  private val CodesStore = Seq(Model, ServingStore.Artifact("codes"))
+
+  /** Serve-or-build a model store over `dir`'s embeddings: ONE
+    * [[ServingStore.served]] call keyed by the corpus fingerprint folded
+    * with the store's `version`. `build` writes every artifact into the
+    * new generation; `decode` turns the committed generation and its
+    * model parts into what the serve memo keeps resident. */
+  private def modelStore[T <: AnyRef](spark: SparkSession, what: String, path: String,
+      dir: String, version: Int, artifacts: Seq[ServingStore.Artifact])(
+      build: ServingStore.Generation => Unit)(
+      decode: (ServingStore.Generation, Map[String, Array[Array[Double]]]) => T): T =
+    ServingStore.served(spark, what, path,
+        storeFp(corpusFingerprint(spark, dir), version), artifacts) { g =>
+      // a build means the corpus files changed: drop the memoized plan
+      // so it reads the current listing
+      Tables.invalidate(spark, dir, "embeddings")
+      build(ServingStore.Generation(g, artifacts))
+    } { g =>
+      val gen = ServingStore.Generation(g, artifacts)
+      decode(gen, modelOf(spark, gen))
+    }
+
+  private def modelOf(spark: SparkSession, gen: ServingStore.Generation)
+      : Map[String, Array[Array[Double]]] =
+    ServingStore.readModel(spark, gen.path("model"))
+
+  /** Append a delta into a `model` + `lists` store: the committed
+    * generation's model and lists carry as hard links, and `encode`
+    * (given the committed generation) turns the delta into list rows
+    * that land as new files in their `cid=` cells. The
+    * [[ServingStore.landed]] proofs run first: `expectedFp`, the
+    * caller's pre-delta corpus fingerprint, must match the committed
+    * generation (a stale index takes the rebuild path, never absorbs a
+    * delta and gets re-stamped fresh), and the post-delta fingerprint
+    * is stamped with the commit. */
+  private def appendLists(spark: SparkSession, what: String, path: String, dir: String,
+      version: Int, expectedFp: Option[Long])(
+      encode: ServingStore.Generation => DataFrame): Unit = {
+    GraftFunctions.ensureRegistered(spark)
+    ServingStore.deriveGeneration(spark, what, path, ListsStore, carry = Seq("model", "lists"))(
+      ServingStore.landed(what, path, expectedFp.map(storeFp(_, version)), () => {
+        // the delta files are already in `dir`: re-list it
+        Tables.invalidate(spark, dir, "embeddings")
+        storeFp(corpusFingerprint(spark, dir), version)
+      })) { (prev, next) =>
+      encode(prev).write.mode("append").partitionBy("cid").parquet(next.path("lists"))
+    }
+    ()
+  }
+
+  /** Compact a `model` + `lists` store's inverted lists back to one file
+    * per cell: every append lands a fresh file in each touched `cid=`
+    * dir, so a season of ingests makes every probe open O(appends)
+    * small files per probed cell — the LSM read amplification
+    * [[Dedup.compactPostings]] undoes for the posting index. A hash
+    * repartition on `cid` sends every cell's rows to ONE task, so the
+    * partitioned write leaves exactly one file per cell. The model
+    * carries as hard links; rows, model and fingerprint are unchanged,
+    * and readers of the previous generation keep their files. */
+  private def compactLists(spark: SparkSession, what: String, path: String): Unit = {
+    ServingStore.deriveGeneration(spark, what, path, ListsStore, carry = Seq("model"))(
+      identity) { (prev, next) =>
+      spark.read.parquet(prev.path("lists"))
+        .repartition(col("cid"))
+        .write.mode("overwrite").partitionBy("cid").parquet(next.path("lists"))
+    }
+    // a new generation under an unchanged corpus stamp: memoized
+    // prepared plans would keep the superseded one
+    graft.PlanCache.invalidate()
+  }
 
   /** Driver-side CONTENT fingerprint of a corpus table's parquet (file
     * names, lengths, and a CRC of each file's head, six evenly-spaced
@@ -858,201 +909,82 @@ object Similarity {
     topkRanked(scored, k)
   }
 
-  /** Materialize the corpus as IVF INVERTED LISTS: parquet partitioned by
+  /** A served IVF generation: its directory (`model` + `lists`) and the
+    * decoded quantizer; `trained` is the corpus size the quantizer was
+    * fit on, the staleness base of [[refreshIvfIfStale]]. */
+  private[graft] final case class IvfIndex(gen: ServingStore.Generation,
+      centroids: Array[Array[Double]], trained: Long)
+
+  private[graft] def ivfIndex(spark: SparkSession, dir: String): IvfIndex =
+    modelStore(spark, "ivf-index", ivfServePath(dir), dir, IvfStoreVersion, ListsStore)(
+      gen => writeIvfIndexOf(spark, emb(spark, dir), gen))(ivfOf)
+
+  private def ivfOf(gen: ServingStore.Generation, m: Map[String, Array[Array[Double]]]) =
+    IvfIndex(gen, m("centroids"), m("trained").head.head.toLong)
+
+  /** Materialize a corpus as IVF INVERTED LISTS: parquet partitioned by
     * the trained quantizer's cell id. At corpus scale this layout IS the
     * index — the §5 claim made executable: a probe of NProbe cells reads
     * only those partitions (pruned at the file listing, never scanned),
-    * so search I/O is NProbe/NList of the corpus by construction.
-    * Returns the trained centroids (the model state a real deployment
-    * persists next to the index). */
-  def writeIvfIndex(spark: SparkSession, dir: String, indexPath: String,
-      nList: Int = IvfNList): Array[Array[Double]] =
-    writeIvfIndexOf(spark, emb(spark, dir), indexPath, nList)
-
-  /** Frame-based core of [[writeIvfIndex]] — the index lifecycle specs
-    * build indexes over corpus subsets through it. */
-  private[graft] def writeIvfIndexOf(spark: SparkSession, corpus: DataFrame,
-      indexPath: String, nList: Int = IvfNList,
-      fingerprint: Option[Long] = None): Array[Array[Double]] = {
+    * so search I/O is NProbe/NList of the corpus by construction. The
+    * model (centroids + the trained corpus size) is written beside the
+    * lists into the same generation. */
+  private def writeIvfIndexOf(spark: SparkSession, corpus: DataFrame,
+      gen: ServingStore.Generation, nList: Int = IvfNList, iters: Int = IvfIters): Unit = {
     GraftFunctions.ensureRegistered(spark)
-    val centroids = ivfFit(corpus, nList)
+    val n = corpus.count()
+    val centroids = ivfFit(corpus, nList, iters, knownCount = Some(n))
     corpus
       .withColumn("cid", GraftFunctions.graftArgminL2(col("vec"), centsLit(centroids)))
-      .write.mode("overwrite").partitionBy("cid").parquet(indexPath)
-    writeIvfModel(spark, indexPath, centroids, corpus.count(), fingerprint)
-    centroids
+      .write.mode("overwrite").partitionBy("cid").parquet(gen.path("lists"))
+    ServingStore.writeModel(spark, gen.path("model"),
+      "centroids" -> centroids, "trained" -> Array(Array(n.toDouble)))
   }
 
-  // ------------------------------------ IVF index lifecycle (model, append, refresh)
-
-  /** Sibling path holding the index's MODEL STATE (trained centroids +
-    * the corpus size at training time) as parquet — sibling, not nested,
-    * so the partitioned inverted-list reader never sees non-partition
-    * files. */
-  private[graft] def ivfModelPath(indexPath: String): String =
-    indexPath.stripSuffix("/") + "_model"
-
-  /** Row (cid = -1, pos = 0) carries the trained-count; rows (cid = -2,
-    * pos = 0/1) carry the corpus fingerprint's unsigned 32-bit halves
-    * (each half is exact in a double; one double cannot hold 64 bits);
-    * real centroid weights are (cid >= 0, pos, w). Counts are exact in a
-    * double below 2^53 — far beyond any vector count this index
-    * addresses. */
-  private[graft] def writeIvfModel(spark: SparkSession, indexPath: String,
-      centroids: Array[Array[Double]], trainedCount: Long,
-      fingerprint: Option[Long] = None): Unit = {
-    import spark.implicits._
-    val rows = centroids.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (w, p) => (i, p, w) }
-    }.toSeq ++ Seq((-1, 0, trainedCount.toDouble)) ++
-      fingerprint.toSeq.flatMap(fp => Seq(
-        (-2, 0, (fp & 0xFFFFFFFFL).toDouble),
-        (-2, 1, (fp >>> 32).toDouble)))
-    rows.toDF("cid", "pos", "w")
-      .coalesce(1).write.mode("overwrite").parquet(ivfModelPath(indexPath))
-  }
-
-  /** (centroids, trainedCount) persisted next to a materialized index. */
-  def readIvfModel(spark: SparkSession, indexPath: String): (Array[Array[Double]], Long) = {
-    val (cents, n, _) = readIvfModelFull(spark, indexPath)
-    (cents, n)
-  }
-
-  /** [[readIvfModel]] plus the build-time corpus fingerprint (None for
-    * sidecars written without one). */
-  private[graft] def readIvfModelFull(spark: SparkSession, indexPath: String)
-      : (Array[Array[Double]], Long, Option[Long]) =
-    decodeModelRows(readModelRows(spark, indexPath))
-
-  /** Driver-side sidecar cache, keyed by the sidecar directory's file
-    * listing (names + lengths + mtimes — the [[corpusFingerprint]]
-    * fold). A serving system keeps its index models RESIDENT; without
-    * this every query paid a Spark job to re-collect an unchanged
-    * model. Any rewrite changes the listing (parquet part files carry
-    * fresh UUID names), so staleness is structural, not TTL-based; a
-    * missing dir is never cached (the read throws to the caller's
-    * rebuild path exactly as before). */
-  private val sidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Array[org.apache.spark.sql.Row])]()
-
-  private def listingFingerprint(spark: SparkSession, path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val statuses =
-      (if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq else Seq(fs.getFileStatus(p)))
-        .filter(_.isFile)
-        .sortBy(_.getPath.getName)
-    Some(statuses.foldLeft(1125899906842597L) { (h, s) =>
-      ((h * 31 + s.getPath.getName.hashCode) * 31 + s.getLen) * 31 + s.getModificationTime
-    })
-  }
-
-  /** Collect a small sidecar parquet through the resident cache. */
-  private[graft] def readSidecarRows(spark: SparkSession, path: String)
-      : Array[org.apache.spark.sql.Row] =
-    listingFingerprint(spark, path) match {
-      case None =>
-        sidecarCache.remove(path)
-        spark.read.parquet(path).collect() // throws the usual path-not-found
-      case Some(fp) =>
-        val cached = sidecarCache.get(path)
-        if (cached != null && cached._1 == fp) cached._2
-        else {
-          val rows = spark.read.parquet(path).collect()
-          sidecarCache.put(path, (fp, rows))
-          rows
-        }
+  /** Append newly landed vectors to the IVF index WITHOUT retraining:
+    * each vector is assigned to its nearest existing centroid and lands
+    * as a new file in that `cid=` cell ([[appendLists]]: model and lists
+    * carry as hard links). Search over the appended index with the SAME
+    * quantizer is exactly search over the union corpus; recall degrades
+    * only as the data distribution drifts from the trained centroids,
+    * which [[refreshIvfIfStale]] bounds. Same contract as
+    * [[appendIvfPq]]. */
+  def appendIvf(spark: SparkSession, dir: String, newVecs: DataFrame,
+      expectedFp: Option[Long] = None): Unit =
+    appendLists(spark, "ivf-index", ivfServePath(dir), dir, IvfStoreVersion, expectedFp) { prev =>
+      val cents = ivfOf(prev, modelOf(spark, prev)).centroids
+      newVecs.select(col("vec_id"), col("vec"),
+        GraftFunctions.graftArgminL2(col("vec"), centsLit(cents)).as("cid"))
     }
 
-  /** ONE sidecar read, shared by the IVF decode and the PQ geometry
-    * probe — the freshness check stays a single Spark job (and a cache
-    * hit after the first serve of a generation). */
-  private[graft] def readModelRows(spark: SparkSession, indexPath: String)
-      : Array[org.apache.spark.sql.Row] =
-    readSidecarRows(spark, ivfModelPath(indexPath))
-
-  private[graft] def decodeModelRows(rows: Array[org.apache.spark.sql.Row])
-      : (Array[Array[Double]], Long, Option[Long]) = {
-    val trainedCount = rows.find(r => r.getInt(0) == -1)
-      .map(_.getDouble(2).toLong)
-      .getOrElse(sys.error("no trained-count row in the model sidecar"))
-    val fpHalves = rows.filter(_.getInt(0) == -2)
-      .map(r => r.getInt(1) -> r.getDouble(2).toLong).toMap
-    val fingerprint =
-      for (lo <- fpHalves.get(0); hi <- fpHalves.get(1)) yield (hi << 32) | lo
-    val cells = rows.filter(_.getInt(0) >= 0)
-    val nList = cells.map(_.getInt(0)).max + 1
-    val dim = cells.map(_.getInt(1)).max + 1
-    val centroids = Array.fill(nList)(new Array[Double](dim))
-    cells.foreach(r => centroids(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
-    (centroids, trainedCount, fingerprint)
-  }
-
-  /** Append a batch of new vectors to a materialized index WITHOUT
-    * retraining: each vector is assigned to its nearest existing centroid
-    * and written into that cid partition (parquet append creates new
-    * files inside the partition dirs — existing lists are never
-    * rewritten). Search over the appended index with the SAME quantizer is
-    * exactly search over the union corpus; recall degrades only as the
-    * data distribution drifts from the trained centroids, which
-    * [[refreshIvfIndexIfStale]] bounds. */
-  def appendIvfIndex(spark: SparkSession, batch: DataFrame, indexPath: String): Unit = {
-    GraftFunctions.ensureRegistered(spark)
-    // live-path mutation: serialize with rebuild/refresh/compaction (r15)
-    ServingStore.withBuildLock(indexPath) {
-      val (centroids, _) = readIvfModel(spark, indexPath)
-      batch
-        .withColumn("cid", GraftFunctions.graftArgminL2(col("vec"), centsLit(centroids)))
-        .write.mode("append").partitionBy("cid").parquet(indexPath)
-    }
-  }
-
-  /** Staleness-triggered retrain + compaction: when appended rows exceed
-    * `staleness` x the trained corpus size, retrain the quantizer over
-    * the FULL index contents (same deterministic Lloyd fit as the
-    * original build), rewrite the inverted lists under the new
-    * assignment, and persist the refreshed model. Returns true when a
-    * refresh ran. The rewrite goes through a sibling `_tmp` generation
-    * plus delete-and-rename swap (the index is eagerly checkpointed off
-    * the old files first); a production deployment would keep multiple
-    * generations and swap a pointer instead — same shape, atomic for
-    * concurrent readers. */
-  def refreshIvfIndexIfStale(spark: SparkSession, indexPath: String,
+  /** Staleness-triggered retrain: when the lists hold more than
+    * `staleness` x the trained corpus size in appended rows, retrain the
+    * quantizer over the FULL index contents (same deterministic Lloyd
+    * fit as the original build) and write model and lists as a new
+    * generation under the unchanged fingerprint. Returns true when a
+    * refresh ran. */
+  def refreshIvfIfStale(spark: SparkSession, dir: String,
       staleness: Double = 0.5, nList: Int = IvfNList, iters: Int = IvfIters): Boolean = {
-    GraftFunctions.ensureRegistered(spark)
-    val (_, trainedCount) = readIvfModel(spark, indexPath)
-    val corpus = spark.read.parquet(indexPath).select(col("vec_id"), col("vec"))
-    val total = corpus.count()
-    if ((total - trainedCount).toDouble < staleness * trainedCount.toDouble) false
-    else ServingStore.withBuildLock(indexPath) {
-      // live-path retrain + swap: serialize with appends/serves (r15)
-      val snap = corpus.localCheckpoint() // sever from the files we rewrite
-      val centroids = ivfFit(snap, nList, iters)
-      val tmp = indexPath.stripSuffix("/") + "_tmp"
-      snap
-        .withColumn("cid", GraftFunctions.graftArgminL2(col("vec"), centsLit(centroids)))
-        .write.mode("overwrite").partitionBy("cid").parquet(tmp)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val idx = new org.apache.hadoop.fs.Path(indexPath)
-      val fs = idx.getFileSystem(conf)
-      // FileSystem ops signal failure by RETURNING false, not throwing —
-      // an unchecked swap could delete the live index and then leave the
-      // new generation stranded at _tmp while recording a fresh model
-      require(fs.delete(idx, true), s"could not delete old index generation $indexPath")
-      require(fs.rename(new org.apache.hadoop.fs.Path(tmp), idx),
-        s"could not move new index generation $tmp -> $indexPath " +
-          "(new data is intact at the tmp path; model NOT updated)")
-      writeIvfModel(spark, indexPath, centroids, total)
+    val ix = ivfIndex(spark, dir)
+    val total = spark.read.parquet(ix.gen.path("lists")).count()
+    if ((total - ix.trained).toDouble < staleness * ix.trained.toDouble) false
+    else {
+      ServingStore.deriveGeneration(spark, "ivf-index", ivfServePath(dir), ListsStore,
+          carry = Nil)(identity) { (prev, next) =>
+        writeIvfIndexOf(spark,
+          spark.read.parquet(prev.path("lists")).select(col("vec_id"), col("vec")),
+          next, nList, iters)
+      }
+      graft.PlanCache.invalidate()
       true
     }
   }
 
-  /** IVF search over a materialized index using its PERSISTED model —
-    * the no-ceremony entry point for an index built by [[writeIvfIndex]]
-    * and maintained by [[appendIvfIndex]]/[[refreshIvfIndexIfStale]]. */
-  def knnIvfIndexed(spark: SparkSession, dir: String, indexPath: String): DataFrame =
-    knnIvfIndexed(spark, dir, indexPath, readIvfModel(spark, indexPath)._1)
+  /** Compact the IVF index's inverted lists back to one vector file per
+    * cell ([[compactLists]]) — [[compactIvfPq]]'s twin for the RAW-vector
+    * index. */
+  def compactIvf(spark: SparkSession, dir: String): Unit =
+    compactLists(spark, "ivf-index", ivfServePath(dir))
 
   /** Driver-side margin-probe ranking over the persisted model — the
     * serving-path twin of [[probeIdxByMargin]]: the same arithmetic in
@@ -1097,7 +1029,7 @@ object Similarity {
     * ([[probeCellsDriver]]); corpus-side scoring stays distributed.
     * Results are identical to [[knnIvf]] over the same corpus and
     * quantizer. */
-  def knnIvfIndexed(spark: SparkSession, dir: String, indexPath: String,
+  private[graft] def knnIvfIndexed(spark: SparkSession, dir: String, lists: String,
       centroids: Array[Array[Double]], k: Int = KnnK): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
@@ -1112,7 +1044,7 @@ object Similarity {
       .flatMap { case (id, q, cells) => cells.map(cid => (id, q.toSeq, cid)) }
       .toDF("query_id", "qvec", "probe_cid")
     val probedCells = probed.flatMap(_._3).distinct.toSeq
-    val listed = spark.read.parquet(indexPath).filter(col("cid").isin(probedCells: _*))
+    val listed = spark.read.parquet(lists).filter(col("cid").isin(probedCells: _*))
     val scored = listed
       .join(broadcast(queries), col("cid") === col("probe_cid"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -1225,44 +1157,45 @@ object Similarity {
     * namespace to [[ivfServePath]] — the two indexes never collide). */
   private[graft] def pqServePath(dir: String): String = servePath("pq_serve_", dir)
 
+  /** Store versions of the PQ-coded model stores ([[IvfStoreVersion]]'s
+    * convention) with the PqM x PqK geometry folded in: a generation
+    * written under retuned constants rebuilds instead of regrouping into
+    * wrong-shaped books, whose out-of-range code lookups would kill
+    * (ANSI) or silently NULL every search. IVF-PQ's base version names
+    * its encoding: OPQ-rotated residual codes. */
+  private def pqVersion(base: Int): Int = (base * 31 + PqM) * 31 + PqK
+  private val PqStoreVersion = pqVersion(1)
+  private val OpqStoreVersion = pqVersion(1)
+  private val IvfPqStoreVersion = pqVersion(2)
+
+  /** Codebooks from a model's `books` part (row j·PqK + c = centroid c
+    * of subspace j). */
+  private def booksOf(m: Map[String, Array[Array[Double]]]): Array[Array[Array[Double]]] = {
+    val flat = m("books")
+    require(flat.length == PqM * PqK && flat.forall(_.length == flat.head.length),
+      s"PQ model has ${flat.length} codebook rows, expected $PqM x $PqK of equal width")
+    flat.grouped(PqK).toArray
+  }
+
+  /** The `rotation` part of an OPQ-rotated model over `books`. */
+  private def rotationOf(m: Map[String, Array[Array[Double]]],
+      books: Array[Array[Array[Double]]]): Array[Array[Double]] = {
+    val r = m("rotation")
+    val dim = books.head.head.length * PqM
+    require(r.length == dim && r.forall(_.length == dim),
+      s"OPQ model has a ${r.length}-row rotation, expected $dim x $dim")
+    r
+  }
+
   /** Build the PQ index generation: train codebooks, write the coded
-    * corpus (vec_id, codes) as parquet, persist the model through the
-    * same sidecar format as IVF (row key cid = subspace * PqK + code). */
-  private[graft] def writePqIndexOf(spark: SparkSession, corpus: DataFrame,
-      indexPath: String, fingerprint: Option[Long] = None): Array[Array[Array[Double]]] = {
+    * corpus (vec_id, codes) and the books. */
+  private def writePqIndexOf(spark: SparkSession, corpus: DataFrame,
+      gen: ServingStore.Generation): Unit = {
     GraftFunctions.ensureRegistered(spark)
     val books = pqFit(corpus)
     corpus.select(col("vec_id"), pqCodesCol(books).as("codes"))
-      .write.mode("overwrite").parquet(indexPath)
-    writeIvfModel(spark, indexPath, books.flatten, corpus.count(), fingerprint)
-    // geometry stamp (cid = -3: pos 0 -> PqM, pos 1 -> PqK), appended as
-    // its own tiny file: IVF readers ignore cid < -2 rows, and a crash
-    // between the two writes leaves a stamp-less sidecar that fails the
-    // read probe -> rebuild (never a wrong-shaped regroup)
-    import spark.implicits._
-    Seq((-3, 0, PqM.toDouble), (-3, 1, PqK.toDouble)).toDF("cid", "pos", "w")
-      .coalesce(1).write.mode("append").parquet(ivfModelPath(indexPath))
-    books
-  }
-
-  /** Codebooks from a PQ model sidecar (regrouped from the flat cid
-    * encoding of [[writePqIndexOf]]). The geometry check is EXACT
-    * (PqM x PqK), not just divisibility: a sidecar written under retuned
-    * constants must fail this probe — the serve path then rebuilds —
-    * rather than regroup into wrong-shaped books whose out-of-range
-    * code lookups would kill (ANSI) or silently NULL every search. */
-  private[graft] def readPqBooks(spark: SparkSession, indexPath: String)
-      : (Array[Array[Array[Double]]], Option[Long]) = {
-    val rows = readModelRows(spark, indexPath)
-    val (flat, _, fp) = decodeModelRows(rows)
-    val geo = rows.filter(_.getInt(0) == -3)
-      .map(r => r.getInt(1) -> r.getDouble(2).toInt).toMap
-    require(geo.get(0).contains(PqM) && geo.get(1).contains(PqK),
-      s"PQ sidecar geometry ${geo.get(0)}x${geo.get(1)} != current $PqM x $PqK " +
-        "(constants retuned? the serve path rebuilds on this failure)")
-    require(flat.length == PqM * PqK,
-      s"PQ sidecar has ${flat.length} codebook rows, expected $PqM x $PqK")
-    (flat.grouped(PqK).toArray, fp)
+      .write.mode("overwrite").parquet(gen.path("codes"))
+    ServingStore.writeModel(spark, gen.path("model"), "books" -> books.flatten)
   }
 
   /** q_knn_pq SERVING path: search the persisted coded corpus,
@@ -1273,28 +1206,11 @@ object Similarity {
     * round-trips parquet exactly and encoding is deterministic
     * (first-wins argmin). */
   def knnPqServe(spark: SparkSession, dir: String, k: Int = KnnK): DataFrame = {
-    val indexPath = pqServePath(dir)
-    val fp = corpusFingerprint(spark, dir)
-    val stored =
-      try Some(readPqBooks(spark, indexPath))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("pq", ivfModelPath(indexPath), e)
-          None
-      }
-    val books = stored match {
-      case Some((b, Some(storedFp))) if storedFp == fp => b
-      case _ => ServingStore.withBuildLock(indexPath) {
-        (try Some(readPqBooks(spark, indexPath))
-         catch { case e if scala.util.control.NonFatal(e) => None }) match {
-          case Some((b, Some(f2))) if f2 == fp => b
-          case _ =>
-            Tables.invalidate(spark, dir, "embeddings")
-            writePqIndexOf(spark, emb(spark, dir), indexPath, Some(fp))
-        }
-      }
-    }
-    withRecall(knnPqOf(spark, dir, spark.read.parquet(indexPath), books, k), spark, dir, k)
+    val (gen, books) =
+      modelStore(spark, "pq-index", pqServePath(dir), dir, PqStoreVersion, CodesStore)(
+        gen => writePqIndexOf(spark, emb(spark, dir), gen))((gen, m) => (gen, booksOf(m)))
+    withRecall(knnPqOf(spark, dir, spark.read.parquet(gen.path("codes")), books, k),
+      spark, dir, k)
   }
 
   // ------------------------------------------------------------------ OPQ
@@ -1388,58 +1304,17 @@ object Similarity {
   /** Serving-index location for a corpus dir's OPQ generation. */
   private[graft] def opqServePath(dir: String): String = servePath("opq_serve_", dir)
 
-  /** Row-key offset for rotation cells in the OPQ sidecar: row
-    * (cid = OpqRotBase − i, pos = j, w = R(i)(j)). Codebooks ride at
-    * cid ≥ 0 ([[writePqIndexOf]]'s layout), so one sidecar carries the
-    * whole model and the freshness probe stays a single read. */
-  private val OpqRotBase = -1000
-
   /** Build the OPQ index generation: train (R, books), write the coded
-    * ROTATED corpus, persist rotation + books + geometry in one sidecar.
-    * Stamp pos 3 marks the rotation's presence — a plain-PQ sidecar
-    * fails the OPQ read probe explicitly and rebuilds. */
-  private[graft] def writeOpqIndexOf(spark: SparkSession, corpus: DataFrame,
-      indexPath: String, fingerprint: Option[Long] = None)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    * ROTATED corpus and the model (rotation + books). */
+  private def writeOpqIndexOf(spark: SparkSession, corpus: DataFrame,
+      gen: ServingStore.Generation): Unit = {
     GraftFunctions.ensureRegistered(spark)
     val (r, books) = opqFit(corpus)
     corpus
       .select(col("vec_id"), rotateCol(r, col("vec")).as("vec"))
       .select(col("vec_id"), pqCodesCol(books).as("codes"))
-      .write.mode("overwrite").parquet(indexPath)
-    writeIvfModel(spark, indexPath, books.flatten, corpus.count(), fingerprint)
-    import spark.implicits._
-    val rotRows = r.zipWithIndex.flatMap { case (row, i) =>
-      row.zipWithIndex.map { case (v, j) => (OpqRotBase - i, j, v) }
-    }
-    (rotRows.toSeq ++ Seq((-3, 0, PqM.toDouble), (-3, 1, PqK.toDouble), (-3, 3, 1.0)))
-      .toDF("cid", "pos", "w")
-      .coalesce(1).write.mode("append").parquet(ivfModelPath(indexPath))
-    (r, books)
-  }
-
-  private[graft] def readOpqModels(spark: SparkSession, indexPath: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]], Option[Long]) = {
-    val rows = readModelRows(spark, indexPath)
-    val (flat, _, fp) = decodeModelRows(rows)
-    val geo = rows.filter(_.getInt(0) == -3)
-      .map(r => r.getInt(1) -> r.getDouble(2).toInt).toMap
-    require(geo.get(0).contains(PqM) && geo.get(1).contains(PqK),
-      s"OPQ sidecar geometry ${geo.get(0)}x${geo.get(1)} != current $PqM x $PqK " +
-        "(constants retuned? the serve path rebuilds on this failure)")
-    require(geo.get(3).contains(1),
-      "OPQ sidecar carries no rotation marker — its codes decode under " +
-        "unrotated semantics; the serve path rebuilds on this failure")
-    require(flat.length == PqM * PqK,
-      s"OPQ sidecar has ${flat.length} codebook rows, expected $PqM x $PqK")
-    val books = flat.grouped(PqK).toArray
-    val dim = books.head.head.length * PqM
-    val rotCells = rows.filter(_.getInt(0) <= OpqRotBase)
-    require(rotCells.length == dim * dim,
-      s"OPQ sidecar has ${rotCells.length} rotation cells, expected $dim x $dim")
-    val r = Array.fill(dim)(new Array[Double](dim))
-    rotCells.foreach(c => r(OpqRotBase - c.getInt(0))(c.getInt(1)) = c.getDouble(2))
-    (r, books, fp)
+      .write.mode("overwrite").parquet(gen.path("codes"))
+    ServingStore.writeModel(spark, gen.path("model"), "rotation" -> r, "books" -> books.flatten)
   }
 
   /** ADC + exact re-rank over an OPQ-coded corpus: queries rotate into
@@ -1478,46 +1353,17 @@ object Similarity {
   /** q_knn_opq SERVING path — same fingerprint-keyed generation
     * discipline as [[knnPqServe]]. */
   def knnOpqServe(spark: SparkSession, dir: String, k: Int = KnnK): DataFrame = {
-    val indexPath = opqServePath(dir)
-    val fp = corpusFingerprint(spark, dir)
-    val stored =
-      try Some(readOpqModels(spark, indexPath))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("opq", ivfModelPath(indexPath), e)
-          None
+    val (gen, r, books) =
+      modelStore(spark, "opq-index", opqServePath(dir), dir, OpqStoreVersion, CodesStore)(
+        gen => writeOpqIndexOf(spark, emb(spark, dir), gen)) { (gen, m) =>
+        val books = booksOf(m)
+        (gen, rotationOf(m, books), books)
       }
-    val (r, books) = stored match {
-      case Some((rr, b, Some(storedFp))) if storedFp == fp => (rr, b)
-      case _ => ServingStore.withBuildLock(indexPath) {
-        (try Some(readOpqModels(spark, indexPath))
-         catch { case e if scala.util.control.NonFatal(e) => None }) match {
-          case Some((rr, b, Some(f2))) if f2 == fp => (rr, b)
-          case _ =>
-            Tables.invalidate(spark, dir, "embeddings")
-            writeOpqIndexOf(spark, emb(spark, dir), indexPath, Some(fp))
-        }
-      }
-    }
-    withRecall(knnOpqOf(spark, dir, spark.read.parquet(indexPath), r, books, k),
+    withRecall(knnOpqOf(spark, dir, spark.read.parquet(gen.path("codes")), r, books, k),
       spark, dir, k)
   }
 
   // --------------------------------------------------------------- IVF-PQ
-
-  /** Row-key offset for PQ codebook weights inside the fused index's
-    * ONE model sidecar: row (cid = -1000 - flatIdx, pos, w) carries
-    * codebook entry flatIdx = subspace * PqK + code, position pos. The
-    * IVF decode ignores all cid < 0 rows it doesn't name, so centroids
-    * and books ride the same parquet and the freshness probe stays a
-    * single read (a sibling books sidecar cost one extra Spark job per
-    * warm serve call). */
-  private val IvfPqBookBase = -1000
-
-  /** Row-key offset for OPQ rotation cells in the fused sidecar (book
-    * rows occupy [IvfPqBookBase − PqM·PqK + 1, IvfPqBookBase], far
-    * above this base). */
-  private val IvfPqRotBase = -10000
 
   /** Driver-side matrix-vector product for rotating MODEL-SIZED state
     * (centroids, collected query rows) — never corpus rows. */
@@ -1528,6 +1374,25 @@ object Similarity {
       while (i < row.length) { s += row(i) * x(i); i += 1 }
       s
     }
+
+  /** Cell assignment + residual against the cell centroid, in one
+    * projection — the IVF-PQ encoding's first half, shared by the build
+    * and [[appendIvfPq]]. */
+  private def ivfPqResiduals(vecs: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+    vecs
+      .select(col("vec_id"), col("vec"),
+        GraftFunctions.graftArgminL2(col("vec"), centsLit(centroids)).as("cid"))
+      .select(col("vec_id"), col("cid"),
+        zip_with(col("vec"), element_at(centsLit(centroids), col("cid") + 1),
+          (x, c) => x.cast(DoubleType) - c).as("vec"))
+
+  /** PQ codes of the ROTATED residuals: the list rows (vec_id, cid,
+    * codes). */
+  private def ivfPqCodes(residuals: DataFrame, rot: Array[Array[Double]],
+      books: Array[Array[Array[Double]]]): DataFrame =
+    residuals
+      .select(col("vec_id"), col("cid"), rotateCol(rot, col("vec")).as("vec"))
+      .select(col("vec_id"), col("cid"), pqCodesCol(books).as("codes"))
 
   /** Build the FUSED billion-scale ANN index: the coarse quantizer
     * partitions the corpus into inverted lists (`partitionBy(cid)`) and
@@ -1541,86 +1406,23 @@ object Similarity {
     * 8-byte budget reconstructs tighter than either refinement alone
     * (spec-pinned no-worse than plain-residual books). Decode inverts
     * the rotation (Rᵀ, orthogonality) and adds the centroid back
-    * ([[knnIvfPq]]), so re-rank semantics are unchanged. */
+    * ([[knnIvfPq]]), so re-rank semantics are unchanged. Writes `lists`
+    * and `model` (centroids, rotation, books) into `gen`. */
   private[graft] def writeIvfPqIndexOf(spark: SparkSession, corpus: DataFrame,
-      indexPath: String, fingerprint: Option[Long] = None)
+      gen: ServingStore.Generation)
       : (Array[Array[Double]], Array[Array[Double]], Array[Array[Array[Double]]]) = {
     GraftFunctions.ensureRegistered(spark)
     val centroids = ivfFit(corpus)
-    // cell assignment + residual in one projection; the lazy checkpoint
-    // lets PQ training's multi-pass Lloyd iterations re-read the
-    // residual frame instead of re-running the argmin kernel per pass
-    val residuals = corpus
-      .select(col("vec_id"), col("vec"),
-        GraftFunctions.graftArgminL2(col("vec"), centsLit(centroids)).as("cid"))
-      .select(col("vec_id"), col("cid"),
-        zip_with(col("vec"), element_at(centsLit(centroids), col("cid") + 1),
-          (x, c) => x.cast(DoubleType) - c).as("vec"))
-      .localCheckpoint(eager = false)
+    // the lazy checkpoint lets PQ training's multi-pass Lloyd iterations
+    // re-read the residual frame instead of re-running the argmin kernel
+    // per pass
+    val residuals = ivfPqResiduals(corpus, centroids).localCheckpoint(eager = false)
     val (rot, books) = opqFit(residuals)
-    residuals
-      .select(col("vec_id"), col("cid"), rotateCol(rot, col("vec")).as("vec"))
-      .select(col("vec_id"), col("cid"), pqCodesCol(books).as("codes"))
-      .write.mode("overwrite").partitionBy("cid").parquet(indexPath)
-    writeIvfModel(spark, indexPath, centroids, corpus.count(), fingerprint)
-    // books + rotation + the PqM x PqK geometry stamp appended into the
-    // SAME sidecar as negative-offset rows (a crash between the writes
-    // leaves a books-less sidecar that fails the read probe -> rebuild,
-    // never mixed generations; the stamp makes a constants retune fail
-    // the probe EXPLICITLY — the raw cell count is invariant to a
-    // PqM-only retune, since PqM x PqK x dsub = PqK x dim). Stamp pos 2
-    // marks residual encoding and pos 4 the OPQ rotation: generations
-    // written under either older semantics fail the read probe and
-    // rebuild — their codes decode differently.
-    import spark.implicits._
-    val bookRows = books.flatten.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (wv, p) => (IvfPqBookBase - i, p, wv) }
-    }
-    val rotRows = rot.zipWithIndex.flatMap { case (row, i) =>
-      row.zipWithIndex.map { case (v, j) => (IvfPqRotBase - i, j, v) }
-    }
-    (bookRows ++ rotRows ++
-      Seq((-3, 0, PqM.toDouble), (-3, 1, PqK.toDouble), (-3, 2, 1.0), (-3, 4, 1.0)))
-      .toSeq.toDF("cid", "pos", "w")
-      .coalesce(1).write.mode("append").parquet(ivfModelPath(indexPath))
+    ivfPqCodes(residuals, rot, books)
+      .write.mode("overwrite").partitionBy("cid").parquet(gen.path("lists"))
+    ServingStore.writeModel(spark, gen.path("model"),
+      "centroids" -> centroids, "rotation" -> rot, "books" -> books.flatten)
     (centroids, rot, books)
-  }
-
-  private[graft] def readIvfPqModels(spark: SparkSession, indexPath: String)
-      : (Array[Array[Double]], Array[Array[Double]], Array[Array[Array[Double]]],
-        Option[Long]) = {
-    val rows = readModelRows(spark, indexPath)
-    val (cents, _, fp) = decodeModelRows(rows)
-    val geo = rows.filter(_.getInt(0) == -3)
-      .map(r => r.getInt(1) -> r.getDouble(2).toInt).toMap
-    require(geo.get(0).contains(PqM) && geo.get(1).contains(PqK),
-      s"IVF-PQ sidecar geometry ${geo.get(0)}x${geo.get(1)} != current $PqM x $PqK " +
-        "(constants retuned? the serve path rebuilds on this failure)")
-    require(geo.get(2).contains(1),
-      "IVF-PQ sidecar predates residual encoding — its codes decode under " +
-        "raw-vector semantics; the serve path rebuilds on this failure")
-    require(geo.get(4).contains(1),
-      "IVF-PQ sidecar predates the OPQ rotation — its codes decode under " +
-        "unrotated semantics; the serve path rebuilds on this failure")
-    val bookCells = rows.filter(r =>
-      r.getInt(0) <= IvfPqBookBase && r.getInt(0) > IvfPqRotBase)
-    val dsub = cents.head.length / PqM
-    require(bookCells.length == PqM * PqK * dsub,
-      s"IVF-PQ sidecar has ${bookCells.length} codebook cells, " +
-        s"expected $PqM x $PqK x $dsub")
-    val flat = Array.fill(PqM * PqK)(new Array[Double](dsub))
-    bookCells.foreach { r =>
-      flat(IvfPqBookBase - r.getInt(0))(r.getInt(1)) = r.getDouble(2)
-    }
-    val dim = cents.head.length
-    val rotCells = rows.filter(_.getInt(0) <= IvfPqRotBase)
-    require(rotCells.length == dim * dim,
-      s"IVF-PQ sidecar has ${rotCells.length} rotation cells, expected $dim x $dim")
-    val rot = Array.fill(dim)(new Array[Double](dim))
-    rotCells.foreach { r =>
-      rot(IvfPqRotBase - r.getInt(0))(r.getInt(1)) = r.getDouble(2)
-    }
-    (cents, rot, flat.grouped(PqK).toArray, fp)
   }
 
   /** Search the fused index: driver-ranked probe cells prune the codes
@@ -1630,7 +1432,7 @@ object Similarity {
     * corpus, in 32x-compressed codes; exact re-rank against raw
     * vectors scores only the shortlist. The raw corpus is touched for
     * the 8 query rows and O(queries x shortlist) re-rank lookups. */
-  def knnIvfPq(spark: SparkSession, dir: String, indexPath: String,
+  def knnIvfPq(spark: SparkSession, dir: String, lists: String,
       centroids: Array[Array[Double]], rot: Array[Array[Double]],
       books: Array[Array[Array[Double]]], k: Int = KnnK): DataFrame = {
     GraftFunctions.ensureRegistered(spark)
@@ -1664,7 +1466,7 @@ object Similarity {
     val queries = broadcast(probed.toSeq
       .map { case (id, q, _) => (id, q.toSeq) }
       .toDF("query_id", "qvec"))
-    val listed = spark.read.parquet(indexPath)
+    val listed = spark.read.parquet(lists)
       .filter(col("cid").isin(probedCells: _*))
     val adc = listed
       .withColumn("recon",
@@ -1680,38 +1482,33 @@ object Similarity {
   /** Serving-index location for a corpus dir's fused IVF-PQ index. */
   private[graft] def ivfPqServePath(dir: String): String = servePath("ivfpq_serve_", dir)
 
+  /** A served IVF-PQ generation and its decoded model. */
+  private[graft] final case class IvfPqIndex(gen: ServingStore.Generation,
+      centroids: Array[Array[Double]], rot: Array[Array[Double]],
+      books: Array[Array[Array[Double]]])
+
+  private[graft] def ivfPqIndex(spark: SparkSession, dir: String): IvfPqIndex =
+    modelStore(spark, "ivfpq-index", ivfPqServePath(dir), dir, IvfPqStoreVersion, ListsStore)(
+      gen => writeIvfPqIndexOf(spark, emb(spark, dir), gen))(ivfPqOf)
+
+  private def ivfPqOf(gen: ServingStore.Generation, m: Map[String, Array[Array[Double]]]) = {
+    val books = booksOf(m)
+    IvfPqIndex(gen, m("centroids"), rotationOf(m, books), books)
+  }
+
   /** q_knn_ivfpq SERVING path — same fingerprint-keyed generation
     * discipline as the flat PQ and IVF serves. */
   def knnIvfPqServe(spark: SparkSession, dir: String, k: Int = KnnK): DataFrame = {
-    val indexPath = ivfPqServePath(dir)
-    val fp = corpusFingerprint(spark, dir)
-    val stored =
-      try Some(readIvfPqModels(spark, indexPath))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("ivf-pq", ivfModelPath(indexPath), e)
-          None
-      }
-    val (cents, rot, books) = stored match {
-      case Some((c, r, b, Some(storedFp))) if storedFp == fp => (c, r, b)
-      case _ => ServingStore.withBuildLock(indexPath) {
-        (try Some(readIvfPqModels(spark, indexPath))
-         catch { case e if scala.util.control.NonFatal(e) => None }) match {
-          case Some((c, r, b, Some(f2))) if f2 == fp => (c, r, b)
-          case _ =>
-            Tables.invalidate(spark, dir, "embeddings")
-            writeIvfPqIndexOf(spark, emb(spark, dir), indexPath, Some(fp))
-        }
-      }
-    }
-    withRecall(knnIvfPq(spark, dir, indexPath, cents, rot, books, k), spark, dir, k)
+    val ix = ivfPqIndex(spark, dir)
+    withRecall(knnIvfPq(spark, dir, ix.gen.path("lists"), ix.centroids, ix.rot, ix.books, k),
+      spark, dir, k)
   }
 
   /** Incrementally maintain the fused IVF-PQ index after an embedding
     * ingest: encode ONLY the new vectors with the EXISTING coarse
-    * quantizer and codebooks, append their codes into the existing
-    * `cid=` partition dirs, and advance the fingerprint sidecar to the
-    * post-append corpus state — the embedding-side twin of
+    * quantizer, rotation and codebooks, and commit them as new files in
+    * their `cid=` cells of a new generation that carries every committed
+    * file as a hard link ([[appendLists]]) — the embedding-side twin of
     * [[Dedup.appendPostings]], and the standard production shape (a
     * trained quantizer absorbs new vectors without retraining; drift is
     * a slow, monitored process handled by periodic rebuilds, not by
@@ -1721,149 +1518,23 @@ object Similarity {
     *
     * Contract mirrors [[Dedup.appendPostings]]: call AFTER the delta
     * files land in `dir`, passing exactly the newly-landed vectors;
-    * `expectedFp` (captured BEFORE the delta landed) proves the
-    * generation matches the corpus the delta extends — a stale index
-    * must take the full-rebuild path, never absorb a delta and get
-    * re-stamped fresh. Crash safety likewise: the sidecar advances only
-    * after the code append commits, so a crash in between leaves a
-    * stale sidecar and the next serve rebuilds. The model sidecar is
-    * rewritten (same centroids/books, new fingerprint): a crash mid-
-    * rewrite leaves a books-less sidecar that fails the read probe ->
-    * rebuild, the build path's own failure mode. */
+    * `expectedFp` (the corpus fingerprint captured BEFORE the delta
+    * landed) proves the generation matches the corpus the delta
+    * extends. */
   def appendIvfPq(spark: SparkSession, dir: String, newVecs: DataFrame,
-      expectedFp: Option[Long] = None): Unit = {
-    GraftFunctions.ensureRegistered(spark)
-    val indexPath = ivfPqServePath(dir)
-    require(new java.io.File(indexPath).exists(),
-      s"no IVF-PQ generation at $indexPath to append into — serve once first")
-    ServingStore.withBuildLock(indexPath) {
-    val (cents, rot, books, storedFp0) =
-      try readIvfPqModels(spark, indexPath)
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          throw new IllegalStateException(
-            s"IVF-PQ sidecar at ${ivfModelPath(indexPath)} unreadable — " +
-              "rebuild with knnIvfPqServe instead of appending into an " +
-              "unproven generation", e)
-      }
-    val storedFp = storedFp0.getOrElse(throw new IllegalStateException(
-      "IVF-PQ sidecar carries no fingerprint — rebuild instead of appending"))
-    expectedFp.foreach(f => require(storedFp == f,
-      s"IVF-PQ generation at $indexPath was built for a different corpus " +
-        s"state (stored fp $storedFp != pre-append fp $f): rebuild, not append"))
-    // encode the delta EXACTLY as the build path does: cell assignment,
-    // residual against the cell centroid, PQ codes of the ROTATED residual
-    newVecs
-      .select(col("vec_id"), col("vec"),
-        GraftFunctions.graftArgminL2(col("vec"), centsLit(cents)).as("cid"))
-      .select(col("vec_id"), col("cid"),
-        zip_with(col("vec"), element_at(centsLit(cents), col("cid") + 1),
-          (x, c) => x.cast(DoubleType) - c).as("vec"))
-      .select(col("vec_id"), col("cid"), rotateCol(rot, col("vec")).as("vec"))
-      .select(col("vec_id"), col("cid"), pqCodesCol(books).as("codes"))
-      .write.mode("append").partitionBy("cid").parquet(indexPath)
-    // delta files are already in `dir`: re-list and stamp post-append
-    Tables.invalidate(spark, dir, "embeddings")
-    val fp = corpusFingerprint(spark, dir)
-    val (_, trainedCount, _) = readIvfModelFull(spark, indexPath)
-    writeIvfModel(spark, indexPath, cents, trainedCount, Some(fp))
-    import spark.implicits._
-    val bookRows = books.flatten.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (wv, p) => (IvfPqBookBase - i, p, wv) }
+      expectedFp: Option[Long] = None): Unit =
+    appendLists(spark, "ivfpq-index", ivfPqServePath(dir), dir, IvfPqStoreVersion,
+        expectedFp) { prev =>
+      // encode the delta EXACTLY as the build path does
+      val ix = ivfPqOf(prev, modelOf(spark, prev))
+      ivfPqCodes(ivfPqResiduals(newVecs, ix.centroids), ix.rot, ix.books)
     }
-    val rotRows = rot.zipWithIndex.flatMap { case (row, i) =>
-      row.zipWithIndex.map { case (v, j) => (IvfPqRotBase - i, j, v) }
-    }
-    (bookRows ++ rotRows ++
-      Seq((-3, 0, PqM.toDouble), (-3, 1, PqK.toDouble), (-3, 2, 1.0), (-3, 4, 1.0)))
-      .toSeq.toDF("cid", "pos", "w")
-      .coalesce(1).write.mode("append").parquet(ivfModelPath(indexPath))
-    }
-  }
 
-  /** Compact an IVF-PQ generation's inverted lists back to one code
-    * file per cell.
-    *
-    * Every [[appendIvfPq]] lands a fresh file in each touched `cid=`
-    * partition dir, so a season of ingests makes every probe open
-    * O(appends) small files per probed cell — the same LSM read
-    * amplification [[Dedup.compactPostings]] undoes for the posting
-    * index. Rewriting through a hash repartition on `cid` sends every
-    * cell's rows to ONE task, so the partitioned write leaves exactly
-    * one file per cell regardless of how AQE sizes the task count.
-    * Codes, model sidecar and fingerprint are unchanged — probes
-    * before and after read identical rows.
-    *
-    * Crash safety: the compacted copy is fully written beside the live
-    * index first; the model sidecar is then STAGED AWAY before the file
-    * swap and restored after it, so a crash anywhere in the window
-    * leaves a sidecar-less generation the serve path rebuilds — never a
-    * half-swapped index served as fresh. */
-  def compactIvfPq(spark: SparkSession, dir: String): Unit = {
-    val indexPath = ivfPqServePath(dir)
-    // read probe: refuse to compact an unproven or older-semantics
-    // generation (same failure → rebuild contract as the serve path)
-    readIvfPqModels(spark, indexPath)
-    compactPartitionedIndex(spark, indexPath)
-  }
-
-  /** Shared compaction mechanics for any cid-partitioned index with a
-    * sibling `_model` sidecar ([[compactIvf]]/[[compactIvfPq]] differ
-    * only in their read probes): rewrite through a hash repartition on
-    * `cid` (one file per cell), then swap with the sidecar STAGED AWAY
-    * for the window — a crash anywhere in it leaves a sidecar-less
-    * generation the serve path rebuilds, never a half-swapped index
-    * read as live. */
-  private def compactPartitionedIndex(spark: SparkSession, indexPath: String): Unit = {
-    // live-path mutation: serialize with concurrent serve rebuilds and
-    // appends under the store's build lock (r15)
-    ServingStore.withBuildLock(indexPath) {
-    val modelPath = ivfModelPath(indexPath)
-    val tmpPath = indexPath + "_compact_tmp"
-    deleteTree(tmpPath)
-    spark.read.parquet(indexPath)
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(tmpPath)
-    val stage = modelPath + "_compact_stage"
-    deleteTree(stage)
-    val p = java.nio.file.Paths.get(_: String)
-    java.nio.file.Files.move(p(modelPath), p(stage))
-    deleteTree(indexPath)
-    // harness-only kill -9 with the model staged away and the index
-    // deleted — the model-less generation the read probe must reject
-    ServingStore.crashPoint("ann.compact.midswap")
-    java.nio.file.Files.move(p(tmpPath), p(indexPath))
-    java.nio.file.Files.move(p(stage), p(modelPath))
-    }
-    // live files rewritten under an unchanged corpus stamp: memoized
-    // prepared plans pin the old listing — drop them (r16 review)
-    graft.PlanCache.invalidate()
-  }
-
-  /** Compact a plain-IVF generation's inverted lists back to one vector
-    * file per cell — [[compactIvfPq]]'s twin for the RAW-vector index
-    * maintained by [[writeIvfIndex]]/[[appendIvfIndex]] (each append
-    * lands a fresh file per touched `cid=` partition, so a season of
-    * ingests makes every probe open O(appends) files per probed cell).
-    * Same mechanics: a hash repartition on `cid` sends each cell's rows
-    * to one task, the partitioned write leaves one file per cell, rows
-    * and model are unchanged; same staged-sidecar crash discipline — a
-    * crash anywhere in the swap window leaves a model-less generation
-    * the read probe rejects, never a half-swapped index read as live. */
-  def compactIvf(spark: SparkSession, indexPath: String): Unit = {
-    // read probe: refuse to compact an unproven generation
-    readIvfModel(spark, indexPath)
-    compactPartitionedIndex(spark, indexPath)
-  }
-
-  private def deleteTree(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverseIterator
-        .foreach(java.nio.file.Files.delete)
-    }
-  }
+  /** Compact an IVF-PQ generation's inverted lists back to one code file
+    * per cell ([[compactLists]]): probes before and after read identical
+    * rows. */
+  def compactIvfPq(spark: SparkSession, dir: String): Unit =
+    compactLists(spark, "ivfpq-index", ivfPqServePath(dir))
 
   /** q_dedup_embedding_resolve — keep-one-copy canonicalization over the
     * embedding near-dup graph: [[embeddingDedup]] pairs resolved to
@@ -1895,30 +1566,19 @@ object Similarity {
   private[graft] def semCellsServePath(dir: String): String =
     servePath("semcells_serve_", dir)
 
-  /** Serve-or-train the dedup cell quantizer — fingerprint-keyed like
-    * every model sidecar (only the `_model` sidecar exists; the blocker
-    * needs centroids, not materialized lists). */
-  private[graft] def serveSemCells(spark: SparkSession, dir: String): Array[Array[Double]] = {
-    val path = semCellsServePath(dir)
-    val fp = corpusFingerprint(spark, dir)
-    val stored =
-      try Some(readIvfModelFull(spark, path))
-      catch {
-        case e if scala.util.control.NonFatal(e) =>
-          warnUnreadableSidecar("sem-cells", ivfModelPath(path), e)
-          None
-      }
-    stored match {
-      case Some((cents, _, Some(storedFp))) if storedFp == fp => cents
-      case _ =>
-        Tables.invalidate(spark, dir, "embeddings")
-        val corpus = emb(spark, dir)
-        val n = corpus.count()
-        val cents = ivfFit(corpus, semCellCount(n), knownCount = Some(n))
-        writeIvfModel(spark, path, cents, 0L, Some(fp))
-        cents
-    }
-  }
+  private val SemCellsStoreVersion = 1
+
+  /** Serve-or-train the dedup cell quantizer — a model store like the ANN
+    * indexes, holding only the `model` (the blocker needs centroids, not
+    * materialized lists). */
+  private[graft] def serveSemCells(spark: SparkSession, dir: String): Array[Array[Double]] =
+    modelStore(spark, "sem-cells", semCellsServePath(dir), dir, SemCellsStoreVersion,
+        Seq(Model)) { gen =>
+      val corpus = emb(spark, dir)
+      val n = corpus.count()
+      ServingStore.writeModel(spark, gen.path("model"),
+        "centroids" -> ivfFit(corpus, semCellCount(n), knownCount = Some(n)))
+    }((_, m) => m("centroids"))
 
   private[graft] def semAssignServePath(dir: String): String =
     servePath("semassign_serve_", dir)
@@ -1942,7 +1602,7 @@ object Similarity {
     * data-oblivious LSH bands — clusters follow the corpus distribution,
     * so near-dup-dense regions block together at any scale. The cell
     * quantizer is a persisted fingerprint-keyed generation (the same
-    * Lloyd fit and sidecar discipline as the ANN index family); blocking
+    * Lloyd fit and model-store discipline as the ANN index family); blocking
     * is one codegen'd top-2 argmin projection over the scan, pairs are
     * emitted exactly once at their smallest shared cell (no pair-stream
     * distinct), hot cells capped with observed drops.

@@ -620,21 +620,18 @@ object StarSchema {
         !f.getName.endsWith("_model") && !f.getName.contains("_lock"))
       .sortBy(_.getName)
     layouts.toSeq.map { f =>
-      val row =
-        try Some(Similarity.readSidecarRows(spark, f.getPath + "_model")(0))
-        catch { case e if scala.util.control.NonFatal(e) => None }
-      row match {
-        case None =>
+      ServingStore.sidecarState(spark, "fact-layout", f.getPath) match {
+        case ServingStore.Unknown =>
           (f.getName, "skipped: sidecar unreadable (mid-build or unproven)")
-        case Some(r) if !r.schema.fieldNames.contains("dir") =>
-          (f.getName, "skipped: legacy sidecar without a corpus stamp")
-        case Some(r) =>
-          val dir = r.getAs[String]("dir")
+        case ServingStore.Stamped(_, _, meta) if meta.contains("dir") =>
+          val dir = meta("dir")
           def dead = !new java.io.File(dir).exists()
           if (!dead) (f.getName, s"kept: corpus live at $dir")
           else if (ServingStore.retire(spark, f.getPath, factArtifacts(dir, FactBuckets))(dead))
             (f.getName, s"pruned: corpus gone from $dir")
           else (f.getName, "kept: corpus reappeared before the lock")
+        case _ =>
+          (f.getName, "skipped: legacy sidecar without a corpus stamp")
       }
     }
   }

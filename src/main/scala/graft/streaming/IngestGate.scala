@@ -34,7 +34,7 @@ object IngestGate {
     * flag (shared-gram fraction >= `operators.Curation.ContaminationMax`;
     * docs shorter than one shingle have no gram evidence and pass).
     * With `weights` (the persisted quality-classifier model,
-    * [[graft.operators.QualityModel.readLrModel]]) the facts also carry
+    * [[graft.operators.QualityModel.serveWeights]]) the facts also carry
     * `p_keep` — model-in-the-loop ingest: the score is a pure projection
     * over the SAME kernel scan (one expression, no join, no extra
     * pass), so the gate stays one-scan-per-batch with the model on. */

@@ -41,11 +41,10 @@ import org.apache.spark.sql.functions._
   *    single-process rebuild over the full corpus.
   *  - KILL -9 CRASH INJECTION: separate JVMs are halted (137) at the
   *    generation stores' single pre-commit point (new generation
-  *    written, sidecar not stamped) of the fact-layout and posting
-  *    compactions, and inside the ANN compaction's swap window
-  *    (GRAFT_CRASH_POINT seam); then a fresh recovery JVM must serve
-  *    results identical to pre-crash, take over the dead holders'
-  *    stale locks by compacting again, and leave at most two
+  *    written, sidecar not stamped) of the fact-layout, posting and
+  *    IVF compactions (GRAFT_CRASH_POINT seam); then a fresh recovery
+  *    JVM must serve results identical to pre-crash, take over the dead
+  *    holders' stale locks by compacting again, and leave at most two
   *    generations per store.
   *
   * Run: `sbt 'runMain graft.tools.StoreContention'` (driver mode —
@@ -69,10 +68,8 @@ object StoreContention {
       sys.error("posting-index.precommit crash point did not fire")
     case "crashann" :: base :: Nil =>
       val s = GraftSession.local("graft-crashann")
-      graft.operators.Similarity.knnIvfServe(s, base + "/corpus").count()
-      graft.operators.Similarity.compactIvf(s,
-        graft.operators.Similarity.ivfServePath(base + "/corpus"))
-      sys.error("ann.compact.midswap crash point did not fire")
+      graft.operators.Similarity.compactIvf(s, base + "/corpus")
+      sys.error("ivf-index.precommit crash point did not fire")
     case "recover" :: base :: Nil => recover(base)
     case _ => driver()
   }
@@ -205,7 +202,7 @@ object StoreContention {
       val c = spawn(mode, Seq(base), env = Map("GRAFT_CRASH_POINT" -> (mode match {
         case "crashfact" => "fact-layout.precommit"
         case "crashpostings" => "posting-index.precommit"
-        case _ => "ann.compact.midswap"
+        case _ => "ivf-index.precommit"
       })))
       val done = c.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)
       val code = if (done) c.exitValue() else { c.destroyForcibly(); -1 }
@@ -222,14 +219,15 @@ object StoreContention {
         s"post-crash $f diverged from pre-crash state:\n  got  ${readFlag(f)}\n  want $expected")
     }
     Seq(graft.operators.StarSchema.factServePath(corpusDir),
-        graft.operators.Dedup.postingsServePath(corpusDir)).foreach { p =>
+        graft.operators.Dedup.postingsServePath(corpusDir),
+        graft.operators.Similarity.ivfServePath(corpusDir)).foreach { p =>
       val gens = new java.io.File(p).list().count(_.startsWith("gen_"))
       require(gens <= 2, s"$gens generations survived the recovery at $p")
       require(!java.nio.file.Files.exists(ServingStore.lockPath(p)),
         s"crashed holder's lock survived the recovery at $p")
     }
-    println("[contend] PASS: kill-9 at the fact/postings pre-commit points and the ANN " +
-      "mid-swap window — results identical, stale locks taken over, orphans pruned")
+    println("[contend] PASS: kill-9 at the fact/postings/IVF pre-commit points — " +
+      "results identical, stale locks taken over, orphans pruned")
   }
 
   // ------------------------------------------------------------ worker
@@ -339,10 +337,10 @@ object StoreContention {
     // generation (both processes race it; either's build is fine)
     serveAndCheck(spark, store, 300L)
 
-    // ------------------------------------------------ live-path phases
-    // (r15 verdict #2: the fact layout, posting index and ANN index
-    // mutate LIVE paths under the build lock — the very stores the r15
-    // locking sweep covered, never before exercised across two JVMs)
+    // ---------------------------------------- multi-artifact phases
+    // (the fact layout, posting index, LM stats and ANN index: the
+    // generation stores with appends and compactions, raced across two
+    // JVMs)
     import graft.operators.{Curation, Dedup, Similarity, StarSchema}
     val corpus = base + "/corpus"
     def writeFlag(n: String, v: String): Unit =
@@ -426,10 +424,13 @@ object StoreContention {
     require(lm1 == lmSig(), "LM-stats serve unstable across calls")
     writeFlag(s"phase5_lm_$name", lm1)
     handshake("phase5l")
-    val k1 = Similarity.knnIvfServe(spark, corpus).count()
-    require(k1 == Similarity.knnIvfServe(spark, corpus).count(),
-      "ivf serve unstable across calls")
-    writeFlag(s"phase5_ivf_$name", k1.toString)
+    def ivfSig(): String = {
+      val (n, h) = Golden.checksum(Similarity.knnIvfServe(spark, corpus))
+      s"$n|$h"
+    }
+    val k1 = ivfSig()
+    require(k1 == ivfSig(), "ivf serve unstable across calls")
+    writeFlag(s"phase5_ivf_$name", k1)
     handshake("phase5v")
     spark.stop()
   }
@@ -438,8 +439,7 @@ object StoreContention {
 
   /** Fresh-JVM recovery after the injected kill -9s: the generation
     * stores still name their pre-crash generations, so they serve
-    * without a rebuild; the ANN store detects its unproven state and
-    * rebuilds. Then both generation stores compact again — which must
+    * without a rebuild. Then the three stores compact again — which must
     * take the dead holders' stale locks over (staleness bound shrunk)
     * and prune the crashed writers' uncommitted generations — and
     * serve once more. Both results are written for the driver. */
@@ -452,13 +452,14 @@ object StoreContention {
     def sig(): String = {
       val (n, h) = Golden.checksum(StarSchema.starJoinServed(spark, corpus))
       val ngram = Dedup.ngramJaccardServe(spark, corpus).count()
-      val ivf = Similarity.knnIvfServe(spark, corpus).count()
-      s"$n|$h;$ngram;$ivf"
+      val (vn, vh) = Golden.checksum(Similarity.knnIvfServe(spark, corpus))
+      s"$n|$h;$ngram;$vn|$vh"
     }
     java.nio.file.Files.write(java.nio.file.Paths.get(base, "recover_sig"),
       sig().getBytes("UTF-8"))
     StarSchema.compactFactLayout(spark, corpus)
     Dedup.compactPostings(spark, corpus)
+    Similarity.compactIvf(spark, corpus)
     java.nio.file.Files.write(java.nio.file.Paths.get(base, "recover_compacted_sig"),
       sig().getBytes("UTF-8"))
     spark.stop()

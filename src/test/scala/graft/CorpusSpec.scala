@@ -440,9 +440,8 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ivf inverted-list index: partition pruning at the scan, results equal in-memory ivf") {
-    val idx = java.nio.file.Files.createTempDirectory("graftivf").toString + "/index"
-    val centroids = operators.Similarity.writeIvfIndex(spark, sf, idx)
-    val indexed = operators.Similarity.knnIvfIndexed(spark, sf, idx, centroids)
+    val ix = operators.Similarity.ivfIndex(spark, sf)
+    val indexed = operators.Similarity.knnIvfIndexed(spark, sf, ix.gen.path("lists"), ix.centroids)
     // the probe filter must prune PARTITIONS (cid is the directory key),
     // not merely filter rows after a full scan
     val plan = indexed.queryExecution.executedPlan.toString
@@ -514,23 +513,25 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     val direct = resultSet(operators.Similarity.knnIvf(spark, sf))
     val cold = resultSet(operators.Similarity.knnIvfServe(spark, sf))
     assert(cold == direct, "cold serve (fresh build) diverged from in-memory IVF")
-    // warm call must NOT rewrite the generation: model files untouched
-    val modelDir = new java.io.File(servePath + "_model")
-    val stamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
+    // warm call must NOT rewrite the generation: the sidecar-named
+    // generation and every one of its files untouched
+    def sidecar() = operators.ServingStore.readSidecar(spark, "ivf-index", servePath).get
+    val (fp, gen) = sidecar()
+    val stamp = genStamp(gen)
+    assert(stamp.keys.exists(_.startsWith("model/")) && stamp.keys.exists(_.startsWith("lists/cid=")))
     val warm = resultSet(operators.Similarity.knnIvfServe(spark, sf))
     assert(warm == direct, "warm serve diverged from in-memory IVF")
-    assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == stamp,
+    assert(sidecar() == ((fp, gen)) && genStamp(gen) == stamp,
       "warm serve rewrote the index generation instead of reusing it")
     // staleness is keyed on the corpus CONTENT fingerprint, not row count:
     // a sidecar whose fingerprint no longer matches (an equal-row-count
     // corpus swap) must trigger a rebuild, and the rebuilt serve must
     // still equal the in-memory result
-    val (cents, n, Some(fp)) =
-      operators.Similarity.readIvfModelFull(spark, servePath): @unchecked
-    operators.Similarity.writeIvfModel(spark, servePath, cents, n, Some(fp + 1))
+    operators.ServingStore.writeSidecar(spark, servePath, fp + 1, gen)
     val rebuilt = resultSet(operators.Similarity.knnIvfServe(spark, sf))
     assert(rebuilt == direct, "post-rebuild serve diverged from in-memory IVF")
-    assert(operators.Similarity.readIvfModelFull(spark, servePath)._3.contains(fp),
+    val (fpAfter, genAfter) = sidecar()
+    assert(fpAfter == fp && genAfter != gen,
       "fingerprint mismatch did not trigger an index rebuild")
   }
 
@@ -749,6 +750,43 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a frame served before the compaction changed or broke after it")
     assert(rows(operators.Dedup.ngramJaccardServe(spark, tmp, threshold = 0.3)) == appended,
       "compaction changed query results")
+  }
+
+  test("reader survival: ANN frames served before an append, a compaction and a refresh collect identical rows") {
+    val tmp = java.nio.file.Files.createTempDirectory("graftannreader").toString
+    val all = graft.Tables.embeddings(spark, sf)
+    all.filter(col("vec_id") % 5 =!= 0 || col("vec_id") < 8)
+      .write.mode("overwrite").parquet(tmp + "/embeddings.parquet")
+    // a fresh Dataset over the held plan re-plans and re-scans (a second
+    // action on the same Dataset could reuse its earlier shuffle output)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.map(c => col(s"`$c`")): _*)
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    // frames served before `step` must collect the same rows after it
+    def survives(step: String, ivfPq: Boolean)(run: => Unit): Unit = {
+      val held = Seq(operators.Similarity.knnIvfServe(spark, tmp)) ++
+        (if (ivfPq) Seq(operators.Similarity.knnIvfPqServe(spark, tmp)) else Nil)
+      val before = held.map(rows)
+      assert(before.forall(_.nonEmpty), "premise: non-empty served frames")
+      run
+      assert(held.map(rows) == before, s"a frame served before the $step changed or broke after it")
+    }
+    val delta = all.filter(col("vec_id") % 5 === 0 && col("vec_id") >= 8)
+    survives("append", ivfPq = true) {
+      val fp0 = operators.Similarity.corpusFingerprint(spark, tmp)
+      delta.write.mode("append").parquet(tmp + "/embeddings.parquet")
+      val vecs = delta.select(col("vec_id"), col("embedding").as("vec"))
+      operators.Similarity.appendIvfPq(spark, tmp, vecs, expectedFp = Some(fp0))
+      operators.Similarity.appendIvf(spark, tmp, vecs, expectedFp = Some(fp0))
+    }
+    survives("compaction", ivfPq = true) {
+      operators.Similarity.compactIvfPq(spark, tmp)
+      operators.Similarity.compactIvf(spark, tmp)
+    }
+    survives("refresh", ivfPq = false) {
+      assert(operators.Similarity.refreshIvfIfStale(spark, tmp, staleness = 0.1),
+        "premise: the appended delta is past the staleness bound")
+    }
   }
 
   test("collapse serve: duplicate-heavy corpus equals the doc-level formulation exactly") {
@@ -1206,40 +1244,44 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ivf index lifecycle: append preserves search exactly, staleness refresh retrains") {
     import org.apache.spark.sql.functions.col
-    val idx = java.nio.file.Files.createTempDirectory("graftivf2").toString + "/index"
-    val full = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding").as("vec"))
+    val tmp = java.nio.file.Files.createTempDirectory("graftivf2").toString
+    val all = Tables.embeddings(spark, sf)
+    val full = all.select(col("vec_id"), col("embedding").as("vec"))
     // build from the first 60% of vectors, hold the rest back as arrivals
     val cut = full.agg(org.apache.spark.sql.functions
       .percentile_approx(col("vec_id"), org.apache.spark.sql.functions.lit(0.6),
         org.apache.spark.sql.functions.lit(10000))).collect()(0).getLong(0)
-    val initial = full.filter(col("vec_id") <= cut)
-    val arrivals = full.filter(col("vec_id") > cut)
-    operators.Similarity.writeIvfIndexOf(spark, initial, idx)
-    val (persisted, trainedCount) = operators.Similarity.readIvfModel(spark, idx)
-    assert(trainedCount == initial.count())
+    all.filter(col("vec_id") <= cut).write.mode("overwrite").parquet(tmp + "/embeddings.parquet")
+    val built = operators.Similarity.ivfIndex(spark, tmp)
+    assert(built.trained == full.filter(col("vec_id") <= cut).count())
 
     // append WITHOUT retraining: search over the index == in-memory
     // search over the union corpus with the SAME (stale) quantizer
-    operators.Similarity.appendIvfIndex(spark, arrivals, idx)
+    val fp0 = operators.Similarity.corpusFingerprint(spark, tmp)
+    all.filter(col("vec_id") > cut).write.mode("append").parquet(tmp + "/embeddings.parquet")
+    operators.Similarity.appendIvf(spark, tmp, full.filter(col("vec_id") > cut),
+      expectedFp = Some(fp0))
     def resultSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val viaIndex = resultSet(operators.Similarity.knnIvfIndexed(spark, sf, idx))
-    val inMemory = resultSet(operators.Similarity.knnIvfOf(full, persisted))
+    val viaIndex = resultSet(operators.Similarity.knnIvfServe(spark, tmp))
+    val inMemory = resultSet(operators.Similarity.knnIvfOf(full, built.centroids))
     assert(viaIndex == inMemory, "appended index diverged from union-corpus search")
+    val appended = operators.Similarity.ivfIndex(spark, tmp)
+    assert(appended.gen.dir != built.gen.dir && appended.trained == built.trained,
+      "append retrained instead of encoding the delta with the committed quantizer")
 
     // arrivals are ~2/3 of the trained count — over the 0.5 staleness
     // threshold, so the refresh must fire, retrain over the full
     // contents, and leave search identical to a from-scratch fit
-    assert(operators.Similarity.refreshIvfIndexIfStale(spark, idx, staleness = 0.5))
-    val (refreshed, refreshedCount) = operators.Similarity.readIvfModel(spark, idx)
-    assert(refreshedCount == full.count())
-    val viaRefreshed = resultSet(operators.Similarity.knnIvfIndexed(spark, sf, idx))
+    assert(operators.Similarity.refreshIvfIfStale(spark, tmp, staleness = 0.5))
+    val refreshed = operators.Similarity.ivfIndex(spark, tmp)
+    assert(refreshed.trained == full.count())
+    val viaRefreshed = resultSet(operators.Similarity.knnIvfServe(spark, tmp))
     val fromScratch = resultSet(
       operators.Similarity.knnIvfOf(full, operators.Similarity.ivfFit(full)))
     assert(viaRefreshed == fromScratch, "refreshed index diverged from retrained search")
     // and a second refresh is a no-op: nothing new appended
-    assert(!operators.Similarity.refreshIvfIndexIfStale(spark, idx, staleness = 0.5))
+    assert(!operators.Similarity.refreshIvfIfStale(spark, tmp, staleness = 0.5))
   }
 
   test("exact dedup keeps the minimum doc id per content hash") {
@@ -1571,7 +1613,8 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       "warm PQ serve rewrote the generation instead of reusing it")
     // codes are bounded by the codebook size
     import org.apache.spark.sql.functions.{col, explode}
-    val bad = spark.read.parquet(servePath)
+    val bad = spark.read.parquet(
+        operators.ServingStore.readSidecar(spark, "pq-index", servePath).get._2 + "/codes")
       .select(explode(col("codes")).as("c"))
       .filter(col("c") < 0 || col("c") >= operators.Similarity.PqK).count()
     assert(bad == 0L, "PQ code out of [0, PqK)")
@@ -1587,12 +1630,10 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     // build the generation over the base corpus
     operators.Similarity.knnIvfPqServe(spark, tmp).count()
     val indexPath = operators.Similarity.ivfPqServePath(tmp)
-    def dataFiles = new java.io.File(indexPath).listFiles
-      .filter(_.isDirectory) // cid= partition dirs
-      .flatMap(d => d.listFiles.filterNot(f =>
-        f.getName.startsWith("_") || f.getName.startsWith(".")))
-      .map(f => f.getPath -> f.lastModified).toMap
-    val pre = dataFiles
+    def gen() = operators.ServingStore.readSidecar(spark, "ivfpq-index", indexPath).get._2
+    val gen0 = gen()
+    val pre = genStamp(gen0)
+    assert(pre.keys.exists(_.startsWith("lists/cid=")), "premise: codes live in cid= cells")
     val fp0 = operators.Similarity.corpusFingerprint(spark, tmp)
     delta.write.mode("append").parquet(tmp + "/embeddings.parquet")
     // stale-generation proof: a wrong pre-append fingerprint must refuse
@@ -1604,18 +1645,27 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     operators.Similarity.appendIvfPq(spark, tmp,
       delta.select(col("vec_id"), col("embedding").as("vec")),
       expectedFp = Some(fp0))
-    val post = dataFiles
-    pre.foreach { case (p, m) =>
-      assert(post.get(p).contains(m), s"append rewrote existing code file $p")
+    val gen1 = gen()
+    assert(gen1 != gen0, "append did not commit a new generation")
+    val post = genStamp(gen1)
+    // every committed file — the model and the codes in the nested cid=
+    // dirs — is a hard link into the previous generation: same name,
+    // same mtime, same inode, never rewritten
+    pre.foreach { case (n, m) =>
+      assert(post.get(n).contains(m), s"append rewrote existing file $n")
+      assert(java.nio.file.Files.isSameFile(
+        java.nio.file.Paths.get(gen0, n), java.nio.file.Paths.get(gen1, n)),
+        s"append copied $n instead of linking it")
     }
-    assert(post.size > pre.size, "append wrote no new code files")
+    assert(post.keys.count(_.startsWith("lists/")) > pre.keys.count(_.startsWith("lists/")),
+      "append wrote no new code files")
     // serve over the appended generation: no rebuild (fingerprint
     // advanced), delta vectors are searchable, cosines exact
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "neighbor_id", "cosine", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
     val served = rows(operators.Similarity.knnIvfPqServe(spark, tmp))
-    assert(dataFiles == post, "serve after append rebuilt the generation")
+    assert(gen() == gen1 && genStamp(gen1) == post, "serve after append rebuilt the generation")
     val brute = rows(operators.Similarity.knnBrute(spark, tmp))
     val bruteScores = brute.map(t => (t._1, t._2) -> t._3).toMap
     served.foreach { case (q, n, c, _) =>
@@ -1686,8 +1736,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(found.nonEmpty, s"cluster blocking found none of ${brute.size} pairs")
     // second call serves the persisted cell quantizer (no retrain):
     // the sidecar files must be byte-stable across calls
-    val modelDir = new java.io.File(operators.Similarity.ivfModelPath(
-      operators.Similarity.semCellsServePath(sf)))
+    val modelDir = new java.io.File(operators.Similarity.semCellsServePath(sf) + "_model")
     val stamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
     operators.Similarity.embeddingDedupCells(spark, sf).count()
     assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == stamp,
@@ -1752,36 +1801,58 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pairs.size == pairs.toSet.size, s"duplicate emissions: $pairs")
   }
 
+  /** Data files per `cid=` cell of a generation's inverted lists. */
+  private def cellFiles(gen: String): Map[String, Int] =
+    new java.io.File(gen + "/lists").listFiles
+      .filter(f => f.isDirectory && f.getName.startsWith("cid="))
+      .map(d => d.getName -> d.listFiles.filterNot(f =>
+        f.getName.startsWith("_") || f.getName.startsWith(".")).length).toMap
+
+  /** A compaction carries the model: same files, same inodes. */
+  private def assertModelCarried(from: String, to: String): Unit = {
+    val model = genStamp(from).filter(_._1.startsWith("model/"))
+    assert(model.nonEmpty && genStamp(to).filter(_._1.startsWith("model/")) == model &&
+      model.keys.forall(n => java.nio.file.Files.isSameFile(
+        java.nio.file.Paths.get(from, n), java.nio.file.Paths.get(to, n))),
+      "compaction rewrote the model")
+  }
+
   test("ivf compaction: fragmented raw-vector cells collapse to one file each, search unchanged") {
     import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graftivfrawcompact").toString
     val all = graft.Tables.embeddings(spark, sf)
-      .select(col("vec_id"), col("embedding").as("vec"))
     val base = all.filter(col("vec_id") % 5 =!= 0 || col("vec_id") < 8)
     val delta = all.filter(col("vec_id") % 5 === 0 && col("vec_id") >= 8)
-    val indexPath = tmp + "/ivf_index"
-    operators.Similarity.writeIvfIndexOf(spark, base, indexPath)
-    operators.Similarity.appendIvfIndex(spark, delta, indexPath)
-    def cellFiles = new java.io.File(indexPath).listFiles
-      .filter(f => f.isDirectory && f.getName.startsWith("cid="))
-      .map(d => d.getName -> d.listFiles.filterNot(f =>
-        f.getName.startsWith("_") || f.getName.startsWith(".")).length).toMap
-    assert(cellFiles.values.exists(_ > 1),
+    base.write.mode("overwrite").parquet(tmp + "/embeddings.parquet")
+    operators.Similarity.knnIvfServe(spark, tmp).count()
+    val fp0 = operators.Similarity.corpusFingerprint(spark, tmp)
+    delta.write.mode("append").parquet(tmp + "/embeddings.parquet")
+    operators.Similarity.appendIvf(spark, tmp,
+      delta.select(col("vec_id"), col("embedding").as("vec")), expectedFp = Some(fp0))
+    val indexPath = operators.Similarity.ivfServePath(tmp)
+    def sidecar() = operators.ServingStore.readSidecar(spark, "ivf-index", indexPath).get
+    val (fp, g0) = sidecar()
+    assert(cellFiles(g0).values.exists(_ > 1),
       "append did not fragment any cell — the compaction premise is gone")
     // the index must hold the full union before and after
-    def contents = spark.read.parquet(indexPath)
+    def contents(gen: String) = spark.read.parquet(gen + "/lists")
       .select("vec_id", "cid").collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
-    val before = contents
-    val modelDir = new java.io.File(operators.Similarity.ivfModelPath(indexPath))
-    val modelStamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
-    operators.Similarity.compactIvf(spark, indexPath)
-    val filesAfter = cellFiles
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("query_id", "neighbor_id", "cosine", "rk").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    val before = contents(g0)
+    val served = rows(operators.Similarity.knnIvfServe(spark, tmp))
+    operators.Similarity.compactIvf(spark, tmp)
+    val (fpAfter, g1) = sidecar()
+    assert(g1 != g0 && fpAfter == fp, "compaction did not commit a same-fingerprint generation")
+    val filesAfter = cellFiles(g1)
     assert(filesAfter.nonEmpty && filesAfter.values.forall(_ == 1),
       s"compaction left multi-file cells: $filesAfter")
-    assert(contents == before, "compaction changed index contents")
-    assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == modelStamp,
-      "compaction rewrote the model sidecar")
+    assert(contents(g1) == before, "compaction changed index contents")
+    assertModelCarried(g0, g1)
+    assert(rows(operators.Similarity.knnIvfServe(spark, tmp)) == served,
+      "compaction changed served results")
   }
 
   test("ivfpq compaction: fragmented cells collapse to one file each, serve and sidecar unchanged") {
@@ -1798,34 +1869,27 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       delta.select(col("vec_id"), col("embedding").as("vec")),
       expectedFp = Some(fp0))
     val indexPath = operators.Similarity.ivfPqServePath(tmp)
-    def cellFiles = new java.io.File(indexPath).listFiles
-      .filter(f => f.isDirectory && f.getName.startsWith("cid="))
-      .map(d => d.getName -> d.listFiles.filterNot(f =>
-        f.getName.startsWith("_") || f.getName.startsWith(".")).length).toMap
-    assert(cellFiles.values.exists(_ > 1),
+    def sidecar() = operators.ServingStore.readSidecar(spark, "ivfpq-index", indexPath).get
+    val (fp, g0) = sidecar()
+    assert(cellFiles(g0).values.exists(_ > 1),
       "append did not fragment any cell — the compaction premise is gone")
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "neighbor_id", "cosine", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     val before = rows(operators.Similarity.knnIvfPqServe(spark, tmp))
-    val modelDir = new java.io.File(operators.Similarity.ivfModelPath(indexPath))
-    val modelStamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
     operators.Similarity.compactIvfPq(spark, tmp)
-    val after = cellFiles
+    val (fpAfter, g1) = sidecar()
+    assert(g1 != g0 && fpAfter == fp, "compaction did not commit a same-fingerprint generation")
+    val after = cellFiles(g1)
     assert(after.nonEmpty && after.values.forall(_ == 1),
       s"compaction left multi-file cells: $after")
     assert(rows(operators.Similarity.knnIvfPqServe(spark, tmp)) == before,
       "compaction changed served results")
-    assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == modelStamp,
-      "compaction rewrote the model sidecar")
+    assertModelCarried(g0, g1)
     // a subsequent serve reuses the compacted generation (no rebuild)
-    val stamp = new java.io.File(indexPath).listFiles
-      .filter(_.isDirectory).flatMap(_.listFiles)
-      .map(f => f.getPath -> f.lastModified).toMap
+    val stamp = genStamp(g1)
     operators.Similarity.knnIvfPqServe(spark, tmp).count()
-    assert(new java.io.File(indexPath).listFiles
-      .filter(_.isDirectory).flatMap(_.listFiles)
-      .map(f => f.getPath -> f.lastModified).toMap == stamp,
+    assert(sidecar() == ((fp, g1)) && genStamp(g1) == stamp,
       "serve after compaction rebuilt the generation")
   }
 
@@ -2059,29 +2123,29 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the serve equals a from-scratch generation built independently
     // (training is deterministic, so a corrupt regroup in either copy
     // would break this equivalence loudly)
-    val tmpIdx = java.nio.file.Files.createTempDirectory("graftivfpq").toString + "/idx"
+    val tmpGen = operators.ServingStore.Generation(
+      java.nio.file.Files.createTempDirectory("graftivfpq").toString, Nil)
     val (c2, r2, b2) = operators.Similarity.writeIvfPqIndexOf(
       spark, graft.Tables.embeddings(spark, sf)
-        .select(col("vec_id"), col("embedding").as("vec")), tmpIdx)
-    assert(rows(operators.Similarity.knnIvfPq(spark, sf, tmpIdx, c2, r2, b2)) == coldRows,
-      "serve diverged from an independent from-scratch build")
-    // warm serve reuses the generation bit-exactly
-    val modelDir = new java.io.File(servePath + "_model")
-    val stamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
+        .select(col("vec_id"), col("embedding").as("vec")), tmpGen)
+    assert(rows(operators.Similarity.knnIvfPq(spark, sf, tmpGen.path("lists"), c2, r2, b2)) ==
+      coldRows, "serve diverged from an independent from-scratch build")
+    // warm serve reuses the generation bit-exactly: the sidecar-named
+    // generation and every one of its files untouched
+    def sidecar() = operators.ServingStore.readSidecar(spark, "ivfpq-index", servePath).get
+    val (fp, gen) = sidecar()
+    val stamp = genStamp(gen)
     val warm = rows(operators.Similarity.knnIvfPqServe(spark, sf))
     assert(warm == coldRows, "warm IVFPQ serve diverged")
-    assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == stamp,
+    assert(sidecar() == ((fp, gen)) && genStamp(gen) == stamp,
       "warm IVFPQ serve rewrote the generation")
-    // rebuild path: overwriting the sidecar (books rows lost, stale fp)
-    // must fail the read probe and trigger a full rebuild that again
-    // equals the original results
-    val (cents, n, Some(fp)) =
-      operators.Similarity.readIvfModelFull(spark, servePath): @unchecked
-    operators.Similarity.writeIvfModel(spark, servePath, cents, n, Some(fp + 1))
+    // rebuild path: a sidecar stamped with a stale fingerprint must
+    // trigger a full rebuild that again equals the original results
+    operators.ServingStore.writeSidecar(spark, servePath, fp + 1, gen)
     val rebuilt = rows(operators.Similarity.knnIvfPqServe(spark, sf))
     assert(rebuilt == coldRows, "post-rebuild IVFPQ serve diverged")
-    assert(operators.Similarity.readIvfPqModels(spark, servePath)._4.contains(fp),
-      "sidecar corruption did not trigger a rebuild")
+    val (fpAfter, genAfter) = sidecar()
+    assert(fpAfter == fp && genAfter != gen, "stale fingerprint did not trigger a rebuild")
   }
 
   test("dup spans: planted cross-doc span flags exactly its gram positions") {
