@@ -99,7 +99,7 @@ object Pipeline {
     // fingerprint-keyed sidecar; this stage records the scored corpus)
     stage("quality_scores")(QualityModel.qualityClassifierServe(spark, sfDir))
     // persisted model state: forecast sufficient statistics (maintained
-    // incrementally by mergeForecastModel on later batches)
+    // incrementally by streaming.ForecastModelSink on later batches)
     stage("forecast_model")(Forecast.forecastModelFrame(spark, sfDir))
 
     println(f"[pipeline] TOTAL ${(System.nanoTime() - t0) / 1e9}%.2fs -> $outDir")

@@ -77,8 +77,8 @@ object Forecast {
 
   /** Fold a NEW fact delta into the persisted day state without
     * re-scanning history — the daily-ingest maintenance path of
-    * [[ensureDayStats]] (the [[mergeForecastModel]] semantics applied
-    * to the serving generation): the delta reduces to its own exact
+    * [[ensureDayStats]] (the streamed forecast model's fold applied to
+    * the serving generation): the delta reduces to its own exact
     * per-(brand, day) partials and sums with the stored state; decimal
     * exactness makes the merged state BIT-IDENTICAL to a rebuild over
     * the union (spec-gated), so every state-served query keeps its
@@ -934,14 +934,12 @@ object Forecast {
     * sufficient-statistics frame — persisting it means later forecasts
     * (any horizon, intervals, seasonal composition) derive from a
     * group-cardinality parquet read instead of re-scanning the fact, and
-    * [[mergeForecastModel]] maintains it incrementally. Exact decimal
+    * `graft.streaming.ForecastModelSink` maintains it incrementally,
+    * each batch reduced to its own exact partials. Exact decimal
     * sums round-trip parquet losslessly, so forecasts from the persisted
     * model are BIT-IDENTICAL to fresh fits (spec-gated). */
   def writeForecastModel(spark: SparkSession, dir: String, modelPath: String): Unit =
-    writeForecastModelOf(joined(spark, dir), modelPath)
-
-  private[graft] def writeForecastModelOf(base: DataFrame, modelPath: String): Unit =
-    olsStatsExact(base).write.mode("overwrite").parquet(modelPath)
+    forecastModelFrame(spark, dir).write.mode("overwrite").parquet(modelPath)
 
   /** The persisted-model frame ([[writeForecastModel]]'s content) for
     * sinks that manage their own layout — the pipeline writes it through
@@ -954,25 +952,7 @@ object Forecast {
   private[graft] def observationsFrame(spark: SparkSession, dir: String): DataFrame =
     joined(spark, dir)
 
-  /** Fold a NEW batch of observations into a persisted model without
-    * re-scanning history: the batch reduces to its own exact partials
-    * (one group-cardinality aggregation), which sum with the stored
-    * state — the model analog of the incremental rollup sink. Exactness
-    * makes this bit-identical to retraining on the union (spec-gated);
-    * at 100 TB this is the difference between a daily fact scan and a
-    * daily batch scan. */
-  def mergeForecastModel(spark: SparkSession, dir: String, modelPath: String): Unit =
-    mergeForecastModelOf(joined(spark, dir), modelPath)
-
-  private[graft] def mergeForecastModelOf(base: DataFrame, modelPath: String): Unit = {
-    val spark = base.sparkSession
-    val merged =
-      mergeStatsFrames(spark.read.parquet(modelPath), olsStatsExact(base))
-    // sever from the files about to be overwritten
-    merged.localCheckpoint().write.mode("overwrite").parquet(modelPath)
-  }
-
-  /** Exact associative merge of two model-statistics frames — also the
+  /** Exact associative merge of two model-statistics frames — the
     * per-micro-batch fold of the streaming model sink
     * (`graft.streaming.ForecastModelSink`). */
   private[graft] def mergeStatsFrames(prev: DataFrame, add: DataFrame): DataFrame = {
@@ -992,11 +972,13 @@ object Forecast {
       add.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
   }
 
-  /** Next-month forecast from a persisted model — [[forecastLinear]]
-    * without the fact scan (the double casts here see the same exact
-    * decimal totals a fresh fit casts at aggregation time). */
-  def forecastFromModel(spark: SparkSession, modelPath: String): DataFrame =
-    spark.read.parquet(modelPath)
+  /** Next-month forecast from a persisted model frame (a
+    * [[writeForecastModel]] path read back, or the streamed model's
+    * generation) — [[forecastLinear]] without the fact scan (the double
+    * casts here see the same exact decimal totals a fresh fit casts at
+    * aggregation time). */
+  def forecastFromModel(model: DataFrame): DataFrame =
+    model
       .withColumn("sy", col("sy_dec").cast(DoubleType))
       .withColumn("sxy", col("sxy_dec").cast(DoubleType))
       .withColumn("slope", slopeCol)

@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** The one serving-store lifecycle: every fingerprint-keyed store
   * (posting index, fact layout, LM stats, signature and model stores,
-  * ground truth, funnel stamps, resolved enrichment) lives as
-  * GENERATIONS under `path`, and every ensure, rebuild, append and
-  * compaction takes the same core: build lock → proofs → write a NEW
-  * generation → stamp the sidecar → prune.
+  * ground truth, funnel stamps, resolved enrichment, stream-sink state)
+  * lives as GENERATIONS under `path`, and every ensure, rebuild, append,
+  * compaction and stream-batch fold takes the same core: build lock →
+  * proofs → write a NEW generation → stamp the sidecar → prune.
   *
   * A generation is one directory `path/gen_<fp-hex>_<nonce>` (nonce a
   * random UUID — process-unique, not merely JVM-monotonic). A
@@ -88,6 +88,13 @@ private[graft] object ServingStore {
   private[graft] def newGenerationPath(path: String, fp: Long): String =
     path + "/gen_" + java.lang.Long.toHexString(fp) + "_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
+
+  /** The fingerprint a generation directory name was built for — None
+    * for a name [[newGenerationPath]] did not make. */
+  private[graft] def generationFp(name: String): Option[Long] =
+    scala.util.Try(java.lang.Long.parseUnsignedLong(
+      name.stripPrefix("gen_").takeWhile(_ != '_'), 16)).toOption
+      .filter(_ => name.startsWith("gen_"))
 
   /** A multi-artifact generation's bucketed artifact: registered in the
     * session catalog as `table` suffixed by the generation. */
@@ -371,13 +378,29 @@ private[graft] object ServingStore {
       }
     }
 
+  /** Commit a generation whose stamp the CALLER proves: under the build
+    * lock `stamp` reads the sidecar's state and returns the fingerprint
+    * to commit, or None to keep the committed generation (a refusal
+    * throws). `write(committed, next)` writes every artifact of the new
+    * generation. The stream-sink fold
+    * ([[graft.streaming.StreamStateStore]]) stamps batch ids here. */
+  private[graft] def advance(spark: SparkSession, what: String, path: String,
+      artifacts: Seq[Artifact], meta: Seq[(String, String)])(
+      stamp: SidecarState => Option[Long])(
+      write: (Option[Generation], Generation) => Unit): Unit = {
+    commit(spark, what, path, artifacts, meta, carry = Nil)(state =>
+      stamp(state).fold[Decision](Serve(path))(Write))(
+      (prev, next) => write(prev.map(Generation(_, artifacts)), Generation(next, artifacts)))
+    ()
+  }
+
   /** Hard-link every data file (and its checksum) of a committed
     * artifact directory into a new generation, recursing into partition
     * subdirectories (`cid=<n>/`): the carried artifact costs no data
     * write. Job markers are not linked — a later write into the new
     * generation rewrites its marker in place, which must not reach
     * through a link into the committed generation. */
-  private def link(from: String, to: String): Unit = {
+  private[graft] def link(from: String, to: String): Unit = {
     val dst = java.nio.file.Paths.get(to)
     java.nio.file.Files.createDirectories(dst)
     listDir(java.nio.file.Paths.get(from))

@@ -23,12 +23,9 @@ import org.apache.spark.sql.types.LongType
   * of the union at every step (spec-asserted, including overlapping
   * arrival).
   *
-  * Crash ordering: the counts store folds FIRST, the gram store second.
-  * A replayed batch after a crash between the two skips the counts fold
-  * (its marker landed) and re-applies only the gram union — computing
-  * the delta against the still-pre-batch gram store either way. The
-  * reverse order would lose the batch: an updated gram store makes the
-  * replayed delta empty before the counts ever folded.
+  * The counts and the seen grams are two artifacts of ONE generation,
+  * committed under the batch's one stamp: a replayed batch either
+  * finds both folded or neither.
   *
   * Scale shape: per batch, one broadcast-sized delta anti-join (gram
   * stores are benchmark-suite-sized), one posting-index probe join +
@@ -38,17 +35,13 @@ import org.apache.spark.sql.types.LongType
   */
 object ContaminationSink {
 
-  private[graft] def gramsDir(stateRoot: String): String = stateRoot + "/grams"
-  private[graft] def countsDir(stateRoot: String): String = stateRoot + "/counts"
+  private[graft] val Counts = "counts"
+  private[graft] val Grams = "grams"
 
   /** This batch's NOVEL grams: batch-distinct minus the seen store. */
-  private[graft] def deltaGrams(batch: DataFrame, stateRoot: String): DataFrame = {
+  private def deltaGrams(batch: DataFrame, seen: Option[DataFrame]): DataFrame = {
     val b = batch.select(col("h")).distinct()
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(gramsDir(stateRoot)))) b
-    else
-      b.join(
-        broadcast(batch.sparkSession.read.parquet(gramsDir(stateRoot))),
-        Seq("h"), "left_anti")
+    seen.fold(b)(s => b.join(broadcast(s), Seq("h"), "left_anti"))
   }
 
   /** One micro-batch application — the testable core of [[sink]].
@@ -56,26 +49,26 @@ object ContaminationSink {
   private[graft] def applyScreenBatch(batch: DataFrame, batchId: Long,
       dir: String, stateRoot: String): Unit = {
     val spark = batch.sparkSession
-    // one computation feeds both folds; checkpoint so the counts fold's
-    // write doesn't replan the anti-join after reading the store
-    val delta = deltaGrams(batch, stateRoot).localCheckpoint(eager = false)
-    val postings = spark.table(Dedup.ensurePostings(spark, dir))
-    val hits = postings
-      .join(delta, Seq("h"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("c"))
-    StreamStateStore.applyBatch(spark, batchId, countsDir(stateRoot),
-      "contaminationSink.counts") {
-      case None => hits
-      case Some(prev) =>
-        prev.unionByName(hits)
-          .groupBy(col("doc_id"))
-          .agg(sum(col("c")).cast(LongType).as("c"))
-    }
-    StreamStateStore.applyBatch(spark, batchId, gramsDir(stateRoot),
-      "contaminationSink.grams") {
-      case None => delta
-      case Some(prev) => prev.unionByName(delta)
+    StreamStateStore.fold(spark, batchId, stateRoot, "contaminationSink",
+      Seq(Counts, Grams)) { (prev, next) =>
+      // one computation feeds both folds
+      val delta = deltaGrams(batch, prev.map(p => spark.read.parquet(p.path(Grams))))
+        .localCheckpoint(eager = false)
+      val hits = spark.table(Dedup.ensurePostings(spark, dir))
+        .join(delta, Seq("h"))
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("c"))
+      StreamStateStore.foldFrame(spark, prev, next, Counts) {
+        case None => hits
+        case Some(p) =>
+          p.unionByName(hits)
+            .groupBy(col("doc_id"))
+            .agg(sum(col("c")).cast(LongType).as("c"))
+      }
+      StreamStateStore.foldFrame(spark, prev, next, Grams) {
+        case None => delta
+        case Some(p) => p.unionByName(delta)
+      }
     }
   }
 
@@ -84,15 +77,15 @@ object ContaminationSink {
     * — identical shape (and, by the union law, identical content) to
     * [[Curation.contaminationDeltaServe]] over every gram seen. */
   def currentScreen(spark: SparkSession, dir: String, stateRoot: String): DataFrame = {
-    val counts = java.nio.file.Paths.get(countsDir(stateRoot))
-    val hits =
-      if (java.nio.file.Files.exists(counts)) spark.read.parquet(counts.toString)
-      else
+    val hits = StreamStateStore.current(spark, stateRoot) match {
+      case Some(g) => spark.read.parquet(g.path(Counts))
+      case None =>
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("doc_id", LongType),
             org.apache.spark.sql.types.StructField("c", LongType))))
+    }
     Curation.screenFromHits(spark, Dedup.postingsGeneration(spark, dir), hits)
   }
 

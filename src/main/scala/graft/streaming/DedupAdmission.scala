@@ -28,11 +28,11 @@ import org.apache.spark.sql.types.BinaryType
   * key — the store side is bucketable/bloom-prunable at warehouse scale,
   * and state grows with DISTINCT content seen, never with stream length
   * (duplicate-heavy streams converge). Admission runs no corpus scan.
-  * The WRITE side comes in two layouts: [[sink]] swaps the whole store
-  * per batch (simple, O(distinct content) IO — fine while the store is
-  * small), and [[sinkBucketed]] maintains a hash-partitioned store where
-  * a batch rewrites ONLY its touched buckets
-  * ([[StreamStateStore.applyBatchBucketed]]) — per-batch IO
+  * The WRITE side comes in two layouts: [[sink]] rewrites the whole
+  * store per batch (simple, O(distinct content) IO — fine while the
+  * store is small), and [[sinkBucketed]] maintains a hash-partitioned
+  * store where a batch writes ONLY its touched buckets
+  * ([[StreamStateStore.foldBuckets]]) — per-batch IO
   * O(batch x store/buckets), the upsert/MERGE shape a transactional
   * table format provides, expressed on plain parquet.
   */
@@ -68,14 +68,18 @@ object DedupAdmission {
 
   /** One micro-batch application — the testable core of [[sink]]. */
   private[graft] def applyAdmissionBatch(
-      batch: DataFrame, batchId: Long, stateDir: String): Unit =
-    StreamStateStore.applyBatch(
-      batch.sparkSession, batchId, stateDir, "dedupAdmissionSink") {
-      case None => batchCanonical(batch)
-      // left-anti admission + count bump in ONE pass: the shared fold
-      // keeps the store's canonical id wherever the hash was seen
-      case Some(prev) => mergeStore(prev, batchCanonical(batch))
+      batch: DataFrame, batchId: Long, stateDir: String): Unit = {
+    val spark = batch.sparkSession
+    StreamStateStore.fold(spark, batchId, stateDir, "dedupAdmissionSink",
+      Seq(StreamStateStore.Store)) { (prev, next) =>
+      StreamStateStore.foldFrame(spark, prev, next, StreamStateStore.Store) {
+        case None => batchCanonical(batch)
+        // left-anti admission + count bump in ONE pass: the shared fold
+        // keeps the store's canonical id wherever the hash was seen
+        case Some(p) => mergeStore(p, batchCanonical(batch))
+      }
     }
+  }
 
   /** Bucket count for the PARTITIONED store ([[sinkBucketed]]). Sized so
     * a harness bucket holds a few hundred hashes; at warehouse scale
@@ -91,14 +95,18 @@ object DedupAdmission {
     * partitioned write routes each bucket to its own directory. */
   private[graft] def applyAdmissionBatchBucketed(
       batch: DataFrame, batchId: Long, stateDir: String,
-      nBuckets: Int = StoreBuckets): Unit =
-    StreamStateStore.applyBatchBucketed(
-      batch.sparkSession, batchId, stateDir, "dedupAdmissionSink",
-      keyCol = "content_hash", nBuckets)(batchCanonical(batch)) {
-      case (None, cur) => cur
-      case (Some(prev), cur) =>
-        firstArrivalFold(prev, cur, carry = Seq("keep_doc_id", "b"))
+      nBuckets: Int = StoreBuckets): Unit = {
+    val spark = batch.sparkSession
+    StreamStateStore.fold(spark, batchId, stateDir, "dedupAdmissionSink",
+      Seq(StreamStateStore.Store), Some(nBuckets)) { (prev, next) =>
+      StreamStateStore.foldBuckets(spark, prev, next, StreamStateStore.Store,
+        "content_hash", nBuckets, batchCanonical(batch)) {
+        case (None, cur) => cur
+        case (Some(p), cur) =>
+          firstArrivalFold(p, cur, carry = Seq("keep_doc_id", "b"))
+      }
     }
+  }
 
   /** foreachBatch sink over the bucketed store — the at-scale variant of
     * [[sink]]: same admitted store (modulo the extra `b` column), batch
@@ -116,7 +124,7 @@ object DedupAdmission {
     * `dedupExact`'s output (content_hash, keep_doc_id, n_copies), plus
     * the `b` bucket column when the state is the bucketed layout. */
   def currentStore(spark: org.apache.spark.sql.SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(stateDir)
+    StreamStateStore.read(spark, stateDir)
 
   /** foreachBatch sink maintaining the canonical store from a stream of
     * (doc_id, text) documents. */

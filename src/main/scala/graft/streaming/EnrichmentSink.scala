@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: per micro-batch, one map-side-combinable `max_by`
   * aggregate over the batch, one outer fold against the dim-sized
   * store. State is the resolved view (key x time cardinality), not the
-  * log. Idempotent replay + crash-safe swaps come from
-  * [[StreamStateStore]].
+  * log. Idempotent replay and crash safety come from the
+  * [[StreamStateStore]] fold.
   */
 object EnrichmentSink {
 
@@ -45,16 +45,20 @@ object EnrichmentSink {
 
   /** One micro-batch application — the testable core of [[sink]]. */
   private[graft] def applyRefreshBatch(batch: DataFrame, batchId: Long,
-      stateDir: String): Unit =
-    StreamStateStore.applyBatch(
-      batch.sparkSession, batchId, stateDir, "enrichmentSink") {
-      case None => batchResolved(batch)
-      case Some(prev) => refreshFold(prev, batchResolved(batch))
+      stateDir: String): Unit = {
+    val spark = batch.sparkSession
+    StreamStateStore.fold(spark, batchId, stateDir, "enrichmentSink",
+      Seq(StreamStateStore.Store)) { (prev, next) =>
+      StreamStateStore.foldFrame(spark, prev, next, StreamStateStore.Store) {
+        case None => batchResolved(batch)
+        case Some(p) => refreshFold(p, batchResolved(batch))
+      }
     }
+  }
 
   /** The resolved enrichment store: (key, t, v, refresh). */
   def currentEnrichment(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(stateDir)
+    StreamStateStore.read(spark, stateDir)
 
   /** As-of attach of the CURRENT store onto a fact frame — the serving
     * half of the loop, reusing the broadcast as-of (facts never

@@ -89,23 +89,8 @@ object EventStream {
     * associative, so merge order cannot drift).
     *
     * At-least-once safety: foreachBatch can REPLAY a batch after a
-    * restart, and a naive merge would double-count it. The applied batch
-    * id is stored in a `_last_batch` marker inside the state directory
-    * (written before the swap, so marker and data move atomically);
-    * replayed batches are skipped, loudly. Crash recovery compares
-    * MARKERS, never directory existence: a complete tmp (parquet
-    * _SUCCESS + parseable marker) with a HIGHER batch id than the live
-    * state is the newest state — a crash mid-delete of the old directory
-    * must not win over the finished merge. Unparseable/partial markers
-    * read as absent, so a crash mid-marker-write degrades to a re-merge
-    * of one batch from the previous state, never a poisoned stream.
-    *
-    * CAVEAT (logged when it bites): batch ids restart at 0 with a FRESH
-    * checkpoint location, so a state directory is bound to one
-    * checkpoint lineage — reuse with a new checkpoint requires clearing
-    * the state dir, or early batches are skipped as replays. A
-    * production deployment would get all of this from a transactional
-    * table format. */
+    * restart, and a naive merge would double-count it — the
+    * [[StreamStateStore]] fold skips a batch its stamp already covers. */
   def incrementalRollupSink(events: DataFrame, stateDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream
@@ -118,9 +103,11 @@ object EventStream {
     * [[incrementalRollupSink]] (replay and crash-recovery paths are
     * exercised directly in PlatformSpec, which a live streaming query
     * cannot do). */
-  private[graft] def applyRollupBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit =
-    StreamStateStore.applyBatch(batch.sparkSession, batchId, stateDir, "incrementalRollupSink") {
-      prevState =>
+  private[graft] def applyRollupBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit = {
+    val spark = batch.sparkSession
+    StreamStateStore.fold(spark, batchId, stateDir, "incrementalRollupSink",
+      Seq(StreamStateStore.Store)) { (prev, next) =>
+      StreamStateStore.foldFrame(spark, prev, next, StreamStateStore.Store) { prevState =>
         val slice = batch.select(
           col("event_type").as("brand"),
           year(col("ts")).as("year"),
@@ -128,10 +115,12 @@ object EventStream {
           col("value").as("price"))
         val partial = graft.operators.Incremental.partialMonthly(slice)
         prevState match {
-          case Some(prev) => graft.operators.Incremental.merge(Seq(prev, partial))
+          case Some(p) => graft.operators.Incremental.merge(Seq(p, partial))
           case None => partial
         }
+      }
     }
+  }
 
   /** Gap sessionization with explicit per-user state and event-time
     * timeout — the streaming twin of `Events.sessionize`. Emits a session

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.Forecast
 
 /** Streaming maintenance of the persisted forecast model: a
@@ -14,10 +14,7 @@ import graft.operators.Forecast
   * without ever re-scanning history (spec-gated, incl. the derived
   * `forecastFromModel` output).
   *
-  * Replay and crash safety come from [[StreamStateStore]] (the batch
-  * `mergeForecastModel` path overwrites in place and is only safe under
-  * an external scheduler that never replays; an at-least-once stream
-  * needs the marker discipline).
+  * Replay and crash safety come from the [[StreamStateStore]] fold.
   *
   * Scale notes: each micro-batch contributes ONE group-cardinality
   * aggregation (map-side combined over the batch); the state table is
@@ -25,48 +22,51 @@ import graft.operators.Forecast
   */
 object ForecastModelSink {
 
-  /** The widened per-(brand, x) state layer lives next to the OLS frame.
-    * Two layers, one sink: the group-cardinality OLS frame serves the
-    * linear/interval family unchanged, and the per-x rollup serves the
-    * families whose statistics are NOT associative at group grain —
-    * monthly seasonal means, and changepoint hinge moments whose knots
-    * move when a batch extends a group's x-range (see
-    * `Forecast.xStatsExact`). Each layer has its own replay marker, so a
-    * crash between the two writes replays the batch into whichever layer
-    * missed it and skips the other — both end exactly-once. */
-  private[graft] def xStateDir(stateDir: String): String = stateDir + "_x"
+  /** The state's two artifacts, one generation: the group-cardinality
+    * OLS frame serves the linear/interval family unchanged, and the
+    * WIDENED per-(brand, x) rollup serves the families whose statistics
+    * are NOT associative at group grain — monthly seasonal means, and
+    * changepoint hinge moments whose knots move when a batch extends a
+    * group's x-range (see `Forecast.xStatsExact`). */
+  private[graft] val Ols = "ols"
+  private[graft] val X = "x"
 
   /** One micro-batch application — the testable core of [[sink]].
     * `batch` carries observations in the model's input shape:
     * (`brand`, `x` month index, `y` price). */
   private[graft] def applyModelBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit = {
-    StreamStateStore.applyBatch(batch.sparkSession, batchId, stateDir, "forecastModelSink") {
-      case Some(prev) => Forecast.mergeStatsFrames(prev, Forecast.olsStatsExact(batch))
-      case None => Forecast.olsStatsExact(batch)
-    }
-    StreamStateStore.applyBatch(
-      batch.sparkSession, batchId, xStateDir(stateDir), "forecastModelSink.x") {
-      case Some(prev) => Forecast.mergeXStatsFrames(prev, Forecast.xStatsExact(batch))
-      case None => Forecast.xStatsExact(batch)
+    val spark = batch.sparkSession
+    StreamStateStore.fold(spark, batchId, stateDir, "forecastModelSink", Seq(Ols, X)) {
+      (prev, next) =>
+        StreamStateStore.foldFrame(spark, prev, next, Ols) {
+          case Some(p) => Forecast.mergeStatsFrames(p, Forecast.olsStatsExact(batch))
+          case None => Forecast.olsStatsExact(batch)
+        }
+        StreamStateStore.foldFrame(spark, prev, next, X) {
+          case Some(p) => Forecast.mergeXStatsFrames(p, Forecast.xStatsExact(batch))
+          case None => Forecast.xStatsExact(batch)
+        }
     }
   }
+
+  /** The live model frame (`Forecast.writeForecastModel`'s content). */
+  def currentModel(spark: SparkSession, stateDir: String): DataFrame =
+    StreamStateStore.read(spark, stateDir, Ols)
 
   /** Live seasonal forecast from the sink-maintained widened state —
     * bit-identical to `Forecast.seasonalForecast`'s fact-scan fit over
     * everything the stream has seen (spec-gated). */
-  def seasonalForecastFromState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    Forecast.seasonalForecastFromState(spark.read.parquet(xStateDir(stateDir)))
+  def seasonalForecastFromState(spark: SparkSession, stateDir: String): DataFrame =
+    Forecast.seasonalForecastFromState(StreamStateStore.read(spark, stateDir, X))
 
   /** Live changepoint forecast from the sink-maintained widened state —
     * bit-identical to `Forecast.forecastChangepoint`'s fact-scan fit. */
-  def changepointForecastFromState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame =
-    Forecast.forecastChangepointFromState(spark.read.parquet(xStateDir(stateDir)))
+  def changepointForecastFromState(spark: SparkSession, stateDir: String): DataFrame =
+    Forecast.forecastChangepointFromState(StreamStateStore.read(spark, stateDir, X))
 
   /** foreachBatch sink maintaining the persisted model continuously from
     * a stream of (`brand`, `x`, `y`) observations. Read the live model
-    * with `Forecast.forecastFromModel(spark, stateDir)`,
+    * with `Forecast.forecastFromModel(currentModel(spark, stateDir))`,
     * [[seasonalForecastFromState]], or [[changepointForecastFromState]]. */
   def sink(observations: DataFrame, stateDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =

@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: per micro-batch, one per-user window over the BATCH
   * only (never history), one join against the touched buckets of the
-  * user-bucketed state ([[StreamStateStore.applyBatchBucketed]] — IO is
-  * O(touched buckets), not O(users ever seen)). Idempotent replay +
-  * crash-safe per-bucket swaps come from the store machinery.
+  * user-bucketed state ([[StreamStateStore.foldBuckets]] — IO is
+  * O(touched buckets), not O(users ever seen)). Idempotent replay and
+  * crash safety come from the [[StreamStateStore]] fold.
   */
 object FunnelStampsSink {
   val Buckets = 8
@@ -67,24 +67,27 @@ object FunnelStampsSink {
     * `batch` carries (user_id, event_id, event_type, ts_ms). */
   def applyEventsBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit = {
     val spark = batch.sparkSession
-    StreamStateStore.applyBatchBucketed(spark, batchId, stateDir,
-      "funnelStampsSink", "user_id", Buckets)(batch) { (prev, curTouched) =>
-      val cur = curTouched.drop("b")
-      val updated = seededBatchStamps(cur, prev.map(_.drop("b")))
-      val untouched = prev match {
-        case Some(p) => p.drop("b")
-          .join(cur.select(col("user_id")).distinct(), Seq("user_id"), "left_anti")
-        case None => updated.limit(0)
+    StreamStateStore.fold(spark, batchId, stateDir, "funnelStampsSink",
+      Seq(StreamStateStore.Store), Some(Buckets)) { (prevGen, next) =>
+      StreamStateStore.foldBuckets(spark, prevGen, next, StreamStateStore.Store,
+        "user_id", Buckets, batch) { (prev, curTouched) =>
+        val cur = curTouched.drop("b")
+        val updated = seededBatchStamps(cur, prev.map(_.drop("b")))
+        val untouched = prev match {
+          case Some(p) => p.drop("b")
+            .join(cur.select(col("user_id")).distinct(), Seq("user_id"), "left_anti")
+          case None => updated.limit(0)
+        }
+        untouched.unionByName(updated)
+          .withColumn("b",
+            pmod(xxhash64(col("user_id")), lit(Buckets.toLong)).cast("int"))
       }
-      untouched.unionByName(updated)
-        .withColumn("b",
-          pmod(xxhash64(col("user_id")), lit(Buckets.toLong)).cast("int"))
     }
   }
 
   /** The standing per-user stamps store (user_id, s0..s3). */
   def currentStamps(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(stateDir).drop("b")
+    StreamStateStore.read(spark, stateDir).drop("b")
 
   /** Funnel / conversion rollups served from the CURRENT store — the
     * streaming counterparts of the q_funnel family. */

@@ -99,14 +99,18 @@ object IngestGate {
   /** One micro-batch application — the testable core of [[sink]]. */
   private[graft] def applyGateBatch(batch: DataFrame, evalGrams: DataFrame,
       batchId: Long, stateDir: String,
-      weights: Option[Array[Double]] = None): Unit =
-    StreamStateStore.applyBatch(
-      batch.sparkSession, batchId, stateDir, "ingestGateSink") {
-      case None => batchCanonical(batch, evalGrams, weights)
-      case Some(prev) =>
-        DedupAdmission.firstArrivalFold(prev, batchCanonical(batch, evalGrams, weights),
-          carry = Seq("keep_doc_id", "contaminated") ++ weights.toSeq.map(_ => "p_keep"))
+      weights: Option[Array[Double]] = None): Unit = {
+    val spark = batch.sparkSession
+    StreamStateStore.fold(spark, batchId, stateDir, "ingestGateSink",
+      Seq(StreamStateStore.Store)) { (prev, next) =>
+      StreamStateStore.foldFrame(spark, prev, next, StreamStateStore.Store) {
+        case None => batchCanonical(batch, evalGrams, weights)
+        case Some(p) =>
+          DedupAdmission.firstArrivalFold(p, batchCanonical(batch, evalGrams, weights),
+            carry = Seq("keep_doc_id", "contaminated") ++ weights.toSeq.map(_ => "p_keep"))
+      }
     }
+  }
 
   /** The one-shot batch computation the streamed store must equal under
     * id-ordered arrival — the spec's reference. */
@@ -117,7 +121,7 @@ object IngestGate {
   /** The gate's store at `stateDir`: (content_hash, keep_doc_id,
     * contaminated, n_copies). */
   def currentStore(spark: org.apache.spark.sql.SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(stateDir)
+    StreamStateStore.read(spark, stateDir)
 
   /** foreachBatch sink gating a stream of (doc_id, text) documents
     * against a static eval gram set (one `h` column of shingle

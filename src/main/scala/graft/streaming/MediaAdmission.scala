@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * (avalanche hashes carry no meaningful bit distance).
   *
   * Store and replay semantics are [[DedupAdmission]]'s exactly (the
-  * shared [[DedupAdmission.firstArrivalFold]] + [[StreamStateStore]]
-  * exactly-once batch application): first-arrival canonical id, fold-in
+  * shared [[DedupAdmission.firstArrivalFold]] + the [[StreamStateStore]]
+  * exactly-once batch fold): first-arrival canonical id, fold-in
   * copy counts, state grows with distinct CONTENT seen — a
   * duplicate-heavy media stream converges. Per-batch work is the one
   * decode pass plus a hash-keyed fold; admission never rescans history.
@@ -228,20 +228,23 @@ object MediaAdmission {
     * rerouted through the hamming-tolerant gate against the PRE-BATCH
     * store before the exact-key fold. */
   private[graft] def applyAdmissionBatch(
-      batch: DataFrame, batchId: Long, stateDir: String): Unit =
-    StreamStateStore.applyBatch(
-      batch.sparkSession, batchId, stateDir, "mediaAdmissionSink") {
-      case None => foldBatchDrift(batchCanonical(batch.sparkSession, batch))
-      case Some(prev0) =>
-        val prev = withFamilyHash(prev0)
-        DedupAdmission.firstArrivalFold(
-          prev, rerouteByHamming(
-            foldBatchDrift(batchCanonical(batch.sparkSession, batch)), prev),
-          carry = Seq("keep_media_id", "family", "hash"))
-          // the fold emits carry columns before n_copies — restore the
-          // store's positional layout (readers index the legacy triple)
-          .select("content_hash", "keep_media_id", "n_copies", "family", "hash")
+      batch: DataFrame, batchId: Long, stateDir: String): Unit = {
+    val spark = batch.sparkSession
+    StreamStateStore.fold(spark, batchId, stateDir, "mediaAdmissionSink",
+      Seq(StreamStateStore.Store)) { (prev, next) =>
+      StreamStateStore.foldFrame(spark, prev, next, StreamStateStore.Store) {
+        case None => foldBatchDrift(batchCanonical(spark, batch))
+        case Some(prev0) =>
+          val p = withFamilyHash(prev0)
+          DedupAdmission.firstArrivalFold(
+            p, rerouteByHamming(foldBatchDrift(batchCanonical(spark, batch)), p),
+            carry = Seq("keep_media_id", "family", "hash"))
+            // the fold emits carry columns before n_copies — restore the
+            // store's positional layout (readers index the legacy triple)
+            .select("content_hash", "keep_media_id", "n_copies", "family", "hash")
+      }
     }
+  }
 
   /** One micro-batch against the BUCKETED store — the at-scale layout
     * ([[DedupAdmission.sinkBucketed]]'s shape): per-batch IO is
@@ -253,44 +256,44 @@ object MediaAdmission {
     * The hamming-tolerant gate cannot probe the main store here — a
     * drifted key hashes into a DIFFERENT content bucket than its
     * admitted twin, and the whole point of the layout is not reading
-    * untouched buckets. The probe instead reads a chunk-index SIDECAR
-    * at `stateDir + "_chunks"`: one row per admitted (family, chunk,
-    * value, hash, key), bucketed BY CHUNK, so an arriving asset's 4
-    * pigeonhole chunks touch at most 4 chunk buckets (partition-pruned
-    * by bucket id). The sidecar is maintained by the same per-bucket
-    * batch-id protocol, one batch behind within a batch application
-    * (the probe sees the PRE-batch index — the flat path's semantics
-    * exactly) and self-healing under replay like every bucketed
-    * store. */
+    * untouched buckets. The probe instead reads a chunk-index artifact
+    * [[Chunks]] of the same generation: one row per admitted (family,
+    * chunk, value, hash, key), bucketed BY CHUNK, so an arriving asset's
+    * 4 pigeonhole chunks touch at most 4 chunk buckets (partition-pruned
+    * by bucket id). The probe reads the committed generation's index
+    * (the PRE-batch index — the flat path's semantics exactly), and the
+    * store and index commit together under the batch's one stamp. */
   private[graft] def applyAdmissionBatchBucketed(
       batch: DataFrame, batchId: Long, stateDir: String,
       nBuckets: Int = DedupAdmission.StoreBuckets): Unit = {
     val spark = batch.sparkSession
-    val chunksDir = stateDir + "_chunks"
-    val cur0 = foldBatchDrift(batchCanonical(spark, batch))
-      .localCheckpoint(eager = false)
-    val cur = rerouteByHamming(cur0, chunkIndexProbe(spark, chunksDir, cur0, nBuckets))
-      .localCheckpoint(eager = false)
-    StreamStateStore.applyBatchBucketed(
-      spark, batchId, stateDir, "mediaAdmissionSink",
-      keyCol = "content_hash", nBuckets)(cur) {
-      case (None, c) => c
-      case (Some(prev), c) => DedupAdmission.firstArrivalFold(
-        withFamilyHash(prev), c, carry = Seq("keep_media_id", "family", "hash", "b"))
-        .select("content_hash", "keep_media_id", "n_copies", "family", "hash", "b")
-    }
-    // fold this batch's keys into the chunk index (distinct-union — a
-    // key already indexed is a no-op; rerouted arrivals carry their
-    // admitted twin's identity, so no drifted key is ever indexed)
-    StreamStateStore.applyBatchBucketed(
-      spark, batchId, chunksDir, "mediaAdmissionChunkIndex",
-      keyCol = "ck", nBuckets)(
-      chunked(cur).withColumn("ck", chunkKey)) {
-      case (None, c) => c.dropDuplicates("ck", "content_hash")
-      case (Some(prev), c) =>
-        prev.unionByName(c).dropDuplicates("ck", "content_hash")
+    StreamStateStore.fold(spark, batchId, stateDir, "mediaAdmissionSink",
+      Seq(StreamStateStore.Store, Chunks), Some(nBuckets)) { (prev, next) =>
+      val cur0 = foldBatchDrift(batchCanonical(spark, batch))
+        .localCheckpoint(eager = false)
+      val cur = rerouteByHamming(cur0,
+        chunkIndexProbe(spark, prev.map(_.path(Chunks)), cur0, nBuckets))
+        .localCheckpoint(eager = false)
+      StreamStateStore.foldBuckets(spark, prev, next, StreamStateStore.Store,
+        "content_hash", nBuckets, cur) {
+        case (None, c) => c
+        case (Some(p), c) => DedupAdmission.firstArrivalFold(
+          withFamilyHash(p), c, carry = Seq("keep_media_id", "family", "hash", "b"))
+          .select("content_hash", "keep_media_id", "n_copies", "family", "hash", "b")
+      }
+      // fold this batch's keys into the chunk index (distinct-union — a
+      // key already indexed is a no-op; rerouted arrivals carry their
+      // admitted twin's identity, so no drifted key is ever indexed)
+      StreamStateStore.foldBuckets(spark, prev, next, Chunks, "ck", nBuckets,
+        chunked(cur).withColumn("ck", chunkKey)) {
+        case (None, c) => c.dropDuplicates("ck", "content_hash")
+        case (Some(p), c) => p.unionByName(c).dropDuplicates("ck", "content_hash")
+      }
     }
   }
+
+  /** The chunk-index artifact of the bucketed store. */
+  private[graft] val Chunks = "chunks"
 
   /** The chunk-bucket routing key: one string per (family, chunk
     * index, chunk value) — all hashes sharing a pigeonhole chunk land
@@ -303,13 +306,13 @@ object MediaAdmission {
     * O(arriving chunks' buckets), never O(store). Returns rows shaped
     * like canonical-store rows (content_hash, family, hash) for
     * [[rerouteByHamming]]'s admitted side. */
-  private def chunkIndexProbe(spark: SparkSession, chunksDir: String,
+  private def chunkIndexProbe(spark: SparkSession, chunksDir: Option[String],
       cur: DataFrame, nBuckets: Int): DataFrame = {
     val empty = cur.select(col("content_hash"), col("family"), col("hash")).limit(0)
-    // a live bucket dir is the existence proof — the state dir itself
-    // is created before any bucket lands, and reading a parquet-less
-    // dir fails schema inference
-    val hasBuckets = Option(new java.io.File(chunksDir).listFiles)
+    // a bucket dir is the existence proof: a committed index with no
+    // chunks has none, and reading a parquet-less dir fails schema
+    // inference
+    val hasBuckets = chunksDir.flatMap(d => Option(new java.io.File(d).listFiles))
       .exists(_.exists(f => f.isDirectory && f.getName.startsWith("b=")))
     if (!hasBuckets) empty
     else {
@@ -317,7 +320,7 @@ object MediaAdmission {
         .select(pmod(xxhash64(chunkKey), lit(nBuckets.toLong)).cast("int").as("b"))
         .distinct().collect().map(_.getInt(0)).toSet
       if (touched.isEmpty) empty
-      else spark.read.parquet(chunksDir)
+      else spark.read.parquet(chunksDir.get)
         .filter(col("b").isin(touched.toSeq.map(Integer.valueOf): _*))
         .select(col("content_hash"), col("family"), col("hash"))
         .dropDuplicates("content_hash")
@@ -338,7 +341,7 @@ object MediaAdmission {
     * (content_hash, keep_media_id, n_copies) with content_hash =
     * "family:hex(perceptual hash)". */
   def currentStore(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(stateDir)
+    StreamStateStore.read(spark, stateDir)
 
   /** foreachBatch sink maintaining the admitted store from a stream of
     * transcoded media rows. */

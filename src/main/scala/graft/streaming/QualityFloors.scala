@@ -131,37 +131,22 @@ object QualityFloors {
         (min(col("bucket")).cast("double") / Buckets).as("q_low"))
   }
 
-  /** Pre-sketch state dirs hold histogram rows (pred_lang, bucket, n).
-    * They cannot merge into sketch state (no exact histogram→sketch
-    * conversion exists at unbounded n), but they must not WEDGE a
-    * restarted pipeline either. */
-  private def isHistogramState(state: DataFrame): Boolean =
-    state.columns.contains("bucket") && !state.columns.contains("sketch")
+  /** The maintained floors at `stateDir`'s current state. */
+  def currentFloors(spark: SparkSession, stateDir: String): DataFrame =
+    sketchFloorsOf(StreamStateStore.read(spark, stateDir))
 
-  /** The maintained floors at `stateDir`'s current state. Old
-    * histogram-format dirs stay readable: their floors come off the
-    * retained reference formulation ([[floorsOf]]) — same output schema. */
-  def currentFloors(spark: SparkSession, stateDir: String): DataFrame = {
-    val state = spark.read.parquet(stateDir)
-    if (isHistogramState(state)) floorsOf(state) else sketchFloorsOf(state)
-  }
-
-  /** One micro-batch application — the testable core of [[sink]], with
-    * [[StreamStateStore]]'s replay-idempotency and crash-safe swap.
-    * A sink restarted over a pre-sketch histogram state dir rebuilds the
-    * sketch from scratch with a loud warning (counts restart from this
-    * batch) instead of failing every batch on a schema mismatch. */
-  private[graft] def applyFloorBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit =
-    StreamStateStore.applyBatch(batch.sparkSession, batchId, stateDir, "qualityFloorSink") {
-      case Some(prev) if isHistogramState(prev) =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"quality-floor state at $stateDir is the pre-sketch histogram " +
-            "format; rebuilding sketch state from scratch (old floors stay " +
-            "readable via currentFloors until this batch's state lands)")
-        partialSketch(batch)
-      case Some(prev) => mergeSketchStates(prev, partialSketch(batch))
-      case None => partialSketch(batch)
+  /** One micro-batch application — the testable core of [[sink]],
+    * replay-safe through the [[StreamStateStore]] fold. */
+  private[graft] def applyFloorBatch(batch: DataFrame, batchId: Long, stateDir: String): Unit = {
+    val spark = batch.sparkSession
+    StreamStateStore.fold(spark, batchId, stateDir, "qualityFloorSink",
+      Seq(StreamStateStore.Store)) { (prev, next) =>
+      StreamStateStore.foldFrame(spark, prev, next, StreamStateStore.Store) {
+        case Some(p) => mergeSketchStates(p, partialSketch(batch))
+        case None => partialSketch(batch)
+      }
     }
+  }
 
   /** foreachBatch sink maintaining the floors continuously from a stream
     * of scored docs (`pred_lang`, `quality_score`, ...). */

@@ -21,19 +21,19 @@ import org.apache.spark.sql.types.LongType
   * (spec-asserted, thresholds included).
   *
   * Scale shape: the df store is vocabulary-sized — far too large for a
-  * whole-store rewrite per micro-batch — so it lives in BUCKETED state
-  * ([[StreamStateStore.applyBatchBucketed]]): a batch rewrites only the
-  * hash buckets its words land in, with per-bucket markers giving
-  * replay idempotence per bucket. Per batch: one word-set kernel scan,
-  * one partial-aggregated count, one bucketed fold. The one-row doc
-  * counter rides the plain store.
+  * whole-store rewrite per micro-batch — so it is a BUCKETED artifact
+  * ([[StreamStateStore.foldBuckets]]): a batch writes only the hash
+  * buckets its words land in. Per batch: one word-set kernel scan, one
+  * partial-aggregated count, one bucketed fold. The one-row doc counter
+  * is the second artifact of the same generation, so df and count
+  * commit together under the batch's one stamp.
   */
 object RaritySink {
 
-  private[graft] def dfDir(stateRoot: String): String = stateRoot + "/df"
-  private[graft] def nDir(stateRoot: String): String = stateRoot + "/n"
+  private[graft] val Df = "df"
+  private[graft] val N = "n"
 
-  /** Bucket count for the df store layout (stamped on first use). */
+  /** Bucket count for the df artifact (stamped with the state). */
   val DfBuckets = 16
 
   /** One batch's (doc_id, h) distinct-word postings. */
@@ -48,28 +48,30 @@ object RaritySink {
   private[graft] def applyDocBatch(batch: DataFrame, batchId: Long,
       stateRoot: String): Unit = {
     val spark = batch.sparkSession
-    val bdf = batchPosts(batch).groupBy(col("h")).agg(count(lit(1)).as("df"))
-    StreamStateStore.applyBatchBucketed(spark, batchId, dfDir(stateRoot),
-      "raritySink.df", "h", DfBuckets)(bdf) {
-      case (None, cur) => cur
-      case (Some(prev), cur) =>
-        prev.unionByName(cur)
-          .groupBy(col("h"), col("b"))
-          .agg(sum(col("df")).cast(LongType).as("df"))
-    }
-    StreamStateStore.applyBatch(spark, batchId, nDir(stateRoot), "raritySink.n") {
-      case None => batch.agg(count(lit(1)).as("n_docs"))
-      case Some(prev) =>
-        prev.unionByName(batch.agg(count(lit(1)).as("n_docs")))
-          .agg(sum(col("n_docs")).cast(LongType).as("n_docs"))
+    StreamStateStore.fold(spark, batchId, stateRoot, "raritySink", Seq(Df, N),
+      Some(DfBuckets)) { (prev, next) =>
+      val bdf = batchPosts(batch).groupBy(col("h")).agg(count(lit(1)).as("df"))
+      StreamStateStore.foldBuckets(spark, prev, next, Df, "h", DfBuckets, bdf) {
+        case (None, cur) => cur
+        case (Some(p), cur) =>
+          p.unionByName(cur)
+            .groupBy(col("h"), col("b"))
+            .agg(sum(col("df")).cast(LongType).as("df"))
+      }
+      StreamStateStore.foldFrame(spark, prev, next, N) {
+        case None => batch.agg(count(lit(1)).as("n_docs"))
+        case Some(p) =>
+          p.unionByName(batch.agg(count(lit(1)).as("n_docs")))
+            .agg(sum(col("n_docs")).cast(LongType).as("n_docs"))
+      }
     }
   }
 
   /** The standing (h, df) table and one-row document count. */
   def currentDf(spark: SparkSession, stateRoot: String): DataFrame =
-    spark.read.parquet(dfDir(stateRoot)).drop("b")
+    StreamStateStore.read(spark, stateRoot, Df).drop("b")
   def currentNDocs(spark: SparkSession, stateRoot: String): DataFrame =
-    spark.read.parquet(nDir(stateRoot))
+    StreamStateStore.read(spark, stateRoot, N)
 
   /** Rarity scores for ANY (doc_id, text) frame against the standing
     * store — the serving half: one kernel scan of the argument docs,
@@ -78,10 +80,13 @@ object RaritySink {
     * makes the join total. */
   def scoreAgainstStore(docs: DataFrame, stateRoot: String): DataFrame = {
     val spark = docs.sparkSession
+    // both tables from ONE committed generation
+    val gen = StreamStateStore.current(spark, stateRoot).getOrElse(
+      throw new IllegalStateException(s"no committed rarity state at $stateRoot"))
     Curation.scoreFromPosts(
       batchPosts(docs).localCheckpoint(eager = false),
-      currentDf(spark, stateRoot),
-      currentNDocs(spark, stateRoot))
+      spark.read.parquet(gen.path(Df)).drop("b"),
+      spark.read.parquet(gen.path(N)))
   }
 
   /** Corpus-derived rarity curation ceilings from the standing store —

@@ -1,223 +1,157 @@
 package graft.streaming
 
+import graft.operators.ServingStore
+import graft.operators.ServingStore.{Artifact, Generation, StaleStoreRefusal, Stamped, Unknown}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Shared state machinery for `foreachBatch` sinks that maintain a
-  * queryable parquet table incrementally (the rollup and quality-floor
-  * sinks): batch-id idempotency under at-least-once replay, and
-  * crash-safe state swaps.
+/** The state of every `foreachBatch` sink that maintains a queryable
+  * parquet table incrementally, kept as [[ServingStore]] generations: a
+  * sink's state is ONE generation store at its `stateDir`, and the
+  * sidecar stamp is the id of the last micro-batch folded into it. A
+  * sink keeping several tables (rarity's df and doc count, the
+  * contamination counts and seen grams, the forecast OLS and per-x
+  * layers, bucketed media admission's store and chunk index) holds them
+  * as artifacts of one generation, committed together under one stamp.
   *
-  * At-least-once safety: foreachBatch can REPLAY a batch after a
-  * restart, and a naive merge would double-count it. The applied batch
-  * id is stored in a `_last_batch` marker inside the state directory
-  * (written before the swap, so marker and data move atomically);
-  * replayed batches are skipped, loudly. Crash recovery compares
-  * MARKERS, never directory existence: a complete tmp (parquet
-  * _SUCCESS + parseable marker) with a HIGHER batch id than the live
-  * state is the newest state — a crash mid-delete of the old directory
-  * must not win over the finished merge. Unparseable/partial markers
-  * read as absent, so a crash mid-marker-write degrades to a re-merge
-  * of one batch from the previous state, never a poisoned stream.
+  * [[fold]] is the one entry. Under the store's build lock, a stamp >=
+  * the batch id skips the batch: foreachBatch can REPLAY a batch after a
+  * restart, and folding it again would double-count it. Anything else
+  * writes the next generation from the committed one and stamps it. A
+  * crash anywhere before the stamp leaves the committed generation
+  * served and an uncommitted one behind; the replayed batch folds once
+  * from the committed generation, and that commit prunes the orphan.
+  * Nothing is mutated in place: readers resolve the sidecar-named
+  * generation ([[current]]), and a frame planned before a batch keeps
+  * its files across that batch (the previous generation survives one
+  * commit).
+  *
+  * Bucketed state ([[foldBuckets]]): a content- or vocabulary-sized
+  * table is `partitionBy("b")` over a hash of its key, and a batch
+  * writes only the buckets its keys land in. Every untouched bucket of
+  * the committed generation is hard-linked into the next one, so
+  * per-batch write volume is O(touched buckets) while the commit stays
+  * one stamp. The bucket count is sidecar meta: another count would
+  * re-route keys to other buckets, so it is refused.
+  *
+  * Nothing silently restarts a stream's state from empty: a present but
+  * unreadable sidecar throws, a missing sidecar beside a generation
+  * stamped below the batch (a commit killed while rewriting the stamp)
+  * throws, and a state dir in a pre-generation layout (no sidecar, other
+  * files present) is refused, not migrated. Without a sidecar, only a
+  * crashed attempt at the same batch — a first batch's orphan — is
+  * folded over.
   *
   * CAVEAT (logged when it bites): batch ids restart at 0 with a FRESH
   * checkpoint location, so a state directory is bound to one checkpoint
   * lineage — reuse with a new checkpoint requires clearing the state
-  * dir, or early batches are skipped as replays. A production
-  * deployment would get all of this from a transactional table format.
+  * dir, or early batches are skipped as replays.
   */
 private[graft] object StreamStateStore {
 
   @transient private lazy val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private val Marker = "_last_batch"
+  /** The artifact name of a single-table sink's state. */
+  val Store = "store"
 
-  private def markerOf(dir: java.nio.file.Path): Option[Long] = {
-    val f = dir.resolve(Marker)
-    if (!java.nio.file.Files.exists(f)) None
-    else
-      // partial marker writes parse as None -> the directory is treated
-      // as incomplete instead of crashing every restart
-      scala.util.Try(
-        new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim.toLong).toOption
+  /** Fold micro-batch `batchId` into the state at `stateDir`:
+    * `write(committed, next)` writes every artifact of the next
+    * generation (committed is None on the first batch), through
+    * [[foldFrame]] / [[foldBuckets]]. `nBuckets` is the bucketed
+    * artifacts' layout, stamped with the state. */
+  def fold(spark: SparkSession, batchId: Long, stateDir: String, sinkName: String,
+      artifacts: Seq[String], nBuckets: Option[Int] = None)(
+      write: (Option[Generation], Generation) => Unit): Unit = {
+    val meta = nBuckets.toSeq.map(n => "n_buckets" -> n.toString)
+    ServingStore.advance(spark, sinkName, stateDir, artifacts.map(Artifact(_)), meta) {
+      case Stamped(_, g, m) if m != meta.toMap =>
+        throw new StaleStoreRefusal(
+          s"$sinkName state at $g is stamped ${m.toSeq.sorted.mkString(", ")}; " +
+            s"reopening it with ${meta.mkString(", ")} would mis-route keys — migrate or clear")
+      case Stamped(applied, _, _) if applied >= batchId =>
+        logger.warn(
+          s"$sinkName: skipping batch $batchId (already applied through " +
+            s"$applied); if this stream was restarted with a fresh " +
+            "checkpoint over an existing state dir, clear the state dir")
+        None
+      case Stamped(_, _, _) => Some(batchId)
+      case Unknown if new java.io.File(stateDir + "_model").exists() =>
+        throw new IllegalStateException(
+          s"$sinkName sidecar at ${stateDir}_model unreadable — refusing to " +
+            "restart the stream's state from empty")
+      case Unknown if entries(stateDir).forall(_.startsWith("gen_")) =>
+        // only a crashed attempt at THIS batch may have left a generation:
+        // one stamped below it was committed, and its sidecar was lost
+        // (killed while being rewritten) — folding onto empty would drop it
+        if (entries(stateDir).exists(g => ServingStore.generationFp(g).forall(_ < batchId)))
+          throw new IllegalStateException(
+            s"$sinkName state at $stateDir holds generations of batches before " +
+              s"$batchId but no sidecar — refusing to restart the stream's state from empty")
+        Some(batchId)
+      case _ => throw new StaleStoreRefusal(
+        s"$sinkName state at $stateDir predates the generation layout — " +
+          "migrate or clear it; it is not restarted from empty")
+    }(write)
   }
 
-  /** Fold one micro-batch into the persisted state at `stateDir`:
-    * `merge(prevState)` computes the new state table (prevState is None
-    * on the first batch), which is written to a tmp directory, marked,
-    * and swapped in. Replayed batch ids are skipped. */
-  def applyBatch(spark: SparkSession, batchId: Long, stateDir: String, sinkName: String)(
-      merge: Option[DataFrame] => DataFrame): Unit = {
-    val state = java.nio.file.Paths.get(stateDir)
-    val tmp = java.nio.file.Paths.get(stateDir + "_tmp")
-    val stateMarker = if (java.nio.file.Files.exists(state)) markerOf(state) else None
-    val tmpMarker =
-      if (java.nio.file.Files.exists(tmp.resolve("_SUCCESS"))) markerOf(tmp) else None
-    // crash recovery by marker comparison: tmp wins only if it is a
-    // COMPLETE, NEWER merge (a crash mid-delete of the old state dir
-    // leaves it present-but-partial; the finished tmp must still win)
-    if (tmpMarker.exists(t => stateMarker.forall(t > _))) {
-      deleteRecursively(state)
-      java.nio.file.Files.move(tmp, state)
-    } else if (java.nio.file.Files.exists(tmp))
-      deleteRecursively(tmp) // stale or older partial write
-    // idempotent replay: this batch is already folded into the state
-    val applied = if (java.nio.file.Files.exists(state)) markerOf(state) else None
-    if (applied.exists(_ >= batchId))
-      logger.warn(
-        s"$sinkName: skipping batch $batchId (already applied through " +
-          s"${applied.get}); if this stream was restarted with a fresh " +
-          "checkpoint over an existing state dir, clear the state dir")
-    else {
-      val prev =
-        if (java.nio.file.Files.exists(state)) Some(spark.read.parquet(stateDir)) else None
-      merge(prev).write.mode("overwrite").parquet(tmp.toString)
-      java.nio.file.Files.write(tmp.resolve(Marker), batchId.toString.getBytes("UTF-8"))
-      deleteRecursively(state)
-      java.nio.file.Files.move(tmp, state)
-    }
-  }
+  /** Write artifact `sub` of `next` as `merge` of the committed one. */
+  def foldFrame(spark: SparkSession, prev: Option[Generation], next: Generation,
+      sub: String)(merge: Option[DataFrame] => DataFrame): Unit =
+    merge(prev.map(p => spark.read.parquet(p.path(sub))))
+      .write.mode("overwrite").parquet(next.path(sub))
 
-  // hardened like ServingStore.prune's inner loop: the walk stream is
-  // closed eagerly (it holds a directory fd) and deletes tolerate files
-  // vanishing concurrently (deleteIfExists, not delete)
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(p)
-      try s.iterator().asScala.toSeq.reverseIterator
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally s.close()
-    }
-
-  // --------------------------------------------- bucketed (partitioned) state
-
-  /** BUCKETED state: the fix for the whole-store rewrite caveat above.
-    * State lives as hash-partitioned `b=<n>` directories (standard
-    * partition layout — `spark.read.parquet(stateDir)` restores `b` as a
-    * column and readers are unchanged), each bucket carries its OWN
-    * `_last_batch` marker, and a micro-batch rewrites ONLY the buckets
-    * its keys land in: per-batch IO drops from O(distinct content ever
-    * seen) to O(content in the touched buckets) — with enough buckets,
-    * O(batch). This is the upsert/MERGE shape a transactional table
-    * format provides, expressed on plain parquet.
-    *
-    * Exactly-once per BUCKET instead of per store: foreachBatch replays
-    * a batch deterministically (replayable-source contract), so a crash
-    * that lands some buckets and not others self-heals on replay — the
-    * landed buckets' markers skip them, the rest re-merge from their
-    * intact previous state. The per-bucket swap is two-phase (stage the
-    * old dir under an underscore-prefixed name Spark's file index
-    * ignores, move the new dir in, drop the stage), and
-    * [[recoverBucketSwaps]] rolls a torn swap forward or back by
-    * inspecting which side exists before every batch. */
-  def applyBatchBucketed(spark: SparkSession, batchId: Long, stateDir: String,
-      sinkName: String, keyCol: String, nBuckets: Int)(cur: DataFrame)(
+  /** Write BUCKETED artifact `sub` of `next`: `cur` rows get their
+    * bucket `b` from `keyCol`, `merge(committed rows of the touched
+    * buckets, cur rows)` rewrites the touched buckets, and the untouched
+    * ones are hard-linked from the committed generation. `merge` must
+    * key on `keyCol` only (b is hash-functional on it) and emit `b`. */
+  def foldBuckets(spark: SparkSession, prev: Option[Generation], next: Generation,
+      sub: String, keyCol: String, nBuckets: Int, cur: DataFrame)(
       merge: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
-    import org.apache.spark.sql.functions._
-    val state = java.nio.file.Paths.get(stateDir)
-    java.nio.file.Files.createDirectories(state)
-    recoverBucketSwaps(state)
-    checkBucketCount(state, nBuckets)
     val withB = cur.withColumn("b",
       pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)).cast("int"))
       .localCheckpoint(eager = false)
     // the touched set is bounded by nBuckets — a driver-side list, never data
-    val touchedAll = withB.select(col("b")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val touched = touchedAll.filterNot(b =>
-      markerOf(state.resolve(s"b=$b")).exists(_ >= batchId))
-    // a skipped bucket with marker == batchId is the normal crash-replay
-    // self-heal; marker > batchId means the state dir belongs to another
-    // checkpoint lineage and THIS batch's rows for that bucket are being
-    // dropped — that must be loud even when other buckets still apply
-    val lineageViolated = touchedAll.filter(b =>
-      markerOf(state.resolve(s"b=$b")).exists(_ > batchId))
-    if (lineageViolated.nonEmpty)
-      logger.warn(s"$sinkName: buckets ${lineageViolated.mkString(",")} carry " +
-        s"markers beyond batch $batchId — the state dir is bound to a " +
-        "different checkpoint lineage and their rows from this batch are " +
-        "DROPPED; clear the state dir to reuse it with a fresh checkpoint")
-    if (touched.isEmpty) {
-      if (touchedAll.nonEmpty && lineageViolated.isEmpty)
-        logger.warn(s"$sinkName: skipping batch $batchId (every touched " +
-          "bucket already applied it); if this stream was restarted with " +
-          "a fresh checkpoint over an existing state dir, clear the state dir")
-      return
+    val touched = withB.select(col("b")).distinct().collect().map(_.getInt(0)).toSet
+    val committed = prev.toSeq.flatMap { p =>
+      Option(new java.io.File(p.path(sub)).listFiles).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith("b="))
+        .map(f => f.getName.stripPrefix("b=").toInt -> f.getPath)
     }
-    val curTouched = withB.filter(col("b").isin(touched.map(Integer.valueOf): _*))
-    // a live bucket is one whose swap completed — the per-bucket marker
-    // is written before the move, so its presence IS completeness
-    // (parquet's _SUCCESS lands at the partitioned write's top level,
-    // never inside the bucket dirs)
-    val prevDirs = touched
-      .map(b => state.resolve(s"b=$b"))
-      .filter(p => markerOf(p).isDefined)
-      // a marker-only bucket (a past merge emitted zero rows for it) has
-      // no parquet files: feeding it to the reader would fail schema
-      // inference when EVERY touched bucket is such — and an empty
-      // bucket contributes no prev rows either way
-      .filter(p => Option(p.toFile.listFiles).exists(_.exists(f =>
-        f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))))
-      .map(_.toString)
-    val prev =
-      if (prevDirs.isEmpty) None
-      else Some(spark.read.option("basePath", stateDir).parquet(prevDirs: _*))
-    val tmp = java.nio.file.Paths.get(stateDir + "_tmp")
-    deleteRecursively(tmp)
-    // merge must key on `keyCol` only (b is hash-functional on it), and
-    // must emit `b` — the partitioned write routes each bucket to its dir
-    merge(prev, curTouched)
-      .write.mode("overwrite").partitionBy("b").parquet(tmp.toString)
-    touched.foreach { b =>
-      val tb = tmp.resolve(s"b=$b")
-      // the fold never drops rows, so every touched bucket has output;
-      // guard anyway — an empty bucket dir must still carry its marker
-      java.nio.file.Files.createDirectories(tb)
-      java.nio.file.Files.write(tb.resolve(Marker), batchId.toString.getBytes("UTF-8"))
-      // two-phase swap, one bucket at a time
-      val live = state.resolve(s"b=$b")
-      val stage = state.resolve(s"_swap_$b")
-      if (java.nio.file.Files.exists(live)) java.nio.file.Files.move(live, stage)
-      java.nio.file.Files.move(tb, live)
-      deleteRecursively(stage)
+    if (touched.nonEmpty) {
+      val prevTouched = committed.filter(c => touched(c._1)).map(_._2)
+      merge(
+        if (prevTouched.isEmpty) None
+        else Some(spark.read.option("basePath", prev.get.path(sub)).parquet(prevTouched: _*)),
+        withB.filter(col("b").isin(touched.toSeq.map(Integer.valueOf): _*)))
+        .write.mode("overwrite").partitionBy("b").parquet(next.path(sub))
     }
-    deleteRecursively(tmp)
-  }
-
-  /** Roll torn per-bucket swaps forward or back: a `_swap_<b>` stage dir
-    * means a swap was interrupted — if the live `b=<b>` landed, the new
-    * state won (drop the stage); if not, the stage IS the state (restore
-    * it). Runs before every bucketed batch and is idempotent. */
-  private def recoverBucketSwaps(state: java.nio.file.Path): Unit = {
-    val stages = Option(state.toFile.listFiles).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("_swap_"))
-    stages.foreach { s =>
-      val b = s.getName.stripPrefix("_swap_")
-      val live = state.resolve(s"b=$b")
-      if (java.nio.file.Files.exists(live)) deleteRecursively(s.toPath)
-      else java.nio.file.Files.move(s.toPath, live)
+    committed.filterNot(c => touched(c._1)).foreach { case (b, dir) =>
+      ServingStore.link(dir, next.path(sub) + s"/b=$b")
     }
   }
 
-  /** The bucket count is part of the state layout: a different count
-    * re-routes keys to other buckets and silently splits hash groups.
-    * Stamped on first use, required equal afterwards. */
-  private def checkBucketCount(state: java.nio.file.Path, nBuckets: Int): Unit = {
-    val f = state.resolve("_n_buckets")
-    // the markerOf convention: a partial/unparseable stamp (crash
-    // mid-write) reads as ABSENT and is re-stamped — never a
-    // NumberFormatException poisoning every restart
-    val stored =
-      if (!java.nio.file.Files.exists(f)) None
-      else scala.util.Try(
-        new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim.toInt).toOption
-    stored match {
-      case Some(n) =>
-        require(n == nBuckets,
-          s"bucketed state at $state was laid out with $n buckets; " +
-            s"reopening with $nBuckets would mis-route keys — migrate or clear")
-      case None =>
-        java.nio.file.Files.write(f, nBuckets.toString.getBytes("UTF-8"))
+  /** The committed generation of the state at `stateDir`, None before
+    * the first batch commits. */
+  def current(spark: SparkSession, stateDir: String): Option[Generation] = {
+    def stamped = ServingStore.sidecarState(spark, "stream state", stateDir) match {
+      case Stamped(_, g, _) => Some(Generation(g, Nil))
+      case _ => None
     }
+    // a sidecar caught mid-rewrite by a committing batch reads as
+    // unknown: read it again once that commit has released the lock.
+    // With no generation on disk nothing was ever committed — no wait
+    stamped.orElse(
+      if (entries(stateDir).exists(_.startsWith("gen_")))
+        ServingStore.withBuildLock(stateDir)(stamped)
+      else None)
   }
+
+  private def entries(stateDir: String): Seq[String] =
+    Option(new java.io.File(stateDir).list).toSeq.flatten
+
+  /** Artifact `sub` of the committed state at `stateDir`. */
+  def read(spark: SparkSession, stateDir: String, sub: String = Store): DataFrame =
+    spark.read.parquet(current(spark, stateDir).getOrElse(throw new IllegalStateException(
+      s"no committed stream state at $stateDir")).path(sub))
 }

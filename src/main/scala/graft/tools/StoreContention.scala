@@ -42,10 +42,12 @@ import org.apache.spark.sql.functions._
   *  - KILL -9 CRASH INJECTION: separate JVMs are halted (137) at the
   *    generation stores' single pre-commit point (new generation
   *    written, sidecar not stamped) of the fact-layout, posting and
-  *    IVF compactions (GRAFT_CRASH_POINT seam); then a fresh recovery
-  *    JVM must serve results identical to pre-crash, take over the dead
-  *    holders' stale locks by compacting again, and leave at most two
-  *    generations per store.
+  *    IVF compactions and of a stream sink's batch fold (the
+  *    two-artifact rarity sink folding batch 1; GRAFT_CRASH_POINT
+  *    seam); then a fresh recovery JVM must serve results identical to
+  *    pre-crash, take over the dead holders' stale locks by compacting
+  *    again, replay the sink's batch to a state equal to a no-crash
+  *    run, and leave at most two generations per store.
   *
   * Run: `sbt 'runMain graft.tools.StoreContention'` (driver mode —
   * spawns the two workers itself; requires a prior `sbt compile`).
@@ -70,6 +72,10 @@ object StoreContention {
       val s = GraftSession.local("graft-crashann")
       graft.operators.Similarity.compactIvf(s, base + "/corpus")
       sys.error("ivf-index.precommit crash point did not fire")
+    case "crashsink" :: base :: Nil =>
+      val s = GraftSession.local("graft-crashsink")
+      graft.streaming.RaritySink.applyDocBatch(sinkBatch(s, base, 1), 1, base + "/sink")
+      sys.error("raritySink.precommit crash point did not fire")
     case "recover" :: base :: Nil => recover(base)
     case _ => driver()
   }
@@ -192,23 +198,28 @@ object StoreContention {
     println("[contend] PASS: fact/postings/LM/ANN contention clean " +
       "(append chain == cold rebuild, compaction invariant, " +
       s"${readFlag("phase4c_serves")} identical serves during the compaction, no lock litter)")
+    // the crash scenario's sink has batch 0 committed before batch 1 is killed
+    graft.streaming.RaritySink.applyDocBatch(sinkBatch(spark, base, 0), 0, base + "/sink")
     spark.stop()
 
     // ---- kill -9 crash injection ----
     // each scenario: spawn a process that halts (137) at a compaction's
     // crash point, then a FRESH recovery JVM (takeover after the lock
     // goes stale) must serve results identical to the pre-crash state.
-    Seq("crashfact", "crashpostings", "crashann").foreach { mode =>
+    Seq("crashfact", "crashpostings", "crashann", "crashsink").foreach { mode =>
       val c = spawn(mode, Seq(base), env = Map("GRAFT_CRASH_POINT" -> (mode match {
         case "crashfact" => "fact-layout.precommit"
         case "crashpostings" => "posting-index.precommit"
-        case _ => "ivf-index.precommit"
+        case "crashann" => "ivf-index.precommit"
+        case _ => "raritySink.precommit"
       })))
       val done = c.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)
       val code = if (done) c.exitValue() else { c.destroyForcibly(); -1 }
       require(code == 137, s"$mode: expected halt(137) at the crash point, got $code")
       println(s"[contend] $mode halted at its crash point as injected")
     }
+    require(new java.io.File(base + "/sink").list().count(_.startsWith("gen_")) == 2,
+      "the killed sink fold left no uncommitted generation beside the committed one")
     val r = spawn("recover", Seq(base))
     require(r.waitFor(20, java.util.concurrent.TimeUnit.MINUTES) && r.exitValue() == 0,
       "recovery JVM failed — see /tmp/contend_recover*.log")
@@ -228,7 +239,25 @@ object StoreContention {
     }
     println("[contend] PASS: kill-9 at the fact/postings/IVF pre-commit points — " +
       "results identical, stale locks taken over, orphans pruned")
+    val sinkRoot = base + "/sink"
+    require(readFlag("recover_sink_sig") == readFlag("nocrash_sink_sig"),
+      s"replayed sink batch diverged from a no-crash run: " +
+        s"${readFlag("recover_sink_sig")} vs ${readFlag("nocrash_sink_sig")}")
+    val sinkGens = new java.io.File(sinkRoot).list().count(_.startsWith("gen_"))
+    require(sinkGens <= 2, s"$sinkGens generations survived the recovery at $sinkRoot")
+    require(!java.nio.file.Files.exists(ServingStore.lockPath(sinkRoot)),
+      s"crashed sink's lock survived the recovery at $sinkRoot")
+    println("[contend] PASS: kill-9 at the rarity sink's pre-commit point — replayed " +
+      s"batch equals a no-crash run (${readFlag("recover_sink_sig")}), " +
+      s"$sinkGens generations, no lock")
   }
+
+  /** Half `i` (doc_id parity) of the corpus documents: the rarity sink's
+    * micro-batches in the crash scenario. */
+  private def sinkBatch(spark: SparkSession, base: String, i: Int) =
+    spark.read.parquet(base + "/corpus/documents.parquet")
+      .select(col("doc_id"), col("text"))
+      .filter(pmod(col("doc_id"), lit(2L)) === i)
 
   // ------------------------------------------------------------ worker
 
@@ -442,7 +471,9 @@ object StoreContention {
     * without a rebuild. Then the three stores compact again — which must
     * take the dead holders' stale locks over (staleness bound shrunk)
     * and prune the crashed writers' uncommitted generations — and
-    * serve once more. Both results are written for the driver. */
+    * serve once more, and the killed sink's batch is replayed beside a
+    * no-crash run of both batches. All results are written for the
+    * driver. */
   private def recover(base: String): Unit = {
     import graft.operators.{Dedup, Similarity, StarSchema}
     val spark = GraftSession.local("graft-contend-recover")
@@ -462,6 +493,17 @@ object StoreContention {
     Similarity.compactIvf(spark, corpus)
     java.nio.file.Files.write(java.nio.file.Paths.get(base, "recover_compacted_sig"),
       sig().getBytes("UTF-8"))
+    import graft.streaming.RaritySink
+    val docs = spark.read.parquet(corpus + "/documents.parquet").select(col("doc_id"), col("text"))
+    def sinkSig(root: String): Array[Byte] = {
+      val (n, h) = Golden.checksum(RaritySink.scoreAgainstStore(docs, root))
+      s"$n|$h".getBytes("UTF-8")
+    }
+    RaritySink.applyDocBatch(sinkBatch(spark, base, 1), 1, base + "/sink")
+    (0 to 1).foreach(i => RaritySink.applyDocBatch(sinkBatch(spark, base, i), i, base + "/sink_nocrash"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(base, "recover_sink_sig"), sinkSig(base + "/sink"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(base, "nocrash_sink_sig"),
+      sinkSig(base + "/sink_nocrash"))
     spark.stop()
   }
 }

@@ -75,14 +75,14 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def rs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
       .toSet
-    assert(rs(operators.Forecast.forecastFromModel(spark, path)) ==
+    assert(rs(operators.Forecast.forecastFromModel(spark.read.parquet(path))) ==
       rs(operators.Forecast.forecastLinear(spark, sf)))
   }
 
   test("incrementally merged forecast model is bit-identical to retraining on the union") {
     import org.apache.spark.sql.functions._
     val path = java.nio.file.Files.createTempDirectory("graftfcm").toString + "/model"
-    // split the fact by ship date: train on the first half, merge the rest
+    // split the fact by ship date: the halves fold as batches 0 and 1
     val li = Tables.lineitem(spark, sf)
     val cutoff = "1998-01-01"
     def base(pred: org.apache.spark.sql.Column) = {
@@ -96,12 +96,13 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
           col("l_extendedprice").as("y"))
     }
     assert(li.filter(col("l_shipdate") >= cutoff).count() > 0, "empty merge batch")
-    operators.Forecast.writeForecastModelOf(base(col("l_shipdate") < cutoff), path)
-    operators.Forecast.mergeForecastModelOf(base(col("l_shipdate") >= cutoff), path)
+    streaming.ForecastModelSink.applyModelBatch(base(col("l_shipdate") < cutoff), 0, path)
+    streaming.ForecastModelSink.applyModelBatch(base(col("l_shipdate") >= cutoff), 1, path)
     def rs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
       .toSet
-    assert(rs(operators.Forecast.forecastFromModel(spark, path)) ==
+    assert(rs(operators.Forecast.forecastFromModel(
+      streaming.ForecastModelSink.currentModel(spark, path))) ==
       rs(operators.Forecast.forecastLinear(spark, sf)),
       "merged model diverged from a full retrain")
   }

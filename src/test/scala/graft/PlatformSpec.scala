@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.GraftFunctions
 import graft.operators.Multimodal
-import graft.streaming.EventStream
+import graft.streaming.{EventStream, StreamStateStore}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -203,7 +203,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       // batches split so the January "view" group must MERGE across them
       input.addData(all(0), all(1)); q.processAllAvailable()
       input.addData(all(2), all(3)); q.processAllAvailable()
-      val state = spark.read.parquet(dir)
+      val state = StreamStateStore.read(spark, dir)
         .select("brand", "year", "month", "sum_dec", "n")
         .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2),
           r.getDecimal(3).toPlainString, r.getLong(4))).toSet
@@ -223,36 +223,68 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     def ev(id: Long, v: Double) =
       EventStream.Event(id, id, Timestamp.valueOf("2024-01-05 10:00:00"), "view", v)
     def stateSum(): java.math.BigDecimal =
-      spark.read.parquet(dir).agg(sum(col("sum_dec"))).collect()(0).getDecimal(0)
+      StreamStateStore.read(spark, dir).agg(sum(col("sum_dec"))).collect()(0).getDecimal(0)
+    def gens() = new java.io.File(dir).list().filter(_.startsWith("gen_")).toSet
     EventStream.applyRollupBatch(Seq(ev(1, 1.0), ev(2, 2.0)).toDF(), 0L, dir)
     assert(stateSum() == new java.math.BigDecimal("3.00"))
     // at-least-once REPLAY of batch 0 must be a no-op, not a double count
+    val before = gens()
     EventStream.applyRollupBatch(Seq(ev(1, 1.0), ev(2, 2.0)).toDF(), 0L, dir)
     assert(stateSum() == new java.math.BigDecimal("3.00"), "replayed batch double-counted")
+    assert(gens() == before, "a replayed batch committed a generation")
     EventStream.applyRollupBatch(Seq(ev(3, 4.0)).toDF(), 1L, dir)
     assert(stateSum() == new java.math.BigDecimal("7.00"))
-    // crash window: merge for batch 2 completed in tmp (marker present)
-    // but the old state deletion/move never ran; replay must adopt the
-    // COMPLETE tmp (newer marker) over the live state, then skip batch 2
-    val state = java.nio.file.Paths.get(dir)
-    val tmp = java.nio.file.Paths.get(dir + "_tmp")
-    EventStream.applyRollupBatch(Seq(ev(4, 8.0)).toDF(), 2L, dir) // produce state for batch 2
-    java.nio.file.Files.move(state, tmp)                          // simulate: swap never finished
-    EventStream.applyRollupBatch(Seq(ev(4, 8.0)).toDF(), 2L, dir) // replay after "crash"
+    // crash window: a writer folding batch 2 wrote its whole generation
+    // but died before the stamp. The orphan (the committed rows twice
+    // over, so adopting it would show) must be ignored, batch 2 must
+    // fold exactly once on replay, and that commit prunes the orphan
+    val committed = StreamStateStore.current(spark, dir).get.path(StreamStateStore.Store)
+    val orphan = operators.ServingStore.newGenerationPath(dir, 2L)
+    val rows = spark.read.parquet(committed)
+    rows.unionByName(rows).write.parquet(orphan + "/" + StreamStateStore.Store)
+    EventStream.applyRollupBatch(Seq(ev(4, 8.0)).toDF(), 2L, dir)
     assert(stateSum() == new java.math.BigDecimal("15.00"),
-      "recovery must adopt the completed tmp and not re-merge the batch")
-    // a STALE tmp (older marker) must lose to the live state
-    val staleTmp = java.nio.file.Paths.get(dir + "_tmp")
-    spark.read.parquet(dir).write.mode("overwrite").parquet(staleTmp.toString)
-    java.nio.file.Files.write(staleTmp.resolve("_last_batch"), "0".getBytes("UTF-8"))
+      "replay adopted the uncommitted generation or folded the batch twice")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(orphan)),
+      "the uncommitted generation survived the next commit")
+    assert(gens().size == 2, s"disk not bounded at two generations: ${gens()}")
+    // an unreadable sidecar throws instead of restarting the sum from empty
+    val part = new java.io.File(dir + "_model").listFiles
+      .find(_.getName.endsWith(".parquet")).get.toPath
+    val good = java.nio.file.Files.readAllBytes(part)
+    java.nio.file.Files.write(part, "not parquet".getBytes("UTF-8"))
+    intercept[IllegalStateException] {
+      EventStream.applyRollupBatch(Seq(ev(5, 16.0)).toDF(), 3L, dir)
+    }
+    java.nio.file.Files.write(part, good)
     EventStream.applyRollupBatch(Seq(ev(5, 16.0)).toDF(), 3L, dir)
     assert(stateSum() == new java.math.BigDecimal("31.00"))
-    // a partial marker (crash mid-write) must degrade gracefully, not throw
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir + "_tmp"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir + "_tmp").resolve("_last_batch"), Array.empty[Byte])
-    EventStream.applyRollupBatch(Seq(ev(6, 32.0)).toDF(), 4L, dir)
-    assert(stateSum() == new java.math.BigDecimal("63.00"))
+    // a sidecar lost while being rewritten (its overwrite deletes it
+    // first) beside committed generations throws, not restarts the sum
+    val sidecar = java.nio.file.Paths.get(dir + "_model")
+    val aside = java.nio.file.Paths.get(dir + "_model_aside")
+    java.nio.file.Files.move(sidecar, aside)
+    intercept[IllegalStateException] {
+      EventStream.applyRollupBatch(Seq(ev(6, 32.0)).toDF(), 4L, dir)
+    }
+    java.nio.file.Files.move(aside, sidecar)
+    assert(stateSum() == new java.math.BigDecimal("31.00"), "the lost sidecar reset the sum")
+    // a crashed FIRST batch leaves an orphan and no sidecar: its replay
+    // folds onto empty, ignoring the orphan
+    val first = java.nio.file.Files.createTempDirectory("graftrecovfirst").toString + "/state"
+    StreamStateStore.read(spark, dir).write.parquet(
+      operators.ServingStore.newGenerationPath(first, 0L) + "/" + StreamStateStore.Store)
+    EventStream.applyRollupBatch(Seq(ev(1, 1.0)).toDF(), 0L, first)
+    assert(StreamStateStore.read(spark, first).agg(sum(col("sum_dec"))).collect()(0)
+      .getDecimal(0) == new java.math.BigDecimal("1.00"))
+    // a state dir in the pre-generation layout (bare parquet plus a
+    // batch marker) is refused, not restarted from empty
+    val old = java.nio.file.Files.createTempDirectory("graftrecovold").toString + "/state"
+    Seq(ev(1, 1.0)).toDF().write.parquet(old)
+    java.nio.file.Files.write(java.nio.file.Paths.get(old, "_last_batch"), "0".getBytes("UTF-8"))
+    intercept[operators.ServingStore.StaleStoreRefusal] {
+      EventStream.applyRollupBatch(Seq(ev(6, 32.0)).toDF(), 1L, old)
+    }
   }
 
   test("streaming dedup drops re-delivered events within the watermark") {
@@ -282,13 +314,13 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0 to 2).foreach(i =>
       ForecastModelSink.applyModelBatch(obs.filter(pmod(col("x"), lit(3)) === i), i, dir))
     val oneShot = rows(operators.Forecast.forecastModelFrame(spark, sf))
-    assert(rows(spark.read.parquet(dir)) == oneShot)
+    assert(rows(ForecastModelSink.currentModel(spark, dir)) == oneShot)
     // at-least-once replay: re-applying an already-folded batch is a no-op
     ForecastModelSink.applyModelBatch(obs.filter(pmod(col("x"), lit(3)) === 2), 2, dir)
-    assert(rows(spark.read.parquet(dir)) == oneShot)
+    assert(rows(ForecastModelSink.currentModel(spark, dir)) == oneShot)
     // forecasts served from the streamed model are bit-identical to the
     // batch operator's fresh fact-scan fit
-    assert(rows(operators.Forecast.forecastFromModel(spark, dir)) ==
+    assert(rows(operators.Forecast.forecastFromModel(ForecastModelSink.currentModel(spark, dir))) ==
       rows(operators.Forecast.forecastLinear(spark, sf)))
     // WIDENED state: the per-x layer serves the families whose group-level
     // stats are not associative under merge — monthly seasonality and
@@ -300,7 +332,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(ForecastModelSink.changepointForecastFromState(spark, dir)) ==
       rows(operators.Forecast.forecastChangepoint(spark, sf)),
       "streamed changepoint forecast diverged from the fact-scan fit")
-    // widened-layer replay idempotency (its own marker)
+    // widened-layer replay idempotency
     ForecastModelSink.applyModelBatch(obs.filter(pmod(col("x"), lit(3)) === 1), 1, dir)
     assert(rows(ForecastModelSink.seasonalForecastFromState(spark, dir)) ==
       rows(operators.Forecast.seasonalForecast(spark, sf)),
@@ -776,14 +808,15 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       Multimodal.MediaMeta("image", w, h, 16000, 1))
     val keyA = MediaAdmission.batchCanonical(spark, Seq(a).toDF())
       .collect().map(_.getString(0)).head
-    // hand-write the PRE-tolerant 3-column layout (the r14 review's
-    // resume scenario): triple only, batch marker 0
+    // commit the PRE-tolerant 3-column layout (the r14 review's resume
+    // scenario) as batch 0's generation: triple only
     val dir = java.nio.file.Files.createTempDirectory("graftlegacy").toString + "/state"
-    MediaAdmission.batchCanonical(spark, Seq(a).toDF())
-      .select(col("content_hash"), col("keep_media_id"), col("n_copies"))
-      .write.parquet(dir)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(dir).resolve("_last_batch"), "0".getBytes("UTF-8"))
+    StreamStateStore.fold(spark, 0, dir, "legacyMediaStore", Seq(StreamStateStore.Store)) {
+      (_, next) =>
+        MediaAdmission.batchCanonical(spark, Seq(a).toDF())
+          .select(col("content_hash"), col("keep_media_id"), col("n_copies"))
+          .write.parquet(next.path(StreamStateStore.Store))
+    }
     // resuming with the drifted twin must not throw AND the tolerant
     // gate must still see A (family/hash derived from content_hash)
     MediaAdmission.applyAdmissionBatch(Seq(b).toDF(), 1, dir)
@@ -819,7 +852,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       "replaying the last bucketed media batch changed the store")
   }
 
-  test("bucketed admission store: touched-bucket-only IO, replay-safe, torn swaps recover") {
+  test("bucketed admission store: touched-bucket-only IO, replay-safe, bucket count stamped") {
     import graft.streaming.DedupAdmission
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     val root = java.nio.file.Files.createTempDirectory("graftbadmit")
@@ -838,56 +871,37 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     val inc = storeMap(DedupAdmission.currentStore(spark, dir))
     assert(inc == storeMap(operators.TextAnalysis.dedupExact(spark, sf)),
       "bucketed streamed store diverged from batch dedupExact")
-    // a single-doc batch touches ONE bucket: every other bucket's files
-    // must not be rewritten (the whole point of the layout)
-    def bucketStamps = new java.io.File(dir).listFiles
-      .filter(f => f.isDirectory && f.getName.startsWith("b="))
-      .map(f => f.getName ->
-        f.listFiles.map(x => x.getName -> x.lastModified).toMap).toMap
-    val pre = bucketStamps
+    // the committed generation and the inodes of its bucket files
+    def layout(): (String, Map[String, Set[AnyRef]]) = {
+      val gen = StreamStateStore.current(spark, dir).get
+      gen.dir -> new java.io.File(gen.path(StreamStateStore.Store)).listFiles
+        .filter(f => f.isDirectory && f.getName.startsWith("b="))
+        .map(b => b.getName -> b.listFiles.filter(_.getName.endsWith(".parquet"))
+          .map(f => java.nio.file.Files.getAttribute(f.toPath, "unix:ino")).toSet)
+        .toMap
+    }
+    // a single-doc batch touches ONE bucket: the new generation carries
+    // every other bucket's files as hard links (same inodes) and holds
+    // new files in at most one bucket (the whole point of the layout)
+    val (preGen, pre) = layout()
     val one = spark.createDataFrame(Seq((900001L, "a brand new late document")))
       .toDF("doc_id", "text")
     DedupAdmission.applyAdmissionBatchBucketed(one, 3, dir)
-    val post = bucketStamps
-    val changed = pre.keys.filter(b => post.get(b) != pre.get(b)).toSeq
-    assert(changed.size <= 1, s"single-key batch rewrote buckets: $changed")
+    val (postGen, post) = layout()
+    assert(postGen != preGen, "the batch committed no new generation")
+    val preInodes = pre.values.flatten.toSet
+    val written = post.filter(_._2.exists(i => !preInodes(i))).keys.toSeq
+    assert(written.size <= 1, s"single-key batch wrote files into buckets: $written")
+    pre.foreach { case (b, inodes) =>
+      if (!written.contains(b))
+        assert(post.get(b).contains(inodes), s"untouched bucket $b not carried as hard links")
+    }
     assert(storeMap(DedupAdmission.currentStore(spark, dir)).size == inc.size + 1)
-    // replay of an applied batch is a per-bucket no-op
-    val stamp = bucketStamps
+    // replay of an applied batch commits no new generation
     DedupAdmission.applyAdmissionBatchBucketed(one, 3, dir)
-    assert(bucketStamps == stamp, "replayed batch rewrote bucket state")
-    // torn swap, crashed BEFORE the new dir landed: the staged old dir
-    // must be restored on the next batch (which carries fresh content —
-    // re-presenting admitted content would legitimately bump its count)
-    val full = storeMap(DedupAdmission.currentStore(spark, dir))
-    val someB = new java.io.File(dir).listFiles
-      .filter(f => f.isDirectory && f.getName.startsWith("b=")).head.getName
-      .stripPrefix("b=")
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(dir, s"b=$someB"),
-      java.nio.file.Paths.get(dir, s"_swap_$someB"))
-    val two = spark.createDataFrame(Seq((900002L, "a second brand new late document")))
-      .toDF("doc_id", "text")
-    DedupAdmission.applyAdmissionBatchBucketed(two, 4, dir)
-    val afterRollback = storeMap(DedupAdmission.currentStore(spark, dir))
-    assert(full.forall { case (k, v) => afterRollback.get(k).contains(v) },
-      "torn-swap rollback lost bucket state")
-    assert(afterRollback.size == full.size + 1)
-    // torn swap, crashed AFTER the new dir landed: the stale stage is
-    // dropped and the live dir wins
-    val liveB = java.nio.file.Paths.get(dir, s"b=$someB")
-    val stage = java.nio.file.Paths.get(dir, s"_swap_$someB")
-    java.nio.file.Files.createDirectory(stage)
-    val three = spark.createDataFrame(Seq((900003L, "a third brand new late document")))
-      .toDF("doc_id", "text")
-    DedupAdmission.applyAdmissionBatchBucketed(three, 5, dir)
-    assert(!java.nio.file.Files.exists(stage) && java.nio.file.Files.exists(liveB),
-      "completed swap's stale stage not dropped")
-    val afterForward = storeMap(DedupAdmission.currentStore(spark, dir))
-    assert(afterRollback.forall { case (k, v) => afterForward.get(k).contains(v) })
-    assert(afterForward.size == afterRollback.size + 1)
+    assert(layout() == (postGen, post), "replayed batch committed a generation")
     // bucket-count drift is a loud layout error, not silent mis-routing
-    intercept[IllegalArgumentException] {
+    intercept[operators.ServingStore.StaleStoreRefusal] {
       DedupAdmission.applyAdmissionBatchBucketed(one, 6, dir, nBuckets = 7)
     }
   }
@@ -1642,7 +1656,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       "streamed union screen diverged from the one-shot full-eval screen")
     // the store is SPARSE: exactly the docs (any split) sharing a gram
     // with some benchmark — the train restriction applies at serve time
-    val storeRows = spark.read.parquet(ContaminationSink.countsDir(root)).count()
+    val storeRows = StreamStateStore.read(spark, root, ContaminationSink.Counts).count()
     val expectHit = spark.table(operators.Dedup.ensurePostings(spark, sf))
       .join(evalGrams, Seq("h")).select("doc_id").distinct().count()
     assert(storeRows == expectHit, "counts store is not sparse on hit docs")
@@ -1658,6 +1672,17 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     ContaminationSink.applyScreenBatch(novel, 3, sf, root)
     assert(screenMap(ContaminationSink.currentScreen(spark, sf, root)) == streamed,
       "a gram matching no posting must not change the screen")
+    // an EMPTY fold: a first batch with no posting hits commits an empty
+    // counts artifact, which must serve a clean screen and fold on
+    val root2 = java.nio.file.Files.createTempDirectory("graftcontam0").toString + "/state"
+    ContaminationSink.applyScreenBatch(novel, 0, sf, root2)
+    assert(StreamStateStore.read(spark, root2, ContaminationSink.Counts).count() == 0)
+    val clean = screenMap(ContaminationSink.currentScreen(spark, sf, root2))
+    assert(clean.nonEmpty && clean.values.forall(!_._4),
+      "an empty counts artifact did not serve a clean screen")
+    ContaminationSink.applyScreenBatch(evalGrams, 1, sf, root2)
+    assert(screenMap(ContaminationSink.currentScreen(spark, sf, root2)) == streamed,
+      "the fold after an empty counts artifact diverged from the union screen")
   }
 
   test("streaming rarity sink: served scores and thresholds bit-equal the batch family") {
@@ -1688,7 +1713,8 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       docs.filter(col("doc_id") >= bounds(2)), 2, root)
     assert(scoreMap(RaritySink.scoreAgainstStore(docs, root)) == served)
     // the df state actually landed bucketed (partition layout on disk)
-    val buckets = new java.io.File(RaritySink.dfDir(root)).listFiles()
+    val buckets = new java.io.File(StreamStateStore.current(spark, root).get.path(RaritySink.Df))
+      .listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("b="))
     assert(buckets > 1 && buckets <= RaritySink.DfBuckets,
       s"df store not bucketed: $buckets dirs")
@@ -2819,6 +2845,38 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(heldAppended.map(rows) == appended,
       "a frame served before the compaction changed or broke after it")
     assert(frames().map(rows) == appended, "compaction changed query results")
+  }
+
+  test("reader survival: sink-state frames planned before a batch collect identical rows after it") {
+    import graft.streaming.{DedupAdmission, FunnelStampsSink, RaritySink}
+    val root = java.nio.file.Files.createTempDirectory("graftsinkreader").toString
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text")).localCheckpoint()
+    val events = Tables.events(spark, sf).selectExpr("user_id", "event_id", "event_type",
+      "(ts - pmod(ts, 1000000)) DIV 1000000 AS ts_ms").localCheckpoint()
+    val docCut = col("doc_id") < docs.agg(max(col("doc_id"))).head().getLong(0) / 2
+    val evCut = col("ts_ms") <
+      events.stat.approxQuantile("ts_ms", Array(0.5), 0.0)(0).toLong
+    def batch(i: Int): Unit = {
+      def half(df: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) =
+        df.filter(if (i == 0) c else !c)
+      DedupAdmission.applyAdmissionBatch(half(docs, docCut), i, root + "/admit")
+      FunnelStampsSink.applyEventsBatch(half(events, evCut), i, root + "/stamps")
+      RaritySink.applyDocBatch(half(docs, docCut), i, root + "/rarity")
+    }
+    // a fresh Dataset over the held plan re-plans and re-scans
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.map(c => col(s"`$c`")): _*)
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    // a flat store, a bucketed store and a two-artifact store
+    def frames() = Seq(DedupAdmission.currentStore(spark, root + "/admit"),
+      FunnelStampsSink.currentStamps(spark, root + "/stamps"),
+      RaritySink.scoreAgainstStore(docs, root + "/rarity"))
+    batch(0)
+    val held = frames()
+    val want = held.map(rows)
+    batch(1)
+    assert(held.map(rows) == want, "a sink-state frame planned before a batch changed or broke after it")
+    assert(frames().map(rows) != want, "the batch did not advance the served state")
   }
 
   test("fact layout janitor: prunes dead-corpus layouts, keeps live, skips unproven") {
