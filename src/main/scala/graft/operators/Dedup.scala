@@ -1434,7 +1434,7 @@ object Dedup {
       expectedFp: Long): Unit = {
     val sigsPath = Similarity.servePath("simhash_idf_sigs_", dir)
     val wPath = idfWeightsServePath(dir)
-    val (_, wGen) = ServingStore.readSidecar(spark, "simhash-idf-weights", wPath)
+    val (_, wGen) = ServingStore.readSidecar("simhash-idf-weights", wPath)
       .getOrElse(throw new IllegalStateException(
         s"no served IDF weight generation at $wPath — run simhashIdfDedup " +
           "once (full build) before appending deltas"))

@@ -13,20 +13,32 @@ import org.apache.spark.sql.functions._
   * A generation is one directory `path/gen_<fp-hex>_<nonce>` (nonce a
   * random UUID — process-unique, not merely JVM-monotonic). A
   * multi-artifact store holds each artifact as a subdirectory of it.
-  * The ONE sidecar at `path + "_model"` carries the fingerprint and the
-  * generation name, and is written LAST: a crash anywhere before the
-  * stamp leaves the previous generation served (or, on a first build,
-  * nothing), never a fresh-looking partial one. Nothing is mutated in
+  * The ONE sidecar at `path + "_model"` is a small properties file —
+  * `fp`, `gen` (the generation's name) and the `meta` keys — read and
+  * written on the driver with plain file IO, so proving or stamping a
+  * generation launches no Spark job. It is written LAST: a crash
+  * anywhere before the stamp leaves the previous generation served (or,
+  * on a first build, nothing), never a fresh-looking partial one. The
+  * stamp is written to a temporary file beside it and renamed over it
+  * with ATOMIC_MOVE, so a reader sees the old stamp or the new one,
+  * never none and never a torn one. Crash model: a process killed at
+  * any line (`kill -9`, as [[graft.tools.StoreContention]] exercises it)
+  * leaves one of the two stamps whole, plus at most one hidden temporary
+  * file that nothing reads; a machine crash that loses the page cache is
+  * outside it (nothing is fsynced). Nothing is mutated in
   * place, so no live reader's files ever change: a rebuild can never
   * overwrite a directory a reader holds — not even when a corpus cycles
   * back to a previously-seen fingerprint (A→B→A). Prune keeps the new
   * generation and the sidecar-named previous one (readers handed out
   * before the swap survive one cycle), bounding disk at two
-  * generations. When the sidecar is unreadable the previous generation
-  * is UNKNOWN, so pruning is skipped rather than guessed. Pre-generation
-  * (flat layout) sidecars name no generation and read as unproven: they
-  * migrate with one rebuild, which prunes the flat files (this code
-  * never hands them to a reader).
+  * generations. When the sidecar is missing (deleted from outside — no
+  * commit ever leaves it missing) or unreadable, the previous
+  * generation is UNKNOWN, so pruning is skipped rather than guessed. A
+  * `_model` DIRECTORY is the parquet stamp of an older engine: it reads
+  * as [[LegacyFlat]] without being parsed, and serving stores migrate
+  * with one rebuild, whose commit deletes the directory before its
+  * rename and prunes the generations it named (this code never hands
+  * them to a reader).
   *
   * Appends and compactions derive the new generation from the committed
   * one. Carried artifacts are HARD LINKS to the previous generation's
@@ -70,16 +82,19 @@ private[graft] object ServingStore {
   /** What the sidecar proves about the store. */
   private[graft] sealed trait SidecarState
   /** Generation layout: fp, the generation directory it names, and the
-    * `meta` columns stamped with it. */
+    * `meta` keys stamped with it. */
   private[graft] final case class Stamped(fp: Long, gen: String,
       meta: Map[String, String]) extends SidecarState
-  /** Readable sidecar from the pre-generation flat layout (fp only, no
-    * generation name): the flat files are unproven and must migrate —
-    * and since this code never serves them, they are safe to prune on
-    * the migration rebuild. */
+  /** A `_model` directory: the parquet stamp of an older engine (the
+    * pre-generation flat layout, or a generation stamped before the
+    * stamp became a file). It is never parsed: a serving store migrates
+    * with one rebuild, which prunes the generations it named (this code
+    * never serves them); stream state and appends refuse it. */
   private[graft] case object LegacyFlat extends SidecarState
-  /** Missing or unreadable sidecar: the live generation is UNKNOWN. */
-  private[graft] case object Unknown extends SidecarState
+  /** No sidecar: a first build, or a stamp deleted from outside. */
+  private[graft] case object Missing extends SidecarState
+  /** A sidecar that does not parse as a stamp (warned when read). */
+  private[graft] case object Unreadable extends SidecarState
 
   /** Unique directory for a NEW generation build: fingerprint for
     * auditability plus a random-UUID nonce for uniqueness — never
@@ -126,49 +141,75 @@ private[graft] object ServingStore {
   private def tableName(b: Bucketing, genDir: String): String =
     b.table + "_" + java.nio.file.Paths.get(genDir).getFileName.toString.stripPrefix("gen_")
 
-  /** What the sidecar at `path + "_model"` proves. A missing sidecar is
-    * the normal first build and logs nothing; a present but unreadable
-    * one is warned about, so a persistent IO/permissions/corruption
-    * error does not degrade into a silent rebuild on every call. */
-  private[graft] def sidecarState(spark: SparkSession, what: String,
-      path: String): SidecarState =
-    try {
-      val df = spark.read.parquet(path + "_model")
-      if (!df.columns.contains("gen")) LegacyFlat
-      else {
-        val r = df.collect()(0)
-        Stamped(r.getAs[Long]("fp"), path + "/" + r.getAs[String]("gen"),
-          df.columns.filterNot(Set("fp", "gen")).map(c => c -> String.valueOf(r.getAs[Any](c))).toMap)
-      }
-    } catch {
-      case e if scala.util.control.NonFatal(e) =>
-        if (new java.io.File(path + "_model").exists())
-          org.slf4j.LoggerFactory.getLogger(getClass)
-            .warn(s"$what sidecar at ${path}_model unreadable; rebuilding", e)
-        Unknown
-    }
+  private def sidecarPath(path: String): java.nio.file.Path =
+    java.nio.file.Paths.get(path + "_model")
 
-  /** (fp, generation dir path) from the sidecar — None when unreadable
-    * (warned) or when it predates the generation layout (no warn: that
-    * is the documented migration path). */
-  private[graft] def readSidecar(spark: SparkSession, what: String,
-      path: String): Option[(Long, String)] =
-    sidecarState(spark, what, path) match {
+  /** What the sidecar at `path + "_model"` proves — one driver-side file
+    * read. A missing sidecar is the normal first build and logs nothing;
+    * a present but unreadable one is warned about, so a persistent
+    * IO/permissions/corruption error does not degrade into a silent
+    * rebuild on every call. */
+  private[graft] def sidecarState(what: String, path: String): SidecarState = {
+    val file = sidecarPath(path)
+    if (java.nio.file.Files.isDirectory(file)) LegacyFlat
+    else
+      try {
+        val props = new java.util.Properties()
+        props.load(new java.io.StringReader(
+          new String(java.nio.file.Files.readAllBytes(file), "UTF-8")))
+        import scala.jdk.CollectionConverters._
+        val kv = props.asScala.toMap
+        val gen = kv("gen")
+        require(generationFp(gen).isDefined, s"not a generation name: $gen")
+        Stamped(kv("fp").toLong, path + "/" + gen, kv -- Seq("fp", "gen"))
+      } catch {
+        case _: java.nio.file.NoSuchFileException => Missing
+        case e if scala.util.control.NonFatal(e) =>
+          org.slf4j.LoggerFactory.getLogger(getClass)
+            .warn(s"$what sidecar at $file unreadable; rebuilding", e)
+          Unreadable
+      }
+  }
+
+  /** (fp, generation dir path) from the sidecar — None when it is
+    * missing, unreadable (warned) or predates the generation layout (no
+    * warn: that is the documented migration path). */
+  private[graft] def readSidecar(what: String, path: String): Option[(Long, String)] =
+    sidecarState(what, path) match {
       case Stamped(fp, gen, _) => Some((fp, gen))
       case _ => None
     }
 
   /** The commit: stamp `gen` as the live generation for `fp`. `meta`
-    * rides along as extra string columns (the fact layout's corpus dir
-    * and shape version: its janitor reads the one, appends check the
-    * other). */
-  private[graft] def writeSidecar(spark: SparkSession, path: String, fp: Long,
-      gen: String, meta: Seq[(String, String)] = Nil): Unit =
-    spark.range(1)
-      .select((Seq(lit(fp).as("fp"),
-        lit(java.nio.file.Paths.get(gen).getFileName.toString).as("gen")) ++
-        meta.map { case (k, v) => lit(v).as(k) }): _*)
-      .coalesce(1).write.mode("overwrite").parquet(path + "_model")
+    * rides along as extra keys (the fact layout's corpus dir and shape
+    * version: its janitor reads the one, appends check the other). A
+    * legacy `_model` directory is deleted first: a rename cannot replace
+    * a directory. */
+  private[graft] def writeSidecar(path: String, fp: Long, gen: String,
+      meta: Seq[(String, String)] = Nil): Unit = {
+    val props = new java.util.Properties()
+    props.setProperty("fp", fp.toString)
+    props.setProperty("gen", java.nio.file.Paths.get(gen).getFileName.toString)
+    meta.foreach { case (k, v) => props.setProperty(k, v) }
+    val out = new java.io.StringWriter()
+    props.store(out, null)
+    val file = sidecarPath(path)
+    if (java.nio.file.Files.isDirectory(file)) Dedup.deleteTree(file.toString)
+    writeAtomically(file, out.toString.getBytes("UTF-8"))
+  }
+
+  /** Replace `file` with `bytes` whole: written to a hidden temporary
+    * file beside it, then renamed over it with ATOMIC_MOVE — a reader
+    * sees the old content or the new, and a process killed mid-write
+    * leaves the old content (and the temporary file) behind. */
+  private[graft] def writeAtomically(file: java.nio.file.Path, bytes: Array[Byte]): Unit = {
+    val tmp = file.resolveSibling("." + file.getFileName + "." +
+      java.util.UUID.randomUUID().toString.replace("-", "") + ".tmp")
+    try {
+      java.nio.file.Files.write(tmp, bytes)
+      java.nio.file.Files.move(tmp, file, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } finally java.nio.file.Files.deleteIfExists(tmp)
+  }
 
   /** Age after which another builder's lock is presumed crashed and
     * taken over. Volatile so the adversarial specs can shrink it. */
@@ -284,45 +325,20 @@ private[graft] object ServingStore {
     }
   }
 
-  /** Freshness-aware serve memo: the sidecar parquet IS the freshness
-    * proof, but re-reading it (plus re-listing the generation files and
-    * re-checking catalog registration) costs ~0.1s of driver fixed
-    * overhead per serve — paid by every serving-store query every time.
-    * The memo keys the served value on a driver-side stat SIGNATURE of
-    * the sidecar directory (file names + lengths + mtimes — microseconds
-    * on the node-local warehouse): every commit rewrites the sidecar,
-    * changing the signature and invalidating the entry, so the
-    * freshness semantics are exactly the sidecar read's, minus the
-    * parquet round-trips. Session-scoped (frames and catalog
+  /** Freshness-aware serve memo: the sidecar IS the freshness proof,
+    * but re-serving (re-listing the generation files, re-checking catalog
+    * registration, decoding a model) costs driver fixed overhead — paid
+    * by every serving-store query every time. An entry keeps the stamp
+    * it was served for, and a call whose sidecar read (one small file)
+    * returns an EQUAL stamp hits: every commit stamps a generation name
+    * carrying a fresh UUID nonce, so an equal stamp is the same commit
+    * and any later commit misses. Session-scoped (frames and catalog
     * registrations bind a session). A multi-artifact hit still re-runs
     * the two checks the sidecar cannot prove — every artifact of the
     * memoized generation holds data, its tables are registered — both
     * driver-local (directory listings, in-memory catalog lookups). */
   private val serveMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long, SparkSession, String, AnyRef)]()
-
-  private def sidecarSig(path: String): String = {
-    val dir = java.nio.file.Paths.get(path + "_model")
-    if (!java.nio.file.Files.isDirectory(dir)) "absent"
-    else
-      try {
-        import scala.jdk.CollectionConverters._
-        val s = java.nio.file.Files.list(dir)
-        try s.iterator().asScala.toSeq
-          .map(p => p.getFileName.toString + ":" + java.nio.file.Files.size(p) + ":" +
-            java.nio.file.Files.getLastModifiedTime(p).toMillis)
-          .sorted.mkString("|")
-        finally s.close()
-      } catch {
-        // a concurrent sidecar rewrite (writeSidecar's overwrite deletes
-        // the old part files) can vanish a just-listed file before its
-        // stat — the signature is mid-change, so return a UNIQUE token:
-        // the memo misses and the slow path's own handlers take over,
-        // instead of the stat race crashing the query
-        case _: java.io.IOException | _: java.io.UncheckedIOException =>
-          "racing_" + System.nanoTime()
-      }
-  }
+    new java.util.concurrent.ConcurrentHashMap[String, (Stamped, SparkSession, AnyRef)]()
 
   private def listDir(p: java.nio.file.Path): List[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
@@ -341,10 +357,11 @@ private[graft] object ServingStore {
     java.nio.file.Files.isDirectory(java.nio.file.Paths.get(gen)) &&
       artifacts.forall(a => hasData(gen + "/" + a.sub))
 
-  /** What the proofs decided under the lock: serve a generation a rival
-    * already committed, or write a new one stamped `fp`. */
+  /** What the proofs decided under the lock: keep a stamp already
+    * committed (a rival's fresh generation, a replayed batch), or write
+    * a new generation stamped `fp`. */
   private sealed trait Decision
-  private final case class Serve(gen: String) extends Decision
+  private final case class Serve(stamp: Stamped) extends Decision
   private final case class Write(fp: Long) extends Decision
 
   /** THE write path. Under the build lock, `decide` reads the sidecar's
@@ -352,29 +369,28 @@ private[graft] object ServingStore {
     * directory gets the `carry` artifacts hard-linked from the
     * committed one, `write(committed, target)` adds the rest, and only
     * then the sidecar is stamped and generations other than {new,
-    * previous} pruned. Returns the served generation and the sidecar
-    * signature read UNDER the lock (see [[served]]). */
+    * previous} pruned. Returns the stamp of the served generation. */
   private def commit(spark: SparkSession, what: String, path: String,
       artifacts: Seq[Artifact], meta: Seq[(String, String)], carry: Seq[String])(
       decide: SidecarState => Decision)(
-      write: (Option[String], String) => Unit): (String, String) =
+      write: (Option[String], String) => Unit): Stamped =
     withBuildLock(path) {
-      val state = sidecarState(spark, what, path)
+      val state = sidecarState(what, path)
       decide(state) match {
-        case Serve(gen) => (gen, sidecarSig(path))
+        case Serve(stamp) => stamp
         case Write(fp) =>
           val prev = state match { case Stamped(_, g, _) => Some(g); case _ => None }
           val target = newGenerationPath(path, fp)
           for (p <- prev; sub <- carry) link(p + "/" + sub, target + "/" + sub)
           write(prev, target)
           crashPoint(what + ".precommit")
-          writeSidecar(spark, path, fp, target, meta)
+          writeSidecar(path, fp, target, meta)
           state match {
             case Stamped(_, prevGen, _) => prune(spark, path, Set(target, prevGen), artifacts)
             case LegacyFlat => prune(spark, path, Set(target), artifacts)
-            case Unknown => ()
+            case Missing | Unreadable => ()
           }
-          (target, sidecarSig(path))
+          Stamped(fp, target, meta.toMap)
       }
     }
 
@@ -388,9 +404,12 @@ private[graft] object ServingStore {
       artifacts: Seq[Artifact], meta: Seq[(String, String)])(
       stamp: SidecarState => Option[Long])(
       write: (Option[Generation], Generation) => Unit): Unit = {
-    commit(spark, what, path, artifacts, meta, carry = Nil)(state =>
-      stamp(state).fold[Decision](Serve(path))(Write))(
-      (prev, next) => write(prev.map(Generation(_, artifacts)), Generation(next, artifacts)))
+    commit(spark, what, path, artifacts, meta, carry = Nil)(state => (state, stamp(state)) match {
+      case (_, Some(fp)) => Write(fp)
+      case (kept: Stamped, None) => Serve(kept)
+      case (other, None) => throw new IllegalStateException(
+        s"$what store at $path has no committed generation to keep ($other)")
+    })((prev, next) => write(prev.map(Generation(_, artifacts)), Generation(next, artifacts)))
     ()
   }
 
@@ -426,32 +445,20 @@ private[graft] object ServingStore {
       fp: Long, artifacts: Seq[Artifact] = Nil, meta: Seq[(String, String)] = Nil,
       force: Boolean = false)(build: String => Unit)(serve: String => T): T = {
     val memoKey = System.identityHashCode(spark).toString + "|" + path
-    val sig0 = sidecarSig(path)
-    if (!force) Option(serveMemo.get(memoKey)) match {
-      // the identity hash is not unique across a collected session's
-      // lifetime: verify the entry is bound to THIS session, or a
-      // hash-reusing new session would be served a dead session's plan
-      case Some((s, f, owner, gen, v)) if s == sig0 && f == fp && (owner eq spark) =>
-        if (artifacts.isEmpty) return v.asInstanceOf[T]
-        // a lost artifact falls through to the rebuild below
-        if (complete(artifacts)(gen)) {
-          register(spark, Generation(gen, artifacts))
-          return v.asInstanceOf[T]
-        }
-      case _ => ()
-    }
-    def fresh(state: SidecarState): Option[String] = state match {
-      case Stamped(f, g, _) if !force && f == fp && complete(artifacts)(g) => Some(g)
+    def fresh(state: SidecarState): Option[Stamped] = state match {
+      case s @ Stamped(f, g, _) if !force && f == fp && complete(artifacts)(g) => Some(s)
       case _ => None
     }
-    // `sig` must be a signature captured BEFORE the sidecar read that
-    // chose `gen` (or under the build lock, where commits serialize):
-    // a signature recomputed AFTER the choice could bind a concurrent
-    // commit's sidecar to the OLD generation, and every later call
-    // would memo-hit a pruned generation. With the pre-read signature
-    // the worst case is one stale memo MISS on the next call.
-    val (gen, sig) = fresh(sidecarState(spark, what, path)) match {
-      case Some(g) => (g, sig0)
+    val stamp = fresh(sidecarState(what, path)) match {
+      case Some(s) => Option(serveMemo.get(memoKey)) match {
+        // the identity hash is not unique across a collected session's
+        // lifetime: verify the entry is bound to THIS session, or a
+        // hash-reusing new session would be served a dead session's plan
+        case Some((m, owner, v)) if m == s && (owner eq spark) =>
+          register(spark, Generation(s.gen, artifacts))
+          return v.asInstanceOf[T]
+        case _ => s
+      }
       case None =>
         commit(spark, what, path, artifacts, meta, carry = Nil)(
           // re-check under the lock: a concurrent builder we waited out
@@ -462,13 +469,13 @@ private[graft] object ServingStore {
     // a forced rebuild replaces the generation under an unchanged corpus
     // stamp: memoized prepared plans would keep the superseded one
     if (force) graft.PlanCache.invalidate()
-    val v = serve(gen)
+    val v = serve(stamp.gen)
     // crude bound: one entry per (session, store) — dozens in any real
     // process — but a session-cycling harness would otherwise grow it
     // without limit (each entry pins a session's plans); reset rather
     // than LRU, the rebuild cost is one sidecar read per store
     if (serveMemo.size > 256) serveMemo.clear()
-    serveMemo.put(memoKey, (sig, fp, spark, gen, v))
+    serveMemo.put(memoKey, (stamp, spark, v))
     v
   }
 
@@ -535,7 +542,7 @@ private[graft] object ServingStore {
   private[graft] def deriveGeneration(spark: SparkSession, what: String, path: String,
       artifacts: Seq[Artifact], carry: Seq[String], meta: Seq[(String, String)] = Nil)(
       nextFp: Long => Long)(write: (Generation, Generation) => Unit): Generation = {
-    val (dir, _) = commit(spark, what, path, artifacts, meta, carry) {
+    val stamp = commit(spark, what, path, artifacts, meta, carry) {
       case Stamped(_, g, m) if meta.exists { case (k, v) => !m.get(k).contains(v) } =>
         throw new StaleStoreRefusal(
           s"$what generation at $g is stamped ${m.toSeq.sorted.mkString(", ")} — this " +
@@ -548,11 +555,11 @@ private[graft] object ServingStore {
       case LegacyFlat => throw new StaleStoreRefusal(
         s"$what store at $path predates the generation layout — rebuild " +
           "instead of appending into an unproven store")
-      case Unknown => throw new IllegalStateException(
-        s"$what sidecar at ${path}_model unreadable — run the full ensure " +
-          "rebuild instead of appending into an unproven generation")
+      case state @ (Missing | Unreadable) => throw new IllegalStateException(
+        s"$what sidecar at ${sidecarPath(path)} ${state.toString.toLowerCase} — run the " +
+          "full ensure rebuild instead of appending into an unproven generation")
     } { (prev, next) => write(Generation(prev.get, artifacts), Generation(next, artifacts)) }
-    register(spark, Generation(dir, artifacts))
+    register(spark, Generation(stamp.gen, artifacts))
   }
 
   /** Merge-append a delta into a single-artifact store — the shared
@@ -696,7 +703,7 @@ private[graft] object ServingStore {
       artifacts: Seq[Artifact])(dead: => Boolean): Boolean =
     withBuildLock(path) {
       dead && {
-        Dedup.deleteTree(path + "_model")
+        Dedup.deleteTree(sidecarPath(path).toString)
         prune(spark, path, keep = Set.empty, artifacts)
         Dedup.deleteTree(path)
         true

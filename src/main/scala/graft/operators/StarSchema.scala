@@ -609,9 +609,10 @@ object StarSchema {
     * lock, sidecar deleted first). Sidecar-less dirs are SKIPPED, not
     * deleted: an unreadable sidecar is also what a first build looks
     * like from outside, and the janitor must never race a builder
-    * (those dirs resolve next pass). Returns one (layout, action) line
-    * per dir — a janitor that deletes silently is how warehouses lose
-    * data. */
+    * (those dirs resolve next pass), as are layouts an older engine
+    * stamped (a parquet `_model` dir, never parsed: a dead one is deleted
+    * by hand). Returns one (layout, action) line per dir — a janitor
+    * that deletes silently is how warehouses lose data. */
   def pruneFactLayouts(spark: SparkSession,
       warehouse: String = "spark-warehouse"): Seq[(String, String)] = {
     val root = new java.io.File(warehouse)
@@ -620,9 +621,9 @@ object StarSchema {
         !f.getName.endsWith("_model") && !f.getName.contains("_lock"))
       .sortBy(_.getName)
     layouts.toSeq.map { f =>
-      ServingStore.sidecarState(spark, "fact-layout", f.getPath) match {
-        case ServingStore.Unknown =>
-          (f.getName, "skipped: sidecar unreadable (mid-build or unproven)")
+      ServingStore.sidecarState("fact-layout", f.getPath) match {
+        case ServingStore.Missing | ServingStore.Unreadable =>
+          (f.getName, "skipped: no readable sidecar (mid-build or unproven)")
         case ServingStore.Stamped(_, _, meta) if meta.contains("dir") =>
           val dir = meta("dir")
           def dead = !new java.io.File(dir).exists()
@@ -630,8 +631,8 @@ object StarSchema {
           else if (ServingStore.retire(spark, f.getPath, factArtifacts(dir, FactBuckets))(dead))
             (f.getName, s"pruned: corpus gone from $dir")
           else (f.getName, "kept: corpus reappeared before the lock")
-        case _ =>
-          (f.getName, "skipped: legacy sidecar without a corpus stamp")
+        case _ => (f.getName, "skipped: its stamp names no corpus dir (an older engine's parquet " +
+          "_model is never parsed); if its corpus is gone, delete it and its _model by hand")
       }
     }
   }

@@ -77,7 +77,7 @@ object ContaminationSink {
     * — identical shape (and, by the union law, identical content) to
     * [[Curation.contaminationDeltaServe]] over every gram seen. */
   def currentScreen(spark: SparkSession, dir: String, stateRoot: String): DataFrame = {
-    val hits = StreamStateStore.current(spark, stateRoot) match {
+    val hits = StreamStateStore.current(stateRoot) match {
       case Some(g) => spark.read.parquet(g.path(Counts))
       case None =>
         spark.createDataFrame(

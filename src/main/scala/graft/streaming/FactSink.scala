@@ -35,23 +35,13 @@ object FactSink {
   @transient private lazy val logger =
     org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def markerPath(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(StarSchema.factServePath(dir) + "_stream_batch")
-
-  private def lastApplied(dir: String): Option[Long] = {
-    val p = markerPath(dir)
-    if (!java.nio.file.Files.exists(p)) None
-    else
-      scala.util.Try(
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong).toOption
-  }
-
   /** One micro-batch of newly landed orders against the fact layout —
     * the testable core of [[ordersSink]]. */
   private[graft] def applyFactBatch(batch: DataFrame, batchId: Long,
       dir: String): Unit = {
     val spark = batch.sparkSession
-    if (lastApplied(dir).exists(_ >= batchId)) {
+    val layout = StarSchema.factServePath(dir)
+    if (SigSink.lastApplied(layout).exists(_ >= batchId)) {
       logger.info(s"fact sink: skipping replayed batch $batchId")
       return
     }
@@ -73,8 +63,7 @@ object FactSink {
         StarSchema.ensureFactLayout(spark, dir, force = true)
       }
     }
-    val sidecar = new java.io.File(StarSchema.factServePath(dir) + "_model")
-    if (!sidecar.exists()) {
+    if (ServingStore.sidecarState("fact-layout", layout) == ServingStore.Missing) {
       // first batch against a layout-less corpus: the full build covers
       // every file landed so far; later batches of those rows fold into
       // the refusals below
@@ -99,8 +88,7 @@ object FactSink {
           StarSchema.ensureFactLayout(spark, dir)
       }
     }
-    java.nio.file.Files.write(markerPath(dir),
-      batchId.toString.getBytes("UTF-8"))
+    SigSink.markApplied(layout, batchId)
   }
 
   /** foreachBatch sink folding arriving orders (and their landed

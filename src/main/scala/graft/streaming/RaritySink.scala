@@ -81,7 +81,7 @@ object RaritySink {
   def scoreAgainstStore(docs: DataFrame, stateRoot: String): DataFrame = {
     val spark = docs.sparkSession
     // both tables from ONE committed generation
-    val gen = StreamStateStore.current(spark, stateRoot).getOrElse(
+    val gen = StreamStateStore.current(stateRoot).getOrElse(
       throw new IllegalStateException(s"no committed rarity state at $stateRoot"))
     Curation.scoreFromPosts(
       batchPosts(docs).localCheckpoint(eager = false),

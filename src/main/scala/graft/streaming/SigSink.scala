@@ -60,13 +60,18 @@ object SigSink {
   private def markerPath(store: String): java.nio.file.Path =
     java.nio.file.Paths.get(store + "_stream_batch")
 
-  private def lastApplied(store: String): Option[Long] = {
-    val p = markerPath(store)
-    if (!java.nio.file.Files.exists(p)) None
-    else
-      scala.util.Try(
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong).toOption
-  }
+  /** The last batch id a sink applied to `store` (this sink's and
+    * [[FactSink]]'s `_stream_batch` marker). */
+  private[streaming] def lastApplied(store: String): Option[Long] =
+    scala.util.Try(new String(java.nio.file.Files.readAllBytes(markerPath(store)),
+      "UTF-8").trim.toLong).toOption
+
+  /** Record `batchId` as applied to `store`, replacing the marker whole
+    * (temporary file renamed into place): a kill mid-write leaves the
+    * previous id, never a truncated one that reads as no marker or as an
+    * older batch and sends applied batches back through the append. */
+  private[streaming] def markApplied(store: String, batchId: Long): Unit =
+    ServingStore.writeAtomically(markerPath(store), batchId.toString.getBytes("UTF-8"))
 
   /** One micro-batch against one signature store — the testable core
     * shared by the three sinks. `batchKeys` are the batch's distinct
@@ -99,7 +104,7 @@ object SigSink {
         serve(true)
       }
     }
-    ServingStore.readSidecar(spark, what, store) match {
+    ServingStore.readSidecar(what, store) match {
       case None => serve(false)
       case Some((storedFp, _)) =>
         try append(storedFp)
@@ -113,8 +118,7 @@ object SigSink {
             verifyCoveredOrRepair("fingerprint unchanged")
         }
     }
-    java.nio.file.Files.write(markerPath(store),
-      batchId.toString.getBytes("UTF-8"))
+    markApplied(store, batchId)
   }
 
   /** foreachBatch sink folding arriving documents' minhash signatures

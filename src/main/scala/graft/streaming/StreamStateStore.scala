@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.operators.ServingStore
-import graft.operators.ServingStore.{Artifact, Generation, StaleStoreRefusal, Stamped, Unknown}
+import graft.operators.ServingStore.{Artifact, Generation, Missing, StaleStoreRefusal, Stamped,
+  Unreadable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,11 +37,12 @@ import org.apache.spark.sql.functions._
   *
   * Nothing silently restarts a stream's state from empty: a present but
   * unreadable sidecar throws, a missing sidecar beside a generation
-  * stamped below the batch (a commit killed while rewriting the stamp)
-  * throws, and a state dir in a pre-generation layout (no sidecar, other
-  * files present) is refused, not migrated. Without a sidecar, only a
-  * crashed attempt at the same batch — a first batch's orphan — is
-  * folded over.
+  * stamped below the batch (a stamp deleted from outside — a commit
+  * replaces the stamp whole, so no crash leaves it missing) throws, and
+  * a state dir in an older layout (a parquet `_model` stamp, or no
+  * sidecar with other files present) is refused, not migrated. Without
+  * a sidecar, only a crashed attempt at the same batch — a first
+  * batch's orphan — is folded over.
   *
   * CAVEAT (logged when it bites): batch ids restart at 0 with a FRESH
   * checkpoint location, so a state directory is bound to one checkpoint
@@ -75,14 +77,14 @@ private[graft] object StreamStateStore {
             "checkpoint over an existing state dir, clear the state dir")
         None
       case Stamped(_, _, _) => Some(batchId)
-      case Unknown if new java.io.File(stateDir + "_model").exists() =>
+      case Unreadable =>
         throw new IllegalStateException(
-          s"$sinkName sidecar at ${stateDir}_model unreadable — refusing to " +
+          s"$sinkName state stamp at $stateDir unreadable — refusing to " +
             "restart the stream's state from empty")
-      case Unknown if entries(stateDir).forall(_.startsWith("gen_")) =>
+      case Missing if entries(stateDir).forall(_.startsWith("gen_")) =>
         // only a crashed attempt at THIS batch may have left a generation:
-        // one stamped below it was committed, and its sidecar was lost
-        // (killed while being rewritten) — folding onto empty would drop it
+        // one stamped below it was committed, and its stamp was deleted
+        // from outside — folding onto empty would drop it
         if (entries(stateDir).exists(g => ServingStore.generationFp(g).forall(_ < batchId)))
           throw new IllegalStateException(
             s"$sinkName state at $stateDir holds generations of batches before " +
@@ -133,25 +135,17 @@ private[graft] object StreamStateStore {
 
   /** The committed generation of the state at `stateDir`, None before
     * the first batch commits. */
-  def current(spark: SparkSession, stateDir: String): Option[Generation] = {
-    def stamped = ServingStore.sidecarState(spark, "stream state", stateDir) match {
+  def current(stateDir: String): Option[Generation] =
+    ServingStore.sidecarState("stream state", stateDir) match {
       case Stamped(_, g, _) => Some(Generation(g, Nil))
       case _ => None
     }
-    // a sidecar caught mid-rewrite by a committing batch reads as
-    // unknown: read it again once that commit has released the lock.
-    // With no generation on disk nothing was ever committed — no wait
-    stamped.orElse(
-      if (entries(stateDir).exists(_.startsWith("gen_")))
-        ServingStore.withBuildLock(stateDir)(stamped)
-      else None)
-  }
 
   private def entries(stateDir: String): Seq[String] =
     Option(new java.io.File(stateDir).list).toSeq.flatten
 
   /** Artifact `sub` of the committed state at `stateDir`. */
   def read(spark: SparkSession, stateDir: String, sub: String = Store): DataFrame =
-    spark.read.parquet(current(spark, stateDir).getOrElse(throw new IllegalStateException(
+    spark.read.parquet(current(stateDir).getOrElse(throw new IllegalStateException(
       s"no committed stream state at $stateDir")).path(sub))
 }

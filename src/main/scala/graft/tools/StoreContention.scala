@@ -155,7 +155,7 @@ object StoreContention {
     }
     require(gens.size <= 2, s"more than two generations survived: $gens")
     val spark = GraftSession.local("graft-contend-audit")
-    val (fp, gen) = ServingStore.readSidecar(spark, "contend", store.toString)
+    val (fp, gen) = ServingStore.readSidecar("contend", store.toString)
       .getOrElse(sys.error("sidecar unreadable after the contention run"))
     val rows = spark.read.parquet(gen).collect()
     require(rows.length == RowsPerGen && rows.forall(_.getLong(1) == fp),

@@ -400,10 +400,8 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // build the generation for the base corpus, serve once
     val before = operators.Forecast.forecastLinear(spark, tmp).collect()
     assert(before.nonEmpty)
-    val preFp = {
-      val p = operators.Forecast.dayServePath(tmp) + "_model"
-      spark.read.parquet(p).collect()(0).getLong(0)
-    }
+    val preFp = operators.ServingStore.readSidecar("day-stats",
+      operators.Forecast.dayServePath(tmp)).get._1
     // the delta lands, then folds incrementally (appendPostings ordering)
     delta.write.mode("append").parquet(tmp + "/lineitem.parquet")
     val deltaFrame = delta

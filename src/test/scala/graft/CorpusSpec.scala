@@ -209,14 +209,14 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     // full build over the base corpus (weights + signatures)
     val basePairs = Dedup.simhashIdfDedup(spark, dir).count()
     val wPath = Dedup.idfWeightsServePath(dir)
-    val wBefore = ServingStore.readSidecar(spark, "simhash-idf-weights", wPath)
+    val wBefore = ServingStore.readSidecar("simhash-idf-weights", wPath)
       .getOrElse(fail("no weight generation after the full build"))
     val preFp = Similarity.corpusFingerprint(spark, dir, "documents.parquet")
     // land the bounded delta and append THROUGH the valve
     delta.write.mode("append").parquet(s"$dir/documents.parquet")
     Dedup.appendSimhashIdf(spark, dir, delta, preFp)
     // the valve's whole point: the WEIGHT generation did not move
-    assert(ServingStore.readSidecar(spark, "simhash-idf-weights", wPath)
+    assert(ServingStore.readSidecar("simhash-idf-weights", wPath)
       .contains(wBefore),
       "bounded append must serve the STALE weight generation, not retrain")
     // the serve path picks the appended signatures up without a rebuild
@@ -224,13 +224,13 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     // does not touch the weights
     val servedPairs = Dedup.simhashIdfDedup(spark, dir).count()
     assert(servedPairs >= basePairs, "appended corpus lost served pairs")
-    assert(ServingStore.readSidecar(spark, "simhash-idf-weights", wPath)
+    assert(ServingStore.readSidecar("simhash-idf-weights", wPath)
       .contains(wBefore), "serve after append retrained the weights")
     // QUANTIFIED drift: signatures under the stale weights vs a fresh
     // full retrain over the post-delta corpus — the staleness the
     // bound admits must leave the overwhelming share of signatures
     // bit-identical (the SimhashIdfMaxGrowth scaladoc's figure)
-    val sigsGen = ServingStore.readSidecar(spark, "simhash-idf-sigs",
+    val sigsGen = ServingStore.readSidecar("simhash-idf-sigs",
       Similarity.servePath("simhash_idf_sigs_", dir))
       .getOrElse(fail("no signature generation after append"))._2
     val served = spark.read.parquet(sigsGen)
@@ -256,7 +256,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       Dedup.appendSimhashIdf(spark, dir, big, preFp2)
     }
     Dedup.simhashIdfDedup(spark, dir).count()
-    assert(!ServingStore.readSidecar(spark, "simhash-idf-weights", wPath)
+    assert(!ServingStore.readSidecar("simhash-idf-weights", wPath)
       .contains(wBefore),
       "post-refusal serve must RETRAIN the weights for the grown corpus")
   }
@@ -515,7 +515,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cold == direct, "cold serve (fresh build) diverged from in-memory IVF")
     // warm call must NOT rewrite the generation: the sidecar-named
     // generation and every one of its files untouched
-    def sidecar() = operators.ServingStore.readSidecar(spark, "ivf-index", servePath).get
+    def sidecar() = operators.ServingStore.readSidecar("ivf-index", servePath).get
     val (fp, gen) = sidecar()
     val stamp = genStamp(gen)
     assert(stamp.keys.exists(_.startsWith("model/")) && stamp.keys.exists(_.startsWith("lists/cid=")))
@@ -527,7 +527,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a sidecar whose fingerprint no longer matches (an equal-row-count
     // corpus swap) must trigger a rebuild, and the rebuilt serve must
     // still equal the in-memory result
-    operators.ServingStore.writeSidecar(spark, servePath, fp + 1, gen)
+    operators.ServingStore.writeSidecar(servePath, fp + 1, gen)
     val rebuilt = resultSet(operators.Similarity.knnIvfServe(spark, sf))
     assert(rebuilt == direct, "post-rebuild serve diverged from in-memory IVF")
     val (fpAfter, genAfter) = sidecar()
@@ -616,11 +616,11 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       "catalog re-registration rewrote the generation")
     // staleness is keyed on the corpus fingerprint: a sidecar mismatch
     // (equal-row-count corpus swap) must trigger a rebuild
-    val (storedFp, _) = operators.ServingStore.readSidecar(spark, "posting-index", path).get
-    operators.ServingStore.writeSidecar(spark, path, storedFp + 1, gen.dir)
+    val (storedFp, _) = operators.ServingStore.readSidecar("posting-index", path).get
+    operators.ServingStore.writeSidecar(path, storedFp + 1, gen.dir)
     val rebuilt = resultSet(operators.Dedup.ngramJaccardServe(spark, sf))
     assert(rebuilt == direct, "post-rebuild serve diverged")
-    val (fpAfter, genAfter) = operators.ServingStore.readSidecar(spark, "posting-index", path).get
+    val (fpAfter, genAfter) = operators.ServingStore.readSidecar("posting-index", path).get
     assert(fpAfter == storedFp && genAfter != gen.dir,
       "fingerprint mismatch did not trigger an index rebuild")
     // resolve shares the serve path and must equal the from-scratch resolve
@@ -972,7 +972,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     val path = operators.Dedup.postingsServePath(tmp)
     // uncommitted crash state: a newer generation dir whose rep holds no
     // data files, the sidecar still naming the committed generation
-    val (fp, _) = operators.ServingStore.readSidecar(spark, "posting-index", path).get
+    val (fp, _) = operators.ServingStore.readSidecar("posting-index", path).get
     val orphan = new java.io.File(operators.ServingStore.newGenerationPath(path, fp))
     assert(new java.io.File(orphan, "rep").mkdirs())
     new java.io.File(orphan, "rep/_SUCCESS").createNewFile()
@@ -1013,13 +1013,13 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     def resultSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     val before = resultSet(operators.Dedup.ngramJaccardServe(spark, tmp))
-    val (fpBefore, genBefore) = operators.ServingStore.readSidecar(spark, "posting-index", path).get
+    val (fpBefore, genBefore) = operators.ServingStore.readSidecar("posting-index", path).get
     operators.Dedup.compactPostings(spark, tmp)
     assert(dataFiles.length == operators.Dedup.PostingsBuckets,
       s"compaction left ${dataFiles.length} data files, expected one per bucket")
     assert(resultSet(operators.Dedup.ngramJaccardServe(spark, tmp)) == before,
       "compaction changed query results")
-    val (fpAfter, genAfter) = operators.ServingStore.readSidecar(spark, "posting-index", path).get
+    val (fpAfter, genAfter) = operators.ServingStore.readSidecar("posting-index", path).get
     assert(fpAfter == fpBefore, "compaction changed the generation fingerprint")
     assert(genAfter != genBefore && new java.io.File(genBefore).isDirectory,
       "compaction must commit a new generation and keep the previous one for its readers")
@@ -1605,16 +1605,18 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     rmrf(new java.io.File(servePath + "_model"))
     val cold = rows(operators.Similarity.knnPqServe(spark, sf))
     assert(cold == direct, "cold PQ serve diverged from the from-scratch form")
-    val modelDir = new java.io.File(servePath + "_model")
-    val stamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
+    val model = java.nio.file.Paths.get(servePath + "_model")
+    def stampOf() = (java.nio.file.Files.getLastModifiedTime(model),
+      java.nio.file.Files.readAllBytes(model).toSeq)
+    val stamp = stampOf()
     val warm = rows(operators.Similarity.knnPqServe(spark, sf))
     assert(warm == direct, "warm PQ serve diverged")
-    assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == stamp,
+    assert(stampOf() == stamp,
       "warm PQ serve rewrote the generation instead of reusing it")
     // codes are bounded by the codebook size
     import org.apache.spark.sql.functions.{col, explode}
     val bad = spark.read.parquet(
-        operators.ServingStore.readSidecar(spark, "pq-index", servePath).get._2 + "/codes")
+        operators.ServingStore.readSidecar("pq-index", servePath).get._2 + "/codes")
       .select(explode(col("codes")).as("c"))
       .filter(col("c") < 0 || col("c") >= operators.Similarity.PqK).count()
     assert(bad == 0L, "PQ code out of [0, PqK)")
@@ -1630,7 +1632,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     // build the generation over the base corpus
     operators.Similarity.knnIvfPqServe(spark, tmp).count()
     val indexPath = operators.Similarity.ivfPqServePath(tmp)
-    def gen() = operators.ServingStore.readSidecar(spark, "ivfpq-index", indexPath).get._2
+    def gen() = operators.ServingStore.readSidecar("ivfpq-index", indexPath).get._2
     val gen0 = gen()
     val pre = genStamp(gen0)
     assert(pre.keys.exists(_.startsWith("lists/cid=")), "premise: codes live in cid= cells")
@@ -1735,11 +1737,13 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(brute.nonEmpty, "degenerate ground truth")
     assert(found.nonEmpty, s"cluster blocking found none of ${brute.size} pairs")
     // second call serves the persisted cell quantizer (no retrain):
-    // the sidecar files must be byte-stable across calls
-    val modelDir = new java.io.File(operators.Similarity.semCellsServePath(sf) + "_model")
-    val stamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
+    // the sidecar file must be byte-stable across calls
+    val model = java.nio.file.Paths.get(operators.Similarity.semCellsServePath(sf) + "_model")
+    def stampOf() = (java.nio.file.Files.getLastModifiedTime(model),
+      java.nio.file.Files.readAllBytes(model).toSeq)
+    val stamp = stampOf()
     operators.Similarity.embeddingDedupCells(spark, sf).count()
-    assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == stamp,
+    assert(stampOf() == stamp,
       "second call retrained the cell quantizer")
   }
 
@@ -1830,7 +1834,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     operators.Similarity.appendIvf(spark, tmp,
       delta.select(col("vec_id"), col("embedding").as("vec")), expectedFp = Some(fp0))
     val indexPath = operators.Similarity.ivfServePath(tmp)
-    def sidecar() = operators.ServingStore.readSidecar(spark, "ivf-index", indexPath).get
+    def sidecar() = operators.ServingStore.readSidecar("ivf-index", indexPath).get
     val (fp, g0) = sidecar()
     assert(cellFiles(g0).values.exists(_ > 1),
       "append did not fragment any cell — the compaction premise is gone")
@@ -1869,7 +1873,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       delta.select(col("vec_id"), col("embedding").as("vec")),
       expectedFp = Some(fp0))
     val indexPath = operators.Similarity.ivfPqServePath(tmp)
-    def sidecar() = operators.ServingStore.readSidecar(spark, "ivfpq-index", indexPath).get
+    def sidecar() = operators.ServingStore.readSidecar("ivfpq-index", indexPath).get
     val (fp, g0) = sidecar()
     assert(cellFiles(g0).values.exists(_ > 1),
       "append did not fragment any cell — the compaction premise is gone")
@@ -1929,12 +1933,13 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     val direct = rows(operators.Similarity.knnOpq(spark, sf))
     val cold = rows(operators.Similarity.knnOpqServe(spark, sf))
     assert(cold == direct, "cold OPQ serve diverged from the from-scratch form")
-    val modelDir = new java.io.File(
-      operators.Similarity.opqServePath(sf) + "_model")
-    val stamp = modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap
+    val model = java.nio.file.Paths.get(operators.Similarity.opqServePath(sf) + "_model")
+    def stampOf() = (java.nio.file.Files.getLastModifiedTime(model),
+      java.nio.file.Files.readAllBytes(model).toSeq)
+    val stamp = stampOf()
     val warm = rows(operators.Similarity.knnOpqServe(spark, sf))
     assert(warm == direct, "warm OPQ serve diverged")
-    assert(modelDir.listFiles.map(f => f.getName -> f.lastModified).toMap == stamp,
+    assert(stampOf() == stamp,
       "warm OPQ serve rewrote the generation instead of reusing it")
     // recalled pairs carry EXACT cosines (re-rank scores original vectors)
     val brute = rows(operators.Similarity.knnBrute(spark, sf))
@@ -2132,7 +2137,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       coldRows, "serve diverged from an independent from-scratch build")
     // warm serve reuses the generation bit-exactly: the sidecar-named
     // generation and every one of its files untouched
-    def sidecar() = operators.ServingStore.readSidecar(spark, "ivfpq-index", servePath).get
+    def sidecar() = operators.ServingStore.readSidecar("ivfpq-index", servePath).get
     val (fp, gen) = sidecar()
     val stamp = genStamp(gen)
     val warm = rows(operators.Similarity.knnIvfPqServe(spark, sf))
@@ -2141,7 +2146,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       "warm IVFPQ serve rewrote the generation")
     // rebuild path: a sidecar stamped with a stale fingerprint must
     // trigger a full rebuild that again equals the original results
-    operators.ServingStore.writeSidecar(spark, servePath, fp + 1, gen)
+    operators.ServingStore.writeSidecar(servePath, fp + 1, gen)
     val rebuilt = rows(operators.Similarity.knnIvfPqServe(spark, sf))
     assert(rebuilt == coldRows, "post-rebuild IVFPQ serve diverged")
     val (fpAfter, genAfter) = sidecar()

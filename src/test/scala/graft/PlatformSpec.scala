@@ -238,7 +238,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     // but died before the stamp. The orphan (the committed rows twice
     // over, so adopting it would show) must be ignored, batch 2 must
     // fold exactly once on replay, and that commit prunes the orphan
-    val committed = StreamStateStore.current(spark, dir).get.path(StreamStateStore.Store)
+    val committed = StreamStateStore.current(dir).get.path(StreamStateStore.Store)
     val orphan = operators.ServingStore.newGenerationPath(dir, 2L)
     val rows = spark.read.parquet(committed)
     rows.unionByName(rows).write.parquet(orphan + "/" + StreamStateStore.Store)
@@ -249,18 +249,17 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the uncommitted generation survived the next commit")
     assert(gens().size == 2, s"disk not bounded at two generations: ${gens()}")
     // an unreadable sidecar throws instead of restarting the sum from empty
-    val part = new java.io.File(dir + "_model").listFiles
-      .find(_.getName.endsWith(".parquet")).get.toPath
+    val part = java.nio.file.Paths.get(dir + "_model")
     val good = java.nio.file.Files.readAllBytes(part)
-    java.nio.file.Files.write(part, "not parquet".getBytes("UTF-8"))
+    java.nio.file.Files.write(part, "not a stamp".getBytes("UTF-8"))
     intercept[IllegalStateException] {
       EventStream.applyRollupBatch(Seq(ev(5, 16.0)).toDF(), 3L, dir)
     }
     java.nio.file.Files.write(part, good)
     EventStream.applyRollupBatch(Seq(ev(5, 16.0)).toDF(), 3L, dir)
     assert(stateSum() == new java.math.BigDecimal("31.00"))
-    // a sidecar lost while being rewritten (its overwrite deletes it
-    // first) beside committed generations throws, not restarts the sum
+    // a sidecar deleted from outside beside committed generations
+    // throws, not restarts the sum
     val sidecar = java.nio.file.Paths.get(dir + "_model")
     val aside = java.nio.file.Paths.get(dir + "_model_aside")
     java.nio.file.Files.move(sidecar, aside)
@@ -873,7 +872,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       "bucketed streamed store diverged from batch dedupExact")
     // the committed generation and the inodes of its bucket files
     def layout(): (String, Map[String, Set[AnyRef]]) = {
-      val gen = StreamStateStore.current(spark, dir).get
+      val gen = StreamStateStore.current(dir).get
       gen.dir -> new java.io.File(gen.path(StreamStateStore.Store)).listFiles
         .filter(f => f.isDirectory && f.getName.startsWith("b="))
         .map(b => b.getName -> b.listFiles.filter(_.getName.endsWith(".parquet"))
@@ -1155,10 +1154,8 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrElse(Array.empty[java.io.File])
       .map(f => f.getName -> f.lastModified).toMap
     def poison(path: String): Unit = {
-      val fpPath = path + "_model"
-      val stored = spark.read.parquet(fpPath).collect()(0).getLong(0)
-      spark.range(1).select(lit(stored + 1).as("fp"))
-        .coalesce(1).write.mode("overwrite").parquet(fpPath)
+      val (stored, gen) = operators.ServingStore.readSidecar("poison", path).get
+      operators.ServingStore.writeSidecar(path, stored + 1, gen)
     }
     def rows(df: => org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
@@ -1347,11 +1344,93 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     // another process restamps the SAME fp with a new generation
     val gen2 = operators.ServingStore.newGenerationPath(store, 3L)
     buildOf("two")(gen2)
-    operators.ServingStore.writeSidecar(spark, store, 3L, gen2)
+    operators.ServingStore.writeSidecar(store, 3L, gen2)
     val served = operators.ServingStore.ensure(spark, "t", store, 3L)(
       _ => fail("restamped store is fresh for fp=3 — must not rebuild"))
     assert(served.collect().map(_.getString(1)).toSeq == Seq("two"),
       "serve memo survived an out-of-band sidecar rewrite at the same fp")
+  }
+
+  test("serving stores: reading and stamping a generation launches no Spark job") {
+    import spark.implicits._
+    import operators.ServingStore
+    // jobs are counted by a thread-local tag, so jobs of other threads do
+    // not count; a later untagged sentinel job drains the listener bus
+    val tagged = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinels = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.jobprobe"))) match {
+          case Some("probe") => tagged.incrementAndGet()
+          case Some("sentinel") => sentinels.incrementAndGet()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    def jobsOf(body: => Unit): Int = {
+      tagged.set(0)
+      sc.setLocalProperty("graft.jobprobe", "probe")
+      try body finally sc.setLocalProperty("graft.jobprobe", null)
+      val seen = sentinels.get()
+      sc.setLocalProperty("graft.jobprobe", "sentinel")
+      try spark.range(1).collect() finally sc.setLocalProperty("graft.jobprobe", null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (sentinels.get() == seen && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(sentinels.get() > seen, "listener bus did not drain")
+      tagged.get()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val store = java.nio.file.Files.createTempDirectory("graftnojob").toString + "/store"
+      val arts = Seq(ServingStore.Artifact("a"))
+      ServingStore.ensureGeneration(spark, "t", store, 1L, arts)(g =>
+        Seq((1L, "x")).toDF("id", "v").write.parquet(g.path("a")))
+      val (fp, gen) = ServingStore.readSidecar("t", store).get
+      assert(jobsOf(ServingStore.sidecarState("t", store)) == 0, "sidecar read ran a job")
+      assert(jobsOf(ServingStore.writeSidecar(store, fp, gen)) == 0, "sidecar stamp ran a job")
+      // a new session misses the serve memo: proving the generation again
+      // is the sidecar read and a directory listing
+      assert(jobsOf(ServingStore.ensureGeneration(spark.newSession(), "t", store, 1L, arts)(
+        _ => fail("fresh store must not rebuild"))) == 0, "memo-miss ensure ran a job")
+      // a single-artifact ensure serves a parquet read of the generation;
+      // its only jobs are that read's own (schema inference)
+      val single = java.nio.file.Files.createTempDirectory("graftnojob").toString + "/store"
+      ServingStore.ensure(spark, "t", single, 1L)(g => Seq((1L, "x")).toDF("id", "v").write.parquet(g))
+      val bare = jobsOf(spark.newSession().read.parquet(ServingStore.readSidecar("t", single).get._2))
+      assert(jobsOf(ServingStore.ensure(spark.newSession(), "t", single, 1L)(
+        _ => fail("fresh store must not rebuild"))) == bare,
+        "memo-miss ensure ran jobs beyond its parquet read")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("serving stores: a reader never sees the stamp missing while generations commit") {
+    import operators.ServingStore
+    val store = java.nio.file.Files.createTempDirectory("graftstampreader").toString + "/store"
+    val arts = Seq(ServingStore.Artifact("a"))
+    def commitNext(): Unit =
+      ServingStore.advance(spark, "t", store, arts, Nil) {
+        case ServingStore.Stamped(f, _, _) => Some(f + 1)
+        case _ => Some(0L)
+      } { (_, next) =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(next.path("a")))
+        java.nio.file.Files.write(java.nio.file.Paths.get(next.path("a"), "part"),
+          next.dir.getBytes("UTF-8"))
+      }
+    commitNext()
+    @volatile var done = false
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reader = new Thread(() => {
+      while (!done) ServingStore.sidecarState("t", store) match {
+        case ServingStore.Stamped(_, g, _) => seen.add(g)
+        case other => bad.add(other.toString)
+      }
+    })
+    reader.start()
+    try (1 to 20).foreach(_ => commitNext())
+    finally { done = true; reader.join() }
+    assert(bad.isEmpty, s"reader saw no stamp during a commit: ${bad.size} reads, e.g. ${bad.peek()}")
+    assert(seen.size >= 2, s"reader did not overlap the commits: saw ${seen.size} stamps")
   }
 
   test("lock heartbeat keeps a live long build from takeover; release is ownership-checked") {
@@ -1713,7 +1792,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       docs.filter(col("doc_id") >= bounds(2)), 2, root)
     assert(scoreMap(RaritySink.scoreAgainstStore(docs, root)) == served)
     // the df state actually landed bucketed (partition layout on disk)
-    val buckets = new java.io.File(StreamStateStore.current(spark, root).get.path(RaritySink.Df))
+    val buckets = new java.io.File(StreamStateStore.current(root).get.path(RaritySink.Df))
       .listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("b="))
     assert(buckets > 1 && buckets <= RaritySink.DfBuckets,
@@ -2777,7 +2856,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     StarSchema.compactFactLayout(spark, dirA)
     val layoutPath = StarSchema.factServePath(dirA)
     // read through the sidecar-named (compacted) generation
-    val (fpStamped, gen) = operators.ServingStore.readSidecar(spark, "fact-layout", layoutPath).get
+    val (fpStamped, gen) = operators.ServingStore.readSidecar("fact-layout", layoutPath).get
     Seq("lirev", "orders").foreach { sub =>
       val files = new java.io.File(s"$gen/$sub")
         .listFiles.count(_.getName.endsWith(".parquet"))
@@ -2792,7 +2871,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stamp. Must refuse structurally, without expectedFp (the FactSink
     // repair path passes none), and with the typed refusal FactSink
     // repairs on: (1) a generation stamped with an older layout version
-    operators.ServingStore.writeSidecar(spark, layoutPath, fpBefore, gen,
+    operators.ServingStore.writeSidecar(layoutPath, fpBefore, gen,
       Seq("dir" -> dirA, "ver" -> (StarSchema.FactLayoutVersion - 1).toString))
     land(dirA, "orders", oDelta.limit(0), first = false) // any landed change
     val older = intercept[operators.ServingStore.StaleStoreRefusal] {
@@ -2917,6 +2996,17 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r3(fake.getName).startsWith("skipped"), s"mid-build dir: ${r3.get(fake.getName)}")
       assert(fake.exists(), "janitor deleted an unproven (possibly mid-build) layout")
     } finally { Dedup.deleteTree(fake.getPath) }
+    // a layout stamped by an older engine (a parquet `_model` directory)
+    // is skipped unparsed, and its line says a dead one goes by hand
+    val legacy = new java.io.File("spark-warehouse/factlayout_speclegacy_000000")
+    val legacyModel = new java.io.File(legacy.getPath + "_model")
+    assert(legacy.mkdirs() && legacyModel.mkdirs())
+    try {
+      val r4 = StarSchema.pruneFactLayouts(spark).toMap
+      assert(r4(legacy.getName).startsWith("skipped") && r4(legacy.getName).contains("by hand"),
+        s"legacy layout: ${r4.get(legacy.getName)}")
+      assert(legacy.exists() && legacyModel.exists(), "janitor deleted a legacy layout")
+    } finally { Dedup.deleteTree(legacy.getPath); Dedup.deleteTree(legacyModel.getPath) }
   }
 
   test("fact sink: streamed order batches equal a cold rebuild, landing race repairs") {

@@ -230,11 +230,11 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"wrong refusal: ${staleFp.getMessage}")
     Multimodal.appendMediaHashes(spark, tmp, delta, preFp)
     val path = Similarity.servePath("media_hashes_", tmp)
-    val stamped = ServingStore.readSidecar(spark, "media-hashes", path)
+    val stamped = ServingStore.readSidecar("media-hashes", path)
     val served = Multimodal.ensureMediaHashes(spark, tmp)
     // the append stamped the post-delta fingerprint: ensure must SERVE
     // the merged generation, not rebuild a new one
-    assert(ServingStore.readSidecar(spark, "media-hashes", path) == stamped,
+    assert(ServingStore.readSidecar("media-hashes", path) == stamped,
       "ensure after append rebuilt instead of serving the merged generation")
     val s = tools.Golden.checksum(served)
     val f = tools.Golden.checksum(
