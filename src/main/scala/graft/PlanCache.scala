@@ -31,8 +31,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * re-executes in full; only CONSTRUCTION is cached. Serving-store
   * generations are fingerprint-keyed by the same corpus bytes this
   * stamp covers, so only a commit under an unchanged corpus — a
-  * compaction or a forced rebuild — can leave a memoized plan on a
-  * superseded generation. That generation stays readable for one more
+  * compaction or a stream fold under an unchanged fingerprint — can
+  * leave a memoized plan on a superseded generation. That generation stays readable for one more
   * commit only, so those sites call [[invalidate]]. */
 object PlanCache {
   /** Upper bound on sessions with retained plans; evicting the eldest
@@ -139,7 +139,8 @@ object PlanCache {
     }
 
   /** Drop every memoized plan — called by store commits the
-    * corpus-stamp guard cannot see (compactions, forced rebuilds). */
+    * corpus-stamp guard cannot see (compactions, stream folds under an
+    * unchanged fingerprint). */
   def invalidate(): Unit = {
     memo.synchronized {
       val it = memo.values().iterator()

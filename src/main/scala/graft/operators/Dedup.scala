@@ -1122,21 +1122,14 @@ object Dedup {
 
   /** Serve-or-build the minhash signature generation — shared by the
     * dedup serve and the streaming ingest twin
-    * ([[graft.streaming.SigSink]]). `force` rebuilds even when the
-    * fingerprint matches — the sink's repair path for a generation
-    * whose fp covers files whose rows were never merged. */
-  private[graft] def serveMinhashSigs(spark: SparkSession, dir: String,
-      force: Boolean = false): DataFrame = {
-    val fp = minhashSigsFingerprint(spark, dir)
-    val path = Similarity.servePath("minhash_sigs_", dir)
-    val build = (gen: String) => {
+    * ([[graft.streaming.SigSink]]). */
+  private[graft] def serveMinhashSigs(spark: SparkSession, dir: String): DataFrame =
+    ServingStore.ensure(spark, "minhash-sigs", Similarity.servePath("minhash_sigs_", dir),
+        minhashSigsFingerprint(spark, dir)) { gen =>
       Tables.invalidate(spark, dir, "documents")
       withSigClass(minhashSignatures(Tables.documents(spark, dir)), MinhashSigKeys)
         .write.mode("overwrite").parquet(gen)
     }
-    if (force) ServingStore.rebuild(spark, "minhash-sigs", path, fp)(build)
-    else ServingStore.ensure(spark, "minhash-sigs", path, fp)(build)
-  }
 
   /** Bumped on any change to minhash signature semantics (the kernel's
     * coefficient table, K, shingling) — the store key must see code
@@ -1160,42 +1153,47 @@ object Dedup {
     Similarity.corpusFingerprint(spark, dir, "documents.parquet") * 31 +
       SimhashSigStoreVersion
 
-  /** Incremental ingest for the minhash signature store: a signature is
-    * a pure per-document function, so the delta's kernel scan alone
-    * produces exactly the rows a full rebuild over old ∪ delta adds —
-    * the [[ServingStore.append]] protocol (lock, staleness proofs,
-    * double-append refusal). `newDocs` must already have landed in
-    * `dir`. */
-  def appendMinhashSigs(spark: SparkSession, dir: String, newDocs: DataFrame,
-      expectedFp: Long): Unit =
-    ServingStore.append(spark, "minhash-sigs",
-      Similarity.servePath("minhash_sigs_", dir), expectedFp,
-      delta = minhashSignatures(newDocs),
-      postFp = () => {
-        Tables.invalidate(spark, dir, "documents")
-        minhashSigsFingerprint(spark, dir)
-      },
-      merge = (prev, d) =>
-        prev.unionByName(classifyDeltaSigs(prev, d, MinhashSigKeys)),
-      uniqueKey = Some("doc_id"))
+  /** A signature store over the documents table as a per-row store:
+    * `sigs` derives the signatures and `keys` class them against the
+    * committed ones ([[classifyDeltaSigs]]). */
+  private def docSigRows(spark: SparkSession, dir: String, what: String, prefix: String,
+      sigs: DataFrame => DataFrame, keys: Seq[String], fp: => Long): ServingStore.RowStore =
+    ServingStore.RowStore(spark, what, Similarity.servePath(prefix, dir), "doc_id", sigs,
+      postFp = () => { Tables.invalidate(spark, dir, "documents"); fp },
+      corpus = () => Tables.documents(spark, dir),
+      merge = (prev, d) => prev.unionByName(classifyDeltaSigs(prev, d, keys)))
 
-  /** Incremental ingest for the plain simhash signature store — same
-    * row-local argument as [[appendMinhashSigs]]. The IDF variant has
-    * NO append on purpose: its signatures join corpus-global document
+  /** The minhash signature store's delta expressions: a signature is a
+    * pure per-document function, so the delta's kernel scan alone
+    * produces exactly the rows a full rebuild over old ∪ delta adds.
+    * Shared by [[appendMinhashSigs]] and the stream fold
+    * ([[graft.streaming.SigSink]]). */
+  private[graft] def minhashSigRows(spark: SparkSession, dir: String): ServingStore.RowStore =
+    docSigRows(spark, dir, "minhash-sigs", "minhash_sigs_", minhashSignatures,
+      MinhashSigKeys, minhashSigsFingerprint(spark, dir))
+
+  /** The plain simhash signature store's delta expressions — same
+    * row-local argument as [[minhashSigRows]]. The IDF variant has NO
+    * append on purpose: its signatures join corpus-global document
     * frequencies, so a delta shifts every weight and the append IS the
     * rebuild ([[ServingStore.append]]'s validity note). */
+  private[graft] def simhashSigRows(spark: SparkSession, dir: String): ServingStore.RowStore =
+    docSigRows(spark, dir, "simhash-sigs", "simhash_sigs_", simhashSignatures,
+      Seq("simhash"), simhashSigsFingerprint(spark, dir))
+
+  /** Incremental ingest for the minhash signature store — the
+    * [[ServingStore.append]] protocol (lock, staleness proofs,
+    * double-append refusal) over [[minhashSigRows]]. `newDocs` must
+    * already have landed in `dir`. */
+  def appendMinhashSigs(spark: SparkSession, dir: String, newDocs: DataFrame,
+      expectedFp: Long): Unit =
+    minhashSigRows(spark, dir).append(newDocs, expectedFp)
+
+  /** Incremental ingest for the plain simhash signature store, over
+    * [[simhashSigRows]]. */
   def appendSimhashSigs(spark: SparkSession, dir: String, newDocs: DataFrame,
       expectedFp: Long): Unit =
-    ServingStore.append(spark, "simhash-sigs",
-      Similarity.servePath("simhash_sigs_", dir), expectedFp,
-      delta = simhashSignatures(newDocs),
-      postFp = () => {
-        Tables.invalidate(spark, dir, "documents")
-        simhashSigsFingerprint(spark, dir)
-      },
-      merge = (prev, d) =>
-        prev.unionByName(classifyDeltaSigs(prev, d, Seq("simhash"))),
-      uniqueKey = Some("doc_id"))
+    simhashSigRows(spark, dir).append(newDocs, expectedFp)
 
   // ---------------------------------------------------------------- SimHash
 
@@ -1768,20 +1766,14 @@ object Dedup {
     collapsedHammingPairsExact(serveSimhashSigs(spark, dir))
 
   /** Serve-or-build the plain-simhash signature generation — shared by
-    * the dedup serve and [[graft.streaming.SigSink]]. `force` as in
-    * [[serveMinhashSigs]]. */
-  private[graft] def serveSimhashSigs(spark: SparkSession, dir: String,
-      force: Boolean = false): DataFrame = {
-    val fp = simhashSigsFingerprint(spark, dir)
-    val path = Similarity.servePath("simhash_sigs_", dir)
-    val build = (gen: String) => {
+    * the dedup serve and [[graft.streaming.SigSink]]. */
+  private[graft] def serveSimhashSigs(spark: SparkSession, dir: String): DataFrame =
+    ServingStore.ensure(spark, "simhash-sigs", Similarity.servePath("simhash_sigs_", dir),
+        simhashSigsFingerprint(spark, dir)) { gen =>
       Tables.invalidate(spark, dir, "documents")
       withSigClass(simhashSignatures(Tables.documents(spark, dir)), Seq("simhash"))
         .write.mode("overwrite").parquet(gen)
     }
-    if (force) ServingStore.rebuild(spark, "simhash-sigs", path, fp)(build)
-    else ServingStore.ensure(spark, "simhash-sigs", path, fp)(build)
-  }
 
   // ------------------------------------------- keep-one-copy resolution
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** The one serving-store lifecycle: every fingerprint-keyed store
   * (posting index, fact layout, LM stats, signature and model stores,
   * ground truth, funnel stamps, resolved enrichment, stream-sink state)
-  * lives as GENERATIONS under `path`, and every ensure, rebuild, append,
+  * lives as GENERATIONS under `path`, and every ensure, append,
   * compaction and stream-batch fold takes the same core: build lock →
   * proofs → write a NEW generation → stamp the sidecar → prune.
   *
@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * leaves one of the two stamps whole, plus at most one hidden temporary
   * file that nothing reads; a machine crash that loses the page cache is
   * outside it (nothing is fsynced). Nothing is mutated in
-  * place, so no live reader's files ever change: a rebuild can never
+  * place, so no live reader's files ever change: a build can never
   * overwrite a directory a reader holds — not even when a corpus cycles
   * back to a previously-seen fingerprint (A→B→A). Prune keeps the new
   * generation and the sidecar-named previous one (readers handed out
@@ -59,17 +59,19 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object ServingStore {
 
-  /** Typed [[append]] refusals — protocol callers (the streaming
-    * [[graft.streaming.SigSink]]) dispatch on the TYPE, never on the
-    * human-readable message (the r14 review: substring dispatch turns
-    * a message rewording into a stream-killing regression). They
+  /** Typed [[append]] and [[foldKeys]] refusals — protocol callers (the
+    * streaming [[graft.streaming.SigSink]]) dispatch on the TYPE, never
+    * on the human-readable message (substring dispatch turns a message
+    * rewording into a stream-killing regression). They
     * extend IllegalArgumentException so existing intercepts and the
     * require-style call sites keep their contract. */
   private[graft] sealed abstract class AppendRefused(msg: String)
       extends IllegalArgumentException(msg)
   /** storedFp != the caller's pre-delta snapshot: the store is stale. */
   private[graft] final class StaleStoreRefusal(msg: String) extends AppendRefused(msg)
-  /** The post-delta fingerprint did not advance: delta files not landed. */
+  /** The post-delta fingerprint did not advance (an append), or the
+    * batch's missing keys are not in the landed corpus (a fold): delta
+    * files not landed. */
   private[graft] final class DeltaNotLandedRefusal(msg: String) extends AppendRefused(msg)
   /** Delta unique keys already present in the generation: double append. */
   private[graft] final class KeysAlreadyPresentRefusal(msg: String) extends AppendRefused(msg)
@@ -202,7 +204,7 @@ private[graft] object ServingStore {
     * file beside it, then renamed over it with ATOMIC_MOVE — a reader
     * sees the old content or the new, and a process killed mid-write
     * leaves the old content (and the temporary file) behind. */
-  private[graft] def writeAtomically(file: java.nio.file.Path, bytes: Array[Byte]): Unit = {
+  private def writeAtomically(file: java.nio.file.Path, bytes: Array[Byte]): Unit = {
     val tmp = file.resolveSibling("." + file.getFileName + "." +
       java.util.UUID.randomUUID().toString.replace("-", "") + ".tmp")
     try {
@@ -358,31 +360,28 @@ private[graft] object ServingStore {
       artifacts.forall(a => hasData(gen + "/" + a.sub))
 
   /** What the proofs decided under the lock: keep a stamp already
-    * committed (a rival's fresh generation, a replayed batch), or write
-    * a new generation stamped `fp`. */
+    * committed (a rival's fresh generation, a replayed batch, a batch
+    * whose keys are all served), or `write` a new generation directory
+    * stamped `fp`. */
   private sealed trait Decision
   private final case class Serve(stamp: Stamped) extends Decision
-  private final case class Write(fp: Long) extends Decision
+  private final case class Write(fp: Long, write: String => Unit) extends Decision
 
   /** THE write path. Under the build lock, `decide` reads the sidecar's
-    * proof (and may refuse by throwing); on [[Write]] a new generation
-    * directory gets the `carry` artifacts hard-linked from the
-    * committed one, `write(committed, target)` adds the rest, and only
-    * then the sidecar is stamped and generations other than {new,
-    * previous} pruned. Returns the stamp of the served generation. */
+    * proof (and may refuse by throwing); on [[Write]] its `write` fills
+    * a new generation directory, and only then the sidecar is stamped
+    * and generations other than {new, previous} pruned. Returns the
+    * stamp of the served generation. */
   private def commit(spark: SparkSession, what: String, path: String,
-      artifacts: Seq[Artifact], meta: Seq[(String, String)], carry: Seq[String])(
-      decide: SidecarState => Decision)(
-      write: (Option[String], String) => Unit): Stamped =
+      artifacts: Seq[Artifact], meta: Seq[(String, String)])(
+      decide: SidecarState => Decision): Stamped =
     withBuildLock(path) {
       val state = sidecarState(what, path)
       decide(state) match {
         case Serve(stamp) => stamp
-        case Write(fp) =>
-          val prev = state match { case Stamped(_, g, _) => Some(g); case _ => None }
+        case Write(fp, write) =>
           val target = newGenerationPath(path, fp)
-          for (p <- prev; sub <- carry) link(p + "/" + sub, target + "/" + sub)
-          write(prev, target)
+          write(target)
           crashPoint(what + ".precommit")
           writeSidecar(path, fp, target, meta)
           state match {
@@ -404,12 +403,14 @@ private[graft] object ServingStore {
       artifacts: Seq[Artifact], meta: Seq[(String, String)])(
       stamp: SidecarState => Option[Long])(
       write: (Option[Generation], Generation) => Unit): Unit = {
-    commit(spark, what, path, artifacts, meta, carry = Nil)(state => (state, stamp(state)) match {
-      case (_, Some(fp)) => Write(fp)
+    commit(spark, what, path, artifacts, meta)(state => (state, stamp(state)) match {
+      case (_, Some(fp)) => Write(fp, next => write(
+        Some(state).collect { case Stamped(_, g, _) => Generation(g, artifacts) },
+        Generation(next, artifacts)))
       case (kept: Stamped, None) => Serve(kept)
       case (other, None) => throw new IllegalStateException(
         s"$what store at $path has no committed generation to keep ($other)")
-    })((prev, next) => write(prev.map(Generation(_, artifacts)), Generation(next, artifacts)))
+    })
     ()
   }
 
@@ -438,15 +439,13 @@ private[graft] object ServingStore {
     * ensure of every store. `serve` runs once per generation and
     * session, so it may decode (a model store collects its model there
     * and the memo keeps it resident); for a multi-artifact store a memo
-    * hit re-proves the artifacts and re-registers its bucketed tables.
-    * `force` builds a new generation even when the sidecar already
-    * claims `fp` (see [[rebuild]]). */
+    * hit re-proves the artifacts and re-registers its bucketed tables. */
   private[graft] def served[T <: AnyRef](spark: SparkSession, what: String, path: String,
-      fp: Long, artifacts: Seq[Artifact] = Nil, meta: Seq[(String, String)] = Nil,
-      force: Boolean = false)(build: String => Unit)(serve: String => T): T = {
+      fp: Long, artifacts: Seq[Artifact] = Nil, meta: Seq[(String, String)] = Nil)(
+      build: String => Unit)(serve: String => T): T = {
     val memoKey = System.identityHashCode(spark).toString + "|" + path
     def fresh(state: SidecarState): Option[Stamped] = state match {
-      case s @ Stamped(f, g, _) if !force && f == fp && complete(artifacts)(g) => Some(s)
+      case s @ Stamped(f, g, _) if f == fp && complete(artifacts)(g) => Some(s)
       case _ => None
     }
     val stamp = fresh(sidecarState(what, path)) match {
@@ -460,15 +459,11 @@ private[graft] object ServingStore {
         case _ => s
       }
       case None =>
-        commit(spark, what, path, artifacts, meta, carry = Nil)(
+        commit(spark, what, path, artifacts, meta)(
           // re-check under the lock: a concurrent builder we waited out
           // has usually stamped the store fresh already — serve it
-          state => fresh(state).fold[Decision](Write(fp))(Serve))(
-          (_, target) => build(target))
+          state => fresh(state).fold[Decision](Write(fp, build))(Serve))
     }
-    // a forced rebuild replaces the generation under an unchanged corpus
-    // stamp: memoized prepared plans would keep the superseded one
-    if (force) graft.PlanCache.invalidate()
     val v = serve(stamp.gen)
     // crude bound: one entry per (session, store) — dozens in any real
     // process — but a session-cycling harness would otherwise grow it
@@ -486,29 +481,15 @@ private[graft] object ServingStore {
       build: String => Unit): DataFrame =
     served(spark, what, path, fp)(build)(spark.read.parquet(_))
 
-  /** Unconditionally build and stamp a NEW generation for `fp`, even
-    * when the sidecar already claims `fp` — for the one case where the
-    * fingerprint is current but the CONTENT is proven incomplete: the
-    * streaming-append landing race ([[graft.streaming.SigSink]]), where
-    * batch N's `postFp` stamped a fingerprint that also covered batch
-    * N+1's files while only N's rows were merged. [[ensure]] cannot
-    * repair that state (fp matches, so it serves the incomplete
-    * generation); this rebuild covers every landed file by
-    * construction. Live readers keep the previous generation for one
-    * cycle. */
-  private[graft] def rebuild(spark: SparkSession, what: String, path: String,
-      fp: Long)(build: String => Unit): DataFrame =
-    served(spark, what, path, fp, force = true)(build)(spark.read.parquet(_))
-
   /** Ensure a multi-artifact generation: `build` writes every artifact
     * into the [[Generation]] it is handed (bucketed ones through
     * [[writeBucketed]]); the served generation has its bucketed tables
     * registered in `spark`'s catalog — on every call, memo hits
     * included. */
   private[graft] def ensureGeneration(spark: SparkSession, what: String, path: String,
-      fp: Long, artifacts: Seq[Artifact], meta: Seq[(String, String)] = Nil,
-      force: Boolean = false)(build: Generation => Unit): Generation =
-    served(spark, what, path, fp, artifacts, meta, force)(
+      fp: Long, artifacts: Seq[Artifact], meta: Seq[(String, String)] = Nil)(
+      build: Generation => Unit): Generation =
+    served(spark, what, path, fp, artifacts, meta)(
       dir => build(Generation(dir, artifacts)))(
       dir => register(spark, Generation(dir, artifacts)))
 
@@ -531,35 +512,115 @@ private[graft] object ServingStore {
     newFp
   }
 
+  /** The committed generation a new one may derive from: stamped with
+    * the caller's `meta` and holding every artifact, or the derivation
+    * refuses. */
+  private def proven(what: String, path: String, artifacts: Seq[Artifact],
+      meta: Seq[(String, String)])(state: SidecarState): Stamped = state match {
+    case Stamped(_, g, m) if meta.exists { case (k, v) => !m.get(k).contains(v) } =>
+      throw new StaleStoreRefusal(
+        s"$what generation at $g is stamped ${m.toSeq.sorted.mkString(", ")} — this " +
+          s"engine writes ${meta.mkString(", ")}: its shape predates this engine, " +
+          "rebuild instead of deriving a generation from it")
+    case s @ Stamped(_, g, _) if complete(artifacts)(g) => s
+    case Stamped(_, g, _) => throw new StaleStoreRefusal(
+      s"$what generation at $g lacks a committed artifact — rebuild instead " +
+        "of deriving a generation from it")
+    case LegacyFlat => throw new StaleStoreRefusal(
+      s"$what store at $path predates the generation layout — rebuild " +
+        "instead of appending into an unproven store")
+    case Missing | Unreadable => throw new IllegalStateException(
+      s"$what sidecar at ${sidecarPath(path)} ${state.toString.toLowerCase} — run the " +
+        "full ensure rebuild instead of appending into an unproven generation")
+  }
+
+  /** Write a generation derived from `committed`, stamped `fp`: the
+    * `carry` artifacts are hard-linked, then `write(committed, next)`
+    * adds the delta's files and rewrites any artifact not carried. */
+  private def derive(committed: Stamped, fp: Long, artifacts: Seq[Artifact],
+      carry: Seq[String])(write: (Generation, Generation) => Unit): Decision =
+    Write(fp, next => {
+      carry.foreach(sub => link(committed.gen + "/" + sub, next + "/" + sub))
+      write(Generation(committed.gen, artifacts), Generation(next, artifacts))
+    })
+
   /** Derive a new generation from the committed one — the core of every
-    * append and compaction. The committed generation must be proven
-    * (stamped with the caller's `meta`, every artifact present) or the
-    * call refuses. `nextFp` maps its fingerprint to the new one: an
-    * append passes [[landed]] (its proofs), a compaction `identity`
-    * (same content). `carry` artifacts are hard-linked, and
-    * `write(committed, next)` adds the delta's files and rewrites any
-    * artifact not carried. */
+    * batch append and compaction. The committed generation must be
+    * [[proven]]. `nextFp` maps its fingerprint to the new one: an append
+    * passes [[landed]] (its proofs), a compaction `identity` (same
+    * content). */
   private[graft] def deriveGeneration(spark: SparkSession, what: String, path: String,
       artifacts: Seq[Artifact], carry: Seq[String], meta: Seq[(String, String)] = Nil)(
       nextFp: Long => Long)(write: (Generation, Generation) => Unit): Generation = {
-    val stamp = commit(spark, what, path, artifacts, meta, carry) {
-      case Stamped(_, g, m) if meta.exists { case (k, v) => !m.get(k).contains(v) } =>
-        throw new StaleStoreRefusal(
-          s"$what generation at $g is stamped ${m.toSeq.sorted.mkString(", ")} — this " +
-            s"engine writes ${meta.mkString(", ")}: its shape predates this engine, " +
-            "rebuild instead of deriving a generation from it")
-      case Stamped(f, g, _) if complete(artifacts)(g) => Write(nextFp(f))
-      case Stamped(_, g, _) => throw new StaleStoreRefusal(
-        s"$what generation at $g lacks a committed artifact — rebuild instead " +
-          "of deriving a generation from it")
-      case LegacyFlat => throw new StaleStoreRefusal(
-        s"$what store at $path predates the generation layout — rebuild " +
-          "instead of appending into an unproven store")
-      case state @ (Missing | Unreadable) => throw new IllegalStateException(
-        s"$what sidecar at ${sidecarPath(path)} ${state.toString.toLowerCase} — run the " +
-          "full ensure rebuild instead of appending into an unproven generation")
-    } { (prev, next) => write(Generation(prev.get, artifacts), Generation(next, artifacts)) }
+    val stamp = commit(spark, what, path, artifacts, meta) { state =>
+      val committed = proven(what, path, artifacts, meta)(state)
+      derive(committed, nextFp(committed.fp), artifacts, carry)(write)
+    }
     register(spark, Generation(stamp.gen, artifacts))
+  }
+
+  /** Fold a stream batch of landed corpus rows into the store, idempotent
+    * by `key` — the one stream-append path. Under the build lock the
+    * batch's keys are probed against the `served` keys of the committed
+    * ([[proven]]) generation through delta-sized broadcasts (the
+    * [[append]] key-probe convention). Every key served — a replay, a
+    * re-delivery, rows a first batch's full ensure covered — commits
+    * nothing. Otherwise `write(committed, next, missing)` adds the rows
+    * of the missing keys only, stamped with `postFp` evaluated under the
+    * lock. A fingerprint that did not advance is the landing race (an
+    * earlier batch's stamp covers this batch's files): the missing keys
+    * must then be in the landed `corpus` table, or the fold refuses with
+    * [[DeltaNotLandedRefusal]] and commits nothing; its commit drops
+    * memoized plans, as a compaction does. */
+  private[graft] def foldKeys(spark: SparkSession, what: String, path: String,
+      artifacts: Seq[Artifact], carry: Seq[String], meta: Seq[(String, String)] = Nil)(
+      batch: DataFrame, key: String, served: Generation => DataFrame,
+      postFp: () => Long, corpus: () => DataFrame)(
+      write: (Generation, Generation, DataFrame) => Unit): Unit = {
+    def among(rows: DataFrame, keys: DataFrame): DataFrame =
+      rows.select(col(key)).join(broadcast(keys), Seq(key), "left_semi").distinct()
+    val keys = batch.select(col(key)).distinct().localCheckpoint()
+    var sameFp = false
+    commit(spark, what, path, artifacts, meta) { state =>
+      val committed = proven(what, path, artifacts, meta)(state)
+      val missing = keys.join(broadcast(among(served(Generation(committed.gen, artifacts)), keys)),
+        Seq(key), "left_anti").localCheckpoint()
+      if (missing.isEmpty) Serve(committed)
+      else {
+        val fp = postFp()
+        sameFp = fp == committed.fp
+        if (sameFp && among(corpus(), missing).count() < missing.count())
+          throw new DeltaNotLandedRefusal(
+            s"$what: batch ${key}s missing from the generation at ${committed.gen} are not " +
+              s"in the landed corpus either (fingerprint still ${committed.fp}) — land the " +
+              "batch's files BEFORE folding it")
+        derive(committed, fp, artifacts, carry)((prev, next) => write(prev, next, missing))
+      }
+    }
+    if (sameFp) graft.PlanCache.invalidate()
+  }
+
+  /** A store of rows that are PURE functions of their own corpus rows
+    * (see [[append]]), unique by `key`: `rows` derives store rows from
+    * corpus rows, `merge` adds derived rows to the committed ones,
+    * `postFp` re-fingerprints the corpus after dropping its table plans
+    * and `corpus` reads the landed corpus table. The batch append and
+    * the stream fold share these expressions. */
+  private[graft] final case class RowStore(spark: SparkSession, what: String, path: String,
+      key: String, rows: DataFrame => DataFrame, postFp: () => Long, corpus: () => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame = _ unionByName _) {
+    /** Append newly landed corpus rows ([[ServingStore.append]]). */
+    def append(newRows: DataFrame, expectedFp: Long): Unit =
+      ServingStore.append(spark, what, path, expectedFp, rows(newRows), postFp, merge, Some(key))
+
+    /** Fold a stream batch of landed corpus rows ([[foldKeys]]). */
+    def fold(batch: DataFrame): Unit =
+      foldKeys(spark, what, path, Nil, carry = Nil)(
+          batch, key, g => spark.read.parquet(g.dir), postFp, corpus) { (prev, next, missing) =>
+        merge(spark.read.parquet(prev.dir),
+          rows(batch.join(broadcast(missing), Seq(key), "left_semi")))
+          .write.mode("overwrite").parquet(next.dir)
+      }
   }
 
   /** Merge-append a delta into a single-artifact store — the shared

@@ -1780,38 +1780,37 @@ object Similarity {
   private[graft] val LshSaturationBound: Long =
     (1L << PlanesPerBand).toLong * Dedup.BandBucketCap
 
-  /** Serve-or-build the LSH band-signature generation. `force`
-    * rebuilds even when the fingerprint matches — the streaming sink's
-    * repair path ([[Dedup.serveMinhashSigs]]). */
-  private[graft] def serveEmbSigs(spark: SparkSession, dir: String,
-      force: Boolean = false): DataFrame = {
-    val fp = embSigsFingerprint(spark, dir)
-    val build = (gen: String) => {
+  /** Serve-or-build the LSH band-signature generation. */
+  private[graft] def serveEmbSigs(spark: SparkSession, dir: String): DataFrame =
+    ServingStore.ensure(spark, "emb-lsh-sigs", embSigsServePath(dir),
+        embSigsFingerprint(spark, dir)) { gen =>
       Tables.invalidate(spark, dir, "embeddings")
       embSigsOf(emb(spark, dir)).write.mode("overwrite").parquet(gen)
     }
-    if (force) ServingStore.rebuild(spark, "emb-lsh-sigs", embSigsServePath(dir), fp)(build)
-    else ServingStore.ensure(spark, "emb-lsh-sigs", embSigsServePath(dir), fp)(build)
-  }
 
-  /** Incremental ingest for the band-signature store: a signature is a
-    * pure per-vector function (fixed hyperplanes), so the delta's
-    * projection alone produces exactly the rows a full rebuild over
-    * old ∪ delta adds — the [[ServingStore.append]] protocol. The cell
+  /** The band-signature store's delta expressions over raw
+    * embeddings-table rows: a signature is a pure per-vector function
+    * (fixed hyperplanes), so the delta's projection alone produces
+    * exactly the rows a full rebuild over old ∪ delta adds. The cell
     * ASSIGNMENT store has no append on purpose: its survival masks
     * derive from the corpus-global hot-cell census, so a delta can
-    * flip any vector's mask and the append IS the rebuild. `newVecs`
-    * are raw embeddings-table rows already landed in `dir`. */
-  def appendEmbSigs(spark: SparkSession, dir: String, newVecs: DataFrame,
-      expectedFp: Long): Unit =
-    ServingStore.append(spark, "emb-lsh-sigs", embSigsServePath(dir), expectedFp,
-      delta = embSigsOf(
-        newVecs.select(col("vec_id"), col("embedding").as("vec"))),
+    * flip any vector's mask and the append IS the rebuild. Shared by
+    * [[appendEmbSigs]] and the stream fold ([[graft.streaming.SigSink]]). */
+  private[graft] def embSigRows(spark: SparkSession, dir: String): ServingStore.RowStore =
+    ServingStore.RowStore(spark, "emb-lsh-sigs", embSigsServePath(dir), "vec_id",
+      rows = v => embSigsOf(v.select(col("vec_id"), col("embedding").as("vec"))),
       postFp = () => {
         Tables.invalidate(spark, dir, "embeddings")
         embSigsFingerprint(spark, dir)
       },
-      uniqueKey = Some("vec_id"))
+      corpus = () => Tables.embeddings(spark, dir))
+
+  /** Incremental ingest for the band-signature store — the
+    * [[ServingStore.append]] protocol over [[embSigRows]]. `newVecs` are
+    * raw embeddings-table rows already landed in `dir`. */
+  def appendEmbSigs(spark: SparkSession, dir: String, newVecs: DataFrame,
+      expectedFp: Long): Unit =
+    embSigRows(spark, dir).append(newVecs, expectedFp)
 
   /** Build phase: one codegen'd hyperplane projection over the corpus
     * scan — (vec_id, vec, bks). */

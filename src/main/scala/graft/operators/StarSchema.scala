@@ -302,8 +302,8 @@ object StarSchema {
     * serve-path name hashes it irreversibly; the janitor reads it back)
     * and the layout version, which the fingerprint also covers — an
     * append into a layout of an older table shape must refuse even
-    * without a pre-delta fingerprint to compare (the FactSink repair
-    * path passes none). */
+    * without a pre-delta fingerprint to compare (the stream fold,
+    * [[foldFactLayout]], has none). */
   private def factMeta(dir: String): Seq[(String, String)] =
     Seq("dir" -> dir, "ver" -> FactLayoutVersion.toString)
 
@@ -334,15 +334,12 @@ object StarSchema {
     * every subsequent orderkey join between them is bucket-local —
     * zero exchanges, zero sorts, paid once at layout time. A
     * [[ServingStore]] generation keyed by [[factFingerprint]] and
-    * stamped with [[factMeta]]. `force` rebuilds even when the
-    * fingerprint matches — the streaming sink's repair path for a
-    * generation whose fp covers files whose rows were never appended
-    * (the SigSink landing race). */
+    * stamped with [[factMeta]]. */
   private[graft] def ensureFactLayout(spark: SparkSession, dir: String,
-      numBuckets: Int = FactBuckets, force: Boolean = false): ServingStore.Generation =
+      numBuckets: Int = FactBuckets): ServingStore.Generation =
     ServingStore.ensureGeneration(spark, "fact-layout", factServePath(dir),
         factFingerprint(spark, dir, numBuckets), factArtifacts(dir, numBuckets),
-        meta = factMeta(dir), force = force) { gen =>
+        meta = factMeta(dir)) { gen =>
       // the dims too (r16 ADVICE): the rebuild BAKES region/nation
       // attribution in via conformedDim — an in-place dim rewrite (the
       // very staleness this fingerprint exists to catch) must not read
@@ -481,83 +478,116 @@ object StarSchema {
     ServingStore.deriveGeneration(spark, "fact-layout", factServePath(dir),
         factArtifacts(dir, numBuckets), carry = factArtifacts(dir, numBuckets).map(_.sub),
         meta = factMeta(dir))(
-      ServingStore.landed("fact-layout", factServePath(dir), expectedFp, () => {
-        // dims included (r16 ADVICE): the delta's denormalized fact
-        // rows read conformedDim — which must see the CURRENT dim
-        // files, not a memoized plan over the pre-delta listing
-        Seq("lineitem", "orders", "customer", "nation", "region", "part")
-          .foreach(Tables.invalidate(spark, dir, _))
-        factFingerprint(spark, dir, numBuckets)
-      })) { (prev, next) =>
-      val one = lit(1).cast(DecimalType(18, 2))
-      // one evaluation of each delta feeds the probes AND the writes
-      val o = newOrders
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("o_totalprice"))
-        .localCheckpoint(eager = false)
-      val li = newLineitem
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          dec4(dec2(col("l_extendedprice")) * (one - dec2(col("l_discount")))).as("rev"),
-          dec2(col("l_extendedprice")).as("price"),
-          col("l_extendedprice").as("xprice"),
-          col("l_shipdate"))
-        .localCheckpoint(eager = false)
-      // order-completeness probes (delta-sized broadcasts — the
-      // ServingStore.append key-probe convention: checkpointed frames
-      // carry no stats, so hint or the probe sort-merges the store)
-      val deltaKeys = broadcast(o.select(col("o_orderkey")).distinct())
-      require(li.join(deltaKeys, col("l_orderkey") === col("o_orderkey"), "left_anti")
-        .isEmpty,
-        "delta lineitem rows reference orderkeys outside the delta orders — " +
-          "the delta is not order-complete; rebuild with ensureFactLayout")
-      if (!spark.read.parquet(prev.path("orders")).join(deltaKeys, Seq("o_orderkey")).isEmpty)
-        throw new ServingStore.KeysAlreadyPresentRefusal(
-          "delta orderkeys already present in the served layout — the same " +
-            "rows were appended twice; rebuild with ensureFactLayout")
-      // delta partials, same expressions as the build (bit-equal rollups)
-      val liRev = li.repartition(numBuckets, col("l_orderkey"))
-        .groupBy(col("l_orderkey"))
-        .agg(sum(col("rev")).cast(DecimalType(18, 4)).as("rev"), cnt.as("n"))
-        .localCheckpoint(eager = false) // feeds the bucketed append AND the fact join
-      val liMonth = li.repartition(numBuckets, col("l_orderkey"))
-        .groupBy(col("l_orderkey"),
-          year(col("l_shipdate")).as("ship_yy"), month(col("l_shipdate")).as("ship_mm"))
-        .agg(sum(col("price")).cast(DecimalType(18, 2)).as("price"))
-        .localCheckpoint(eager = false)
-      ServingStore.writeBucketed(liRev, next, "lirev")
-      ServingStore.writeBucketed(liMonth, next, "limonth")
-      ServingStore.writeBucketed(o.repartition(numBuckets, col("o_orderkey")), next, "orders")
-      // denormalized fact deltas: the delta-local join (delta orders
-      // broadcast against delta partials) + the conformed dims
-      val dim = conformedDim(spark, dir)
-      liRev.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
-        .join(dim, col("o_custkey") === col("c_custkey"))
-        .select(col("r_name"), year(col("o_orderdate")).as("order_year"),
-          col("rev"), col("n"))
-        .write.mode("append").parquet(next.path("fact"))
-      liMonth.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
-        .join(dim, col("o_custkey") === col("c_custkey"))
-        .select(col("c_nationkey").as("nationkey"),
-          col("ship_yy"), col("ship_mm"), col("price"))
-        .write.mode("append").parquet(next.path("monthfact"))
-      // delta transaction-grain fact rows (same expressions as the build)
-      val partDim = broadcast(
-        Tables.part(spark, dir).select(col("p_partkey"), col("p_brand")))
-      li.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
-        .join(dim, col("o_custkey") === col("c_custkey"))
-        .join(partDim, col("l_partkey") === col("p_partkey"))
-        .select(txFactCols: _*)
-        .write.mode("append").parquet(next.path("txfact"))
-      // delta nation partials: decimal-associative, one more partial row
-      // per nation lands next to the existing ones
-      o.join(dim, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_nationkey"), col("n_name"))
-        .agg(sum(dec2(col("o_totalprice"))).cast(DecimalType(18, 2)).as("total_local"),
-          cnt.as("n_orders"))
-        .coalesce(1)
-        .write.mode("append").parquet(next.path("nationfact"))
-    }
+      ServingStore.landed("fact-layout", factServePath(dir), expectedFp,
+        () => landedFactFingerprint(spark, dir, numBuckets)))(
+      writeFactDelta(spark, dir, newLineitem, newOrders, numBuckets))
     ()
+  }
+
+  /** The fact fingerprint after a delta landed, evaluated after dropping
+    * the table plans. Dims included (r16 ADVICE): the delta's
+    * denormalized fact rows read conformedDim — which must see the
+    * CURRENT dim files, not a memoized plan over the pre-delta listing. */
+  private def landedFactFingerprint(spark: SparkSession, dir: String, numBuckets: Int): Long = {
+    Seq("lineitem", "orders", "customer", "nation", "region", "part")
+      .foreach(Tables.invalidate(spark, dir, _))
+    factFingerprint(spark, dir, numBuckets)
+  }
+
+  /** Fold a stream batch of newly landed ORDERS rows into the fact
+    * layout, idempotent by orderkey ([[ServingStore.foldKeys]]): only the
+    * orders the committed generation does not serve are folded, with
+    * their lineitems resolved from the landed lineitem table (the ingest
+    * lands an order's lineitems with the order, so the resolved delta is
+    * order-complete by construction), through the same delta writes as
+    * [[appendFactLayout]]. */
+  private[graft] def foldFactLayout(spark: SparkSession, dir: String, newOrders: DataFrame,
+      numBuckets: Int = FactBuckets): Unit =
+    ServingStore.foldKeys(spark, "fact-layout", factServePath(dir),
+        factArtifacts(dir, numBuckets), carry = factArtifacts(dir, numBuckets).map(_.sub),
+        meta = factMeta(dir))(
+        newOrders, "o_orderkey", g => spark.read.parquet(g.path("orders")),
+        () => landedFactFingerprint(spark, dir, numBuckets), () => Tables.orders(spark, dir)) {
+      (prev, next, missing) =>
+        val keys = broadcast(missing)
+        writeFactDelta(spark, dir,
+          Tables.lineitem(spark, dir).join(keys, col("l_orderkey") === col("o_orderkey"), "left_semi"),
+          newOrders.join(keys, Seq("o_orderkey"), "left_semi"), numBuckets)(prev, next)
+    }
+
+  /** Write a delta's partials and denormalized fact rows into `next`
+    * beside the carried files of the committed generation `prev`, after
+    * the order-completeness and double-append probes. */
+  private def writeFactDelta(spark: SparkSession, dir: String,
+      newLineitem: DataFrame, newOrders: DataFrame, numBuckets: Int)(
+      prev: ServingStore.Generation, next: ServingStore.Generation): Unit = {
+    val one = lit(1).cast(DecimalType(18, 2))
+    // one evaluation of each delta feeds the probes AND the writes
+    val o = newOrders
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+        col("o_totalprice"))
+      .localCheckpoint(eager = false)
+    val li = newLineitem
+      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
+        dec4(dec2(col("l_extendedprice")) * (one - dec2(col("l_discount")))).as("rev"),
+        dec2(col("l_extendedprice")).as("price"),
+        col("l_extendedprice").as("xprice"),
+        col("l_shipdate"))
+      .localCheckpoint(eager = false)
+    // order-completeness probes (delta-sized broadcasts — the
+    // ServingStore.append key-probe convention: checkpointed frames
+    // carry no stats, so hint or the probe sort-merges the store)
+    val deltaKeys = broadcast(o.select(col("o_orderkey")).distinct())
+    require(li.join(deltaKeys, col("l_orderkey") === col("o_orderkey"), "left_anti")
+      .isEmpty,
+      "delta lineitem rows reference orderkeys outside the delta orders — " +
+        "the delta is not order-complete; rebuild with ensureFactLayout")
+    if (!spark.read.parquet(prev.path("orders")).join(deltaKeys, Seq("o_orderkey")).isEmpty)
+      throw new ServingStore.KeysAlreadyPresentRefusal(
+        "delta orderkeys already present in the served layout — the same " +
+          "rows were appended twice; rebuild with ensureFactLayout")
+    // delta partials, same expressions as the build (bit-equal rollups)
+    val liRev = li.repartition(numBuckets, col("l_orderkey"))
+      .groupBy(col("l_orderkey"))
+      .agg(sum(col("rev")).cast(DecimalType(18, 4)).as("rev"), cnt.as("n"))
+      .localCheckpoint(eager = false) // feeds the bucketed append AND the fact join
+    val liMonth = li.repartition(numBuckets, col("l_orderkey"))
+      .groupBy(col("l_orderkey"),
+        year(col("l_shipdate")).as("ship_yy"), month(col("l_shipdate")).as("ship_mm"))
+      .agg(sum(col("price")).cast(DecimalType(18, 2)).as("price"))
+      .localCheckpoint(eager = false)
+    ServingStore.writeBucketed(liRev, next, "lirev")
+    ServingStore.writeBucketed(liMonth, next, "limonth")
+    ServingStore.writeBucketed(o.repartition(numBuckets, col("o_orderkey")), next, "orders")
+    // denormalized fact deltas: the delta-local join (delta orders
+    // broadcast against delta partials) + the conformed dims
+    val dim = conformedDim(spark, dir)
+    liRev.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
+      .join(dim, col("o_custkey") === col("c_custkey"))
+      .select(col("r_name"), year(col("o_orderdate")).as("order_year"),
+        col("rev"), col("n"))
+      .write.mode("append").parquet(next.path("fact"))
+    liMonth.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
+      .join(dim, col("o_custkey") === col("c_custkey"))
+      .select(col("c_nationkey").as("nationkey"),
+        col("ship_yy"), col("ship_mm"), col("price"))
+      .write.mode("append").parquet(next.path("monthfact"))
+    // delta transaction-grain fact rows (same expressions as the build)
+    val partDim = broadcast(
+      Tables.part(spark, dir).select(col("p_partkey"), col("p_brand")))
+    li.join(broadcast(o), col("l_orderkey") === col("o_orderkey"))
+      .join(dim, col("o_custkey") === col("c_custkey"))
+      .join(partDim, col("l_partkey") === col("p_partkey"))
+      .select(txFactCols: _*)
+      .write.mode("append").parquet(next.path("txfact"))
+    // delta nation partials: decimal-associative, one more partial row
+    // per nation lands next to the existing ones
+    o.join(dim, col("o_custkey") === col("c_custkey"))
+      .groupBy(col("c_nationkey"), col("n_name"))
+      .agg(sum(dec2(col("o_totalprice"))).cast(DecimalType(18, 2)).as("total_local"),
+        cnt.as("n_orders"))
+      .coalesce(1)
+      .write.mode("append").parquet(next.path("nationfact"))
   }
 
   /** Compact the fact layout back to ONE file per bucket/partition —

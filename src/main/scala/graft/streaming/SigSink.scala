@@ -1,16 +1,15 @@
 package graft.streaming
 
 import graft.operators.{Dedup, ServingStore, Similarity}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Streaming twin for the per-row SIGNATURE stores (r13 verdict #7) —
   * the ingest-side discipline the batch appenders
   * ([[Dedup.appendMinhashSigs]], [[Dedup.appendSimhashSigs]],
   * [[Similarity.appendEmbSigs]]) leave to a caller: a `foreachBatch`
   * sink that folds each micro-batch of newly landed corpus rows into
-  * the SAME fingerprint-keyed generation, through the same
-  * [[ServingStore.append]] merge protocol, so a streamed store is
+  * the SAME fingerprint-keyed generation, through the same delta
+  * expressions ([[ServingStore.RowStore]]), so a streamed store is
   * bit-equal to the batch-append store on the same arrival order
   * (spec-pinned) and every serve path reads it identically.
   *
@@ -19,36 +18,27 @@ import org.apache.spark.sql.functions.col
   * micro-batch is exactly the rows of newly landed files, which is the
   * appenders' precondition (`newDocs must already have landed`).
   *
-  * Replay/idempotency: a `_stream_batch` marker next to the store
-  * records the last applied batch id — replays skip. A crash between
-  * a completed merge and the marker write self-heals through the
-  * protocol's own TYPED refusals on the replay
-  * ([[graft.operators.ServingStore.KeysAlreadyPresentRefusal]] — the
-  * merge landed — and
-  * [[graft.operators.ServingStore.DeltaNotLandedRefusal]]). The first
-  * batch against a store-less corpus runs the full ensure instead of
-  * an append — it covers every file landed so far, including rows the
-  * source has not batched yet; later batches of those rows fold into
-  * the refusals above.
-  *
-  * A refusal is NOT blindly treated as benign (the r14 review): under
-  * continuous ingest, batch N+1's files can land during batch N's
-  * append window, so N's `postFp` stamps a fingerprint that COVERS
-  * N+1's files while only N's rows were merged — N+1's own append is
-  * then refused (`fingerprint unchanged`) even though its rows are
-  * missing from the store. Every refusal therefore verifies coverage:
-  * anti-join the batch's keys against the served generation; zero
-  * missing → genuinely benign, mark applied; any missing → a FORCED
-  * full rebuild (same-fp generation swap,
-  * [[graft.operators.ServingStore.rebuild]]) folds them in before the
-  * batch is marked applied.
+  * A batch folds idempotently by key, in one generation commit
+  * ([[ServingStore.foldKeys]]): under the store's build lock its keys
+  * are probed against the committed generation, and only the rows of
+  * keys it does not serve are folded, stamped with the corpus
+  * fingerprint computed under the lock. There is no batch marker: a
+  * replay, a re-delivery under a new batch id, or rows the first
+  * batch's full ensure already covered find every key served and
+  * commit nothing. The same-window landing race — batch N+1's files
+  * land during batch N's fold, so N's stamp covers them while only N's
+  * rows were folded — is one more fold: N+1's keys are missing, the
+  * fingerprint is unchanged, and the fold adds its rows once it proved
+  * them landed in the corpus table. A batch whose rows are not in the
+  * corpus is refused ([[ServingStore.DeltaNotLandedRefusal]]) and
+  * commits nothing. The first batch against a store with no stamp runs
+  * the full ensure, which covers every file landed so far.
   *
   * DISCLOSED RELAXATION: the batch appenders take an `expectedFp`
   * snapshotted BEFORE the delta landed, proving no out-of-band writer
   * raced the append. A streaming sink cannot snapshot a pre-landing
-  * fingerprint (the file source only fires AFTER files land), so it
-  * passes the STORED fp as expected — the staleness proof degrades to
-  * "the fingerprint advanced and none of the delta's keys are already
+  * fingerprint (the file source only fires AFTER files land), so the
+  * fold's staleness proof is "none of the folded keys is already
   * served", and the single-ingest-writer contract carries the rest
   * (the same residual [[ServingStore.append]]'s docstring documents
   * for out-of-band landings between snapshot and append). */
@@ -57,69 +47,24 @@ object SigSink {
   @transient private lazy val logger =
     org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def markerPath(store: String): java.nio.file.Path =
-    java.nio.file.Paths.get(store + "_stream_batch")
-
-  /** The last batch id a sink applied to `store` (this sink's and
-    * [[FactSink]]'s `_stream_batch` marker). */
-  private[streaming] def lastApplied(store: String): Option[Long] =
-    scala.util.Try(new String(java.nio.file.Files.readAllBytes(markerPath(store)),
-      "UTF-8").trim.toLong).toOption
-
-  /** Record `batchId` as applied to `store`, replacing the marker whole
-    * (temporary file renamed into place): a kill mid-write leaves the
-    * previous id, never a truncated one that reads as no marker or as an
-    * older batch and sends applied batches back through the append. */
-  private[streaming] def markApplied(store: String, batchId: Long): Unit =
-    ServingStore.writeAtomically(markerPath(store), batchId.toString.getBytes("UTF-8"))
-
-  /** One micro-batch against one signature store — the testable core
-    * shared by the three sinks. `batchKeys` are the batch's distinct
-    * unique-key rows (one `keyCol` column), used to verify coverage
-    * when the protocol refuses the append; `serve(force)` is the
-    * store's serve-or-build (force = same-fp repair rebuild); `append`
-    * folds the batch rows given the stored fp. */
-  private[graft] def applySigBatch(spark: SparkSession, batchId: Long,
-      what: String, store: String, batchKeys: DataFrame, keyCol: String)(
-      serve: Boolean => DataFrame)(append: Long => Unit): Unit = {
-    if (lastApplied(store).exists(_ >= batchId)) {
-      logger.info(s"$what sig sink: skipping replayed batch $batchId")
-      return
-    }
-    // a refused append only marks the batch applied after proving the
-    // batch's keys are actually served; otherwise the same-window
-    // landing race (docstring) would silently drop the batch forever
-    def verifyCoveredOrRepair(refusal: String): Unit = {
-      val served = serve(false)
-      val missing = batchKeys.select(col(keyCol)).distinct()
-        .join(served.select(col(keyCol)), Seq(keyCol), "left_anti")
-      if (missing.isEmpty)
-        logger.warn(s"$what sig sink: batch $batchId append refused " +
-          s"($refusal) and all batch keys verified served — marking applied")
-      else {
-        logger.warn(s"$what sig sink: batch $batchId append refused " +
-          s"($refusal) but some batch keys are MISSING from the served " +
-          "generation (same-window landing race) — running the forced " +
-          "full rebuild before marking applied")
-        serve(true)
-      }
-    }
-    ServingStore.readSidecar(what, store) match {
-      case None => serve(false)
-      case Some((storedFp, _)) =>
-        try append(storedFp)
+  /** One micro-batch against one store — the dispatch every signature
+    * and fact sink shares: a stamped store takes `fold`; a store with no
+    * stamp, or one of an older shape (the fold's
+    * [[ServingStore.StaleStoreRefusal]]), takes the full `ensure` over
+    * the landed corpus, which covers this batch's landed files. */
+  private[streaming] def applyBatch(what: String, store: String, batchId: Long)(
+      ensure: => Any)(fold: => Unit): Unit =
+    ServingStore.sidecarState(what, store) match {
+      case _: ServingStore.Stamped =>
+        try fold
         catch {
-          // dispatch on the protocol's TYPES, never the message text —
-          // a rewording must not turn a benign replay into a
-          // stream-killing exception (r14 review)
-          case _: ServingStore.KeysAlreadyPresentRefusal =>
-            verifyCoveredOrRepair("keys already present")
-          case _: ServingStore.DeltaNotLandedRefusal =>
-            verifyCoveredOrRepair("fingerprint unchanged")
+          case e: ServingStore.StaleStoreRefusal =>
+            logger.warn(s"$what sink: batch $batchId fold refused " +
+              s"(${e.getMessage}) — rebuilding the store at the current shape")
+            ensure
         }
+      case _ => ensure
     }
-    markApplied(store, batchId)
-  }
 
   /** foreachBatch sink folding arriving documents' minhash signatures
     * into the minhash sig generation at `dir`'s serving warehouse. */
@@ -133,10 +78,8 @@ object SigSink {
   private[graft] def applyMinhashBatch(batch: DataFrame, batchId: Long,
       dir: String): Unit = {
     val s = batch.sparkSession
-    applySigBatch(s, batchId, "minhash-sigs",
-      Similarity.servePath("minhash_sigs_", dir), batch, "doc_id")(
-      force => Dedup.serveMinhashSigs(s, dir, force))(
-      fp => Dedup.appendMinhashSigs(s, dir, batch, fp))
+    val rows = Dedup.minhashSigRows(s, dir)
+    applyBatch(rows.what, rows.path, batchId)(Dedup.serveMinhashSigs(s, dir))(rows.fold(batch))
   }
 
   /** foreachBatch sink for the plain-simhash sig generation. (The IDF
@@ -153,16 +96,14 @@ object SigSink {
   private[graft] def applySimhashBatch(batch: DataFrame, batchId: Long,
       dir: String): Unit = {
     val s = batch.sparkSession
-    applySigBatch(s, batchId, "simhash-sigs",
-      Similarity.servePath("simhash_sigs_", dir), batch, "doc_id")(
-      force => Dedup.serveSimhashSigs(s, dir, force))(
-      fp => Dedup.appendSimhashSigs(s, dir, batch, fp))
+    val rows = Dedup.simhashSigRows(s, dir)
+    applyBatch(rows.what, rows.path, batchId)(Dedup.serveSimhashSigs(s, dir))(rows.fold(batch))
   }
 
   /** foreachBatch sink for the embedding LSH band-signature
     * generation over a stream of raw embeddings-table rows. (The cell
     * ASSIGNMENT store stays batch-only: its survival masks derive from
-    * the corpus-global hot-cell census — [[Similarity.appendEmbSigs]]'s
+    * the corpus-global hot-cell census — [[Similarity.embSigRows]]'s
     * validity note.) */
   def embSink(vecs: DataFrame, dir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[Row] =
@@ -174,9 +115,7 @@ object SigSink {
   private[graft] def applyEmbBatch(batch: DataFrame, batchId: Long,
       dir: String): Unit = {
     val s = batch.sparkSession
-    applySigBatch(s, batchId, "emb-lsh-sigs", Similarity.embSigsServePath(dir),
-      batch, "vec_id")(
-      force => Similarity.serveEmbSigs(s, dir, force))(
-      fp => Similarity.appendEmbSigs(s, dir, batch, fp))
+    val rows = Similarity.embSigRows(s, dir)
+    applyBatch(rows.what, rows.path, batchId)(Similarity.serveEmbSigs(s, dir))(rows.fold(batch))
   }
 }

@@ -598,6 +598,17 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dirS = java.nio.file.Files.createTempDirectory("graftsigsink").toString
     land(dirS, b0, first = true)
     SigSink.applyMinhashBatch(b0, 0, dirS)
+    // batch 1 delivered before its files land: its keys are missing from
+    // the store AND from the corpus, so no generation can hold its rows —
+    // the fold refuses it and commits nothing, rather than take it as
+    // applied; delivered again once landed, it folds
+    val store = operators.Similarity.servePath("minhash_sigs_", dirS)
+    val stamp0 = operators.ServingStore.readSidecar("minhash-sigs", store)
+    intercept[operators.ServingStore.DeltaNotLandedRefusal] {
+      SigSink.applyMinhashBatch(d1, 1, dirS)
+    }
+    assert(operators.ServingStore.readSidecar("minhash-sigs", store) == stamp0,
+      "a refused batch committed a generation")
     land(dirS, d1, first = false)
     SigSink.applyMinhashBatch(d1, 1, dirS)
     land(dirS, d2, first = false)
@@ -625,9 +636,8 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(streamed == sigsOf(dirC),
       "streamed sig store diverged from a cold full rebuild")
 
-    // replay of an applied batch id is a marker-skip no-op; a NEW batch
-    // id re-delivering already-folded rows self-heals through the
-    // protocol's own refusal (no new files -> fingerprint unchanged)
+    // replay of an applied batch id, and a NEW batch id re-delivering
+    // already-folded rows, find every key served and commit nothing
     SigSink.applyMinhashBatch(d2, 2, dirS)
     SigSink.applyMinhashBatch(d2, 3, dirS)
     assert(sigsOf(dirS) == streamed, "replayed/re-delivered batch changed the store")
@@ -653,17 +663,40 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     val served1 = Dedup.serveMinhashSigs(spark, dir)
     assert(served1.join(d2.select(col("doc_id")), Seq("doc_id")).isEmpty,
       "precondition lost: batch 2's rows should be missing after batch 1's append")
-    // batch 2's own append sees no new files (fingerprint unchanged) —
-    // the sink must detect the missing keys and run the repair rebuild,
-    // NOT mark the batch applied with its rows absent
+    // a prepared dedup frame memoized between the two batches: batch 2
+    // commits under an unchanged corpus stamp, which the plan cache
+    // cannot see by itself
+    val dedup = SparkEntry.queries("q_dedup_minhash")
+    dedup(spark, dir)
+    // batch 2 sees no new files (fingerprint unchanged) — the sink must
+    // fold its missing keys, NOT take the batch as applied with its rows
+    // absent
     SigSink.applyMinhashBatch(d2, 2, dir)
     val dirC = java.nio.file.Files.createTempDirectory("graftsigracecold").toString
     all.write.mode("overwrite").parquet(dirC + "/documents.parquet")
-    assert(tools.Golden.checksum(Dedup.serveMinhashSigs(spark, dir)) ==
-      tools.Golden.checksum(Dedup.serveMinhashSigs(spark, dirC)),
+    val cold = tools.Golden.checksum(Dedup.serveMinhashSigs(spark, dirC))
+    assert(tools.Golden.checksum(Dedup.serveMinhashSigs(spark, dir)) == cold,
       "repaired store diverged from a cold rebuild over the full corpus")
-    // and the marker advanced: a replay of batch 2 is a no-op skip
+    assert(tools.Golden.checksum(dedup(spark, dir)) == tools.Golden.checksum(dedup(spark, dirC)),
+      "the prepared dedup frame still serves the generation before the fold")
+    // a replay of batch 2 finds every key served: no-op
     SigSink.applyMinhashBatch(d2, 2, dir)
+    assert(tools.Golden.checksum(Dedup.serveMinhashSigs(spark, dir)) == cold,
+      "replayed batch changed the store")
+    // partial overlap: the race the other way round — batch 1 delivers
+    // d2 and its stamp covers d1's files; batch 2 re-delivers d2 with d1,
+    // and only d1's rows fold
+    val dirP = java.nio.file.Files.createTempDirectory("graftsigoverlap").toString
+    b0.write.mode("overwrite").parquet(dirP + "/documents.parquet")
+    SigSink.applyMinhashBatch(b0, 0, dirP)
+    d1.write.mode("append").parquet(dirP + "/documents.parquet")
+    d2.write.mode("append").parquet(dirP + "/documents.parquet")
+    SigSink.applyMinhashBatch(d2, 1, dirP)
+    SigSink.applyMinhashBatch(d1.unionByName(d2), 2, dirP)
+    val overlap = Dedup.serveMinhashSigs(spark, dirP)
+    assert(overlap.count() == all.count(), "partial-overlap batch folded a served doc twice")
+    assert(tools.Golden.checksum(overlap) == cold,
+      "partial-overlap fold diverged from a cold rebuild over the full corpus")
   }
 
   test("media admission refuses a hamming-drifted twin exact keys would admit") {
@@ -2868,9 +2901,9 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     // OLDER-SHAPE refusals: a layout whose table set
     // predates this engine must never absorb a delta — appending would
     // create the newer tables with delta-only rows behind a fresh
-    // stamp. Must refuse structurally, without expectedFp (the FactSink
-    // repair path passes none), and with the typed refusal FactSink
-    // repairs on: (1) a generation stamped with an older layout version
+    // stamp. Must refuse structurally, without expectedFp (the stream
+    // fold has none), and with the typed refusal FactSink rebuilds on:
+    // (1) a generation stamped with an older layout version
     operators.ServingStore.writeSidecar(layoutPath, fpBefore, gen,
       Seq("dir" -> dirA, "ver" -> (StarSchema.FactLayoutVersion - 1).toString))
     land(dirA, "orders", oDelta.limit(0), first = false) // any landed change
@@ -2879,6 +2912,9 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(older.getMessage.contains("shape predates"),
       s"unexpected refusal: ${older.getMessage}")
+    intercept[operators.ServingStore.StaleStoreRefusal] {
+      StarSchema.foldFactLayout(spark, dirA, oDelta.limit(0))
+    }
     // (2) a pre-generation sidecar carrying neither version nor generation
     spark.range(1).select(lit(fpBefore).as("fp"))
       .coalesce(1).write.mode("overwrite").parquet(layoutPath + "_model")
@@ -3049,13 +3085,12 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       FactSink.applyFactBatch(oB(i), i, dirS)
     }
     assert(sig(dirS) == cold, "streamed fact layout diverged from a cold rebuild")
-    // replay of an applied batch id is a marker-skip no-op
+    // replay of an applied batch id finds every orderkey served: no-op
     FactSink.applyFactBatch(oB(2), 2, dirS)
     assert(sig(dirS) == cold, "replayed batch changed the layout")
     // the same-window landing race: batch 2's files land DURING batch
-    // 1's append window — batch 1's stamp covers them, batch 2's own
-    // append is refused, and the sink must repair via forced rebuild,
-    // not mark the batch applied with its rows missing
+    // 1's fold — batch 1's stamp covers them, and batch 2 must still
+    // fold its orders, not be taken as applied with its rows missing
     val dirR = java.nio.file.Files.createTempDirectory("graftfactsinkrace").toString
     Seq("customer", "nation", "region", "part").foreach(copy(_, dirR))
     land(dirR, "orders", oB(0), first = true)
@@ -3066,9 +3101,36 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     land(dirR, "orders", oB(2), first = false)
     land(dirR, "lineitem", liB(2), first = false)
     FactSink.applyFactBatch(oB(1), 1, dirR)
+    // every data file of a generation, by path within it, with its inode
+    def files(gen: String): Map[String, AnyRef] = {
+      val root = java.nio.file.Paths.get(gen)
+      val s = java.nio.file.Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .filterNot(p => p.getFileName.toString.startsWith("_") ||
+            p.getFileName.toString.startsWith("._"))
+          .map(p => root.relativize(p).toString ->
+            java.nio.file.Files.getAttribute(p, "unix:ino"))
+          .toMap
+      } finally s.close()
+    }
+    val layout = StarSchema.factServePath(dirR)
+    val (_, gen1) = operators.ServingStore.readSidecar("fact-layout", layout).get
+    val before = files(gen1)
     FactSink.applyFactBatch(oB(2), 2, dirR)
     assert(sig(dirR) == cold,
       "landing-race repair diverged from a cold rebuild over the full corpus")
+    // the race folds batch 2 into the committed layout: every file of
+    // the previous generation is carried into the new one by hard link
+    val (_, gen2) = operators.ServingStore.readSidecar("fact-layout", layout).get
+    val after = files(gen2)
+    val rewritten = before.keys.filterNot(f => after.get(f).contains(before(f))).toSeq
+    val nRewritten = rewritten.size
+    assert(before.nonEmpty && gen2 != gen1, "the race batch committed no generation")
+    assert(nRewritten == 0,
+      s"landing-race fold did not carry $nRewritten of ${before.size} files " +
+        s"of the previous generation, e.g. ${rewritten.take(2).mkString(", ")}")
   }
 
   test("unit parsing yields NULL factor for unparseable unit strings") {
