@@ -11,8 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * problem, and this is the classic answer: memoize the built DataFrame
   * per (session, query, corpus dir), guarded by a corpus STAMP (entry
   * count + name / length / nanosecond-mtime fold over the dir's parquet
-  * payload — the same driver-side listing the scan planner does,
-  * ~0.1 ms). A corpus swap changes the stamp and misses; a dir whose
+  * payload — [[Tables.listingStamp]], the fold table plans are keyed
+  * by, ~0.1 ms). A corpus swap changes the stamp and misses; a dir whose
   * listing yields NO parquet tables never caches at all (a layout the
   * stamp cannot see must not be served a constant-stamp plan).
   *
@@ -31,9 +31,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * re-executes in full; only CONSTRUCTION is cached. Serving-store
   * generations are fingerprint-keyed by the same corpus bytes this
   * stamp covers, so only a commit under an unchanged corpus — a
-  * compaction or a stream fold under an unchanged fingerprint — can
-  * leave a memoized plan on a superseded generation. That generation stays readable for one more
-  * commit only, so those sites call [[invalidate]]. */
+  * compaction, an IVF refresh, a stream fold under an unchanged
+  * fingerprint, a same-fingerprint repair — can leave a memoized plan
+  * on a superseded generation. That generation stays readable for one
+  * more commit only, so the store commit
+  * ([[graft.operators.ServingStore]]) calls [[invalidate]] whenever it
+  * stamps the fingerprint already committed. */
 object PlanCache {
   /** Upper bound on sessions with retained plans; evicting the eldest
     * drops the only cache-side strong reference to that session. */
@@ -66,53 +69,19 @@ object PlanCache {
       id
     }
 
-  /** Stamp sentinel: the listing saw no parquet payload, so corpus
-    * change is invisible to the stamp — never cache under it. */
-  private[graft] val NoStamp = Long.MinValue
-
-  /** Fold (name, length, nanosecond mtime) over the dir's parquet
-    * payload plus the total entry count — one driver-side listing, the
-    * levels the scan planner reads. Nanosecond mtimes (where the
-    * filesystem stores them) close the same-name/same-length in-place
-    * overwrite within one millisecond tick; the entry count closes
-    * deletions that a pure fold over survivors could alias. */
-  private[graft] def dirStamp(dir: String): Long = {
-    var n = 0L
-    def fold(h0: Long, f: java.io.File): Long = {
-      n += 1
-      val mtime =
-        try java.nio.file.Files
-          .getLastModifiedTime(f.toPath)
-          .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-        catch { case _: java.io.IOException => f.lastModified() }
-      val h = ((h0 * 31 + f.getName.hashCode) * 31 + f.length()) * 31 + mtime
-      if (f.isDirectory) {
-        val c = f.listFiles()
-        if (c == null) h else c.sortBy(_.getName).foldLeft(h)(fold)
-      } else h
-    }
-    val root = new java.io.File(dir)
-    val files = Option(root.listFiles()).getOrElse(Array.empty)
-    val tables = files.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    if (tables.isEmpty) NoStamp
-    else {
-      val h = tables.foldLeft(1125899906842597L)(fold)
-      val stamped = h * 31 + n
-      if (stamped == NoStamp) stamped + 1 else stamped
-    }
-  }
+  /** [[Tables.listingStamp]] over the dir's top-level `*.parquet`
+    * tables: [[Tables.NoStamp]] when it has none. */
+  private[graft] def dirStamp(dir: String): Long =
+    Tables.listingStamp(Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq)
 
   def cached(name: String,
       f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     (spark, dir) => {
       val stamp = dirStamp(dir)
-      if (stamp == NoStamp) {
-        // A layout the stamp is blind to: build fresh every call, and
-        // drop any table plans pinned to a previous listing first —
-        // stale-serve here would be silent, so pay the rebuild.
-        Tables.invalidateDir(dir)
-        f(spark, dir)
-      } else {
+      // a layout the stamp is blind to builds fresh every call
+      if (stamp == Tables.NoStamp) f(spark, dir)
+      else {
         val sid = sessionId(spark)
         val perSession = memo.synchronized {
           var m = memo.get(sid)
@@ -126,11 +95,6 @@ object PlanCache {
         perSession.get((name, dir)) match {
           case Some((s, df)) if s == stamp => df
           case _ =>
-            // a stamp miss proves the corpus files changed: the rebuild
-            // must not read through table plans pinned to the old
-            // listing (in ANY session — the constructor may build in an
-            // interactive-lane child)
-            Tables.invalidateDir(dir)
             val df = f(spark, dir)
             perSession.put((name, dir), (stamp, df))
             df
@@ -138,9 +102,9 @@ object PlanCache {
       }
     }
 
-  /** Drop every memoized plan — called by store commits the
-    * corpus-stamp guard cannot see (compactions, stream folds under an
-    * unchanged fingerprint). */
+  /** Drop every memoized plan — called by the store commit the
+    * corpus-stamp guard cannot see: one that stamps the fingerprint
+    * already committed. */
   def invalidate(): Unit = {
     memo.synchronized {
       val it = memo.values().iterator()

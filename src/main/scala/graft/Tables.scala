@@ -19,47 +19,73 @@ object Tables {
     * (a fixed ~50-100ms tax per query in a many-query session). Entries
     * are plans, not data — nothing is cached executor-side. Keyed WEAKLY
     * on the session object itself, so stopped sessions (and their plans)
-    * are collectable and cannot collide with later sessions. */
+    * are collectable and cannot collide with later sessions.
+    *
+    * Each entry keeps the [[listingStamp]] of the table's files taken
+    * BEFORE its read: a load whose stamp still matches returns the same
+    * DataFrame, any landed, deleted or rewritten file re-reads. A plan
+    * pinned to an old listing is therefore never handed out, so no
+    * writer has to drop plans after changing a table. A path the
+    * listing cannot see ([[NoStamp]]) is read fresh and never memoized. */
   private val plans = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[
       SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String), DataFrame]]())
+      scala.collection.concurrent.TrieMap[(String, String), (Long, DataFrame)]]())
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = plans.synchronized {
-      var m = plans.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-        plans.put(spark, m)
+    val path = s"$dir/$name.parquet"
+    val stamp = listingStamp(Seq(new java.io.File(path)).filter(_.exists))
+    if (stamp == NoStamp) spark.read.parquet(path)
+    else {
+      val perSession = plans.synchronized {
+        var m = plans.get(spark)
+        if (m == null) {
+          m = scala.collection.concurrent.TrieMap.empty[(String, String), (Long, DataFrame)]
+          plans.put(spark, m)
+        }
+        m
       }
-      m
+      perSession.get((dir, name)) match {
+        case Some((s, df)) if s == stamp => df
+        case _ =>
+          val df = spark.read.parquet(path)
+          perSession.put((dir, name), (stamp, df))
+          df
+      }
     }
-    perSession.getOrElseUpdate((dir, name), spark.read.parquet(s"$dir/$name.parquet"))
   }
 
-  /** Drop the memoized plan for one table so the next load re-lists its
-    * files. The model-serving paths call this when a corpus fingerprint
-    * mismatch proves the files changed under the dir — training a fresh
-    * model through a plan pinned to the OLD file listing would fail (or
-    * silently read stale data) and then be stamped with the NEW
-    * fingerprint. */
-  private[graft] def invalidate(spark: SparkSession, dir: String, name: String): Unit = {
-    val m = plans.get(spark)
-    if (m != null) { m.remove((dir, name)); () }
-  }
+  /** Stamp sentinel: the listing saw no file, so a change is invisible
+    * to the stamp — never memoize under it. */
+  private[graft] val NoStamp = Long.MinValue
 
-  /** Drop every session's memoized plans over `dir` — the prepared-plan
-    * cache calls this on a corpus-stamp miss (r16 review: a stamp miss
-    * proves the dir's files changed, and rebuilding the query through
-    * plans pinned to the OLD listing would silently miss the delta,
-    * then be cached under the NEW stamp as if validated). All sessions,
-    * because the rebuild may run in an interactive-lane child whose
-    * memo is separate from the caller's. */
-  private[graft] def invalidateDir(dir: String): Unit = plans.synchronized {
-    val it = plans.values().iterator()
-    while (it.hasNext) {
-      val m = it.next()
-      m.keys.filter(_._1 == dir).foreach(m.remove)
+  /** Fold (name, length, nanosecond mtime) over `entries` and every
+    * file and directory beneath them, plus the total entry count — one
+    * driver-side listing, the levels the scan planner reads. Nanosecond
+    * mtimes (where the filesystem stores them) close the
+    * same-name/same-length in-place overwrite within one millisecond
+    * tick; the entry count closes deletions that a pure fold over
+    * survivors could alias. [[NoStamp]] when `entries` is empty. */
+  private[graft] def listingStamp(entries: Seq[java.io.File]): Long = {
+    var n = 0L
+    def fold(h0: Long, f: java.io.File): Long = {
+      n += 1
+      val mtime =
+        try java.nio.file.Files
+          .getLastModifiedTime(f.toPath)
+          .to(java.util.concurrent.TimeUnit.NANOSECONDS)
+        catch { case _: java.io.IOException => f.lastModified() }
+      val h = ((h0 * 31 + f.getName.hashCode) * 31 + f.length()) * 31 + mtime
+      if (f.isDirectory) {
+        val c = f.listFiles()
+        if (c == null) h else c.sortBy(_.getName).foldLeft(h)(fold)
+      } else h
+    }
+    if (entries.isEmpty) NoStamp
+    else {
+      val h = entries.foldLeft(1125899906842597L)(fold)
+      val stamped = h * 31 + n
+      if (stamped == NoStamp) stamped + 1 else stamped
     }
   }
 

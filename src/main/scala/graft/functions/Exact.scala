@@ -33,8 +33,6 @@ object Exact {
     * convert via a VARCHAR round-trip (strtod is correctly rounded). */
   def sumd2(c: Column): Column = sum(dec2(c)).cast(DoubleType)
 
-  def sumd4(c: Column): Column = sum(dec4(c)).cast(DoubleType)
-
   /** Exact sum of a 2-decimal measure via LONG integer cents, surfaced as
     * DOUBLE — the fast path of [[sumd2]] for hot aggregations: the
     * per-row value is the same decimal-rounded cents (via [[dec2]], so

@@ -141,8 +141,6 @@ object AsOf {
     val fp = Similarity.corpusFingerprint(spark, dir, "lineitem.parquet") * 31 +
       Similarity.corpusFingerprint(spark, dir, "part.parquet")
     ServingStore.ensure(spark, "asof-rate-series", path, fp) { gen =>
-      Tables.invalidate(spark, dir, "lineitem")
-      Tables.invalidate(spark, dir, "part")
       rateFacts(spark, dir)
         .filter(pmod(col("t"), lit(3)) === 0)
         .groupBy(col("brand"), col("t"))
@@ -273,8 +271,6 @@ object AsOf {
     val fp = Similarity.corpusFingerprint(spark, dir, "orders.parquet") * 31 +
       Similarity.corpusFingerprint(spark, dir, "customer.parquet")
     ServingStore.ensure(spark, "enrichment-resolved", path, fp) { gen =>
-      Tables.invalidate(spark, dir, "orders")
-      Tables.invalidate(spark, dir, "customer")
       resolveEnrichment(enrichmentLog(enrichFacts(spark, dir)), "nation", "t", "v")
         .withColumnRenamed("v", "rate")
         .coalesce(1).write.mode("overwrite").parquet(gen)

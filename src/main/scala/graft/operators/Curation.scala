@@ -932,7 +932,6 @@ object Curation {
     val gen = ServingStore.ensureGeneration(spark, "lm-stats", lmStatsPath(dir),
         Similarity.corpusFingerprint(spark, dir, "documents.parquet"),
         Seq(bucketed("bc"), bucketed("pc"))) { gen =>
-      Tables.invalidate(spark, dir, "documents")
       // kernel stream (r21): per-doc distinct pairs with multiplicities;
       // Σ m over a pair == the per-occurrence count(*), bit-identical
       // integer totals with less exploded volume through the exchange

@@ -282,8 +282,6 @@ object Dedup {
     val fp = Similarity.corpusFingerprint(spark, dir, "documents.parquet")
     ServingStore.ensureGeneration(spark, "posting-index", postingsServePath(dir), fp,
         postingArtifacts(dir, numBuckets)) { gen =>
-      // drop the memoized plan pinned to the old file listing
-      Tables.invalidate(spark, dir, "documents")
       val docs = Tables.documents(spark, dir)
       val sets = docShingles(docs)
       ServingStore.writeBucketed(postingsOf(sets), gen, "postings")
@@ -339,11 +337,8 @@ object Dedup {
     ServingStore.deriveGeneration(spark, "posting-index", postingsServePath(dir),
         postingArtifacts(dir, numBuckets),
         carry = Seq("postings", "members", "rep", "docstats"))(
-      ServingStore.landed("posting-index", postingsServePath(dir), expectedFp, () => {
-        // the delta files are already in `dir`: re-list it
-        Tables.invalidate(spark, dir, "documents")
-        Similarity.corpusFingerprint(spark, dir, "documents.parquet")
-      })) { (prev, next) =>
+      ServingStore.landed("posting-index", postingsServePath(dir), expectedFp,
+        () => Similarity.corpusFingerprint(spark, dir, "documents.parquet"))) { (prev, next) =>
       val sets = docShingles(newDocs)
       ServingStore.writeBucketed(postingsOf(sets), next, "postings")
       // collapse maintenance: assign each delta doc to its text class —
@@ -495,9 +490,7 @@ object Dedup {
           spark.read.parquet(prev.path(sub)).repartition(numBuckets, col("h")), next, sub)
       }
     }
-    // the corpus stamp is unchanged, so memoized prepared plans would
-    // keep the previous generation — which the NEXT commit prunes
-    graft.PlanCache.invalidate()
+    ()
   }
 
   private[graft] def deleteTree(p: String): Unit = {
@@ -1126,7 +1119,6 @@ object Dedup {
   private[graft] def serveMinhashSigs(spark: SparkSession, dir: String): DataFrame =
     ServingStore.ensure(spark, "minhash-sigs", Similarity.servePath("minhash_sigs_", dir),
         minhashSigsFingerprint(spark, dir)) { gen =>
-      Tables.invalidate(spark, dir, "documents")
       withSigClass(minhashSignatures(Tables.documents(spark, dir)), MinhashSigKeys)
         .write.mode("overwrite").parquet(gen)
     }
@@ -1159,7 +1151,7 @@ object Dedup {
   private def docSigRows(spark: SparkSession, dir: String, what: String, prefix: String,
       sigs: DataFrame => DataFrame, keys: Seq[String], fp: => Long): ServingStore.RowStore =
     ServingStore.RowStore(spark, what, Similarity.servePath(prefix, dir), "doc_id", sigs,
-      postFp = () => { Tables.invalidate(spark, dir, "documents"); fp },
+      postFp = () => fp,
       corpus = () => Tables.documents(spark, dir),
       merge = (prev, d) => prev.unionByName(classifyDeltaSigs(prev, d, keys)))
 
@@ -1373,14 +1365,9 @@ object Dedup {
     val sigs = ServingStore.ensure(spark, "simhash-idf-sigs",
       Similarity.servePath("simhash_idf_sigs_", dir),
       fp * 31 + SimhashIdfSigStoreVersion) { gen =>
-      // on a stale store, invalidate the memoized documents plan BEFORE
-      // building the shared sets frame (the r11 review caught the
-      // reverse order pinning a pre-change file listing on the
-      // signature side while the weights rebuilt from the fresh one) —
-      // and ONE tokenization checkpoint then feeds both the weight
-      // build and the signature pass, so the inline form's single-scan
-      // contract holds on the cold path too
-      Tables.invalidate(spark, dir, "documents")
+      // ONE tokenization checkpoint feeds both the weight build and the
+      // signature pass, so the inline form's single-scan contract holds
+      // on the cold path too
       val sets = wordSets(Tables.documents(spark, dir))
       val weights = ServingStore.ensure(spark, "simhash-idf-weights", path, fp) { wgen =>
         idfWeightsOf(sets).write.mode("overwrite").parquet(wgen)
@@ -1451,7 +1438,6 @@ object Dedup {
     val nBuild = nBuildRow.getLong(0)
     // the delta has landed (precondition), so the corpus table counts
     // the post-delta total
-    Tables.invalidate(spark, dir, "documents")
     val nNow = Tables.documents(spark, dir).count()
     val growth = (nNow - nBuild).toDouble / nBuild
     // |growth|: a delta that REPLACES or deletes documents (nNow <=
@@ -1770,7 +1756,6 @@ object Dedup {
   private[graft] def serveSimhashSigs(spark: SparkSession, dir: String): DataFrame =
     ServingStore.ensure(spark, "simhash-sigs", Similarity.servePath("simhash_sigs_", dir),
         simhashSigsFingerprint(spark, dir)) { gen =>
-      Tables.invalidate(spark, dir, "documents")
       withSigClass(simhashSignatures(Tables.documents(spark, dir)), Seq("simhash"))
         .write.mode("overwrite").parquet(gen)
     }

@@ -184,7 +184,6 @@ object Events {
     val path = stampsServePath(dir)
     val fp = Similarity.corpusFingerprint(spark, dir, "events.parquet")
     ServingStore.ensure(spark, "funnel-stamps", path, fp) { gen =>
-      Tables.invalidate(spark, dir, "events")
       funnelStamps(eventsBase(spark, dir))
         .write.mode("overwrite").parquet(gen)
     }

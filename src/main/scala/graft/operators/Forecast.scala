@@ -63,8 +63,6 @@ object Forecast {
     val path = dayServePath(dir)
     val fp = dayStatsFingerprint(spark, dir)
     ServingStore.ensure(spark, "forecast-days", path, fp) { gen =>
-      Tables.invalidate(spark, dir, "lineitem")
-      Tables.invalidate(spark, dir, "part")
       dailyBase(spark, dir)
         .groupBy(col("brand"), col("x"))
         .agg(
@@ -114,11 +112,7 @@ object Forecast {
           cnt.as("n_x"),
           sum(dec2(col("y"))).as("syx_dec"),
           sum(dec2(col("y")) * dec2(col("y"))).as("syyx_dec")),
-      postFp = () => {
-        Tables.invalidate(spark, dir, "lineitem")
-        Tables.invalidate(spark, dir, "part")
-        dayStatsFingerprint(spark, dir)
-      },
+      postFp = () => dayStatsFingerprint(spark, dir),
       merge = (prev, add) => prev.unionByName(add)
         .groupBy(col("brand"), col("x"))
         .agg(
@@ -1018,11 +1012,6 @@ object Forecast {
     merged.select(
       add.schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
   }
-
-  /** The widened state frame for a corpus dir (what the streaming sink
-    * maintains incrementally; batch jobs can persist it directly). */
-  private[graft] def xStatsFrame(spark: SparkSession, dir: String): DataFrame =
-    xStatsExact(joined(spark, dir))
 
   /** syx_dec narrowed so decimal products with a (10,0) weight stay
     * within precision 38 (10 + 27 + 1). A per-(brand, month-index) price

@@ -951,7 +951,6 @@ object Multimodal {
     val path = Similarity.servePath("media_hashes_", dir)
     val fp = mediaHashesFingerprint(spark, dir)
     ServingStore.ensure(spark, "media-hashes", path, fp) { gen =>
-      graft.Tables.invalidate(spark, dir, "documents")
       hashRows(spark, corpus(spark, dir)).toDF()
         .write.mode("overwrite").parquet(gen)
     }
@@ -990,10 +989,7 @@ object Multimodal {
       Similarity.servePath("media_hashes_", dir), expectedFp,
       delta = hashRows(spark,
         transcode(spark, plantIngestDups(fromDocuments(newDocs))).toDF()).toDF(),
-      postFp = () => {
-        graft.Tables.invalidate(spark, dir, "documents")
-        mediaHashesFingerprint(spark, dir)
-      },
+      postFp = () => mediaHashesFingerprint(spark, dir),
       uniqueKey = Some("media_id"))
 
   /** `(media_id, phash)` of decodable images, served from the persisted

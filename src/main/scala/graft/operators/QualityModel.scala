@@ -227,10 +227,6 @@ object QualityModel {
     ServingStore.served(spark, "quality-classifier", lrServePath(dir),
         Similarity.corpusFingerprint(spark, dir, "documents.parquet"),
         Seq(ServingStore.Artifact("model"))) { gen =>
-      // a build means the files changed — drop the memoized plan so
-      // training reads the CURRENT listing, not one pinned to deleted
-      // part files
-      Tables.invalidate(spark, dir, "documents")
       ServingStore.writeModel(spark, gen + "/model",
         "weights" -> Array(fitQualityLr(featureFrame(Tables.documents(spark, dir)))))
     } { gen =>

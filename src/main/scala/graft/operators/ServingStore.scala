@@ -370,7 +370,12 @@ private[graft] object ServingStore {
   /** THE write path. Under the build lock, `decide` reads the sidecar's
     * proof (and may refuse by throwing); on [[Write]] its `write` fills
     * a new generation directory, and only then the sidecar is stamped
-    * and generations other than {new, previous} pruned. Returns the
+    * and generations other than {new, previous} pruned. A [[Write]]
+    * stamping the fingerprint already committed (a compaction, an IVF
+    * refresh, a landing-race fold, a same-fingerprint repair) is
+    * invisible to the prepared-plan cache's corpus stamp, so it drops
+    * the memoized plans ([[graft.PlanCache.invalidate]]): they may read
+    * the previous generation, which the next commit prunes. Returns the
     * stamp of the served generation. */
   private def commit(spark: SparkSession, what: String, path: String,
       artifacts: Seq[Artifact], meta: Seq[(String, String)])(
@@ -385,7 +390,9 @@ private[graft] object ServingStore {
           crashPoint(what + ".precommit")
           writeSidecar(path, fp, target, meta)
           state match {
-            case Stamped(_, prevGen, _) => prune(spark, path, Set(target, prevGen), artifacts)
+            case Stamped(prevFp, prevGen, _) =>
+              prune(spark, path, Set(target, prevGen), artifacts)
+              if (prevFp == fp) graft.PlanCache.invalidate()
             case LegacyFlat => prune(spark, path, Set(target), artifacts)
             case Missing | Unreadable => ()
           }
@@ -495,9 +502,9 @@ private[graft] object ServingStore {
 
   /** The append proofs shared by every store: the committed fingerprint
     * must equal the caller's pre-delta snapshot (else the store is
-    * stale — rebuild, don't append), and `postFp`, evaluated under the
-    * lock AFTER the caller's invalidations, must differ from it, so a
-    * delta whose files never landed cannot stamp fresh-looking state. */
+    * stale — rebuild, don't append), and `postFp`, the fingerprint
+    * evaluated under the lock, must differ from it, so a delta whose
+    * files never landed cannot stamp fresh-looking state. */
   private[graft] def landed(what: String, path: String, expectedFp: Option[Long],
       postFp: () => Long)(storedFp: Long): Long = {
     expectedFp.foreach(e => if (storedFp != e) throw new StaleStoreRefusal(
@@ -570,8 +577,7 @@ private[graft] object ServingStore {
     * lock. A fingerprint that did not advance is the landing race (an
     * earlier batch's stamp covers this batch's files): the missing keys
     * must then be in the landed `corpus` table, or the fold refuses with
-    * [[DeltaNotLandedRefusal]] and commits nothing; its commit drops
-    * memoized plans, as a compaction does. */
+    * [[DeltaNotLandedRefusal]] and commits nothing. */
   private[graft] def foldKeys(spark: SparkSession, what: String, path: String,
       artifacts: Seq[Artifact], carry: Seq[String], meta: Seq[(String, String)] = Nil)(
       batch: DataFrame, key: String, served: Generation => DataFrame,
@@ -580,7 +586,6 @@ private[graft] object ServingStore {
     def among(rows: DataFrame, keys: DataFrame): DataFrame =
       rows.select(col(key)).join(broadcast(keys), Seq(key), "left_semi").distinct()
     val keys = batch.select(col(key)).distinct().localCheckpoint()
-    var sameFp = false
     commit(spark, what, path, artifacts, meta) { state =>
       val committed = proven(what, path, artifacts, meta)(state)
       val missing = keys.join(broadcast(among(served(Generation(committed.gen, artifacts)), keys)),
@@ -588,8 +593,7 @@ private[graft] object ServingStore {
       if (missing.isEmpty) Serve(committed)
       else {
         val fp = postFp()
-        sameFp = fp == committed.fp
-        if (sameFp && among(corpus(), missing).count() < missing.count())
+        if (fp == committed.fp && among(corpus(), missing).count() < missing.count())
           throw new DeltaNotLandedRefusal(
             s"$what: batch ${key}s missing from the generation at ${committed.gen} are not " +
               s"in the landed corpus either (fingerprint still ${committed.fp}) — land the " +
@@ -597,14 +601,14 @@ private[graft] object ServingStore {
         derive(committed, fp, artifacts, carry)((prev, next) => write(prev, next, missing))
       }
     }
-    if (sameFp) graft.PlanCache.invalidate()
+    ()
   }
 
   /** A store of rows that are PURE functions of their own corpus rows
     * (see [[append]]), unique by `key`: `rows` derives store rows from
     * corpus rows, `merge` adds derived rows to the committed ones,
-    * `postFp` re-fingerprints the corpus after dropping its table plans
-    * and `corpus` reads the landed corpus table. The batch append and
+    * `postFp` re-fingerprints the landed corpus and `corpus` reads the
+    * landed corpus table. The batch append and
     * the stream fold share these expressions. */
   private[graft] final case class RowStore(spark: SparkSession, what: String, path: String,
       key: String, rows: DataFrame => DataFrame, postFp: () => Long, corpus: () => DataFrame,

@@ -195,7 +195,6 @@ object Similarity {
       k: Int = KnnK): DataFrame =
     ServingStore.served(spark, "ground-truth", gtServePath(dir, k), corpusFingerprint(spark, dir)) {
       gen =>
-        Tables.invalidate(spark, dir, "embeddings")
         knnBrute(spark, dir, k).write.mode("overwrite").parquet(gen)
     } { gen =>
       // GT is (queries × k) rows — driver-sized by construction, so serve
@@ -696,9 +695,6 @@ object Similarity {
       decode: (ServingStore.Generation, Map[String, Array[Array[Double]]]) => T): T =
     ServingStore.served(spark, what, path,
         storeFp(corpusFingerprint(spark, dir), version), artifacts) { g =>
-      // a build means the corpus files changed: drop the memoized plan
-      // so it reads the current listing
-      Tables.invalidate(spark, dir, "embeddings")
       build(ServingStore.Generation(g, artifacts))
     } { g =>
       val gen = ServingStore.Generation(g, artifacts)
@@ -723,11 +719,8 @@ object Similarity {
       encode: ServingStore.Generation => DataFrame): Unit = {
     GraftFunctions.ensureRegistered(spark)
     ServingStore.deriveGeneration(spark, what, path, ListsStore, carry = Seq("model", "lists"))(
-      ServingStore.landed(what, path, expectedFp.map(storeFp(_, version)), () => {
-        // the delta files are already in `dir`: re-list it
-        Tables.invalidate(spark, dir, "embeddings")
-        storeFp(corpusFingerprint(spark, dir), version)
-      })) { (prev, next) =>
+      ServingStore.landed(what, path, expectedFp.map(storeFp(_, version)),
+        () => storeFp(corpusFingerprint(spark, dir), version))) { (prev, next) =>
       encode(prev).write.mode("append").partitionBy("cid").parquet(next.path("lists"))
     }
     ()
@@ -749,9 +742,7 @@ object Similarity {
         .repartition(col("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(next.path("lists"))
     }
-    // a new generation under an unchanged corpus stamp: memoized
-    // prepared plans would keep the superseded one
-    graft.PlanCache.invalidate()
+    ()
   }
 
   /** Driver-side CONTENT fingerprint of a corpus table's parquet (file
@@ -975,7 +966,6 @@ object Similarity {
           spark.read.parquet(prev.path("lists")).select(col("vec_id"), col("vec")),
           next, nList, iters)
       }
-      graft.PlanCache.invalidate()
       true
     }
   }
@@ -1628,10 +1618,6 @@ object Similarity {
   private[graft] def serveCellAssignments(spark: SparkSession, dir: String): DataFrame = {
     val fp = semAssignFingerprint(spark, dir)
     ServingStore.ensure(spark, "sem-cell-assignments", semAssignServePath(dir), fp) { gen =>
-      // invalidate the memoized corpus plan BEFORE the quantizer ensure
-      // reads it (the r11 ordering lesson: the reverse pins a pre-change
-      // file listing on one side while the other rebuilds fresh)
-      Tables.invalidate(spark, dir, "embeddings")
       val cents = serveSemCells(spark, dir)
       cellAssignmentsOf(emb(spark, dir), cents)
         .write.mode("overwrite").parquet(gen)
@@ -1784,7 +1770,6 @@ object Similarity {
   private[graft] def serveEmbSigs(spark: SparkSession, dir: String): DataFrame =
     ServingStore.ensure(spark, "emb-lsh-sigs", embSigsServePath(dir),
         embSigsFingerprint(spark, dir)) { gen =>
-      Tables.invalidate(spark, dir, "embeddings")
       embSigsOf(emb(spark, dir)).write.mode("overwrite").parquet(gen)
     }
 
@@ -1799,10 +1784,7 @@ object Similarity {
   private[graft] def embSigRows(spark: SparkSession, dir: String): ServingStore.RowStore =
     ServingStore.RowStore(spark, "emb-lsh-sigs", embSigsServePath(dir), "vec_id",
       rows = v => embSigsOf(v.select(col("vec_id"), col("embedding").as("vec"))),
-      postFp = () => {
-        Tables.invalidate(spark, dir, "embeddings")
-        embSigsFingerprint(spark, dir)
-      },
+      postFp = () => embSigsFingerprint(spark, dir),
       corpus = () => Tables.embeddings(spark, dir))
 
   /** Incremental ingest for the band-signature store — the

@@ -340,12 +340,6 @@ object StarSchema {
     ServingStore.ensureGeneration(spark, "fact-layout", factServePath(dir),
         factFingerprint(spark, dir, numBuckets), factArtifacts(dir, numBuckets),
         meta = factMeta(dir)) { gen =>
-      // the dims too (r16 ADVICE): the rebuild BAKES region/nation
-      // attribution in via conformedDim — an in-place dim rewrite (the
-      // very staleness this fingerprint exists to catch) must not read
-      // through a plan pinned to the old dim file listing
-      Seq("lineitem", "orders", "customer", "nation", "region", "part")
-        .foreach(Tables.invalidate(spark, dir, _))
       val one = lit(1).cast(DecimalType(18, 2))
       // one lineitem scan feeds both partial tables AND the
       // transaction-grain denormalized fact (r16): xprice keeps the
@@ -479,19 +473,9 @@ object StarSchema {
         factArtifacts(dir, numBuckets), carry = factArtifacts(dir, numBuckets).map(_.sub),
         meta = factMeta(dir))(
       ServingStore.landed("fact-layout", factServePath(dir), expectedFp,
-        () => landedFactFingerprint(spark, dir, numBuckets)))(
+        () => factFingerprint(spark, dir, numBuckets)))(
       writeFactDelta(spark, dir, newLineitem, newOrders, numBuckets))
     ()
-  }
-
-  /** The fact fingerprint after a delta landed, evaluated after dropping
-    * the table plans. Dims included (r16 ADVICE): the delta's
-    * denormalized fact rows read conformedDim — which must see the
-    * CURRENT dim files, not a memoized plan over the pre-delta listing. */
-  private def landedFactFingerprint(spark: SparkSession, dir: String, numBuckets: Int): Long = {
-    Seq("lineitem", "orders", "customer", "nation", "region", "part")
-      .foreach(Tables.invalidate(spark, dir, _))
-    factFingerprint(spark, dir, numBuckets)
   }
 
   /** Fold a stream batch of newly landed ORDERS rows into the fact
@@ -507,7 +491,7 @@ object StarSchema {
         factArtifacts(dir, numBuckets), carry = factArtifacts(dir, numBuckets).map(_.sub),
         meta = factMeta(dir))(
         newOrders, "o_orderkey", g => spark.read.parquet(g.path("orders")),
-        () => landedFactFingerprint(spark, dir, numBuckets), () => Tables.orders(spark, dir)) {
+        () => factFingerprint(spark, dir, numBuckets), () => Tables.orders(spark, dir)) {
       (prev, next, missing) =>
         val keys = broadcast(missing)
         writeFactDelta(spark, dir,
@@ -624,9 +608,7 @@ object StarSchema {
         }
       }
     }
-    // the corpus stamp is unchanged, so memoized prepared plans would
-    // keep the previous generation — which the NEXT commit prunes
-    graft.PlanCache.invalidate()
+    ()
   }
 
   /** Fact-layout JANITOR (r15 watch item 2): a layout's paths are keyed

@@ -235,7 +235,6 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrElse(fail("no signature generation after append"))._2
     val served = spark.read.parquet(sigsGen)
       .select(col("doc_id"), col("simhash").as("served"))
-    Tables.invalidate(spark, dir, "documents")
     val fresh = Dedup.simhashIdfSignatures(Tables.documents(spark, dir))
       .select(col("doc_id"), col("simhash").as("fresh"))
     val joined = served.join(fresh, Seq("doc_id")).localCheckpoint()
@@ -650,10 +649,7 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lane = graft.Lane.sessionFor(spark, tmp, graft.Lane.ExpandingMaxBytes)
     assert(lane ne spark, "premise: the lane engages on the test corpus")
     def servedScreen() = screenOf(graft.SparkEntry.queries("q_contamination_delta")(spark, tmp))
-    def reference() = {
-      graft.Tables.invalidateDir(tmp)
-      screenOf(operators.Curation.contamination(spark, tmp))
-    }
+    def reference() = screenOf(operators.Curation.contamination(spark, tmp))
     assert(servedScreen() == reference())
     val pre = genStamp(gen0.dir)
     // the ingest lands the delta files in the corpus dir FIRST, then the
@@ -745,11 +741,18 @@ class CorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
       "a frame served before the append changed or broke after it")
     val heldAppended = operators.Dedup.ngramJaccardServe(spark, tmp, threshold = 0.3)
     val appended = rows(heldAppended)
+    // a prepared plan memoized over the appended generation
+    val prepared = rows(graft.SparkEntry.queries("q_dedup_ngram")(spark, tmp))
     operators.Dedup.compactPostings(spark, tmp)
     assert(rows(heldAppended) == appended,
       "a frame served before the compaction changed or broke after it")
     assert(rows(operators.Dedup.ngramJaccardServe(spark, tmp, threshold = 0.3)) == appended,
       "compaction changed query results")
+    // the second compaction prunes the generation that plan read: the
+    // same-fingerprint commits must have dropped it
+    operators.Dedup.compactPostings(spark, tmp)
+    assert(rows(graft.SparkEntry.queries("q_dedup_ngram")(spark, tmp)) == prepared,
+      "a prepared plan memoized before the compactions served a pruned generation")
   }
 
   test("reader survival: ANN frames served before an append, a compaction and a refresh collect identical rows") {

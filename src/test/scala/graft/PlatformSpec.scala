@@ -1273,7 +1273,6 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     val held = operators.Events.ensureStamps(spark, tmp)
     val heldWant = rows(held) // first serve builds generation A
     // the corpus swaps in place — same path, different content
-    Tables.invalidate(spark, tmp, "events")
     ev.filter(col("user_id") % 2 === 1).write.mode("overwrite")
       .parquet(tmp + "/events.parquet")
     val fresh = operators.Events.ensureStamps(spark, tmp) // rebuild: generation B
@@ -1562,10 +1561,10 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       .parquet(tmp + "/documents.parquet")
     val before = rows(operators.Dedup.simhashIdfDedup(spark, tmp))
     // swap the corpus in place (memoized plan + weight store both stale)
-    Tables.invalidate(spark, tmp, "documents")
     docs.filter(col("doc_id") % 2 === 1).write.mode("overwrite")
       .parquet(tmp + "/documents.parquet")
-    // re-memoize the OLD-style pinned plan like a long session would
+    // re-memoize the table like a long session would: the new plan
+    // must be keyed on the swapped listing
     Tables.documents(spark, tmp).count()
     val served = rows(operators.Dedup.simhashIdfDedup(spark, tmp))
     val inline = rows(operators.Dedup.simhashIdfDedup(
@@ -1675,9 +1674,9 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("embedding sig store: dir-serve tracks a corpus swap") {
-    // the sig build invalidates the memoized embeddings plan before the
-    // projection scan (the simhash-idf swap lesson) — after an in-place
-    // corpus swap a long session must serve the NEW corpus's pairs
+    // the memoized embeddings plan follows the file listing (the
+    // simhash-idf swap lesson) — after an in-place corpus swap a long
+    // session must serve the NEW corpus's pairs
     import org.apache.spark.sql.functions._
     val tmp = java.nio.file.Files.createTempDirectory("graftembswap").toString
     val embs = Tables.embeddings(spark, sf)
@@ -1686,10 +1685,10 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     embs.filter(col("vec_id") % 2 === 0).write.mode("overwrite")
       .parquet(tmp + "/embeddings.parquet")
     val before = rows(operators.Similarity.embeddingDedup(spark, tmp))
-    Tables.invalidate(spark, tmp, "embeddings")
     embs.filter(col("vec_id") % 2 === 1).write.mode("overwrite")
       .parquet(tmp + "/embeddings.parquet")
-    // re-memoize the OLD-style pinned plan like a long session would
+    // re-memoize the table like a long session would: the new plan
+    // must be keyed on the swapped listing
     Tables.embeddings(spark, tmp).count()
     val served = rows(operators.Similarity.embeddingDedup(spark, tmp))
     val inline = rows(operators.Similarity.embeddingDedupOf(
@@ -2718,6 +2717,23 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == want, "lane execution changed query results")
   }
 
+  test("table plans: a memoized table follows its file listing with no invalidation call") {
+    val tmp = java.nio.file.Files.createTempDirectory("grafttableplan").toString
+    val docs = Tables.documents(spark, sf)
+    docs.filter(col("doc_id") % 2 === 0).write.mode("overwrite").parquet(tmp + "/documents.parquet")
+    val first = Tables.documents(spark, tmp)
+    val n0 = first.count()
+    assert(Tables.documents(spark, tmp) eq first,
+      "an unchanged listing must return the memoized plan")
+    // one more part file lands in the table's directory
+    docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(tmp + "/documents.parquet")
+    val landed = Tables.documents(spark, tmp)
+    assert(landed.count() == docs.count() && n0 < docs.count(),
+      "the memoized plan missed the landed part file")
+    assert(Tables.documents(spark, tmp) eq landed,
+      "an unchanged listing must return the plan memoized after the landing")
+  }
+
   test("prepared-plan cache: stamp-keyed reuse, corpus swap invalidates") {
     val dirA = java.nio.file.Files.createTempDirectory("graftplancache").toString
     def land(t: String): Unit =
@@ -2737,7 +2753,6 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     Thread.sleep(1100) // mtime granularity
     spark.read.parquet(s"$sf/nation.parquet").limit(10)
       .write.mode("overwrite").parquet(s"$dirA/nation.parquet")
-    Tables.invalidate(spark, dirA, "nation")
     val df3 = fn(spark, dirA)
     assert(builds == 2, "corpus swap must miss the plan cache")
     assert(df3.count() <= 10)
@@ -2755,7 +2770,7 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("graftplannostamp").toString
     spark.read.parquet(s"$sf/nation.parquet")
       .write.mode("overwrite").parquet(s"$dir/nation_tbl") // non-standard name
-    assert(PlanCache.dirStamp(dir) == PlanCache.NoStamp,
+    assert(PlanCache.dirStamp(dir) == Tables.NoStamp,
       "a dir with no *.parquet tables must stamp NoStamp")
     var builds = 0
     val fn = PlanCache.cached("spec_nostamp", (s, d) => {
