@@ -106,6 +106,19 @@ object Bench {
       }.nextOption()
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** CPU time the host has stolen from this machine so far (s): the
+    * steal column (the 8th value) of the aggregate `cpu` line of
+    * `/proc/stat`, in USER_HZ ticks, which Linux fixes at 100 per
+    * second for that file. The difference over a run is its drift
+    * evidence (`steal_s` in bench_out.json); 0 where the file or the
+    * column is absent, so reporting never fails the bench. */
+  private[graft] def stealS(stat: String = "/proc/stat"): Double =
+    try {
+      val src = scala.io.Source.fromFile(stat)
+      val fields = try src.getLines().next().trim.split("\\s+") finally src.close()
+      if (fields.length > 8 && fields(0) == "cpu") fields(8).toLong / 100.0 else 0.0
+    } catch { case scala.util.control.NonFatal(_) => 0.0 }
+
   /** Fit the compact stdout line inside [[CompactBudget]]. TOTAL — every
     * rung degrades further and the final fallback always fits, so the
     * reporting step can never again crash the bench after measurement
@@ -159,6 +172,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val mainStart = System.nanoTime()
+    val steal0 = stealS()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
@@ -312,7 +326,8 @@ object Bench {
     val pairJson = pair
       .map { case (r, x) => s""","pair":{"round":"$r","ratio":${fj(x)}}""" }
       .getOrElse("")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"warm_target_sec":$warmJson,"warm_errors":$warmErrJson,"errors":$errJson,"iters":$roundsRun,"compact_keys":$keyMapJson$pairJson,"sf":"$sfDir"}"""
+    val stealJson = fj(math.max(0.0, stealS() - steal0))
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"warm_target_sec":$warmJson,"warm_errors":$warmErrJson,"errors":$errJson,"iters":$roundsRun,"compact_keys":$keyMapJson$pairJson,"steal_s":$stealJson,"sf":"$sfDir"}"""
     spark.stop()
     // full JSON (with spread) goes to a file FIRST — r10's compact-line
     // size guard sys.error'd after the measurement loop and before this

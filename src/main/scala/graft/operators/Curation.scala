@@ -943,7 +943,7 @@ object Curation {
       ServingStore.writeBucketed(
         big.groupBy(col("a")).agg(coalesce(sum(col("m")), lit(0L)).as("c_a")),
         gen, "pc")
-    }
+    }(identity)
     (gen.table("bc"), gen.table("pc"))
   }
 

@@ -296,7 +296,7 @@ object Dedup {
       ServingStore.writeBucketed(postingsOf(sets.join(repIds, "doc_id")), gen, "rep")
       writeClasses(spark, gen)
       docStatsOf(sets).write.parquet(gen.path("docstats"))
-    }
+    }(identity)
   }
 
   /** [[postingsGeneration]]'s doc-level posting table name. */

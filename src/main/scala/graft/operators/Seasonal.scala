@@ -14,12 +14,13 @@ import org.apache.spark.sql.types._
   * series with a constructed first-of-month date) and the dashboard's
   * trend smoothing.
   *
-  * Scale notes: all three operators aggregate the fact down to
-  * (group x month) cardinality in ONE map-side-combined shuffle; the
-  * window pass then runs on the tiny aggregate, partitioned by group key
-  * (never a global window). Monthly sums stay DECIMAL through the window
-  * frame so the moving average is bit-deterministic (window segment-tree
-  * combine order cannot change an exact sum).
+  * Scale notes: all three operators serve from the forecast family's
+  * persisted per-(brand, month) state ([[Forecast.ensureDayStats]]), of
+  * (group x month) cardinality and maintained per ingest instead of
+  * re-aggregated per read; the window pass runs on it, partitioned by
+  * group key (never a global window). Monthly sums stay DECIMAL through
+  * the window frame so the moving average is bit-deterministic (window
+  * segment-tree combine order cannot change an exact sum).
   */
 object Seasonal {
 
@@ -39,16 +40,20 @@ object Seasonal {
   }
 
   /** q_seasonal_agg — average price per (brand, season). Serves from the
-    * forecast family's persisted per-day state ([[Forecast.dayFrame]]):
+    * forecast family's persisted per-month state ([[Forecast.monthFrame]]):
     * the decimal sums regroup associatively, so the served doubles cast
     * from the same exact totals a fact scan aggregates (spec-pinned
     * against [[seasonalAggScratch]]). */
   def seasonalAgg(spark: SparkSession, dir: String): DataFrame =
-    Forecast.dayFrame(spark, dir)
-      .groupBy(col("brand"), season(col("m")).as("season"))
+    Forecast.monthFrame(spark, dir)
+      .groupBy(col("brand"), season(monthOf(col("x"))).as("season"))
       .agg(
         meanOf(sum(col("syx_dec")).cast(DoubleType), sum(col("n_x"))).as("avg_price"),
         sum(col("n_x")).as("n_obs"))
+
+  /** Calendar year and month of a month index (months since 1995-01). */
+  private def yearOf(x: Column): Column = (floor(x / 12) + 1995).cast(IntegerType)
+  private def monthOf(x: Column): Column = (pmod(x, lit(12L)) + 1).cast(IntegerType)
 
   private[graft] def seasonalAggScratch(spark: SparkSession, dir: String): DataFrame =
     withBrand(spark, dir)
@@ -69,13 +74,13 @@ object Seasonal {
       |GROUP BY 1, 2""".stripMargin
 
   /** q_monthly_trend — per-brand monthly series with constructed_date
-    * (the Prophet training frame, forecast_utils.py:25-29). */
+    * (the Prophet training frame, forecast_utils.py:25-29): one row of
+    * the persisted month state per (brand, month), no regrouping. */
   def monthlyTrend(spark: SparkSession, dir: String): DataFrame =
-    Forecast.dayFrame(spark, dir)
-      .groupBy(col("brand"), year(col("d")).as("year"), col("m").as("month"))
-      .agg(
-        meanOf(sum(col("syx_dec")).cast(DoubleType), sum(col("n_x"))).as("avg_price"),
-        sum(col("n_x")).as("n_obs"))
+    Forecast.monthFrame(spark, dir)
+      .select(col("brand"), yearOf(col("x")).as("year"), monthOf(col("x")).as("month"),
+        meanOf(col("syx_dec").cast(DoubleType), col("n_x")).as("avg_price"),
+        col("n_x").as("n_obs"))
       .withColumn("constructed_date", make_date(col("year"), col("month"), lit(1)))
       .select(col("brand"), col("year"), col("month"), col("constructed_date"), col("avg_price"), col("n_obs"))
 
@@ -107,11 +112,9 @@ object Seasonal {
     * mean is (windowed decimal sum of prices) / (windowed count), NOT an
     * average of averages — exact, and weight-correct across months. */
   def movingAvg(spark: SparkSession, dir: String): DataFrame =
-    movingAvgOverMonthly(Forecast.dayFrame(spark, dir)
-      .groupBy(col("brand"), year(col("d")).as("year"), col("m").as("month"))
-      .agg(
-        sum(col("syx_dec")).cast(DecimalType(28, 2)).as("sum_price"),
-        sum(col("n_x")).as("n_obs")))
+    movingAvgOverMonthly(Forecast.monthFrame(spark, dir)
+      .select(col("brand"), yearOf(col("x")).as("year"), monthOf(col("x")).as("month"),
+        col("syx_dec").as("sum_price"), col("n_x").as("n_obs")))
 
   private[graft] def movingAvgScratch(spark: SparkSession, dir: String): DataFrame =
     movingAvgOverMonthly(withBrand(spark, dir)

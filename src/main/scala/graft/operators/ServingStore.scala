@@ -492,13 +492,14 @@ private[graft] object ServingStore {
     * into the [[Generation]] it is handed (bucketed ones through
     * [[writeBucketed]]); the served generation has its bucketed tables
     * registered in `spark`'s catalog — on every call, memo hits
-    * included. */
-  private[graft] def ensureGeneration(spark: SparkSession, what: String, path: String,
-      fp: Long, artifacts: Seq[Artifact], meta: Seq[(String, String)] = Nil)(
-      build: Generation => Unit): Generation =
+    * included — and `serve` turns it into what the serve memo keeps
+    * (the generation itself, or its artifact reads). */
+  private[graft] def ensureGeneration[T <: AnyRef](spark: SparkSession, what: String,
+      path: String, fp: Long, artifacts: Seq[Artifact], meta: Seq[(String, String)] = Nil)(
+      build: Generation => Unit)(serve: Generation => T): T =
     served(spark, what, path, fp, artifacts, meta)(
       dir => build(Generation(dir, artifacts)))(
-      dir => register(spark, Generation(dir, artifacts)))
+      dir => serve(register(spark, Generation(dir, artifacts))))
 
   /** The append proofs shared by every store: the committed fingerprint
     * must equal the caller's pre-delta snapshot (else the store is
@@ -628,10 +629,10 @@ private[graft] object ServingStore {
   }
 
   /** Merge-append a delta into a single-artifact store — the shared
-    * incremental-ingest protocol ([[Forecast.appendDayStats]]'s shape):
-    * the [[landed]] proofs, then `merge(prev, delta)` writes the new
-    * generation. With `uniqueKey` set, delta keys already present in
-    * the committed generation are refused loudly — for pure per-row
+    * incremental-ingest protocol: the [[landed]] proofs, then
+    * `merge(prev, delta)` writes the new generation. With `uniqueKey`
+    * set, delta keys already present in the committed generation are
+    * refused loudly — for pure per-row
     * stores a key on both sides means the same rows were appended
     * twice and every downstream dedup would pair rows with themselves.
     *

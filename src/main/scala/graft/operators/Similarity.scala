@@ -685,21 +685,18 @@ object Similarity {
   private val CodesStore = Seq(Model, ServingStore.Artifact("codes"))
 
   /** Serve-or-build a model store over `dir`'s embeddings: ONE
-    * [[ServingStore.served]] call keyed by the corpus fingerprint folded
-    * with the store's `version`. `build` writes every artifact into the
-    * new generation; `decode` turns the committed generation and its
-    * model parts into what the serve memo keeps resident. */
+    * [[ServingStore.ensureGeneration]] call keyed by the corpus
+    * fingerprint folded with the store's `version`. `build` writes every
+    * artifact into the new generation; `decode` turns the committed
+    * generation and its model parts into what the serve memo keeps
+    * resident. */
   private def modelStore[T <: AnyRef](spark: SparkSession, what: String, path: String,
       dir: String, version: Int, artifacts: Seq[ServingStore.Artifact])(
       build: ServingStore.Generation => Unit)(
       decode: (ServingStore.Generation, Map[String, Array[Array[Double]]]) => T): T =
-    ServingStore.served(spark, what, path,
-        storeFp(corpusFingerprint(spark, dir), version), artifacts) { g =>
-      build(ServingStore.Generation(g, artifacts))
-    } { g =>
-      val gen = ServingStore.Generation(g, artifacts)
-      decode(gen, modelOf(spark, gen))
-    }
+    ServingStore.ensureGeneration(spark, what, path,
+        storeFp(corpusFingerprint(spark, dir), version), artifacts)(build)(
+      gen => decode(gen, modelOf(spark, gen)))
 
   private def modelOf(spark: SparkSession, gen: ServingStore.Generation)
       : Map[String, Array[Array[Double]]] =

@@ -440,7 +440,7 @@ object StarSchema {
           cnt.as("n_orders"))
         .coalesce(1)
         .write.parquet(gen.path("nationfact"))
-    }
+    }(identity)
 
   /** Incrementally maintain the fact layout after an ingest: a new
     * generation hard-linking every committed table and adding ONLY the

@@ -31,12 +31,4 @@ object Sinks {
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(path)
   }
-
-  /** CSV export (the reference's ml_data.csv contract): header included,
-    * written distributed — callers wanting one file pass coalesce=true
-    * (only sane for dashboard-sized extracts, never for fact data). */
-  def writeCsv(df: DataFrame, path: String, coalesceToOne: Boolean = false): Unit = {
-    val out = if (coalesceToOne) df.coalesce(1) else df
-    out.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-  }
 }

@@ -94,9 +94,6 @@ object FunnelStampsSink {
   def funnelCurrent(spark: SparkSession, stateDir: String): DataFrame =
     Events.funnelFromStamps(currentStamps(spark, stateDir))
 
-  def conversionLagCurrent(spark: SparkSession, stateDir: String): DataFrame =
-    Events.conversionLagFromStamps(currentStamps(spark, stateDir))
-
   def conversionCohortCurrent(spark: SparkSession, stateDir: String): DataFrame =
     Events.conversionCohortFromStamps(currentStamps(spark, stateDir))
 

@@ -67,12 +67,6 @@ object RaritySink {
     }
   }
 
-  /** The standing (h, df) table and one-row document count. */
-  def currentDf(spark: SparkSession, stateRoot: String): DataFrame =
-    StreamStateStore.read(spark, stateRoot, Df).drop("b")
-  def currentNDocs(spark: SparkSession, stateRoot: String): DataFrame =
-    StreamStateStore.read(spark, stateRoot, N)
-
   /** Rarity scores for ANY (doc_id, text) frame against the standing
     * store — the serving half: one kernel scan of the argument docs,
     * zero scans of history. Words the store has never seen would drop

@@ -364,25 +364,31 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(serveEx == 0, s"funnel serve should not hash-shuffle, saw $serveEx:\n$servePlan")
   }
 
+  /** The eight month-grain serves of the forecast day/month state and
+    * their fact-scan twins. */
+  private def monthGrainPairs(dir: String)
+      : Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = {
+    val F = operators.Forecast
+    val S = operators.Seasonal
+    Seq(
+      ("linear", F.forecastLinear(spark, dir), F.forecastLinearScratch(spark, dir)),
+      ("interval", F.forecastInterval(spark, dir), F.forecastIntervalScratch(spark, dir)),
+      ("seasonal", F.seasonalForecast(spark, dir), F.seasonalForecastScratch(spark, dir)),
+      ("topk", F.forecastTopK(spark, dir), F.forecastTopKScratch(spark, dir)),
+      ("changepoint", F.forecastChangepoint(spark, dir), F.forecastChangepointScratch(spark, dir)),
+      ("seasonal_agg", S.seasonalAgg(spark, dir), S.seasonalAggScratch(spark, dir)),
+      ("monthly_trend", S.monthlyTrend(spark, dir), S.monthlyTrendScratch(spark, dir)),
+      ("moving_avg", S.movingAvg(spark, dir), S.movingAvgScratch(spark, dir)))
+  }
+
   test("forecast family: state-served results are bit-equal to fact-scan fits") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
     val F = operators.Forecast
-    val pairs = Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)](
-      ("linear", F.forecastLinear(spark, sf), F.forecastLinearScratch(spark, sf)),
-      ("interval", F.forecastInterval(spark, sf), F.forecastIntervalScratch(spark, sf)),
+    val pairs = monthGrainPairs(sf) ++ Seq(
       ("weekly", F.forecastWeekly(spark, sf), F.forecastWeeklyScratch(spark, sf)),
       ("horizon", F.forecastHorizon(spark, sf), F.forecastHorizonScratch(spark, sf)),
-      ("recency", F.forecastRecency(spark, sf), F.forecastRecencyScratch(spark, sf)),
-      ("seasonal", F.seasonalForecast(spark, sf), F.seasonalForecastScratch(spark, sf)),
-      ("changepoint", F.forecastChangepoint(spark, sf), F.forecastChangepointScratch(spark, sf)),
-      ("topk", F.forecastTopK(spark, sf), F.forecastTopKScratch(spark, sf)),
-      ("seasonal_agg", operators.Seasonal.seasonalAgg(spark, sf),
-        operators.Seasonal.seasonalAggScratch(spark, sf)),
-      ("monthly_trend", operators.Seasonal.monthlyTrend(spark, sf),
-        operators.Seasonal.monthlyTrendScratch(spark, sf)),
-      ("moving_avg", operators.Seasonal.movingAvg(spark, sf),
-        operators.Seasonal.movingAvgScratch(spark, sf)))
+      ("recency", F.forecastRecency(spark, sf), F.forecastRecencyScratch(spark, sf)))
     pairs.foreach { case (name, served, scratch) =>
       assert(rows(served) == rows(scratch),
         s"forecast $name: state serve diverged from the fact-scan fit")
@@ -397,10 +403,21 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val delta = li.filter(col("l_orderkey") % 5 === 0)
     base.write.mode("overwrite").parquet(tmp + "/lineitem.parquet")
     Tables.part(spark, sf).write.mode("overwrite").parquet(tmp + "/part.parquet")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    // the committed months are the days re-rolled, row for row
+    def monthsMatchDays(when: String): Unit = {
+      val state = operators.Forecast.ensureDayStats(spark, tmp)
+      val months = rows(state.months)
+      assert(months.nonEmpty)
+      assert(months == rows(operators.Forecast.monthStateOf(state.days)),
+        s"months artifact disagrees with the days re-rolled ($when)")
+    }
     // build the generation for the base corpus, serve once
     val before = operators.Forecast.forecastLinear(spark, tmp).collect()
     assert(before.nonEmpty)
-    val preFp = operators.ServingStore.readSidecar("day-stats",
+    monthsMatchDays("cold build")
+    val preFp = operators.ServingStore.readSidecar("forecast-days",
       operators.Forecast.dayServePath(tmp)).get._1
     // the delta lands, then folds incrementally (appendPostings ordering)
     delta.write.mode("append").parquet(tmp + "/lineitem.parquet")
@@ -413,17 +430,15 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
           .cast("long").as("x"),
         col("l_extendedprice").as("y"))
     operators.Forecast.appendDayStats(spark, tmp, deltaFrame, preFp)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
     // the merged generation serves WITHOUT rebuilding (fingerprint is
-    // post-delta), bit-identical to the full-corpus fit
+    // post-delta), bit-identical to the full-corpus fit on every
+    // month-grain serve
     val stamp = Option(new java.io.File(operators.Forecast.dayServePath(tmp)).listFiles)
       .get.map(f => f.getName -> f.lastModified).toMap
-    assert(rows(operators.Forecast.forecastLinear(spark, tmp)) ==
-      rows(operators.Forecast.forecastLinearScratch(spark, tmp)),
-      "appended day state diverged from the union fit")
-    assert(rows(operators.Forecast.seasonalForecast(spark, tmp)) ==
-      rows(operators.Forecast.seasonalForecastScratch(spark, tmp)))
+    monthGrainPairs(tmp).foreach { case (name, served, scratch) =>
+      assert(rows(served) == rows(scratch), s"appended day state diverged from the union fit ($name)")
+    }
+    monthsMatchDays("after the append")
     assert(Option(new java.io.File(operators.Forecast.dayServePath(tmp)).listFiles)
       .get.map(f => f.getName -> f.lastModified).toMap == stamp,
       "serve after append rebuilt the generation instead of reusing it")
@@ -432,6 +447,24 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
       operators.Forecast.appendDayStats(spark, tmp, deltaFrame, preFp)
     }
     assert(bad.getMessage.contains("different corpus state"))
+  }
+
+  test("month-grain forecast serves scan the months artifact, never the days") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    monthGrainPairs(sf).foreach { case (name, served, _) =>
+      val plan = served.queryExecution.executedPlan
+      val scanned = Plans.collect(plan) { case s: FileSourceScanExec => s }
+        .flatMap(_.relation.location.rootPaths).map(_.getName)
+      assert(scanned.nonEmpty && scanned.forall(_ == "months"),
+        s"$name scans $scanned, not only the months artifact:\n$plan")
+    }
+    // the linear fit regroups the month rows by brand only: one exchange
+    val linear = operators.Forecast.forecastLinear(spark, sf).queryExecution.executedPlan
+    val exchanges = Plans.collect(linear) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1, s"q_forecast_linear shuffles ${exchanges.size} times:\n$linear")
   }
 
   test("funnel family: store-served results equal the from-scratch frames") {

@@ -103,4 +103,16 @@ class BenchLineSpec extends AnyFunSuite {
     // unmistakable negative total must survive
     assert(node.has("failed_rounds") || node.get("value").asDouble < 0)
   }
+
+  test("stealS reads the steal column of /proc/stat's aggregate cpu line") {
+    val f = java.io.File.createTempFile("graftstat", ".txt")
+    try {
+      java.nio.file.Files.write(f.toPath,
+        "cpu  4705 150 1120 16250 520 0 35 1234 0 0\ncpu0 1 2 3 4 5 6 7 8 0 0\n".getBytes("UTF-8"))
+      assert(Bench.stealS(f.getPath) == 12.34)
+      java.nio.file.Files.write(f.toPath, "cpu  4705 150 1120\n".getBytes("UTF-8"))
+      assert(Bench.stealS(f.getPath) == 0.0, "a line without the steal column reads 0")
+    } finally f.delete()
+    assert(Bench.stealS(f.getPath + ".absent") == 0.0, "a missing file reads 0")
+  }
 }

@@ -1416,14 +1416,14 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
       val store = java.nio.file.Files.createTempDirectory("graftnojob").toString + "/store"
       val arts = Seq(ServingStore.Artifact("a"))
       ServingStore.ensureGeneration(spark, "t", store, 1L, arts)(g =>
-        Seq((1L, "x")).toDF("id", "v").write.parquet(g.path("a")))
+        Seq((1L, "x")).toDF("id", "v").write.parquet(g.path("a")))(identity)
       val (fp, gen) = ServingStore.readSidecar("t", store).get
       assert(jobsOf(ServingStore.sidecarState("t", store)) == 0, "sidecar read ran a job")
       assert(jobsOf(ServingStore.writeSidecar(store, fp, gen)) == 0, "sidecar stamp ran a job")
       // a new session misses the serve memo: proving the generation again
       // is the sidecar read and a directory listing
       assert(jobsOf(ServingStore.ensureGeneration(spark.newSession(), "t", store, 1L, arts)(
-        _ => fail("fresh store must not rebuild"))) == 0, "memo-miss ensure ran a job")
+        _ => fail("fresh store must not rebuild"))(identity)) == 0, "memo-miss ensure ran a job")
       // a single-artifact ensure serves a parquet read of the generation;
       // its only jobs are that read's own (schema inference)
       val single = java.nio.file.Files.createTempDirectory("graftnojob").toString + "/store"
@@ -1545,6 +1545,41 @@ class PlatformSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(bad.getMessage.contains("fingerprint unchanged after the delta"),
       s"wrong refusal: ${bad.getMessage}")
+  }
+
+  test("a forecast-days generation of the single-artifact layout is rebuilt, never appended to") {
+    import org.apache.spark.sql.functions._
+    val F = operators.Forecast
+    val tmp = java.nio.file.Files.createTempDirectory("graftdaylegacy").toString
+    Tables.lineitem(spark, sf).write.mode("overwrite").parquet(tmp + "/lineitem.parquet")
+    Tables.part(spark, sf).write.mode("overwrite").parquet(tmp + "/part.parquet")
+    // an older engine's generation: the day state as parquet at the
+    // generation root, stamped fresh for the current corpus
+    val path = F.dayServePath(tmp)
+    val fp = F.dayStatsFingerprint(spark, tmp)
+    val planted = operators.ServingStore.newGenerationPath(path, fp)
+    F.dayStateOf(F.dailyBase(spark, tmp)).write.parquet(planted)
+    operators.ServingStore.writeSidecar(path, fp, planted)
+    def listing() = Option(new java.io.File(path).listFiles).get.map(_.getName).toSet
+    val sidecar = java.nio.file.Paths.get(path + "_model")
+    val stamped = java.nio.file.Files.readAllBytes(sidecar).toSeq
+    // an append derives from it: refused, and nothing is committed
+    import spark.implicits._
+    val deltaFrame = Seq(("Brand#11", 100L, 9.99)).toDF("brand", "x", "y")
+    val refused = intercept[operators.ServingStore.StaleStoreRefusal] {
+      F.appendDayStats(spark, tmp, deltaFrame, fp)
+    }
+    assert(refused.getMessage.contains("lacks a committed artifact"), refused.getMessage)
+    assert(java.nio.file.Files.readAllBytes(sidecar).toSeq == stamped, "the refusal re-stamped the store")
+    assert(listing() == Set(planted.split("/").last), s"the refusal wrote a generation: ${listing()}")
+    // the next serve rebuilds it into the two-artifact layout
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rows(F.forecastLinear(spark, tmp)) == rows(F.forecastLinearScratch(spark, tmp)))
+    val (rebuiltFp, rebuilt) = operators.ServingStore.readSidecar("forecast-days", path).get
+    assert(rebuiltFp == fp && rebuilt != planted, "the single-artifact generation was served")
+    Seq("days", "months").foreach(a =>
+      assert(new java.io.File(rebuilt, a).isDirectory, s"rebuilt generation lacks $a"))
   }
 
   test("simhash-idf: dir-serve tracks a corpus swap on BOTH join sides") {
